@@ -12,9 +12,14 @@ driven by Catalyst's pushed filters.
 Pruning is planning-level only and therefore always correct:
 ``pushFilters`` keeps every filter as a RESIDUAL for Spark to re-apply
 row-by-row, while recording the comparisons it can use to drop whole
-files whose logged [min, max] range cannot match — exactly how
-Table.read's merge pruning uses the same stats, and how Delta/Iceberg
-data skipping composes with execution-time filtering.
+files whose logged [min, max] range cannot match — through the same
+predicate (``tableformat.stats_may_match``) that Table.merge prunes its
+rewrite with (Table.read itself does not prune), and the way
+Delta/Iceberg data skipping composes with execution-time filtering.
+
+This module is an adapter: snapshots, stats, schema checks, add entries,
+the batch-id ledger and the commit-retry loop all come from
+tableformat.py, the one ACID core.
 
 Honest posture: the JVM parquet reader (``Table.read``) is the FAST path
 for this format — whole-stage codegen, vectorized decode, no Python
@@ -45,7 +50,27 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from pkg2_spark.tableformat import _live_entries, latest_version, log_schema
+from pkg2_spark.tableformat import (
+    Snapshot,
+    _add_entries,
+    _check_schema,
+    _commit,
+    _commit_retrying,
+    _fold,
+    latest_version,
+    log_schema,
+    snapshot,
+    stats_may_match,
+)
+
+# Pushed filter types that can prune files, as stats_may_match operators.
+_STAT_OPS = {
+    EqualTo: "=",
+    GreaterThan: ">",
+    GreaterThanOrEqual: ">=",
+    LessThan: "<",
+    LessThanOrEqual: "<=",
+}
 
 
 def _nullable(dt):
@@ -123,22 +148,6 @@ class AcidCdfDiffPartition(InputPartition):
         self.remove_dead = remove_dead or {}
 
 
-def _stat_comparable(value, lo):
-    """Convert a pushed-filter literal to the logged-stats domain, or None
-    when the pair is not safely comparable (prune only on same-type
-    comparisons; everything else stays un-pruned and Spark's residual
-    filter does the work)."""
-    if isinstance(value, bool) or isinstance(lo, bool):
-        return None
-    if isinstance(value, (int, float)) and isinstance(lo, (int, float)):
-        return value
-    if hasattr(value, "isoformat") and isinstance(lo, str):
-        return value.isoformat()  # date/timestamp stats are logged ISO
-    if isinstance(value, str) and isinstance(lo, str):
-        return value
-    return None
-
-
 class AcidDataSourceReader(DataSourceReader):
     def __init__(self, schema, options):
         self.read_schema = schema
@@ -161,46 +170,20 @@ class AcidDataSourceReader(DataSourceReader):
         evaluation, so a stats gap or type mismatch can only cost
         speed, never correctness)."""
         for f in filters:
-            if isinstance(
-                f, (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan,
-                    LessThanOrEqual),
-            ) and len(f.attribute) == 1:
-                self.pushed.append(f)
+            op = _STAT_OPS.get(type(f))
+            if op is not None and len(f.attribute) == 1:
+                self.pushed.append((f.attribute[0], op, f.value))
             yield f
 
-    def _file_matches(self, stats: dict) -> bool:
-        for f in self.pushed:
-            rng = stats.get(f.attribute[0])
-            if not rng:
-                continue  # no stats for this column: cannot prune
-            lo, hi = rng
-            v = _stat_comparable(f.value, lo)
-            if v is None:
-                continue
-            if isinstance(f, EqualTo) and (v < lo or v > hi):
-                return False
-            if isinstance(f, GreaterThan) and hi <= v:
-                return False
-            if isinstance(f, GreaterThanOrEqual) and hi < v:
-                return False
-            if isinstance(f, LessThan) and lo >= v:
-                return False
-            if isinstance(f, LessThanOrEqual) and lo > v:
-                return False
-        return True
-
     def partitions(self):
-        cut = (
-            latest_version(self.path) if self.version is None else self.version
-        )
-        entries = _live_entries(self.path, cut)
-        dead = _dv_rows_by_file(self.path, cut)
+        snap = snapshot(self.path, self.version)
+        dead = _dv_rows_by_file(self.path, snap.dv)
         parts = [
             AcidFilePartition(
                 os.path.join(self.path, rel), e.get("rows"), dead.get(rel)
             )
-            for rel, e in sorted(entries.items())
-            if self._file_matches(e.get("stats") or {})
+            for rel, e in sorted(snap.files.items())
+            if stats_may_match(e.get("stats") or {}, self.pushed)
         ]
         # Spark requires at least one partition; a fully-pruned (or empty)
         # snapshot reads as zero rows through a no-op partition.
@@ -211,17 +194,15 @@ class AcidDataSourceReader(DataSourceReader):
         return _read_file_as_arrow(partition, self.read_schema)
 
 
-def _dv_rows_by_file(path: str, cut: int | None) -> dict[str, list[int]]:
-    """The folded DELETION-VECTOR rows at ``cut``, grouped per data file —
+def _dv_rows_by_file(path: str, dv_entries: list[dict]) -> dict[str, list[int]]:
+    """A snapshot's DELETION-VECTOR rows, grouped per data file —
     driver-side planning metadata (the sidecars are small by the
     merge-on-read contract), attached to each file's InputPartition so
     the executor read skips deleted row indexes."""
     import pyarrow.parquet as pq
 
-    from pkg2_spark.tableformat import dv_state
-
     out: dict[str, list[int]] = {}
-    for e in dv_state(path, cut):
+    for e in dv_entries:
         t = pq.read_table(os.path.join(path, e["path"]), columns=["file", "ri"])
         for f, ri in zip(t.column("file").to_pylist(), t.column("ri").to_pylist()):
             out.setdefault(f, []).append(ri)
@@ -527,8 +508,9 @@ class AcidStreamReader(DataSourceStreamReader):
     lets an incremental view (q_acid_ivm's dataflow) maintain itself
     from the stream: + on insert, - on delete, exactly once per commit.
 
-    Scale shape: offset resolution is a driver-side O(new commits) log
-    read per micro-batch; the data path is one task per added file on
+    Scale shape: partition planning is ONE driver-side fold of the log
+    (O(commits) tiny JSON) per micro-batch, which yields each new
+    commit's record and the DV states around it; the data path is one task per added file on
     the executors (the same Arrow read as the batch source), plus one
     task per REWRITING commit holding that commit's bounded rewrite
     region (see _cdf_diff_batches)."""
@@ -562,11 +544,16 @@ class AcidStreamReader(DataSourceStreamReader):
         return {"version": latest_version(self.path)}
 
     def partitions(self, start: dict, end: dict):
-        from pkg2_spark.tableformat import _read_commit
-
+        first, last = int(start["version"]) + 1, int(end["version"])
         parts: list[InputPartition] = []
-        for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
-            rec = _read_commit(self.path, v)
+        # One walk serves every commit in range and, for each, the DV
+        # state before it (the fold replaces snap.dv, never mutates it).
+        dv_prev: list = []
+        for snap in _fold(self.path, last) if first <= last else ():
+            v, rec = snap.version, snap.commit
+            dv_before, dv_prev = dv_prev, snap.dv
+            if v < first:
+                continue
             op = rec.get("op")
             if op in ("create", "append"):
                 if self.change_feed:
@@ -586,11 +573,11 @@ class AcidStreamReader(DataSourceStreamReader):
             elif rec.get("add") or rec.get("remove") or rec.get("dv"):
                 if self.change_feed:
                     if rec.get("add") or rec.get("remove"):
-                        def _abs_dead(cut):
+                        def _abs_dead(dv):
                             return {
                                 os.path.join(self.path, rel): idxs
                                 for rel, idxs in _dv_rows_by_file(
-                                    self.path, cut
+                                    self.path, dv
                                 ).items()
                             }
 
@@ -605,8 +592,8 @@ class AcidStreamReader(DataSourceStreamReader):
                                     for rel in rec.get("remove", [])
                                 ],
                                 v,
-                                add_dead=_abs_dead(v),
-                                remove_dead=_abs_dead(v - 1),
+                                add_dead=_abs_dead(snap.dv),
+                                remove_dead=_abs_dead(dv_before),
                             )
                         )
                     if rec.get("dv"):
@@ -644,10 +631,10 @@ class AcidStreamReader(DataSourceStreamReader):
         pass  # offsets are durable in the log itself; nothing to reap
 
 
-def _commit_schema_json(path: str, plan_schema_json: dict) -> dict:
+def _commit_schema_json(snap: Snapshot, plan_schema_json: dict) -> dict:
     """The schema to RECORD for a commit that was planned under
-    ``plan_schema_json`` but is landing NOW: re-read the current log
-    schema and merge, instead of blindly recording the plan-time
+    ``plan_schema_json`` but is landing NOW: merge with the schema of
+    ``snap``, the commit attempt's fresh snapshot, instead of blindly recording the plan-time
     snapshot. A concurrent allow_schema_evolution append can land during
     the (potentially long) plan -> execute -> commit window; recording
     the stale plan-time schema would silently REVERT that evolution in
@@ -656,10 +643,10 @@ def _commit_schema_json(path: str, plan_schema_json: dict) -> dict:
     wins for every column it has (types must agree with the plan's, else
     the table was retyped under us — refuse loudly), and columns only
     the plan has (this writer's own validated evolution) append after.
-    Call INSIDE the commit retry loop — each attempt re-reads the log."""
+    Call INSIDE the commit retry loop with the attempt's snapshot."""
     from pyspark.sql.types import StructField, StructType
 
-    current = log_schema(path)
+    current = snap.schema
     if current is None:
         return plan_schema_json
     plan = StructType.fromJson(plan_schema_json)
@@ -671,7 +658,7 @@ def _commit_schema_json(path: str, plan_schema_json: dict) -> dict:
     )
     if retyped:
         raise ValueError(
-            f"append to {path} hit concurrent schema drift: columns "
+            f"append to {snap.path} hit concurrent schema drift: columns "
             f"{retyped} were retyped between plan time and commit time"
         )
     merged = list(current.fields) + [
@@ -715,34 +702,18 @@ class AcidDataSourceWriter(DataSourceArrowWriter):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("pkg2acid requires save(<table path>)")
-        current = log_schema(self.path)
+        snap = snapshot(self.path)
         self.schema_json = schema.jsonValue()
-        if current is not None:
-            cur = {f.name: f.dataType for f in current.fields}
-            new = {f.name: f.dataType for f in schema.fields}
-            dropped = sorted(set(cur) - set(new))
-            added = sorted(set(new) - set(cur))
-            retyped = sorted(n for n in set(cur) & set(new) if cur[n] != new[n])
-            if dropped or retyped:
-                raise ValueError(
-                    f"append to {self.path} is schema-incompatible: "
-                    f"dropped={dropped} retyped={retyped} (evolution may "
-                    "only ADD columns)"
-                )
-            if added and str(options.get("allow_schema_evolution", "")).lower() != "true":
-                raise ValueError(
-                    f"append to {self.path} adds columns {added}; set "
-                    'option("allow_schema_evolution", "true") to evolve'
-                )
+        _check_schema(
+            self.path,
+            snap.schema,
+            schema,
+            str(options.get("allow_schema_evolution", "")).lower() == "true",
+        )
         # Stats continuity: track whatever columns the live log already
         # carries stats for (no session, no Table object needed).
-        head = latest_version(self.path)
         self.stats_cols = sorted(
-            {
-                k
-                for e in _live_entries(self.path, head).values()
-                for k in (e.get("stats") or {})
-            }
+            {k for e in snap.files.values() for k in (e.get("stats") or {})}
         )
         import uuid
 
@@ -772,40 +743,30 @@ class AcidDataSourceWriter(DataSourceArrowWriter):
                 writer.close()
         return AcidCommitMessage(rel if writer is not None else None, rows)
 
-    # Runs on the DRIVER: one atomic log commit for the whole job.
-    def commit(self, messages) -> None:
-        from pkg2_spark.tableformat import (
-            ConcurrentCommitError,
-            _commit,
-            _file_stats,
-        )
+    # Runs on the DRIVER: one atomic log commit for the whole job. The
+    # stream writer commits through here too, with its epoch's batch_id:
+    # an epoch the snapshot's ledger already holds is skipped.
+    def commit(self, messages, batch_id: int | None = None) -> None:
+        written = [m.rel for m in messages if m is not None and m.rel]
+        add = _add_entries(self.path, written, self.stats_cols)
+        meta = {"writer": "pkg2acid-python-datasource"}
+        if batch_id is not None:
+            meta["batchId"] = batch_id
 
-        written = [m for m in messages if m is not None and m.rel]
-        metas = _file_stats(
-            [os.path.join(self.path, m.rel) for m in written], self.stats_cols
-        )
-        add = [
-            {"path": m.rel, "rows": meta["rows"], "stats": meta["stats"]}
-            for m, meta in zip(written, metas)
-        ]
-        for _ in range(20):
-            v = latest_version(self.path) + 1
-            try:
-                _commit(
-                    self.path, v, "append", add, [],
-                    meta={"writer": "pkg2acid-python-datasource"},
-                    # Re-resolved per attempt: a concurrent evolution
-                    # landing in the plan->commit window must survive
-                    # into the recorded schema, not be reverted by the
-                    # stale plan-time snapshot.
-                    schema=_commit_schema_json(self.path, self.schema_json),
-                )
-                return
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"pkg2acid append to {self.path} kept losing commit races"
-        )
+        def attempt():
+            snap = snapshot(self.path)
+            if batch_id in snap.batch_ids:
+                return  # epoch already landed: exactly-once skip
+            _commit(
+                self.path, snap.version + 1, "append", add, [], meta=meta,
+                # Re-resolved per attempt: a concurrent evolution
+                # landing in the plan->commit window must survive
+                # into the recorded schema, not be reverted by the
+                # stale plan-time snapshot.
+                schema=_commit_schema_json(snap, self.schema_json),
+            )
+
+        _commit_retrying(self.path, "pkg2acid append", attempt)
 
     def abort(self, messages) -> None:
         # Written files are unreferenced by the log — readers never see
@@ -837,48 +798,7 @@ class AcidStreamWriter(DataSourceStreamArrowWriter):
         return self._w.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        from pkg2_spark.tableformat import (
-            ConcurrentCommitError,
-            _commit,
-            _file_stats,
-            _read_commit,
-            _versions,
-        )
-
-        w = self._w
-        written = [m for m in messages if m is not None and m.rel]
-        metas = _file_stats(
-            [os.path.join(w.path, m.rel) for m in written], w.stats_cols
-        )
-        add = [
-            {"path": m.rel, "rows": meta["rows"], "stats": meta["stats"]}
-            for m, meta in zip(written, metas)
-        ]
-        for _ in range(20):
-            seen = {
-                _read_commit(w.path, v).get("meta", {}).get("batchId")
-                for v in _versions(w.path)
-            }
-            if batchId in seen:
-                return  # epoch already landed: exactly-once skip
-            v = latest_version(w.path) + 1
-            try:
-                _commit(
-                    w.path, v, "append", add, [],
-                    meta={
-                        "writer": "pkg2acid-python-datasource",
-                        "batchId": batchId,
-                    },
-                    # Same drift rule as the batch writer: merge against
-                    # the log's CURRENT schema per attempt.
-                    schema=_commit_schema_json(w.path, w.schema_json),
-                )
-                return
-            except ConcurrentCommitError:
-                continue  # refold: maybe the winner WAS this epoch
-        raise ConcurrentCommitError(
-            f"pkg2acid stream append to {w.path} kept losing commit races"
-        )
+        self._w.commit(messages, batchId)
 
     def abort(self, messages, batchId: int) -> None:
         self._w.abort(messages)

@@ -35,6 +35,12 @@ Protocol:
   ``write``), stats-pruning degenerates to partition pruning without
   hive-style directory coupling.
 
+One core, two adapters: every reader and writer — the ``Table`` API
+here and the ``pkg2acid`` Python Data Source (acid_datasource.py) —
+folds the log through ONE walk (``_fold`` → ``Snapshot``), prunes with
+ONE stats predicate (``stats_may_match``) and commits through ONE retry
+loop (``_commit_retrying``).
+
 Scale posture: the log is O(commits) tiny JSON; folding it is
 driver-side metadata work (exactly the metadata layer Delta/Iceberg
 pay), and every data-path operation is a plain Spark job over parquet —
@@ -44,14 +50,19 @@ table data to the driver.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import uuid
 from dataclasses import dataclass
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
 _LOG_FMT = "{:020d}.json"
+# Attempts of the one commit-retry loop (_commit_retrying) before a writer
+# gives up; four threads racing three appends each need at most 11.
+COMMIT_ATTEMPTS = 20
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -101,105 +112,206 @@ def latest_version(path: str) -> int:
     return vs[-1] if vs else -1
 
 
-def _read_commit(path: str, version: int) -> dict:
-    with open(os.path.join(_log_dir(path), _LOG_FMT.format(version))) as f:
-        return json.load(f)
+@dataclass
+class Snapshot:
+    """The table state at ``version``, folded from the log: the live add
+    entries by relative path (rows and stats ride along), the live
+    deletion-vector entries, the logged schema JSON (None when the log
+    predates schema recording or a restore reverted to such a version),
+    the commit record of ``version`` itself, and the batch-id ledger of
+    the exactly-once streaming sinks."""
+
+    path: str
+    version: int
+    files: dict[str, dict]
+    dv: list[dict]
+    schema_json: dict | None
+    commit: dict
+    batch_ids: set
+
+    @property
+    def schema(self):
+        from pyspark.sql.types import StructType
+
+        if self.schema_json is None:
+            return None
+        return StructType.fromJson(self.schema_json)
+
+    def paths(self) -> list[str]:
+        """Absolute paths of the live data files."""
+        return [os.path.join(self.path, rel) for rel in self.files]
+
+
+def _empty(path: str) -> Snapshot:
+    return Snapshot(path, -1, {}, [], None, {}, set())
+
+
+def _fold(path: str, cut: int | None = None) -> Iterator[Snapshot]:
+    """THE log walk: read each commit up to ``cut`` (default: head) once
+    and yield the running snapshot after each version (nothing for a
+    nonexistent table). One Snapshot object advances in place, so
+    ``files`` and ``batch_ids`` change under a caller that keeps it
+    across steps; ``dv`` is replaced, never mutated. _snapshots_at copies.
+
+    DV entries ACCUMULATE across dv-delete commits; a commit carrying
+    ``dv_base`` (compact → [], restore → the target's folded state)
+    RESETS the set first. Stale DV rows referencing files a later rewrite
+    removed are harmless — the read-path anti-join keys on (file,
+    row_index) and dead files are never scanned — so merge never needs to
+    rewrite DV sidecars; compact's reset is a join-size optimization, not
+    a correctness requirement."""
+    vs = _versions(path)
+    if not vs:
+        return
+    cut = vs[-1] if cut is None else cut
+    if cut not in vs:
+        raise ValueError(f"version {cut} not in table log (have {vs})")
+    snap = _empty(path)
+    for v in vs:
+        if v > cut:
+            break
+        with open(os.path.join(_log_dir(path), _LOG_FMT.format(v))) as f:
+            rec = json.load(f)
+        for e in rec.get("add", []):
+            snap.files[e["path"]] = e
+        for rel in rec.get("remove", []):
+            snap.files.pop(rel, None)
+        snap.dv = list(rec.get("dv_base", snap.dv)) + list(rec.get("dv", []))
+        s = rec.get("schema")
+        if s is not None:
+            snap.schema_json = None if s.get("__none__") else s
+        bid = (rec.get("meta") or {}).get("batchId")
+        if bid is not None:
+            snap.batch_ids.add(bid)
+        snap.version, snap.commit = v, rec
+        yield snap
+
+
+def snapshot(path: str, version: int | None = None) -> Snapshot:
+    """The table state at ``version`` (default: head) — the fold's last
+    value. Raises FileNotFoundError for a nonexistent table."""
+    snap = None
+    for snap in _fold(path, version):
+        pass
+    if snap is None:
+        raise FileNotFoundError(f"no table log at {path}")
+    return snap
+
+
+def _head(path: str) -> Snapshot:
+    """The head snapshot, or the empty one at version -1 before the
+    table's first commit (appends create the table)."""
+    return snapshot(path) if latest_version(path) >= 0 else _empty(path)
+
+
+def _snapshots_at(path: str, versions) -> list[Snapshot]:
+    """Independent snapshots at each of ``versions``, from ONE walk."""
+    want = set(versions)
+    got = {}
+    for snap in _fold(path, max(want)):
+        if snap.version in want:
+            got[snap.version] = dataclasses.replace(
+                snap, files=dict(snap.files), batch_ids=set(snap.batch_ids)
+            )
+    missing = sorted(want - set(got))
+    if missing:
+        raise ValueError(f"versions {missing} not in table log of {path}")
+    return [got[v] for v in versions]
 
 
 def snapshot_files(path: str, version: int | None = None) -> list[str]:
     """Live data files (absolute paths) at ``version`` (default: latest),
     by folding add/remove over the log prefix — never by listing data/."""
-    vs = _versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no table log at {path}")
-    cut = vs[-1] if version is None else version
-    if cut not in vs:
-        raise ValueError(f"version {cut} not in table log (have {vs})")
-    live: dict[str, bool] = {}
-    for v in vs:
-        if v > cut:
-            break
-        c = _read_commit(path, v)
-        for f in c.get("add", []):
-            live[f["path"]] = True
-        for rel in c.get("remove", []):
-            live.pop(rel, None)
-    return [os.path.join(path, rel) for rel in live]
-
-
-def _live_entries(path: str, cut: int) -> dict[str, dict]:
-    """Live add ENTRIES (relative path → full add record, with rows and
-    stats) at version ``cut`` — the entry-preserving sibling of
-    snapshot_files, for metadata-only commits that re-add files by
-    reference (restore)."""
-    vs = _versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no table log at {path}")
-    if cut not in vs:
-        raise ValueError(f"version {cut} not in table log (have {vs})")
-    live: dict[str, dict] = {}
-    for v in vs:
-        if v > cut:
-            break
-        c = _read_commit(path, v)
-        for f in c.get("add", []):
-            live[f["path"]] = f
-        for rel in c.get("remove", []):
-            live.pop(rel, None)
-    return live
+    return snapshot(path, version).paths()
 
 
 def dv_state(path: str, cut: int | None = None) -> list[dict]:
-    """The DELETION-VECTOR state at version ``cut`` (default head): the
-    list of live DV entries ({"path": rel, "rows": n}), folded like the
-    file lists. DV entries ACCUMULATE across dv-delete commits; a commit
-    carrying ``dv_base`` (compact → [], restore → the target's folded
-    state) RESETS the set first. Stale DV rows referencing files a later
-    rewrite removed are harmless — the read-path anti-join keys on
-    (file, row_index) and dead files are never scanned — so merge never
-    needs to rewrite DV sidecars; compact's reset is a join-size
-    optimization, not a correctness requirement."""
-    vs = _versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no table log at {path}")
-    cut = vs[-1] if cut is None else cut
-    dvs: list[dict] = []
-    for v in vs:
-        if v > cut:
-            break
-        rec = _read_commit(path, v)
-        if "dv_base" in rec:
-            dvs = list(rec["dv_base"])
-        dvs = dvs + list(rec.get("dv", []))
-    return dvs
+    """The live DELETION-VECTOR entries ({"path": rel, "rows": n}) at
+    version ``cut`` (default head); see _fold for how they accumulate."""
+    return snapshot(path, cut).dv
 
 
-def _file_stats(files: list[str], stats_cols: list[str]) -> list[dict]:
-    """Per-file min/max for ``stats_cols``, read from parquet footers —
-    one metadata read per new file at COMMIT time (the Delta stats
-    design: pay once on write, skip forever on read)."""
+def log_schema(path: str, version: int | None = None):
+    """The logged table schema as of ``version`` (module-level so
+    session-free consumers — e.g. the Python Data Source's driver-side
+    planner — can fold the log without constructing a Table)."""
+    return snapshot(path, version).schema
+
+
+def _stat_comparable(value, lo):
+    """Convert a comparison value to the logged-stats domain, or None
+    when the pair is not safely comparable (prune only on same-type
+    comparisons; everything else stays un-pruned)."""
+    if isinstance(value, bool) or isinstance(lo, bool):
+        return None
+    if isinstance(value, (int, float)) and isinstance(lo, (int, float)):
+        return value
+    if hasattr(value, "isoformat") and isinstance(lo, str):
+        return value.isoformat()  # date/timestamp stats are logged ISO
+    if isinstance(value, str) and isinstance(lo, str):
+        return value
+    return None
+
+
+# Whether a file whose logged range is [lo, hi] may hold a row with
+# ``column <op> v``.
+_MAY_MATCH = {
+    "=": lambda lo, hi, v: lo <= v <= hi,
+    ">": lambda lo, hi, v: hi > v,
+    ">=": lambda lo, hi, v: hi >= v,
+    "<": lambda lo, hi, v: lo < v,
+    "<=": lambda lo, hi, v: lo <= v,
+}
+
+
+def stats_may_match(stats: dict, conds) -> bool:
+    """False only when a file's logged [min, max] ``stats`` PROVE that no
+    row satisfies every ``(column, op, value)`` in ``conds`` (op is one
+    of = > >= < <=). A column without stats, or a value not comparable
+    with them, never prunes, so pruning can only cost speed, never
+    correctness. merge() and the pkg2acid reader's pushed filters both
+    prune through this one predicate."""
+    for col, op, value in conds:
+        rng = stats.get(col)
+        if not rng:
+            continue
+        v = _stat_comparable(value, rng[0])
+        if v is not None and not _MAY_MATCH[op](rng[0], rng[1], v):
+            return False
+    return True
+
+
+def _file_stats(file: str, stats_cols: list[str]) -> dict:
+    """Row count and per-column min/max for ``stats_cols``, read from one
+    file's parquet footer at COMMIT time (the Delta stats design: pay
+    once on write, skip forever on read). A column whose footer values
+    pyarrow cannot decode, or that have no JSON form stats_may_match can
+    compare (e.g. decimals), logs no range: it never prunes, which is
+    always correct."""
     import pyarrow.parquet as pq
 
-    out = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        stats: dict[str, list] = {}
-        for col in stats_cols:
-            if col not in idx:
-                continue
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                s = md.row_group(rg).column(idx[col]).statistics
-                if s is None or not s.has_min_max:
-                    lo = hi = None
-                    break
+    md = pq.ParquetFile(file).metadata
+    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    stats: dict[str, list] = {}
+    for col in stats_cols:
+        if col not in idx:
+            continue
+        lo = hi = None
+        for rg in range(md.num_row_groups):
+            s = md.row_group(rg).column(idx[col]).statistics
+            if s is None or not s.has_min_max:
+                lo = hi = None
+                break
+            try:
                 lo = s.min if lo is None else min(lo, s.min)
                 hi = s.max if hi is None else max(hi, s.max)
-            if lo is not None:
-                stats[col] = [_json_safe(lo), _json_safe(hi)]
-        out.append({"stats": stats, "rows": md.num_rows})
-    return out
+            except NotImplementedError:  # pyarrow cannot decode them
+                lo = hi = None
+                break
+        lo, hi = _json_safe(lo), _json_safe(hi)
+        if _comparable_scalar(lo) and _comparable_scalar(hi):
+            stats[col] = [lo, hi]
+    return {"rows": md.num_rows, "stats": stats}
 
 
 def _json_safe(v):
@@ -210,50 +322,59 @@ def _json_safe(v):
     return v
 
 
-def _write_data(
-    df: DataFrame, path: str, version: int, stats_cols: list[str] | None
+def _comparable_scalar(v) -> bool:
+    return isinstance(v, (int, float, str)) and not isinstance(v, bool)
+
+
+def _add_entries(
+    root: str, rels: list[str], stats_cols: list[str] | None
 ) -> list[dict]:
-    """Write ``df`` into a fresh per-commit data dir and return its add
-    entries (relative path + footer stats). The dir name carries the
-    target version and a uuid, so concurrent writers never collide on
-    data paths even when they race on the commit itself."""
-    rel_dir = os.path.join("data", f"v{version}-{uuid.uuid4().hex[:12]}")
-    out_dir = os.path.join(path, rel_dir)
-    df.write.mode("error").parquet(out_dir)
-    files = sorted(
-        os.path.join(out_dir, f)
-        for f in os.listdir(out_dir)
-        if f.endswith(".parquet")
-    )
-    metas = _file_stats(files, stats_cols or [])
+    """THE add-entry builder, run after a write: one log entry (relative
+    path, row count, footer stats) per freshly written file under
+    ``root``. Table writes, DV sidecars and the pkg2acid writers all
+    commit through it."""
     return [
-        {
-            "path": os.path.join(rel_dir, os.path.basename(f)),
-            "rows": m["rows"],
-            "stats": m["stats"],
-        }
-        for f, m in zip(files, metas)
+        {"path": rel, **_file_stats(os.path.join(root, rel), stats_cols or [])}
+        for rel in rels
     ]
 
 
-def log_schema(path: str, version: int | None = None):
-    """The logged table schema as of ``version`` (module-level so
-    session-free consumers — e.g. the Python Data Source's driver-side
-    planner — can fold the log without constructing a Table)."""
-    from pyspark.sql.types import StructType
+def _write_files(df: DataFrame, root: str, rel_dir: str) -> list[str]:
+    """Write ``df`` as parquet into the fresh directory ``rel_dir`` under
+    ``root``; returns the written files relative to ``root``."""
+    out_dir = os.path.join(root, rel_dir)
+    df.write.mode("error").parquet(out_dir)
+    return sorted(
+        os.path.join(rel_dir, f) for f in os.listdir(out_dir) if f.endswith(".parquet")
+    )
 
-    vs = _versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no table log at {path}")
-    cut = vs[-1] if version is None else version
-    rec = None
-    for v in vs:
-        if v > cut:
-            break
-        s = _read_commit(path, v).get("schema")
-        if s is not None:
-            rec = None if s.get("__none__") else s
-    return StructType.fromJson(rec) if rec is not None else None
+
+def _check_schema(path: str, current, new, allow_evolution: bool) -> None:
+    """Schema ENFORCEMENT for every append-shaped write (Table.append,
+    merge, append_batch and the pkg2acid writers — the Delta posture): a
+    write whose columns differ from the logged ``current`` schema is
+    refused unless ``allow_evolution`` — with it, the write may ADD
+    columns but never drop or retype one (dropping silently loses data
+    on the next read; retyping breaks the pinned-schema scan of old
+    files)."""
+    if current is None:
+        return
+    cur = {f.name: f.dataType for f in current.fields}
+    new = {f.name: f.dataType for f in new.fields}
+    dropped = sorted(set(cur) - set(new))
+    added = sorted(set(new) - set(cur))
+    retyped = sorted(n for n in set(cur) & set(new) if cur[n] != new[n])
+    if dropped or retyped:
+        raise ValueError(
+            f"append to {path} is schema-incompatible: "
+            f"dropped={dropped} retyped={retyped} (evolution may only "
+            "ADD columns)"
+        )
+    if added and not allow_evolution:
+        raise ValueError(
+            f"append to {path} adds columns {added}; set "
+            "allow_schema_evolution to evolve the table schema"
+        )
 
 
 def _commit(
@@ -281,6 +402,10 @@ def _commit(
         rec["dv"] = dv
     if dv_base is not None:
         rec["dv_base"] = dv_base
+    # Serialize BEFORE the exclusive create: a record that fails to
+    # serialize must leave no version file behind — a half-written one
+    # would break every later fold and win every later race.
+    body = json.dumps(rec, indent=1)
     target = os.path.join(_log_dir(path), _LOG_FMT.format(version))
     try:
         fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
@@ -289,7 +414,22 @@ def _commit(
             f"version {version} of {path} was committed by another writer"
         ) from None
     with os.fdopen(fd, "w") as f:
-        json.dump(rec, f, indent=1)
+        f.write(body)
+
+
+def _commit_retrying(path: str, what: str, attempt: Callable[[], Any]):
+    """THE optimistic-concurrency loop every writer commits through:
+    ``attempt`` folds a fresh snapshot, plans against it and commits
+    through _commit. Losing the log race discards that attempt wholesale
+    (its data dir stays unreferenced for vacuum) and re-runs it against
+    the new head — serializable for rewrites, a plain retry for blind
+    appends."""
+    for _ in range(COMMIT_ATTEMPTS):
+        try:
+            return attempt()
+        except ConcurrentCommitError:
+            continue
+    raise ConcurrentCommitError(f"{what} on {path} kept losing commit races")
 
 
 def _with_zvalue(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -344,14 +484,14 @@ def _with_zvalue(df: DataFrame, cols: list[str]) -> DataFrame:
 @dataclass
 class Table:
     """Handle on a logged table — all mutators go through the commit
-    protocol; all readers go through snapshot folding."""
+    protocol; all readers go through snapshot folding. Each operation
+    folds the log once and works from that one Snapshot."""
 
     spark: SparkSession
     path: str
     stats_cols: list[str] | None = None
     cluster_by: str | None = None
     num_files: int | None = None
-    max_retries: int = 5
 
     # -- readers ---------------------------------------------------------
     def schema_at(self, version: int | None = None):
@@ -369,9 +509,11 @@ class Table:
         written before a column existed surface it as null (schema
         evolution), and old versions read back with their OLD schema
         (time travel is schema-correct, not just row-correct)."""
-        files = snapshot_files(self.path, version)
-        schema = self.schema_at(version)
-        if version is not None:
+        return self._read(snapshot(self.path, version), version is not None)
+
+    def _read(self, snap: Snapshot, time_travel: bool) -> DataFrame:
+        files = snap.paths()
+        if time_travel:
             # Time travel outside the vacuum retention window should say
             # so, not fail lazily inside a Spark scan. The stat walk is
             # confined to EXPLICIT time-travel reads: the latest
@@ -379,30 +521,28 @@ class Table:
             # so the hot path pays nothing. DV sidecars are part of the
             # snapshot: a vacuumed DV file makes the version unreadable
             # the same way a vacuumed data file does.
-            dv_files = [
-                os.path.join(self.path, e["path"])
-                for e in dv_state(self.path, version)
-            ]
+            dv_files = [os.path.join(self.path, e["path"]) for e in snap.dv]
             gone = [f for f in files + dv_files if not os.path.exists(f)]
             if gone:
                 raise FileNotFoundError(
-                    f"version {version} of {self.path} is no longer "
+                    f"version {snap.version} of {self.path} is no longer "
                     f"readable: {len(gone)}/{len(files) + len(dv_files)} "
                     "of its data/DV files were vacuumed (raise vacuum's "
                     "keep_versions to retain deeper time travel)"
                 )
         if not files:
+            schema = snap.schema
             if schema is not None:
                 return self.spark.createDataFrame([], schema)
             # pre-schema-recording log: take any file it ever referenced
-            first = _read_commit(self.path, _versions(self.path)[0])
+            first = next(_fold(self.path)).commit
             probe = [os.path.join(self.path, f["path"]) for f in first["add"]]
             return self.spark.read.parquet(*probe).limit(0)
-        return self._scan(files, version)
+        return self._scan(files, snap)
 
     def history(self) -> list[dict]:
         """The commit log, oldest first (driver-side: O(commits))."""
-        return [_read_commit(self.path, v) for v in _versions(self.path)]
+        return [snap.commit for snap in _fold(self.path)]
 
     def changes(self, v_from: int, v_to: int) -> DataFrame:
         """Row-level CDC between two snapshots: rows only in ``v_to`` are
@@ -415,19 +555,18 @@ class Table:
         appended files; a merge reads just the rewritten region. The
         exceptAll pair is two hash-aggregates over the differing files,
         never a full-table pass."""
-        sa = set(snapshot_files(self.path, v_from))
-        sb = set(snapshot_files(self.path, v_to))
+        a, b = _snapshots_at(self.path, (v_from, v_to))
+        sa, sb = set(a.paths()), set(b.paths())
         only_a, only_b = sorted(sa - sb), sorted(sb - sa)
         import pyspark.sql.functions as F
 
-        dva, dvb = dv_state(self.path, v_from), dv_state(self.path, v_to)
+        dva, dvb = a.dv, b.dv
         dv_moved = [e["path"] for e in dva] != [e["path"] for e in dvb]
         if not only_a and not only_b and not dv_moved:
-            return self.read(v_to).limit(0).withColumn("change_type", F.lit(""))
+            return self._read(b, True).limit(0).withColumn("change_type", F.lit(""))
         # Both sides read under v_to's LOG schema so an evolved column
         # aligns (nulls on the old side) instead of failing the exceptAll.
-        schema = self.schema_at(v_to)
-        reader = self.spark.read.schema(schema) if schema else self.spark.read
+        reader = self._pinned_reader(b)
         schema_probe = sorted(sb or sa)[0]
         empty = reader.parquet(schema_probe).limit(0).withColumn(
             "change_type", F.lit("")
@@ -511,13 +650,13 @@ class Table:
             out = out.unionByName(p)
         return out
 
-    def _pinned_reader(self, version: int | None = None):
+    def _pinned_reader(self, snap: Snapshot):
         """A reader pinned to the log's schema — EVERY rewrite must scan
         through this: after a schema evolution the live set holds files
         with and without the added column, and plain parquet inference
         picks one footer arbitrarily, silently dropping the evolved
         column from a compaction/delete/merge rewrite."""
-        schema = self.schema_at(version)
+        schema = snap.schema
         return self.spark.read.schema(schema) if schema else self.spark.read
 
     def _file_prefix(self) -> str:
@@ -569,20 +708,15 @@ class Table:
             )
         return tagged if keep_pos else tagged.drop("__file", "__ri")
 
-    def _scan(
-        self,
-        files: list[str],
-        version: int | None = None,
-        keep_pos: bool = False,
-    ):
-        """Schema-pinned scan of ``files`` with the version's DELETION
+    def _scan(self, files: list[str], snap: Snapshot, keep_pos: bool = False):
+        """Schema-pinned scan of ``files`` with the snapshot's DELETION
         VECTORS applied — THE scan every reader and every rewrite must go
         through once a table has DV commits: a rewrite reading raw files
         would RESURRECT merge-on-read-deleted rows into its output.
         ``keep_pos`` keeps the __file/__ri position columns for callers
         that need them (the DV writer)."""
-        df = self._pinned_reader(version).parquet(*files)
-        return self._apply_dv(df, dv_state(self.path, version), keep_pos)
+        df = self._pinned_reader(snap).parquet(*files)
+        return self._apply_dv(df, snap.dv, keep_pos)
 
     # -- writers ---------------------------------------------------------
     def create(self, df: DataFrame) -> int:
@@ -592,50 +726,24 @@ class Table:
         (the layout lever)."""
         if latest_version(self.path) >= 0:
             raise FileExistsError(f"table already exists at {self.path}")
-        return self._mutate("create", df, remove=[], base_version=-1)
+        return self._mutate("create", df, _empty(self.path), remove=[])
 
     def append(self, df: DataFrame, allow_schema_evolution: bool = False) -> int:
         """Blind append — never conflicts logically, so a commit race is
         simply retried against the next version.
 
-        Schema ENFORCEMENT (the Delta posture): an append whose columns
-        differ from the table's logged schema is refused unless
-        ``allow_schema_evolution`` — with it, the append may ADD columns
-        (the commit's logged schema becomes the new table schema; old
-        files read the new column as null) but never drop or retype one
-        (dropping silently loses data on the next read; retyping breaks
-        the pinned-schema scan of old files)."""
-        self._enforce_schema(df, allow_schema_evolution)
-        for _ in range(self.max_retries):
-            v = latest_version(self.path)
-            try:
-                return self._mutate("append", df, remove=[], base_version=v)
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(f"append to {self.path} kept losing races")
+        Schema ENFORCEMENT (the Delta posture, see _check_schema): an
+        append whose columns differ from the table's logged schema is
+        refused unless ``allow_schema_evolution`` — with it, the append
+        may ADD columns (the commit's logged schema becomes the new table
+        schema; old files read the new column as null)."""
 
-    def _enforce_schema(self, df: DataFrame, allow_evolution: bool) -> None:
-        current = self.schema_at() if latest_version(self.path) >= 0 else None
-        if current is None:
-            return
-        cur = {f.name: f.dataType for f in current.fields}
-        new = {f.name: f.dataType for f in df.schema.fields}
-        dropped = sorted(set(cur) - set(new))
-        added = sorted(set(new) - set(cur))
-        retyped = sorted(
-            n for n in set(cur) & set(new) if cur[n] != new[n]
-        )
-        if dropped or retyped:
-            raise ValueError(
-                f"append to {self.path} is schema-incompatible: "
-                f"dropped={dropped} retyped={retyped} (evolution may only "
-                "ADD columns)"
-            )
-        if added and not allow_evolution:
-            raise ValueError(
-                f"append to {self.path} adds columns {added}; pass "
-                "allow_schema_evolution=True to evolve the table schema"
-            )
+        def attempt():
+            snap = _head(self.path)
+            _check_schema(self.path, snap.schema, df.schema, allow_schema_evolution)
+            return self._mutate("append", df, snap, remove=[])
+
+        return _commit_retrying(self.path, "append", attempt)
 
     def merge(self, updates: DataFrame, key: str) -> int:
         """Copy-on-write upsert: rows of ``updates`` replace same-``key``
@@ -662,7 +770,6 @@ class Table:
         wholesale (its data dir is left unreferenced for vacuum)."""
         import pyspark.sql.functions as F
 
-        self._enforce_schema(updates, allow_evolution=False)
         # Materialize the distinct update-key set ONCE: it is read by
         # three separate jobs (bounds, findTouchedFiles, the rewrite's
         # anti-join) and a derived `updates` frame would otherwise
@@ -671,59 +778,60 @@ class Table:
         bounds = keys.agg(
             F.min(key).alias("lo"), F.max(key).alias("hi")
         ).collect()[0]
-        lo, hi = _json_safe(bounds["lo"]), _json_safe(bounds["hi"])
-        for _ in range(self.max_retries):
-            v = latest_version(self.path)
-            live = snapshot_files(self.path, v)
-            candidates, kept = self._split_by_stats(v, live, key, lo, hi)
+        in_bounds = [
+            (key, ">=", _json_safe(bounds["lo"])),
+            (key, "<=", _json_safe(bounds["hi"])),
+        ]
+
+        def attempt():
+            snap = snapshot(self.path)
+            _check_schema(self.path, snap.schema, updates.schema, False)
+            candidates = [
+                os.path.join(self.path, rel)
+                for rel, e in snap.files.items()
+                if stats_may_match(e.get("stats") or {}, in_bounds)
+            ]
             touched = self._find_touched_files(candidates, keys, key)
-            kept = kept + [f for f in candidates if f not in set(touched)]
             if touched:
                 # No broadcast hint: the update delta is unbounded in
                 # general (a day's CDC feed) — AQE sizes the anti-join.
                 # _scan, not a raw read: a raw rewrite would RESURRECT
                 # DV-deleted rows living in the touched files.
-                base = self._scan(touched)
+                base = self._scan(touched, snap)
                 rewritten = base.join(
                     keys, key, "left_anti"
                 ).unionByName(updates)
             else:
                 rewritten = updates
-            rel_touched = [os.path.relpath(f, self.path) for f in touched]
-            try:
-                return self._mutate(
-                    "merge",
-                    rewritten,
-                    remove=rel_touched,
-                    base_version=v,
-                    meta={
-                        "pruned_files": len(kept),
-                        "rewritten_files": len(touched),
-                        "key": key,
-                    },
-                )
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(f"merge into {self.path} kept losing races")
+            return self._mutate(
+                "merge",
+                rewritten,
+                snap,
+                remove=[os.path.relpath(f, self.path) for f in touched],
+                meta={
+                    "pruned_files": len(snap.files) - len(touched),
+                    "rewritten_files": len(touched),
+                    "key": key,
+                },
+            )
+
+        return _commit_retrying(self.path, "merge", attempt)
 
     def delete_where(self, predicate: str) -> int:
         """Copy-on-write delete: rewrite the snapshot minus matching rows.
         (File pruning on the predicate column is the same stats walk as
         merge; kept simple here — predicates are arbitrary SQL.)"""
-        for _ in range(self.max_retries):
-            v = latest_version(self.path)
-            live = snapshot_files(self.path, v)
-            base = self._scan(live)  # DV-applied: never resurrect
+
+        def attempt():
+            snap = snapshot(self.path)
+            base = self._scan(snap.paths(), snap)  # DV-applied: never resurrect
             kept_rows = base.filter(f"NOT ({predicate})")
-            rel = [os.path.relpath(f, self.path) for f in live]
-            try:
-                return self._mutate(
-                    "delete", kept_rows, remove=rel, base_version=v,
-                    meta={"predicate": predicate},
-                )
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(f"delete in {self.path} kept losing races")
+            return self._mutate(
+                "delete", kept_rows, snap, remove=list(snap.files),
+                meta={"predicate": predicate},
+            )
+
+        return _commit_retrying(self.path, "delete", attempt)
 
     def update_where(self, predicate: str, assignments: dict[str, str]) -> int:
         """Copy-on-write UPDATE ... SET col = expr WHERE predicate. All
@@ -738,10 +846,9 @@ class Table:
         meta so table history shows which path ran."""
         import pyspark.sql.functions as F
 
-        for _ in range(self.max_retries):
-            v = latest_version(self.path)
-            live = snapshot_files(self.path, v)
-            base = self._scan(live)
+        def attempt():
+            snap = snapshot(self.path)
+            base = self._scan(snap.paths(), snap)
             missing = sorted(
                 c for c in assignments
                 if c not in {f.name for f in base.schema.fields}
@@ -764,24 +871,19 @@ class Table:
                     )
                 else:
                     cols.append(F.col(f.name))
-            out = base.select(*cols)
-            rel = [os.path.relpath(f, self.path) for f in live]
-            pre = self.schema_at(v)
-            try:
-                return self._mutate(
-                    "update", out, remove=rel, base_version=v,
-                    meta={
-                        "predicate": predicate,
-                        "assignments": dict(assignments),
-                    },
-                    # record the DECLARED schema, not the expression's:
-                    # when/otherwise marks outputs nullable, and an
-                    # UPDATE must not loosen the table's nullability
-                    schema_json=pre.jsonValue() if pre is not None else None,
-                )
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(f"update in {self.path} kept losing races")
+            return self._mutate(
+                "update", base.select(*cols), snap, remove=list(snap.files),
+                meta={
+                    "predicate": predicate,
+                    "assignments": dict(assignments),
+                },
+                # record the DECLARED schema, not the expression's:
+                # when/otherwise marks outputs nullable, and an
+                # UPDATE must not loosen the table's nullability
+                schema_json=snap.schema_json,
+            )
+
+        return _commit_retrying(self.path, "update", attempt)
 
     def delete_where_dv(self, predicate: str) -> int:
         """MERGE-ON-READ delete — the deletion-vector arm of delete_where
@@ -805,54 +907,42 @@ class Table:
         shape for scattered compliance deletes."""
         import pyspark.sql.functions as F
 
-        for _ in range(self.max_retries):
-            v = latest_version(self.path)
-            live = snapshot_files(self.path, v)
+        def attempt():
+            snap = snapshot(self.path)
+            v = snap.version + 1
             matches = (
-                self._scan(live, version=v, keep_pos=True)
+                self._scan(snap.paths(), snap, keep_pos=True)
                 .filter(predicate)
                 .select(
                     F.col("__file").alias("file"),
                     F.col("__ri").alias("ri"),
                 )
             )
-            rel_dir = os.path.join("dv", f"v{v + 1}-{uuid.uuid4().hex[:12]}")
-            out_dir = os.path.join(self.path, rel_dir)
-            matches.write.mode("error").parquet(out_dir)
-            files = sorted(
-                f for f in os.listdir(out_dir) if f.endswith(".parquet")
-            )
-            metas = _file_stats([os.path.join(out_dir, f) for f in files], [])
+            rel_dir = os.path.join("dv", f"v{v}-{uuid.uuid4().hex[:12]}")
             dv = [
-                {"path": os.path.join(rel_dir, f), "rows": m["rows"]}
-                for f, m in zip(files, metas)
-                if m["rows"] > 0
-            ]
-            try:
-                _commit(
-                    self.path,
-                    v + 1,
-                    "delete",
-                    [],
-                    [],
-                    meta={
-                        "predicate": predicate,
-                        "mode": "dv",
-                        "rows_deleted": sum(e["rows"] for e in dv),
-                    },
-                    schema=(
-                        self.schema_at(v).jsonValue()
-                        if self.schema_at(v) is not None
-                        else None
-                    ),
-                    dv=dv,
+                {"path": e["path"], "rows": e["rows"]}
+                for e in _add_entries(
+                    self.path, _write_files(matches, self.path, rel_dir), []
                 )
-                return v + 1
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"dv-delete in {self.path} kept losing races"
-        )
+                if e["rows"] > 0
+            ]
+            _commit(
+                self.path,
+                v,
+                "delete",
+                [],
+                [],
+                meta={
+                    "predicate": predicate,
+                    "mode": "dv",
+                    "rows_deleted": sum(e["rows"] for e in dv),
+                },
+                schema=snap.schema_json,
+                dv=dv,
+            )
+            return v
+
+        return _commit_retrying(self.path, "dv-delete", attempt)
 
     def compact_small(self, target_rows: int, max_files: int | None = None) -> int:
         """PARTIAL compaction — bin-pack only files with fewer than
@@ -869,37 +959,32 @@ class Table:
         depend on their DV rows. Touched files' DV rows simply go stale
         (harmless by the (file, row_index) key design); the next FULL
         compact reclaims the set."""
-        for _ in range(self.max_retries):
-            v = latest_version(self.path)
-            entries = _live_entries(self.path, v)
+
+        def attempt():
+            snap = snapshot(self.path)
             small = sorted(
                 rel
-                for rel, e in entries.items()
+                for rel, e in snap.files.items()
                 if e.get("rows") is not None and e["rows"] < target_rows
             )
             if len(small) < 2:
-                return v
-            df = self._scan([os.path.join(self.path, rel) for rel in small])
-            saved = self.num_files
-            try:
-                if max_files is not None:
-                    self.num_files = max_files
-                return self._mutate(
-                    "compact", df, remove=small, base_version=v,
-                    meta={
-                        "compacted_files": len(small),
-                        "partial": True,
-                        "target_rows": target_rows,
-                        "kept_files": len(entries) - len(small),
-                    },
-                )
-            except ConcurrentCommitError:
-                continue
-            finally:
-                self.num_files = saved
-        raise ConcurrentCommitError(
-            f"compact_small of {self.path} kept losing races"
-        )
+                return snap.version
+            df = self._scan([os.path.join(self.path, rel) for rel in small], snap)
+            return self._mutate(
+                "compact", df, snap, remove=small,
+                meta={
+                    "compacted_files": len(small),
+                    "partial": True,
+                    "target_rows": target_rows,
+                    "kept_files": len(snap.files) - len(small),
+                },
+                layout=(
+                    self.num_files if max_files is None else max_files,
+                    self.cluster_by,
+                ),
+            )
+
+        return _commit_retrying(self.path, "compact_small", attempt)
 
     def compact(
         self,
@@ -924,50 +1009,37 @@ class Table:
         min/max-scaled to 8-bit buckets via one tiny broadcast bounds
         agg — scale-free, no window, no sort beyond the write's range
         partitioning."""
-        for _ in range(self.max_retries):
-            v = latest_version(self.path)
-            live = snapshot_files(self.path, v)
-            df = self._scan(live)  # DV-applied: compaction MATERIALIZES
-            # merge-on-read deletes; its commit resets the DV set.
-            rel = [os.path.relpath(f, self.path) for f in live]
-            saved_files, saved_cluster = self.num_files, self.cluster_by
-            try:
-                if max_files is not None:
-                    self.num_files = max_files
-                if zorder_by:
-                    df = _with_zvalue(df, zorder_by)
-                    n = self.num_files
-                    out = (
-                        df.repartitionByRange(n, "__z")
-                        if n
-                        else df.repartitionByRange("__z")
-                    ).sortWithinPartitions("__z").drop("__z")
-                    self.cluster_by = None  # layout already applied
-                    df = out
-                meta = {"compacted_files": len(live)}
-                if zorder_by:
-                    meta["zorder_by"] = list(zorder_by)
-                return self._mutate(
-                    "compact", df, remove=rel, base_version=v, meta=meta,
-                    # the rewrite materialized every DV delete; reset the
-                    # folded DV set so readers stop paying the anti-join
-                    dv_base=[],
-                )
-            except ConcurrentCommitError:
-                continue
-            finally:
-                self.num_files, self.cluster_by = saved_files, saved_cluster
-        raise ConcurrentCommitError(f"compact of {self.path} kept losing races")
+        n = self.num_files if max_files is None else max_files
+
+        def attempt():
+            snap = snapshot(self.path)
+            df = self._scan(snap.paths(), snap)  # DV-applied: compaction
+            # MATERIALIZES merge-on-read deletes; its commit resets the DV set.
+            cluster_by = self.cluster_by
+            meta = {"compacted_files": len(snap.files)}
+            if zorder_by:
+                df = _with_zvalue(df, zorder_by)
+                df = (
+                    df.repartitionByRange(n, "__z")
+                    if n
+                    else df.repartitionByRange("__z")
+                ).sortWithinPartitions("__z").drop("__z")
+                cluster_by = None  # layout already applied
+                meta["zorder_by"] = list(zorder_by)
+            return self._mutate(
+                "compact", df, snap, remove=list(snap.files), meta=meta,
+                # the rewrite materialized every DV delete; reset the
+                # folded DV set so readers stop paying the anti-join
+                dv_base=[],
+                layout=(n, cluster_by),
+            )
+
+        return _commit_retrying(self.path, "compact", attempt)
 
     def committed_batch_ids(self) -> set:
         """batchIds of every idempotent append in the log (the streaming
-        sink's replay ledger)."""
-        out = set()
-        for c in self.history():
-            bid = (c.get("meta") or {}).get("batchId")
-            if bid is not None:
-                out.add(bid)
-        return out
+        sinks' replay ledger, folded with the snapshot)."""
+        return _head(self.path).batch_ids
 
     def append_batch(self, df: DataFrame, batch_id: int) -> int | None:
         """EXACTLY-ONCE streaming append — the foreachBatch sink body.
@@ -979,21 +1051,17 @@ class Table:
         write and commit replays harmlessly — the orphan data dir is
         never referenced). Returns the committed version, or None if
         this batch was already in the log."""
-        self._enforce_schema(df, allow_evolution=False)
-        for _ in range(self.max_retries):
-            if batch_id in self.committed_batch_ids():
-                return None
-            v = latest_version(self.path)
-            try:
-                return self._mutate(
-                    "append", df, remove=[], base_version=v,
-                    meta={"batchId": batch_id},
-                )
-            except ConcurrentCommitError:
-                continue  # refold: maybe the winner WAS this batch_id
-        raise ConcurrentCommitError(
-            f"append_batch({batch_id}) to {self.path} kept losing races"
-        )
+
+        def attempt():
+            snap = _head(self.path)
+            _check_schema(self.path, snap.schema, df.schema, False)
+            if batch_id in snap.batch_ids:
+                return None  # refolded: maybe a lost race's winner WAS this batch
+            return self._mutate(
+                "append", df, snap, remove=[], meta={"batchId": batch_id}
+            )
+
+        return _commit_retrying(self.path, f"append_batch({batch_id})", attempt)
 
     def restore(self, version: int) -> int:
         """RESTORE the table head to an earlier ``version`` as a NEW
@@ -1019,18 +1087,19 @@ class Table:
         compensating restore to the pre-restore state (metadata-only),
         then RestorePoisonedError carries both version numbers so
         callers can recover programmatically (r12 advice)."""
-        for _ in range(self.max_retries):
+
+        def missing(rels) -> list[str]:
+            return sorted(
+                rel for rel in rels if not os.path.exists(os.path.join(self.path, rel))
+            )
+
+        def attempt():
             head = latest_version(self.path)
             if version == head:
                 return head  # restoring to the head is a no-op
-            target = _live_entries(self.path, version)
-            target_dv = dv_state(self.path, version)
-            target_all = list(target) + [e["path"] for e in target_dv]
-            gone = sorted(
-                rel
-                for rel in target_all
-                if not os.path.exists(os.path.join(self.path, rel))
-            )
+            target, cur = _snapshots_at(self.path, (version, head))
+            target_all = list(target.files) + [e["path"] for e in target.dv]
+            gone = missing(target_all)
             if gone:
                 raise FileNotFoundError(
                     f"cannot restore {self.path} to version {version}: "
@@ -1038,127 +1107,102 @@ class Table:
                     "were vacuumed (raise vacuum's keep_versions to "
                     "retain deeper restore)"
                 )
-            cur = _live_entries(self.path, head)
-            add = [e for rel, e in sorted(target.items()) if rel not in cur]
-            remove = sorted(rel for rel in cur if rel not in target)
-            sch = self.schema_at(version)
-            try:
-                _commit(
-                    self.path,
-                    head + 1,
-                    "restore",
-                    add,
-                    remove,
-                    meta={
-                        "restored_to": version,
-                        "files_readded": len(add),
-                        "files_removed": len(remove),
-                        "files_rewritten": 0,
-                    },
-                    # {"__none__": true} is the explicit null-schema
-                    # marker: the target predates schema recording, and
-                    # the restore must revert to that state instead of
-                    # letting a later commit's schema win the fold.
-                    schema=(
-                        sch.jsonValue() if sch is not None else {"__none__": True}
-                    ),
-                    # DV state is part of the snapshot: revert it too.
-                    dv_base=target_dv,
-                )
-                # Check-then-commit closes a race: a concurrent vacuum
-                # may have reaped target files between the existence walk
-                # above and the commit write. Re-verify now that we own
-                # the head; a poisoned restore is compensated (a
-                # metadata-only restore back to the pre-restore state,
-                # committed while we still hold the head) and reported
-                # with both versions attached — never left as a silently
-                # unreadable head, and never re-poisoned by a caller's
-                # catch-and-retry loop (r12 advice).
-                gone = sorted(
-                    rel
-                    for rel in target_all
-                    if not os.path.exists(os.path.join(self.path, rel))
-                )
-                if gone:
-                    comp: int | None = None
-                    # The compensating commit re-adds the pre-restore
-                    # snapshot BY REFERENCE — but a second vacuum racing
-                    # in this same window (after the poisoned restore
-                    # became the retained head) can have reaped files
-                    # that only the pre-restore snapshot referenced.
-                    # Committing a reference to a missing file would
-                    # recreate the exact condition this mechanism exists
-                    # to prevent (an unreadable head), so re-verify the
-                    # WHOLE pre-restore snapshot (re-added entries plus
-                    # the files shared with the target) first and fall
-                    # through to the manual-remedy path if any are gone
-                    # (r13 advice).
-                    head_dv = dv_state(self.path, head)
-                    comp_gone = sorted(
-                        rel
-                        for rel in list(cur) + [e["path"] for e in head_dv]
-                        if not os.path.exists(os.path.join(self.path, rel))
-                    )
-                    if (
-                        not comp_gone
-                        and latest_version(self.path) == head + 1
-                    ):
-                        pre_sch = self.schema_at(head)
-                        try:
-                            _commit(
-                                self.path,
-                                head + 2,
-                                "restore",
-                                [cur[rel] for rel in remove],
-                                sorted(e["path"] for e in add),
-                                meta={
-                                    "restored_to": head,
-                                    "compensates": head + 1,
-                                    "files_readded": len(remove),
-                                    "files_removed": len(add),
-                                    "files_rewritten": 0,
-                                },
-                                schema=(
-                                    pre_sch.jsonValue()
-                                    if pre_sch is not None
-                                    else {"__none__": True}
-                                ),
-                                dv_base=head_dv,
-                            )
-                            comp = head + 2
-                        except ConcurrentCommitError:
-                            pass  # someone took the slot; report comp=None
-                    raise RestorePoisonedError(
-                        f"restore of {self.path} to version {version} "
-                        f"committed as v{head + 1}, but a concurrent "
-                        f"vacuum reaped {len(gone)}/{len(target)} of its "
-                        "data files in the window — the restored head is "
-                        "unreadable"
-                        + (
-                            f"; auto-committed compensating restore to the "
-                            f"pre-restore state as v{comp}"
-                            if comp is not None
-                            else (
-                                f"; the pre-restore snapshot lost "
-                                f"{len(comp_gone)} data file(s) to the "
-                                "same vacuum — compensation skipped; "
-                                "restore to an intact version manually "
-                                "to recover"
-                                if comp_gone
-                                else f"; compensation lost the head — "
-                                f"restore back to version {head} "
-                                "manually to recover"
-                            )
-                        ),
-                        poisoned_version=head + 1,
-                        compensated_version=comp,
-                    )
+            add = [e for rel, e in sorted(target.files.items()) if rel not in cur.files]
+            remove = sorted(rel for rel in cur.files if rel not in target.files)
+            _commit(
+                self.path,
+                head + 1,
+                "restore",
+                add,
+                remove,
+                meta={
+                    "restored_to": version,
+                    "files_readded": len(add),
+                    "files_removed": len(remove),
+                    "files_rewritten": 0,
+                },
+                # {"__none__": true} is the explicit null-schema
+                # marker: the target predates schema recording, and
+                # the restore must revert to that state instead of
+                # letting a later commit's schema win the fold.
+                schema=target.schema_json or {"__none__": True},
+                # DV state is part of the snapshot: revert it too.
+                dv_base=target.dv,
+            )
+            # Check-then-commit closes a race: a concurrent vacuum
+            # may have reaped target files between the existence walk
+            # above and the commit write. Re-verify now that we own
+            # the head; a poisoned restore is compensated (a
+            # metadata-only restore back to the pre-restore state,
+            # committed while we still hold the head) and reported
+            # with both versions attached — never left as a silently
+            # unreadable head, and never re-poisoned by a caller's
+            # catch-and-retry loop (r12 advice).
+            gone = missing(target_all)
+            if not gone:
                 return head + 1
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"restore of {self.path} kept losing commit races"
-        )
+            comp: int | None = None
+            # The compensating commit re-adds the pre-restore
+            # snapshot BY REFERENCE — but a second vacuum racing
+            # in this same window (after the poisoned restore
+            # became the retained head) can have reaped files
+            # that only the pre-restore snapshot referenced.
+            # Committing a reference to a missing file would
+            # recreate the exact condition this mechanism exists
+            # to prevent (an unreadable head), so re-verify the
+            # WHOLE pre-restore snapshot (re-added entries plus
+            # the files shared with the target) first and fall
+            # through to the manual-remedy path if any are gone
+            # (r13 advice).
+            comp_gone = missing(list(cur.files) + [e["path"] for e in cur.dv])
+            if not comp_gone and latest_version(self.path) == head + 1:
+                try:
+                    _commit(
+                        self.path,
+                        head + 2,
+                        "restore",
+                        [cur.files[rel] for rel in remove],
+                        sorted(e["path"] for e in add),
+                        meta={
+                            "restored_to": head,
+                            "compensates": head + 1,
+                            "files_readded": len(remove),
+                            "files_removed": len(add),
+                            "files_rewritten": 0,
+                        },
+                        schema=cur.schema_json or {"__none__": True},
+                        dv_base=cur.dv,
+                    )
+                    comp = head + 2
+                except ConcurrentCommitError:
+                    pass  # someone took the slot; report comp=None
+            raise RestorePoisonedError(
+                f"restore of {self.path} to version {version} "
+                f"committed as v{head + 1}, but a concurrent "
+                f"vacuum reaped {len(gone)}/{len(target_all)} of its "
+                "data/DV files in the window — the restored head is "
+                "unreadable"
+                + (
+                    f"; auto-committed compensating restore to the "
+                    f"pre-restore state as v{comp}"
+                    if comp is not None
+                    else (
+                        f"; the pre-restore snapshot lost "
+                        f"{len(comp_gone)} data file(s) to the "
+                        "same vacuum — compensation skipped; "
+                        "restore to an intact version manually "
+                        "to recover"
+                        if comp_gone
+                        else f"; compensation lost the head — "
+                        f"restore back to version {head} "
+                        "manually to recover"
+                    )
+                ),
+                poisoned_version=head + 1,
+                compensated_version=comp,
+            )
+
+        return _commit_retrying(self.path, "restore", attempt)
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
         """Delete data files no snapshot in the retained version window
@@ -1167,24 +1211,21 @@ class Table:
         would age them out). Time travel older than the window dies with
         the files, as in every table format."""
         vs = _versions(self.path)
-        keep = vs[-keep_versions:] if keep_versions > 0 else vs
+        keep = set(vs[-keep_versions:] if keep_versions > 0 else vs)
         referenced: set[str] = set()
-        for v in keep:
-            referenced.update(snapshot_files(self.path, v))
-            # DV sidecars are part of the snapshot: reaping a retained
-            # version's DV file would silently RESURRECT its deleted rows
-            referenced.update(
-                os.path.join(self.path, e["path"])
-                for e in dv_state(self.path, v)
-            )
         ever: set[str] = set()
-        for v in vs:
-            rec = _read_commit(self.path, v)
-            for f in rec.get("add", []):
-                ever.add(os.path.join(self.path, f["path"]))
-            for e in list(rec.get("dv", [])) + list(rec.get("dv_base", [])):
-                ever.add(os.path.join(self.path, e["path"]))
-        victims = sorted(ever - referenced)
+        # cut at the listed head: a commit landing meanwhile is outside
+        # both sets, so its files are never victims
+        for snap in _fold(self.path, vs[-1] if vs else None):
+            rec = snap.commit
+            ever.update(f["path"] for f in rec.get("add", []))
+            ever.update(e["path"] for e in rec.get("dv", []) + rec.get("dv_base", []))
+            if snap.version in keep:
+                referenced.update(snap.files)
+                # DV sidecars are part of the snapshot: reaping a retained
+                # version's DV file would silently RESURRECT its deleted rows
+                referenced.update(e["path"] for e in snap.dv)
+        victims = sorted(os.path.join(self.path, rel) for rel in ever - referenced)
         for f in victims:
             if os.path.exists(f):
                 os.remove(f)
@@ -1219,40 +1260,23 @@ class Table:
         }
         return [f for f in candidates if f in paths]
 
-    def _split_by_stats(
-        self, version: int, live: list[str], key: str, lo, hi
-    ) -> tuple[list[str], list[str]]:
-        """Partition the live file set into (touched, kept) by footer
-        stats recorded in the log: a file whose [min, max] on ``key``
-        misses [lo, hi] cannot contain an updated row."""
-        stats: dict[str, dict] = {}
-        for v in _versions(self.path):
-            if v > version:
-                break
-            for f in _read_commit(self.path, v).get("add", []):
-                stats[os.path.join(self.path, f["path"])] = f.get("stats", {})
-        touched, kept = [], []
-        for f in live:
-            s = stats.get(f, {}).get(key)
-            if s is None or lo is None:
-                touched.append(f)  # no stats -> cannot prune, must rewrite
-            elif s[0] <= hi and lo <= s[1]:
-                touched.append(f)
-            else:
-                kept.append(f)
-        return touched, kept
-
     def _mutate(
         self,
         op: str,
         df: DataFrame,
+        snap: Snapshot,
         remove: list[str],
-        base_version: int,
         meta: dict | None = None,
         dv_base: list[dict] | None = None,
         schema_json: dict | None = None,
+        layout: tuple[int | None, str | None] | None = None,
     ) -> int:
-        version = base_version + 1
+        """Write ``df`` and commit it as the version after ``snap``.
+        ``layout`` is this commit's (num_files, cluster_by), default the
+        handle's: an argument, never a change to the shared handle, so a
+        writer on the same Table in another thread keeps its own."""
+        version = snap.version + 1
+        num_files, cluster_by = layout or (self.num_files, self.cluster_by)
         # repartitionByRange, not hash repartition: range partitioning
         # gives each file a TIGHT, near-disjoint [min, max] on the
         # cluster column — that is what makes the footer-stats pruning
@@ -1263,15 +1287,21 @@ class Table:
         # which right-sizes partitions to advisoryPartitionSizeInBytes —
         # the production file-sizing lever (note AQE may coalesce a tiny
         # commit to ONE file, where pruning trivially cannot engage).
-        if self.cluster_by:
+        if cluster_by:
             out = (
-                df.repartitionByRange(self.num_files, self.cluster_by)
-                if self.num_files
-                else df.repartitionByRange(self.cluster_by)
+                df.repartitionByRange(num_files, cluster_by)
+                if num_files
+                else df.repartitionByRange(cluster_by)
             )
         else:
             out = df
-        add = _write_data(out, self.path, version, self.stats_cols)
+        # A fresh per-commit data dir: its name carries the target version
+        # and a uuid, so concurrent writers never collide on data paths
+        # even when they race on the commit itself.
+        rel_dir = os.path.join("data", f"v{version}-{uuid.uuid4().hex[:12]}")
+        add = _add_entries(
+            self.path, _write_files(out, self.path, rel_dir), self.stats_cols
+        )
         _commit(
             self.path, version, op, add, remove, meta,
             schema=schema_json if schema_json is not None else df.schema.jsonValue(),

@@ -43,11 +43,11 @@ def test_partition_planning_and_stats_pruning(spark, orders_table):
     # compute a scale-independent cut from the logged stats and assert
     # the EXACT surviving set: LessThanOrEqual(cut) keeps a file iff its
     # logged min <= cut.
-    from pkg2_spark.tableformat import _live_entries
+    from pkg2_spark.tableformat import snapshot
 
     ranges = [
         tuple(e["stats"]["o_orderkey"])
-        for e in _live_entries(t.path, 2).values()
+        for e in snapshot(t.path, 2).files.values()
     ]
     cut = sorted(lo for lo, _ in ranges)[len(ranges) // 2]
     pruned = _reader(
@@ -415,7 +415,7 @@ def test_commit_time_schema_merges_concurrent_evolution(spark, tmp_path):
         AcidDataSourceWriter,
         _commit_schema_json,
     )
-    from pkg2_spark.tableformat import log_schema
+    from pkg2_spark.tableformat import log_schema, snapshot
 
     path = str(tmp_path / "drift")
     t = Table(spark, path, stats_cols=["id"])
@@ -451,7 +451,7 @@ def test_commit_time_schema_merges_concurrent_evolution(spark, tmp_path):
         "id", F.col("v").cast("string").alias("v"), "tag"
     ).schema
     with _pytest.raises(ValueError, match="retyped"):
-        _commit_schema_json(path, bad.jsonValue())
+        _commit_schema_json(snapshot(path), bad.jsonValue())
 
 
 def test_stream_starting_version_skips_bootstrap(spark, tmp_path):

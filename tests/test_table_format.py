@@ -239,7 +239,7 @@ def test_concurrent_writers_race_safely(spark, tmp_path):
     # contiguous fold 0..12, and the final snapshot must hold every row.
     import threading
 
-    t = Table(spark, str(tmp_path / "race"), max_retries=50)
+    t = Table(spark, str(tmp_path / "race"))
     t.create(_mk(spark, 0, 10))
     errs = []
 
@@ -499,9 +499,10 @@ def test_restore_vacuum_race_compensates_before_raising(spark, table, monkeypatc
     # raises RestorePoisonedError carrying both version numbers.
     import pkg2_spark.tableformat as tf
 
-    table.compact(max_files=2)  # v1 rewrites the live set; v0 files now dead
-    pre_head = latest_version(table.path)  # 1
-    v0_files = snapshot_files(table.path, 0)
+    table.delete_where_dv("id < 10")  # v1: the target, with one DV sidecar
+    table.compact(max_files=2)  # v2 rewrites the live set; v1 files now dead
+    pre_head = latest_version(table.path)  # 2
+    v1_files = snapshot_files(table.path, 1)
     real_commit = tf._commit
     state = {"fired": False}
 
@@ -511,23 +512,26 @@ def test_restore_vacuum_race_compensates_before_raising(spark, table, monkeypatc
         real_commit(
             path, version, op, add, remove, meta=meta, schema=schema, **kw
         )
-        if not state["fired"] and meta and meta.get("restored_to") == 0:
+        if not state["fired"] and meta and meta.get("restored_to") == 1:
             # Simulate the concurrent vacuum landing in the window between
             # the restore commit and its post-commit re-verify.
             state["fired"] = True
-            for f in v0_files:
+            for f in v1_files:
                 if os.path.exists(f):
                     os.remove(f)
 
     monkeypatch.setattr(tf, "_commit", racing_commit)
     with pytest.raises(tf.RestorePoisonedError, match="compensating restore") as ei:
-        table.restore(0)
+        table.restore(1)
+    # the count covers the target's data AND DV files: all data files
+    # were reaped, its DV sidecar survived
+    assert f"reaped {len(v1_files)}/{len(v1_files) + 1} of its" in str(ei.value)
     assert ei.value.poisoned_version == pre_head + 1
     assert ei.value.compensated_version == pre_head + 2
     # The head is the compensating commit, it reads (pre-restore data),
     # and its meta records what it compensates.
     assert latest_version(table.path) == pre_head + 2
-    assert table.read().count() == 1000
+    assert table.read().count() == 990
     hist = table.history()
     assert hist[-1]["op"] == "restore"
     assert hist[-1]["meta"]["compensates"] == pre_head + 1
@@ -754,7 +758,7 @@ def test_compact_small_binpacks_only_the_tail(spark, table):
     # files carry over BY REFERENCE; DVs on untouched files keep
     # applying (no dv_base reset); data unchanged; idempotent when
     # nothing qualifies.
-    from pkg2_spark.tableformat import _live_entries, dv_state
+    from pkg2_spark.tableformat import dv_state, snapshot
 
     # 8 files of 125 rows from create; add small appends
     table.num_files = 1
@@ -764,14 +768,14 @@ def test_compact_small_binpacks_only_the_tail(spark, table):
     table.num_files = None
     table.delete_where_dv("id = 5")  # DV on a BIG (create-commit) file
     v = latest_version(table.path)
-    entries = _live_entries(table.path, v)
+    entries = snapshot(table.path, v).files
     big = {rel for rel, e in entries.items() if e["rows"] >= 100}
     assert len(big) == 8 and len(entries) == 11
     want = sorted(map(tuple, table.read().collect()))
 
     v2 = table.compact_small(target_rows=100, max_files=1)
     assert v2 == v + 1
-    after = _live_entries(table.path, v2)
+    after = snapshot(table.path, v2).files
     assert big <= set(after)  # big files carried by reference
     assert len(after) == len(big) + 1  # 3 small files -> 1
     assert table.history()[-1]["meta"]["partial"] is True
@@ -781,3 +785,84 @@ def test_compact_small_binpacks_only_the_tail(spark, table):
     # nothing small remains: idempotent no-op, no commit written
     assert table.compact_small(target_rows=100) == v2
     assert latest_version(table.path) == v2
+
+
+def test_unserializable_commit_leaves_no_log_entry(spark, table):
+    # The record is serialized BEFORE the exclusive create: a commit
+    # carrying a non-JSON value raises and leaves no half-written version
+    # file, so the log stays foldable and the next writer takes the slot.
+    head = latest_version(table.path)
+    with pytest.raises(TypeError):
+        _commit(table.path, head + 1, "append", [], [], meta={"bad": object()})
+    assert not os.path.exists(
+        os.path.join(table.path, "_log", f"{head + 1:020d}.json")
+    )
+    assert latest_version(table.path) == head
+    assert table.append(_mk(spark, 1000, 1001)) == head + 1
+    assert table.read().count() == 1001
+
+
+def test_decimal_stats_column_commits_merges_and_reads(spark, tmp_path):
+    # Decimal footer min/max have no comparable JSON form: the column logs
+    # no range (it never prunes) instead of failing the commit.
+    from decimal import Decimal
+
+    t = Table(
+        spark, str(tmp_path / "dec"), stats_cols=["id", "amt", "big"],
+        cluster_by="id", num_files=2,
+    )
+
+    def rows(lo, hi, amt):
+        return spark.range(lo, hi).select(
+            "id",
+            amt.cast("decimal(10,2)").alias("amt"),
+            amt.cast("decimal(30,2)").alias("big"),
+        )
+
+    t.create(rows(0, 100, F.col("id") / 4))
+    for e in t.history()[0]["add"]:
+        assert set(e["stats"]) == {"id"}
+    t.merge(rows(10, 20, F.lit(-1)), key="id")
+    got = {r["id"]: (r["amt"], r["big"]) for r in t.read().collect()}
+    assert len(got) == 100
+    assert got[15] == (Decimal("-1.00"), Decimal("-1.00"))
+    assert got[50] == (Decimal("12.50"), Decimal("12.50"))
+
+
+def test_each_operation_folds_the_log_once(spark, table, monkeypatch):
+    # Every operation works from ONE snapshot: each commit file is opened
+    # at most once per read, merge, DV delete, change set and pkg2acid
+    # partition planning.
+    import builtins
+    from collections import Counter
+
+    from pkg2_spark.acid_datasource import AcidDataSourceReader
+
+    table.append(_mk(spark, 1000, 1100, tag="b"))
+    upd = spark.range(10, 21).select(
+        F.col("id"), F.lit(-1).cast("long").alias("val"), F.lit("u").alias("tag")
+    )
+    log = os.path.join(table.path, "_log") + os.sep
+    opens: Counter = Counter()
+    real_open = builtins.open
+
+    def counting_open(file, *args, **kwargs):
+        if isinstance(file, str) and file.startswith(log):
+            opens[file] += 1
+        return real_open(file, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", counting_open)
+    for name, op in [
+        ("read", lambda: table.read().count()),
+        ("merge", lambda: table.merge(upd, key="id")),
+        ("delete_where_dv", lambda: table.delete_where_dv("id % 10 = 3")),
+        ("changes", lambda: table.changes(0, latest_version(table.path)).count()),
+        (
+            "pkg2acid partitions",
+            lambda: AcidDataSourceReader(None, {"path": table.path}).partitions(),
+        ),
+    ]:
+        opens.clear()
+        op()
+        assert opens, f"{name} never read the log"
+        assert max(opens.values()) == 1, (name, dict(opens))
