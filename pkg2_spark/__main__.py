@@ -146,12 +146,15 @@ def main(argv: Sequence[str] | None = None, engine=None, out=None) -> int:
 
     if args.command == "serve":
         svc = QueryService(eng, max_rows=args.max_rows)
-        server, thread = make_http_server(svc, host=args.host, port=args.port)
-        print(f"serving on http://{args.host}:{server.server_address[1]}/ui", file=out)
+        server = make_http_server(svc, host=args.host, port=args.port)
+        print(f"serving on http://{args.host}:{server.server_address[1]}/ui",
+              file=out, flush=True)
         try:
-            thread.join()
-        except KeyboardInterrupt:
-            server.shutdown()
+            server.serve_forever()
+        except KeyboardInterrupt:  # Ctrl-C is the normal way to stop
+            pass
+        finally:
+            server.server_close()
         return 0
 
     pos, flags = _ENDPOINT_PARAMS[args.command]

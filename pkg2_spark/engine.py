@@ -17,11 +17,20 @@ This facade reproduces that surface:
 Everything returns DataFrames — lazily planned, Catalyst-optimized; nothing
 here collects. Ingested package tables are ordinary tables: at 100 TB the
 same code runs over a directory of index files instead of one sample.
+
+Ingest is the one place an index is parsed. The parsed table is
+checkpointed (filled by the first action over it) and owns, for as long as
+it is the engine's current index, the frames every lookup derives from it:
+the capability map, the dependency edges, the constrained edges and the
+latest versions. Each is built on first use and kept in Spark's block
+manager, so a request runs only its own filter; a re-ingest replaces all
+of them at once (_IndexState).
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -33,6 +42,7 @@ from pkg2_spark.session import (
     local_rows_df,
     truncate_lineage,
     truncate_lineage_counted,
+    truncate_lineage_lazy,
 )
 
 #: portable numeric-aware version sort key: every integer run, zero-padded.
@@ -49,6 +59,177 @@ def version_key(col) -> F.Column:
     )
 
 
+def capability_map(packages: DataFrame) -> DataFrame:
+    """Capability -> provider map: one (provider, version, arch, capability)
+    row per capability a package provides — its own name, and each provides
+    entry with its version suffix cut ('so:libz.so.1=1.3' -> 'so:libz.so.1').
+    The one definition behind whatprovides, whatdepends, resolve,
+    q_pkg_provides and q_pkg_revdeps."""
+    return packages.select(
+        F.col("name").alias("provider"),
+        "version",
+        "arch",
+        F.explode(
+            F.array_union(
+                F.array(F.col("name")),
+                F.transform(F.col("provides"), lambda x: F.split_part(x, F.lit("="), F.lit(1))),
+            )
+        ).alias("capability"),
+    )
+
+
+def _latest_versions(packages: DataFrame) -> DataFrame:
+    w = Window.partitionBy("name").orderBy(
+        version_key(F.col("version")).desc_nulls_last(),
+        F.col("arch").asc_nulls_last(),
+    )
+    return (
+        packages.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
+def _depends_atoms(packages: DataFrame) -> DataFrame:
+    if "depends_raw" not in packages.columns:
+        raise ValueError("ingested index did not preserve raw depends atoms")
+    atoms = packages.select(
+        F.col("name").alias("src_name"),
+        F.col("version").alias("src_version"),
+        F.explode("depends_raw").alias("atom"),
+    )
+    # apk inline form first: name stops at the first comparator char
+    # (apk names may contain ':' and '.', e.g. so:libssl.so.3, but
+    # never comparator characters).
+    apk_op = F.regexp_extract("atom", r"^[^<>=\s(]+([<>=]+)", 1)
+    is_apk = apk_op != ""
+    deb_op = F.regexp_extract("atom", r"\(\s*([<>=]+)\s*", 1)
+    # dpkg legacy: bare > / < written in Debian syntax mean >= / <=
+    # (apk's bare comparators stay strict on the is_apk branch).
+    deb_op = (
+        F.when(deb_op == ">", F.lit(">="))
+        .when(deb_op == "<", F.lit("<="))
+        .otherwise(deb_op)
+    )
+    return atoms.select(
+        "src_name",
+        "src_version",
+        F.when(is_apk, F.regexp_extract("atom", r"^([^<>=\s(]+)", 1))
+        .otherwise(F.trim(F.split_part(F.col("atom"), F.lit("("), F.lit(1))))
+        .alias("dep_name"),
+        F.when(is_apk, apk_op).otherwise(deb_op).alias("op"),
+        F.when(is_apk, F.regexp_extract("atom", r"^[^<>=\s(]+[<>=]+(.+)$", 1))
+        .otherwise(
+            F.trim(F.regexp_extract("atom", r"\(\s*[<>=]+\s*([^)]+)\)", 1))
+        )
+        .alias("dver"),
+    )
+
+
+def _constrained_edges(packages: DataFrame) -> DataFrame:
+    atoms = _depends_atoms(packages)
+    prov = packages.select(
+        F.col("name").alias("dep_name"), F.col("version").alias("dst_version")
+    ).distinct()
+    pk = version_key(F.col("dst_version"))
+    ak = version_key(F.col("dver"))
+    sat = (
+        (F.col("op") == "")
+        | ((F.col("op") == ">=") & (pk >= ak))
+        | ((F.col("op") == "<=") & (pk <= ak))
+        | ((F.col("op") == "=") & (pk == ak))
+        | ((F.col("op") == ">>") & (pk > ak))
+        | ((F.col("op") == "<<") & (pk < ak))
+        | ((F.col("op") == ">") & (pk > ak))
+        | ((F.col("op") == "<") & (pk < ak))
+    )
+    return (
+        atoms.join(prov, "dep_name")
+        .filter(sat)
+        .select(
+            "src_name",
+            "src_version",
+            F.col("dep_name").alias("dst_name"),
+            "dst_version",
+        )
+        .distinct()
+    )
+
+
+class _IndexState:
+    """One ingest's serving state: the parsed package frame, plus the
+    frames derived from it that no request parameter changes, each built
+    on first use. Every frame is checkpointed with the truncate_lineage*
+    helpers, so its rows sit in Spark's block manager and a request runs
+    only its own filter over them. There is no Python-side row copy.
+
+    An ingest replaces the whole object. Once nothing references the old
+    one, Spark's ContextCleaner releases its blocks. Concurrent first
+    requests build each frame once: the engine's lock guards the build,
+    and warm requests read the memo without taking it."""
+
+    def __init__(self, packages: DataFrame, lock: threading.RLock):
+        self.packages = packages
+        self._lock = lock
+        self._frames: dict = {}
+
+    def _once(self, key: str, build):
+        if key not in self._frames:
+            with self._lock:
+                if key not in self._frames:
+                    self._frames[key] = build()
+        return self._frames[key]
+
+    def capabilities(self) -> DataFrame:
+        return self._once(
+            "capabilities", lambda: truncate_lineage_lazy(capability_map(self.packages))
+        )
+
+    def _provider_join(self) -> DataFrame:
+        """(src, capability, dst) rows: src depends on capability, dst
+        provides it. Not distinct."""
+        deps = self.packages.select(
+            F.col("name").alias("src"), F.explode("depends").alias("capability")
+        )
+        providers = (
+            self.capabilities()
+            .select("capability", F.col("provider").alias("dst"))
+            .distinct()
+        )
+        return deps.join(providers, "capability")
+
+    def dependency_edges(self) -> DataFrame:
+        """Distinct (src, capability, dst) — whatdepends filters on dst."""
+        return self._once(
+            "dependency_edges",
+            lambda: truncate_lineage_lazy(
+                self._provider_join().select("src", "capability", "dst").distinct()
+            ),
+        )
+
+    def package_edges(self) -> tuple[DataFrame, int]:
+        """Distinct (src, dst) edges and their count, which gates resolve's
+        hybrid finish."""
+        return self._once(
+            "package_edges",
+            lambda: truncate_lineage_counted(
+                self._provider_join().select("src", "dst").distinct()
+            ),
+        )
+
+    def constrained_edges(self) -> tuple[DataFrame, int]:
+        return self._once(
+            "constrained_edges",
+            lambda: truncate_lineage_counted(_constrained_edges(self.packages)),
+        )
+
+    def latest_versions(self) -> DataFrame:
+        return self._once(
+            "latest_versions",
+            lambda: truncate_lineage_lazy(_latest_versions(self.packages)),
+        )
+
+
 # Sentinel distinguishing "caller said nothing" (audit at the engine's
 # ann_min_recall bar) from an explicit min_recall=None opt-out.
 _AUDIT_DEFAULT = object()
@@ -57,7 +238,9 @@ _AUDIT_DEFAULT = object()
 class Engine:
     def __init__(self, spark: SparkSession | None = None, sf_dir: str | None = None):
         self.spark = ensure_runtime_confs(spark) if spark else get_session()
-        self._packages: DataFrame | None = None
+        self._index: _IndexState | None = None
+        # Guards the build of every ingest's derived frames (_IndexState).
+        self._lock = threading.RLock()
         # The ANN recall/latency knob: how many final IVF slot-cells
         # ann_search scans per query (own cell + n_probe-1 beam cells).
         # 3 is the served default (q_llm_ann_mprobe's registered shape);
@@ -95,6 +278,21 @@ class Engine:
         df.createOrReplaceTempView(name)
 
     # ------------------------------------------------------------- ingest
+    def _ingest(self, parsed: DataFrame) -> DataFrame:
+        """The one end of every ingest_* method, and so the one place an
+        index is parsed. The parsed frame is checkpointed lazily: the first
+        action over it fills it once, and every later query reads those
+        blocks instead of re-reading and re-parsing the file. Its
+        distro-less projection is registered as the `packages` view and
+        becomes a new _IndexState, which replaces the previous ingest's
+        package frame and everything derived from it in one assignment.
+        Returns the checkpointed frame."""
+        parsed = truncate_lineage_lazy(parsed)
+        packages = parsed.drop("distro")
+        self.register("packages", packages)
+        self._index = _IndexState(packages, self._lock)
+        return parsed
+
     def _stanzas(self, path: str) -> DataFrame:
         raw = self.spark.read.text(path, wholetext=True)
         return self._explode_stanzas(raw.select(F.col("value").alias("text")))
@@ -290,7 +488,11 @@ class Engine:
         wire formats: APKINDEX(.tar.gz) -> alpine, Packages(.gz) ->
         debian, */primary.xml(.gz) -> fedora, pacman db tarball members
         (*/desc) -> arch. The cache-fed twin of the plaintext ingest_*
-        methods — same projections, same downstream queries."""
+        methods — same projections, same downstream queries. The stored
+        package table is the returned frame without `distro`."""
+        return self._ingest(self._parse_index_cache(path))
+
+    def _parse_index_cache(self, path: str) -> DataFrame:
         texts = self.read_index_archives(path)
         apk = self._apk_project(
             self._explode_stanzas(texts.filter(F.col("member").startswith("APKINDEX")))
@@ -322,8 +524,6 @@ class Engine:
         pkgs = norm(apk)
         for part in (deb, rpm, arch):
             pkgs = pkgs.unionByName(norm(part))
-        self._packages = pkgs.drop("distro")
-        self.register("packages", self._packages)
         return pkgs
 
     def audit_apkindex(self, path: str) -> DataFrame:
@@ -373,10 +573,7 @@ class Engine:
         provides<array>. Whole-file read per index (indexes are bounded,
         one per repo/arch); everything after the stanza explode is
         distributed."""
-        pkgs = self._apk_project(self._stanzas(path))
-        self._packages = pkgs
-        self.register("packages", pkgs)
-        return pkgs
+        return self._ingest(self._apk_project(self._stanzas(path)))
 
     @staticmethod
     def _eval_starlark_config(text: str, path: str) -> dict:
@@ -494,9 +691,9 @@ class Engine:
         associates *.star with starlark): a config lists sources as
         {distro, format, path} records and this method dispatches each to
         its format parser, unioning everything into one normalized table
-        with a leading `distro` column (registered as `packages`). Paths
-        resolve relative to the config file, so a collection directory is
-        self-contained. Two equivalent config syntaxes: *.star (the pkg2
+        with a leading `distro` column (registered as `packages` without
+        it). Paths resolve relative to the config file, so a collection
+        directory is self-contained. Two equivalent config syntaxes: *.star (the pkg2
         language — evaluated by the restricted literal-subset walker
         above, no code execution) and JSON; both must define
         `sources = [{distro, format, path}, ...]`.
@@ -514,10 +711,10 @@ class Engine:
             cfg = _json.loads(raw)
         base = os.path.dirname(os.path.abspath(config_path))
         parsers = {
-            "apkindex": self.ingest_apkindex,
-            "debian_packages": self.ingest_debian_packages,
-            "archdesc": self.ingest_archdesc,
-            "rpm_primary": self.ingest_rpm_primary,
+            "apkindex": lambda p: self._apk_project(self._stanzas(p)),
+            "debian_packages": lambda p: self._deb_project(self._stanzas(p)),
+            "archdesc": self._parse_archdesc,
+            "rpm_primary": self._parse_rpm_primary,
         }
         out: DataFrame | None = None
         shared = ["name", "version", "arch", "size", "description",
@@ -530,7 +727,7 @@ class Engine:
                 # A cache dir can hold several wire formats; keep the
                 # per-format distro tags ingest_index_cache derives rather
                 # than mislabeling every row with the one config distro.
-                part = self.ingest_index_cache(path)
+                part = self._parse_index_cache(path)
                 distro_col = F.col("distro")
             elif fmt in parsers:
                 part = parsers[fmt](path)
@@ -552,18 +749,13 @@ class Engine:
             )
             out = part if out is None else out.unionByName(part)
         assert out is not None, "collection config lists no sources"
-        self._packages = out.drop("distro")
-        self.register("packages", self._packages)
-        return out
+        return self._ingest(out)
 
     def ingest_debian_packages(self, path: str) -> DataFrame:
         """Debian/Ubuntu Packages stanzas -> the same normalized schema.
         Depends entries are comma-separated with optional version constraints
         ('libc6 (>= 2.34)') — constraints are stripped into the bare name."""
-        pkgs = self._deb_project(self._stanzas(path))
-        self._packages = pkgs
-        self.register("packages", pkgs)
-        return pkgs
+        return self._ingest(self._deb_project(self._stanzas(path)))
 
     @staticmethod
     def _arch_project(blocks: DataFrame) -> DataFrame:
@@ -597,14 +789,14 @@ class Engine:
         """Arch-style `desc` blocks (concatenated repo-db form) -> the same
         normalized schema. Sections are %KEY% headers; multi-value sections
         (DEPENDS/PROVIDES) run one entry per line until the next %KEY%."""
+        return self._ingest(self._parse_archdesc(path))
+
+    def _parse_archdesc(self, path: str) -> DataFrame:
         raw = self.spark.read.text(path, wholetext=True)
         blocks = raw.select(
             F.explode(F.split("value", "%FILENAME%")).alias("blk")
         ).filter(F.trim("blk") != "")
-        pkgs = self._arch_project(blocks)
-        self._packages = pkgs
-        self.register("packages", pkgs)
-        return pkgs
+        return self._arch_project(blocks)
 
     @staticmethod
     def _rpm_project(blocks: DataFrame) -> DataFrame:
@@ -648,20 +840,24 @@ class Engine:
         whole-file -> record explode -> regexp field extraction dataflow as
         the other three formats — at repo scale the explode distributes and
         a directory of per-repo XMLs parallelizes across files."""
+        return self._ingest(self._parse_rpm_primary(path))
+
+    def _parse_rpm_primary(self, path: str) -> DataFrame:
         raw = self.spark.read.text(path, wholetext=True)
         blocks = raw.select(
             F.explode(F.split("value", "</package>")).alias("blk")
         ).filter(F.col("blk").contains("<name>"))
-        pkgs = self._rpm_project(blocks)
-        self._packages = pkgs
-        self.register("packages", pkgs)
-        return pkgs
+        return self._rpm_project(blocks)
 
     # ------------------------------------------------------------- queries
-    def _pkgs(self) -> DataFrame:
-        if self._packages is None:
+    def _state(self) -> _IndexState:
+        index = self._index
+        if index is None:
             raise ValueError("no package index ingested yet")
-        return self._packages
+        return index
+
+    def _pkgs(self) -> DataFrame:
+        return self._state().packages
 
     def search_packages(self, pattern: str, arch: str | None = None) -> DataFrame:
         """SQL-LIKE name search (pkg2's package search), optionally filtered
@@ -675,56 +871,23 @@ class Engine:
     def whatprovides(self, capability: str) -> DataFrame:
         """Which packages provide a capability (own name, or a provides
         entry, version suffix ignored)."""
-        p = self._pkgs()
-        prov = p.select(
-            F.col("name").alias("provider"),
-            "version",
-            "arch",
-            F.explode(
-                F.array_union(
-                    F.array(F.col("name")),
-                    F.transform(F.col("provides"), lambda x: F.split_part(x, F.lit("="), F.lit(1))),
-                )
-            ).alias("capability"),
-        )
-        return prov.filter(F.col("capability") == capability)
+        return self._state().capabilities().filter(F.col("capability") == capability)
 
     def whatdepends(self, package: str) -> DataFrame:
         """Reverse dependency lookup: packages whose depends resolve (through
-        provides) to ``package`` — the inverse of :meth:`whatprovides`."""
-        p = self._pkgs()
-        providers = p.select(
-            F.explode(
-                F.array_union(
-                    F.array(F.col("name")),
-                    F.transform(F.col("provides"), lambda x: F.split_part(x, F.lit("="), F.lit(1))),
-                )
-            ).alias("capability"),
-            F.col("name").alias("provider"),
-        ).distinct()
-        deps = p.select(
-            F.col("name").alias("dependent"), F.explode("depends").alias("capability")
-        )
+        provides) to ``package`` — the inverse of :meth:`whatprovides`.
+        The edges are distinct per (src, capability, dst), so fixing dst
+        leaves distinct (dependent, capability) rows."""
         return (
-            deps.join(providers, "capability")
-            .filter(F.col("provider") == package)
-            .select("dependent", "capability")
-            .distinct()
+            self._state().dependency_edges()
+            .filter(F.col("dst") == package)
+            .select(F.col("src").alias("dependent"), "capability")
         )
 
     def latest_versions(self) -> DataFrame:
         """Top-1 per package name under numeric-aware version ordering —
         pkg2's latest-version-per-package [Tier C analog]."""
-        p = self._pkgs()
-        w = Window.partitionBy("name").orderBy(
-            version_key(F.col("version")).desc_nulls_last(),
-            F.col("arch").asc_nulls_last(),
-        )
-        return (
-            p.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
+        return self._state().latest_versions()
 
     def match_advisories(self, adv_path: str) -> DataFrame:
         """Security-advisory audit — pkg2's secdb consumer: join the
@@ -738,8 +901,7 @@ class Engine:
         Scale posture: the advisory feed is bounded (thousands of rows) →
         broadcast hash join on name against the arbitrarily-large package
         table; classification is row-local expression arithmetic."""
-        if self._packages is None:
-            raise ValueError("ingest an index before matching advisories")
+        pkgs = self._pkgs()
         adv = self.spark.read.option("multiLine", "true").json(adv_path).select(
             "cve", "name", "fixed_version"
         )
@@ -758,7 +920,7 @@ class Engine:
             .otherwise(F.lit("patched"))
         )
         return (
-            self._packages.select("name", "arch", "version")
+            pkgs.select("name", "arch", "version")
             .join(F.broadcast(adv), "name")
             .select("name", "arch", "version", "cve", "fixed_version",
                     status.alias("status"))
@@ -820,11 +982,11 @@ class Engine:
     #: distro index is single-digit millions), so interactively this path
     #: almost always wins: the closure collapses from one job per depth to
     #: one bounded collect — same-process A/B at sf0.1, warm mins: hybrid
-    #: 0.78–1.05 s vs distributed 1.23 s (the residual floor is the
-    #: per-call ingest + provider join + edge materialization, shared by
-    #: both paths). Past the threshold the distributed one-job-per-depth
-    #: loop below is unchanged (and pinned equal by
-    #: test_resolve_hybrid_local_matches_distributed).
+    #: 0.78–1.05 s vs distributed 1.23 s (that floor was the per-call
+    #: parse + provider join + edge materialization, shared by both paths;
+    #: all three are now paid once per ingest). Past the threshold the
+    #: distributed one-job-per-depth loop below is unchanged (and pinned
+    #: equal by test_resolve_hybrid_local_matches_distributed).
     _LOCAL_RESOLVE_EDGES = 200_000
 
     def _local_bfs(self, adj, start_nodes, max_depth: int, schema: str) -> DataFrame:
@@ -853,33 +1015,13 @@ class Engine:
 
     def resolve(self, package: str, max_depth: int = 10) -> DataFrame:
         """Dependency closure (BFS over depends, so:* capabilities resolved
-        through provides). Returns (node, depth) with minimal depth."""
-        p = self._pkgs()
-        # capability -> provider map (name provides itself)
-        providers = p.select(
-            F.explode(
-                F.array_union(
-                    F.array(F.col("name")),
-                    F.transform(F.col("provides"), lambda x: F.split_part(x, F.lit("="), F.lit(1))),
-                )
-            ).alias("capability"),
-            F.col("name").alias("provider"),
-        ).distinct()
-        edges, n_edges = truncate_lineage_counted(
-            p.select(F.col("name").alias("src"), F.explode("depends").alias("capability"))
-            .join(providers, "capability")
-            .select("src", F.col("provider").alias("dst"))
-            .distinct()
-            # checkpoint, not persist: one eager materialization, then
-            # every round reads the cached copy; lazy persist was
-            # MEASURED SLOWER here (isEmpty computes only partition 0, so
-            # a lazily-persisted frame is left partially cached and later
-            # reads recompute the holes). Checkpoint caches are released
-            # by the context cleaner when the frame is garbage collected —
-            # no long-lived-service accumulation (the r8 leak concern was
-            # explicit persists without unpersist). The fold-in count is
-            # free (same job) and gates the hybrid finish.
-        )
+        through provides). Returns (node, depth) with minimal depth.
+
+        The distinct (src, dst) edges and their count are per-ingest state
+        (_IndexState.package_edges): checkpointed with the count folded
+        into the same job, then every call and every BFS round reads the
+        cached copy. Only the adjacency dict and the BFS are per call."""
+        edges, n_edges = self._state().package_edges()
         if n_edges <= self._LOCAL_RESOLVE_EDGES:
             adj: dict = {}
             epdf = edges.toPandas()  # Arrow collect of the bounded edge list
@@ -945,40 +1087,7 @@ class Engine:
 
         An atom without a constraint yields op = '' (matches any
         version). Requires an ingest path that preserves depends_raw."""
-        p = self._pkgs()
-        if "depends_raw" not in p.columns:
-            raise ValueError("ingested index did not preserve raw depends atoms")
-        atoms = p.select(
-            F.col("name").alias("src_name"),
-            F.col("version").alias("src_version"),
-            F.explode("depends_raw").alias("atom"),
-        )
-        # apk inline form first: name stops at the first comparator char
-        # (apk names may contain ':' and '.', e.g. so:libssl.so.3, but
-        # never comparator characters).
-        apk_op = F.regexp_extract("atom", r"^[^<>=\s(]+([<>=]+)", 1)
-        is_apk = apk_op != ""
-        deb_op = F.regexp_extract("atom", r"\(\s*([<>=]+)\s*", 1)
-        # dpkg legacy: bare > / < written in Debian syntax mean >= / <=
-        # (apk's bare comparators stay strict on the is_apk branch).
-        deb_op = (
-            F.when(deb_op == ">", F.lit(">="))
-            .when(deb_op == "<", F.lit("<="))
-            .otherwise(deb_op)
-        )
-        return atoms.select(
-            "src_name",
-            "src_version",
-            F.when(is_apk, F.regexp_extract("atom", r"^([^<>=\s(]+)", 1))
-            .otherwise(F.trim(F.split_part(F.col("atom"), F.lit("("), F.lit(1))))
-            .alias("dep_name"),
-            F.when(is_apk, apk_op).otherwise(deb_op).alias("op"),
-            F.when(is_apk, F.regexp_extract("atom", r"^[^<>=\s(]+[<>=]+(.+)$", 1))
-            .otherwise(
-                F.trim(F.regexp_extract("atom", r"\(\s*[<>=]+\s*([^)]+)\)", 1))
-            )
-            .alias("dver"),
-        )
+        return _depends_atoms(self._pkgs())
 
     def constrained_edges(self) -> DataFrame:
         """Version-level dependency edges honoring constraints:
@@ -988,34 +1097,9 @@ class Engine:
         (the pkg2 resolver semantics — constraints select among available
         versions instead of being stripped). Unsatisfiable atoms simply
         produce no edge. One equi-join on package name + a row-local key
-        comparison: at repo scale this is name-partitioned, shuffle-light."""
-        atoms = self.depends_atoms()
-        prov = self._pkgs().select(
-            F.col("name").alias("dep_name"), F.col("version").alias("dst_version")
-        ).distinct()
-        pk = version_key(F.col("dst_version"))
-        ak = version_key(F.col("dver"))
-        sat = (
-            (F.col("op") == "")
-            | ((F.col("op") == ">=") & (pk >= ak))
-            | ((F.col("op") == "<=") & (pk <= ak))
-            | ((F.col("op") == "=") & (pk == ak))
-            | ((F.col("op") == ">>") & (pk > ak))
-            | ((F.col("op") == "<<") & (pk < ak))
-            | ((F.col("op") == ">") & (pk > ak))
-            | ((F.col("op") == "<") & (pk < ak))
-        )
-        return (
-            atoms.join(prov, "dep_name")
-            .filter(sat)
-            .select(
-                "src_name",
-                "src_version",
-                F.col("dep_name").alias("dst_name"),
-                "dst_version",
-            )
-            .distinct()
-        )
+        comparison: at repo scale this is name-partitioned, shuffle-light.
+        Per-ingest state: built and checkpointed once, with its count."""
+        return self._state().constrained_edges()[0]
 
     def resolve_constrained(self, package: str, max_depth: int = 10) -> DataFrame:
         """Constraint-aware dependency closure from every version of
@@ -1023,7 +1107,7 @@ class Engine:
         minimal depth per node. Same round discipline as :meth:`resolve`
         (see the measured-variants note there): one checkpoint per round,
         closure a lazy union of checkpointed frontiers."""
-        edges, n_edges = truncate_lineage_counted(self.constrained_edges())
+        edges, n_edges = self._state().constrained_edges()
         if n_edges <= self._LOCAL_RESOLVE_EDGES:
             # hybrid finish — see resolve()/_LOCAL_RESOLVE_EDGES. Nodes are
             # (name, version); the start frontier is the dependency set of

@@ -12,7 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from pkg2_spark.engine import Engine, version_key
+from pkg2_spark.engine import Engine, capability_map, version_key
 from pkg2_spark.queries.relational import _APKINDEX_PATH, _REPO_DIR
 from pkg2_spark.registry import query
 
@@ -114,18 +114,7 @@ def q_pkg_provides(spark, sf_dir):
     # The full capability→provider map ("which package provides X").
     eng = Engine(spark)
     p = eng.ingest_apkindex(_APKINDEX_PATH)
-    return (
-        p.select(
-            F.explode(
-                F.array_union(
-                    F.array(F.col("name")),
-                    F.transform(F.col("provides"), lambda x: F.split_part(x, F.lit("="), F.lit(1))),
-                )
-            ).alias("capability"),
-            F.col("name").alias("provider"),
-        )
-        .distinct()
-    )
+    return capability_map(p).select("capability", "provider").distinct()
 
 
 @query(
@@ -237,15 +226,7 @@ def q_pkg_revdeps(spark, sf_dir):
     + a hash aggregate; at a real repo scale every stage is key-partitioned."""
     eng = Engine(spark)
     p = eng.ingest_apkindex(_APKINDEX_PATH)
-    providers = p.select(
-        F.explode(
-            F.array_union(
-                F.array(F.col("name")),
-                F.transform(F.col("provides"), lambda x: F.split_part(x, F.lit("="), F.lit(1))),
-            )
-        ).alias("capability"),
-        F.col("name").alias("provider"),
-    ).distinct()
+    providers = capability_map(p).select("capability", "provider").distinct()
     deps = p.select(F.col("name").alias("dependent"), F.explode("depends").alias("capability"))
     edges = deps.join(providers, "capability").select("dependent", "provider").distinct()
     return edges.groupBy("provider").agg(
@@ -1023,18 +1004,7 @@ def q_pkg_blast_radius(spark, sf_dir):
 
     eng = Engine(spark)
     p = eng.ingest_apkindex(_APKINDEX_PATH)
-    providers = p.select(
-        F.col("name").alias("provider"),
-        F.explode(
-            F.array_union(
-                F.array(F.col("name")),
-                F.transform(
-                    F.col("provides"),
-                    lambda x: F.split_part(x, F.lit("="), F.lit(1)),
-                ),
-            )
-        ).alias("capability"),
-    ).distinct()
+    providers = capability_map(p).select("provider", "capability").distinct()
     deps = p.select(
         F.col("name").alias("dependent"),
         F.explode("depends").alias("capability"),

@@ -65,11 +65,17 @@ def get_session(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's verified config.
 
-    local[N] defaults come from $SPARK_GRAFT_CPUS; shuffle partitions default
-    to the core count (small data — SURVEY.md §4.2 benches used 8 at sf0.1;
-    at real scale leave AQE to coalesce).
+    local[N] defaults come from $SPARK_GRAFT_CPUS, else the cores this
+    process may run on (its affinity set, which a container or taskset
+    narrows below os.cpu_count()); shuffle partitions default to the core
+    count (small data — SURVEY.md §4.2 benches used 8 at sf0.1; at real
+    scale leave AQE to coalesce).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+        if hasattr(os, "sched_getaffinity")  # Linux only
+        else os.cpu_count()
+    )
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
@@ -101,7 +107,12 @@ def local_rows_df(spark, rows, schema):
     the session's Arrow path (one batch, one partition): measured 0.43 s →
     0.13 s for the dedup local-finish group-by at sf0.1. Callers guarantee
     boundedness (hybrid-finish thresholds), so one partition is the right
-    layout at any scale. ``schema`` is a DDL string or StructType."""
+    layout at any scale. The Arrow path still slices the batch across
+    defaultParallelism partitions, so the frame is coalesced to one: a
+    single partition satisfies any required distribution, and a sort or
+    group-by over it runs in one job with no exchange (a global sort over
+    the sliced frame paid a range-sampling job and a shuffle).
+    ``schema`` is a DDL string or StructType."""
     import pandas as pd
 
     if isinstance(schema, str):
@@ -109,7 +120,7 @@ def local_rows_df(spark, rows, schema):
     else:
         names = schema.fieldNames()
     pdf = pd.DataFrame.from_records(list(rows), columns=names)
-    return spark.createDataFrame(pdf, schema=schema)
+    return spark.createDataFrame(pdf, schema=schema).coalesce(1)
 
 
 def fan_out_scan(df):

@@ -116,7 +116,11 @@ def test_latest_versions_handles_dotted_inversion(spark):
         "name string, version string, arch string, size long, description string, "
         "depends array<string>, provides array<string>",
     )
-    eng._packages = df  # noqa: SLF001 — direct injection for the edge case
+    # Direct injection for the edge case: installs the frame as the index
+    # state without registering the shared `packages` view.
+    from pkg2_spark.engine import _IndexState
+
+    eng._index = _IndexState(df, eng._lock)  # noqa: SLF001
     latest = eng.latest_versions().collect()
     assert latest[0].version == "3.10.0"  # lexicographic would pick 3.9.1
 
@@ -145,6 +149,32 @@ def test_resolve_hybrid_local_matches_distributed(deb):
         Engine._LOCAL_RESOLVE_EDGES = old
     assert local == dist and local
     assert localc == distc and localc
+
+
+def test_reingest_replaces_every_derived_frame(spark):
+    # The derived frames (dependency edges, resolve's edge set, latest
+    # versions) belong to one ingest: after a warm pass over the APKINDEX
+    # sample, ingesting the Debian sample on the SAME engine must answer
+    # every lookup from the Debian index, exactly as a fresh engine does.
+    def answers(eng):
+        return (
+            {tuple(r) for r in eng.whatdepends("libc6").collect()},
+            {tuple(r) for r in eng.resolve("python3.11").collect()},
+            {tuple(r) for r in eng.latest_versions().select("name", "version").collect()},
+            eng.sql("SELECT count(*) AS n FROM packages").first()["n"],
+        )
+
+    fresh = Engine(spark)
+    fresh.ingest_debian_packages(_PACKAGES_PATH)
+    want = answers(fresh)
+    assert want[0] and want[1]
+
+    eng = Engine(spark)
+    eng.ingest_apkindex(_APKINDEX_PATH)
+    warm = answers(eng)
+    assert {r[0] for r in eng.whatdepends("musl").collect()}
+    eng.ingest_debian_packages(_PACKAGES_PATH)
+    assert answers(eng) == want != warm
 
 
 def test_resolve_missing_deps_are_skipped(deb):

@@ -7,6 +7,8 @@
 - Every operator must behave on EMPTY inputs (0-row tables with the right
   schema): return an empty (or well-defined aggregate) result, never throw.
   At 100 TB, empty partitions/partitions-after-filter are routine.
+- Defaults follow the host: the session's core count is the process's
+  usable cores unless SPARK_GRAFT_CPUS says otherwise.
 """
 
 from __future__ import annotations
@@ -103,3 +105,37 @@ def test_sf_switch_repoints_temp_views(spark, sf_dir):
     assert n_big != n_small
     load_tables(spark, sf_dir)  # memo hit — must still re-register views
     assert spark.sql("SELECT count(*) AS n FROM lineitem").collect()[0]["n"] == n_small
+
+
+def test_default_master_follows_usable_cores(monkeypatch):
+    from pyspark.sql import SparkSession
+
+    from pkg2_spark import session
+
+    seen = {}
+
+    class Builder:
+        def appName(self, _name):  # noqa: N802 (pyspark naming)
+            return self
+
+        def master(self, m):
+            seen["master"] = m
+            return self
+
+        def config(self, key, value):
+            seen[key] = value
+            return self
+
+        def getOrCreate(self):  # noqa: N802
+            return "session"
+
+    monkeypatch.setattr(SparkSession, "builder", Builder())
+    monkeypatch.setattr(session, "ensure_runtime_confs", lambda s: s)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    session.get_session()
+    n = len(os.sched_getaffinity(0))
+    assert seen["master"] == f"local[{n}]"
+    assert seen["spark.sql.shuffle.partitions"] == str(n)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    session.get_session()
+    assert seen["master"] == "local[3]"
