@@ -36,11 +36,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pkg2_spark.catalog import load_tables
+from pkg2_spark.operators.graph_ops import reachability
 from pkg2_spark.session import (
     ensure_runtime_confs,
     get_session,
-    local_rows_df,
-    truncate_lineage,
     truncate_lineage_counted,
     truncate_lineage_lazy,
 )
@@ -64,7 +63,7 @@ def capability_map(packages: DataFrame) -> DataFrame:
     row per capability a package provides — its own name, and each provides
     entry with its version suffix cut ('so:libz.so.1=1.3' -> 'so:libz.so.1').
     The one definition behind whatprovides, whatdepends, resolve,
-    q_pkg_provides and q_pkg_revdeps."""
+    q_pkg_provides, q_pkg_revdeps and q_pkg_blast_radius."""
     return packages.select(
         F.col("name").alias("provider"),
         "version",
@@ -209,7 +208,7 @@ class _IndexState:
 
     def package_edges(self) -> tuple[DataFrame, int]:
         """Distinct (src, dst) edges and their count, which gates resolve's
-        hybrid finish."""
+        driver-local finish (graph_ops.reachability)."""
         return self._once(
             "package_edges",
             lambda: truncate_lineage_counted(
@@ -972,47 +971,6 @@ class Engine:
             .select("name", "arch", "old_version", "new_version", "change")
         )
 
-    #: Hybrid-BFS threshold shared by resolve / resolve_constrained: when
-    #: the MATERIALIZED, DEDUPLICATED edge set fits comfortably on the
-    #: driver (200k edges ≈ a few MB — sized to driver memory, never to
-    #: the corpus, exactly like operators/dedup.py's _LOCAL_FINISH_EDGES),
-    #: finish the closure with a driver-local BFS instead of paying ~0.25 s
-    #: of fixed job latency per depth. A package dependency graph is
-    #: control-plane-sized (one row per (pkg, dep) atom — even a full
-    #: distro index is single-digit millions), so interactively this path
-    #: almost always wins: the closure collapses from one job per depth to
-    #: one bounded collect — same-process A/B at sf0.1, warm mins: hybrid
-    #: 0.78–1.05 s vs distributed 1.23 s (that floor was the per-call
-    #: parse + provider join + edge materialization, shared by both paths;
-    #: all three are now paid once per ingest). Past the threshold the
-    #: distributed one-job-per-depth loop below is unchanged (and pinned
-    #: equal by test_resolve_hybrid_local_matches_distributed).
-    _LOCAL_RESOLVE_EDGES = 200_000
-
-    def _local_bfs(self, adj, start_nodes, max_depth: int, schema: str) -> DataFrame:
-        """Driver-local BFS over a collected, threshold-bounded adjacency
-        map — semantics identical to the distributed loop (minimal depth
-        per node, cycle-safe, bounded by max_depth). Nodes are strings
-        (resolve) or (name, version) tuples (resolve_constrained);
-        deterministic: frontier order never affects the minimal depth."""
-        depth_of: dict = {}
-        frontier = sorted(set(start_nodes))
-        d = 1
-        while frontier and d <= max_depth:
-            for nd in frontier:
-                depth_of.setdefault(nd, d)
-            frontier = sorted(
-                {t for nd in frontier for t in adj.get(nd, ()) if t not in depth_of}
-            )
-            d += 1
-        rows = [
-            (nd, dd) if isinstance(nd, str) else (*nd, dd)
-            for nd, dd in sorted(depth_of.items())
-        ]
-        # One Arrow batch, one partition (session.local_rows_df): the row
-        # set is bounded by the hybrid-finish threshold by construction.
-        return local_rows_df(self.spark, rows, schema)
-
     def resolve(self, package: str, max_depth: int = 10) -> DataFrame:
         """Dependency closure (BFS over depends, so:* capabilities resolved
         through provides). Returns (node, depth) with minimal depth.
@@ -1020,58 +978,21 @@ class Engine:
         The distinct (src, dst) edges and their count are per-ingest state
         (_IndexState.package_edges): checkpointed with the count folded
         into the same job, then every call and every BFS round reads the
-        cached copy. Only the adjacency dict and the BFS are per call."""
+        cached copy. Only the closure itself (graph_ops.reachability) is
+        per call."""
         edges, n_edges = self._state().package_edges()
-        if n_edges <= self._LOCAL_RESOLVE_EDGES:
-            adj: dict = {}
-            epdf = edges.toPandas()  # Arrow collect of the bounded edge list
-            for s, d in zip(epdf["src"].tolist(), epdf["dst"].tolist()):
-                adj.setdefault(s, []).append(d)
-            return self._local_bfs(
-                adj,
-                adj.get(package, ()),
-                max_depth,
-                schema="node string, depth int",
-            )
-        frontier = (
-            edges.filter(F.col("src") == package)
-            .select(F.col("dst").alias("node"), F.lit(1).alias("depth"))
-            .distinct()
-            .transform(truncate_lineage)
+        return reachability(
+            edges, "src", "dst", {"src": package},
+            node="node", max_depth=max_depth, n_edges=n_edges,
         )
-        closure = frontier
-        # Round discipline (the r8 → r9 → r10 lesson, BENCH q_pkg_resolve
-        # 0.74 s → 1.60 s → 1.07 s): every driver action is a
-        # fixed-latency job (~0.25 s on local[32] regardless of data —
-        # measured), so the loop spends exactly ONE Spark job per depth:
-        # a LAZY checkpoint mark + count() materializes the frontier AND
-        # answers the round's emptiness question in the same job
-        # (truncate_lineage_counted — r9 paid eager checkpoint + isEmpty,
-        # two jobs per depth). `closure` stays a LAZY union of
-        # already-checkpointed frontiers: its plan grows one union node
-        # per round (linear, bounded by max_depth) — NOT the
-        # self-referencing lineage that doubles per depth, which the
-        # per-round frontier checkpoint truncates. Measured variants
-        # (warm mins, this machine): r8 two-checkpoint 1.6 s; batched
-        # two-depths-per-checkpoint 2.9 s (plan depth doubled); all-lazy
-        # persists 2.1–2.9 s (partial-cache recompute — isEmpty computes
-        # only partition 0; count() does not share that trap); r9
-        # eager-checkpoint + isEmpty 1.5 s.
-        for depth in range(2, max_depth + 1):
-            expanded = (
-                frontier.join(edges, frontier["node"] == edges["src"])
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .withColumn("depth", F.lit(depth))
-            )
-            new, n_new = truncate_lineage_counted(
-                expanded.join(closure, ["node"], "left_anti")
-            )
-            if n_new == 0:
-                break
-            closure = closure.union(new)
-            frontier = new
-        return closure
+
+    def package_edges(self) -> DataFrame:
+        """Package-level dependency edges: distinct (src, dst) where src
+        depends on a capability dst provides (through the capability map).
+        The graph resolve walks; q_pkg_revdeps and q_pkg_blast_radius read
+        it too. Per-ingest state: built and checkpointed once, with its
+        count."""
+        return self._state().package_edges()[0]
 
     def depends_atoms(self) -> DataFrame:
         """Parsed constraint atoms: (src_name, src_version, dep_name, op,
@@ -1104,67 +1025,14 @@ class Engine:
     def resolve_constrained(self, package: str, max_depth: int = 10) -> DataFrame:
         """Constraint-aware dependency closure from every version of
         ``package``: BFS over constrained_edges, nodes are (name, version),
-        minimal depth per node. Same round discipline as :meth:`resolve`
-        (see the measured-variants note there): one checkpoint per round,
-        closure a lazy union of checkpointed frontiers."""
+        minimal depth per node — the same kernel as :meth:`resolve`
+        (graph_ops.reachability), starting from every version's edges."""
         edges, n_edges = self._state().constrained_edges()
-        if n_edges <= self._LOCAL_RESOLVE_EDGES:
-            # hybrid finish — see resolve()/_LOCAL_RESOLVE_EDGES. Nodes are
-            # (name, version); the start frontier is the dependency set of
-            # EVERY version of `package` (same filter as the distributed
-            # frontier below).
-            adj: dict = {}
-            starts = []
-            epdf = edges.toPandas()  # Arrow collect of the bounded edge list
-            for sn, sv, dn, dv in zip(
-                epdf["src_name"].tolist(),
-                epdf["src_version"].tolist(),
-                epdf["dst_name"].tolist(),
-                epdf["dst_version"].tolist(),
-            ):
-                dst = (dn, dv)
-                adj.setdefault((sn, sv), []).append(dst)
-                if sn == package:
-                    starts.append(dst)
-            return self._local_bfs(
-                adj,
-                starts,
-                max_depth,
-                schema="name string, version string, depth int",
-            )
-        frontier = (
-            edges.filter(F.col("src_name") == package)
-            .select(
-                F.col("dst_name").alias("name"),
-                F.col("dst_version").alias("version"),
-                F.lit(1).alias("depth"),
-            )
-            .distinct()
-            .transform(truncate_lineage)
+        return reachability(
+            edges, ("src_name", "src_version"), ("dst_name", "dst_version"),
+            {"src_name": package}, node=("name", "version"),
+            max_depth=max_depth, n_edges=n_edges,
         )
-        closure = frontier
-        for depth in range(2, max_depth + 1):
-            expanded = (
-                frontier.join(
-                    edges,
-                    (frontier["name"] == edges["src_name"])
-                    & (frontier["version"] == edges["src_version"]),
-                )
-                .select(
-                    F.col("dst_name").alias("name"),
-                    F.col("dst_version").alias("version"),
-                )
-                .distinct()
-                .withColumn("depth", F.lit(depth))
-            )
-            new, n_new = truncate_lineage_counted(
-                expanded.join(closure, ["name", "version"], "left_anti")
-            )
-            if n_new == 0:
-                break
-            closure = closure.union(new)
-            frontier = new
-        return closure
 
     # ---------------------------------------------- LLM-data-pipeline surface
     # Thin delegations to the operator library — the corpus-level API a

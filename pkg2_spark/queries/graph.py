@@ -4,11 +4,11 @@ pkg2's dependency-resolution analog [Tier C]: from the APKINDEX-style edge
 table (package → depends), compute bounded-depth reachability with minimal
 depth — the "install closure" of every package.
 
-Spark has no recursion; the driver runs a BFS fixpoint loop of DataFrame
-self-joins (SURVEY.md §4.3). Each round joins only the NEW frontier against
-the edge table (semi-naïve evaluation), unions into the closure, and stops at
-fixpoint or the depth cap. At scale each round is one shuffle join keyed on
-the node; `persist` truncates lineage so round N doesn't replay rounds 1..N-1.
+Spark has no recursion; the driver runs the engine's one BFS fixpoint
+kernel of DataFrame self-joins (SURVEY.md §4.3;
+operators/graph_ops.py::reachability, grouped by root): semi-naïve rounds,
+one node-keyed shuffle join each, with a per-round checkpoint so round N
+doesn't replay rounds 1..N-1.
 """
 
 from __future__ import annotations
@@ -18,6 +18,7 @@ from collections import OrderedDict
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from pkg2_spark.operators.graph_ops import reachability
 from pkg2_spark.queries.relational import _APKINDEX_PATH
 from pkg2_spark.registry import query
 from pkg2_spark.session import truncate_lineage
@@ -82,30 +83,10 @@ def q_graph_closure(spark, sf_dir):
     # posture seam) materializes the frame once for the loop's many
     # reads and frees with the reference.
     edges = _edges(spark).distinct().transform(truncate_lineage)
-    closure = edges.select(
-        F.col("name").alias("root"), F.col("dep").alias("node"), F.lit(1).alias("depth")
-    ).distinct().transform(truncate_lineage)
-    frontier = closure
-    for depth in range(2, _MAX_DEPTH + 1):
-        # Semi-naïve step: expand only last round's frontier, keep first-seen
-        # (= minimal) depth by anti-joining the accumulated closure.
-        expanded = (
-            frontier.join(edges, frontier["node"] == edges["name"])
-            .select("root", F.col("dep").alias("new_node"))
-            .distinct()
-            .select("root", F.col("new_node").alias("node"), F.lit(depth).alias("depth"))
-        )
-        # truncate_lineage, not persist: `closure` appears twice per round
-        # (anti-join + union) — under persist the LOGICAL plan doubles per
-        # depth; the checkpoint cut (local or reliable per session.py's
-        # posture seam) truncates lineage (operators/dedup.py documents
-        # the driver OOM this prevents).
-        new = expanded.join(closure, ["root", "node"], "left_anti").transform(truncate_lineage)
-        if new.isEmpty():
-            break
-        closure = closure.union(new).transform(truncate_lineage)
-        frontier = new
-    return closure
+    roots = edges.select(F.col("name").alias("root"), F.col("dep").alias("node"))
+    return reachability(
+        edges, "name", "dep", roots, group="root", node="node", max_depth=_MAX_DEPTH
+    )
 
 
 # --------------------------------------------------------------- PageRank

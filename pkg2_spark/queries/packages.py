@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from pkg2_spark.engine import Engine, capability_map, version_key
+from pkg2_spark.operators.graph_ops import reachability
 from pkg2_spark.queries.relational import _APKINDEX_PATH, _REPO_DIR
 from pkg2_spark.registry import query
 
@@ -222,16 +223,14 @@ def q_pkg_revdeps(spark, sf_dir):
     """Reverse-dependency degrees (whatdepends across the whole index): for
     every provider, how many packages' depends resolve to it through the
     provides map — pkg2's reverse lookup surface (Engine.whatdepends is the
-    single-package form). One explode per side + an equi-join on capability
-    + a hash aggregate; at a real repo scale every stage is key-partitioned."""
+    single-package form). A hash aggregate over the engine's distinct
+    (dependent, provider) edges (Engine.package_edges — the one provider
+    join); at a real repo scale every stage is key-partitioned."""
     eng = Engine(spark)
-    p = eng.ingest_apkindex(_APKINDEX_PATH)
-    providers = capability_map(p).select("capability", "provider").distinct()
-    deps = p.select(F.col("name").alias("dependent"), F.explode("depends").alias("capability"))
-    edges = deps.join(providers, "capability").select("dependent", "provider").distinct()
-    return edges.groupBy("provider").agg(
+    eng.ingest_apkindex(_APKINDEX_PATH)
+    return eng.package_edges().groupBy(F.col("dst").alias("provider")).agg(
         F.count(F.lit(1)).alias("n_dependents"),
-        F.min("dependent").alias("first_dependent"),
+        F.min("src").alias("first_dependent"),
     )
 
 
@@ -682,8 +681,8 @@ def q_pkg_resolve_constrained(spark, sf_dir):
     edge while libweb 1.5-1's '<< 2.0' admits only 1.9-1. Oracle: the same
     parse + WITH RECURSIVE closure with the identical zero-padded
     version-key comparison. Engine side: Engine.resolve_constrained — one
-    name-keyed equi-join builds version-level edges, then the
-    localCheckpoint-per-round BFS shared with Engine.resolve."""
+    name-keyed equi-join builds version-level edges, then the closure
+    kernel shared with Engine.resolve (graph_ops.reachability)."""
     eng = Engine(spark)
     eng.ingest_debian_packages(_MULTIVER_PATH)
     out = eng.resolve_constrained("webapp", max_depth=10)
@@ -997,44 +996,21 @@ def q_pkg_blast_radius(spark, sf_dir):
 
     Scale: per round one equi-join of the frontier against the edge
     table keyed on the provider name + an anti-join against the
-    accumulated set (the q_graph_closure loop, state = reached
-    (cve, pkg) pairs only); the advisory seed is bounded and the depth
-    cap mirrors the oracle's recursion guard."""
-    from pkg2_spark.session import truncate_lineage
-
+    accumulated set (graph_ops.reachability grouped by cve, state =
+    reached (cve, pkg) pairs only); the advisory seed is bounded and the
+    depth cap mirrors the oracle's recursion guard."""
     eng = Engine(spark)
-    p = eng.ingest_apkindex(_APKINDEX_PATH)
-    providers = capability_map(p).select("provider", "capability").distinct()
-    deps = p.select(
-        F.col("name").alias("dependent"),
-        F.explode("depends").alias("capability"),
-    )
-    edges = (
-        deps.join(providers, "capability")
-        .select("dependent", "provider")
-        .distinct()
-        .transform(truncate_lineage)
-    )
+    eng.ingest_apkindex(_APKINDEX_PATH)
     vuln = (
         eng.match_advisories(_ADVISORIES_PATH)
         .filter(F.col("status") != "patched")
         .select("cve", F.col("name").alias("pkg"))
-        .distinct()
     )
-    affected = vuln.transform(truncate_lineage)
-    frontier = affected
-    for _ in range(5):
-        new = (
-            frontier.join(edges, frontier["pkg"] == edges["provider"])
-            .select("cve", F.col("dependent").alias("pkg"))
-            .distinct()
-            .join(affected, ["cve", "pkg"], "left_anti")
-            .transform(truncate_lineage)
-        )
-        if new.isEmpty():
-            break
-        affected = affected.union(new).transform(truncate_lineage)
-        frontier = new
+    # Reverse edges: from a provider to the packages that depend on it.
+    affected = reachability(
+        eng.package_edges(), "dst", "src", vuln,
+        group="cve", node="pkg", start_depth=0, max_depth=5,
+    )
     return affected.groupBy("cve").agg(
         F.countDistinct("pkg").cast("long").alias("n_affected"),
         F.min("pkg").alias("first_affected"),

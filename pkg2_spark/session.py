@@ -252,9 +252,9 @@ def truncate_lineage_lazy(df):
 
 
 def truncate_lineage_counted(df):
-    """truncate_lineage + row count in ONE Spark job — for fixpoint loops
-    whose round boundary is an emptiness test (Engine.resolve /
-    resolve_constrained). The r9 shape paid two driver actions per BFS
+    """truncate_lineage + row count in ONE Spark action — for fixpoint loops
+    whose round boundary is an emptiness test (the closure kernel,
+    operators/graph_ops.py::reachability). The r9 shape paid two driver actions per BFS
     round (eager checkpoint, then isEmpty), and on local[32] each action
     costs ~0.25 s of fixed job latency regardless of data. A LAZY
     checkpoint mark followed by count() folds them: count computes every

@@ -131,22 +131,18 @@ def test_resolve_closure_with_cycle(deb):
     assert out == {"libc6": 1, "libssl3": 1, "libgcc-s1": 2, "gcc-12-base": 3}
 
 
-def test_resolve_hybrid_local_matches_distributed(deb):
-    # The r10 hybrid finish: under _LOCAL_RESOLVE_EDGES the closure comes
+def test_resolve_hybrid_local_matches_distributed(deb, monkeypatch):
+    # The r10 hybrid finish: under _LOCAL_CLOSURE_EDGES the closure comes
     # from a driver-local BFS over the collected (bounded) edge set; force
     # the distributed one-job-per-depth loop and pin exact equality on a
     # CYCLIC fixture (libc6 <-> libgcc-s1) for both resolvers.
-    from pkg2_spark.engine import Engine
+    from pkg2_spark.operators import graph_ops
 
     local = {(r["node"], r["depth"]) for r in deb.resolve("python3.11").collect()}
     localc = {tuple(r) for r in deb.resolve_constrained("python3.11").collect()}
-    old = Engine._LOCAL_RESOLVE_EDGES
-    Engine._LOCAL_RESOLVE_EDGES = 0
-    try:
-        dist = {(r["node"], r["depth"]) for r in deb.resolve("python3.11").collect()}
-        distc = {tuple(r) for r in deb.resolve_constrained("python3.11").collect()}
-    finally:
-        Engine._LOCAL_RESOLVE_EDGES = old
+    monkeypatch.setattr(graph_ops, "_LOCAL_CLOSURE_EDGES", 0)
+    dist = {(r["node"], r["depth"]) for r in deb.resolve("python3.11").collect()}
+    distc = {tuple(r) for r in deb.resolve_constrained("python3.11").collect()}
     assert local == dist and local
     assert localc == distc and localc
 
