@@ -47,15 +47,11 @@ TIER2 = [
     "q_llm_minhash",
     "q_llm_dedup_resolve",
     "q_pkg_resolve",
-    # q_stream_rt_join's floor is ~3.1 s warm (profiled r13, quiet window —
-    # scripts/profile_rt_join.py): availableNow replays exactly TWO
-    # micro-batches (the data batch ~1.6-1.9 s incl. ~0.4 s query planning,
-    # plus the watermark-finalization batch ~1.1-1.4 s that scans 8 state
-    # partitions with 0 updated rows). State is NOT growing — 39947 rows
-    # buffered in batch 0, 63 carried to batch 1, memUsed constant across
-    # runs — so round-over-round drift above the floor (4.2 s r8 → 5.9 s
-    # r12) is ambient contention on this fixed two-batch overhead, not an
-    # eviction bug.
+    # q_stream_rt_join replays ONE micro-batch (scripts/profile_rt_join.py):
+    # the inner join emits every pair in its data batch, so the harness
+    # skips the watermark-only batch that would only evict state, and runs
+    # min(8, cores) state partitions. Before that, the eviction batch cost
+    # ~1.1-1.4 s of a ~3.1 s floor at 32 cores (profiled r13).
     "q_stream_rt_join",
     "q_sql_tpch_q5",
     # round-5 additions: the re-shaped keep-best resolution (r4's slowest

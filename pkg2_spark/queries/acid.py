@@ -306,6 +306,7 @@ def q_stream_acid_sink(spark, sf_dir):
 
     from pkg2_spark.queries.relational import IO_DIR
     from pkg2_spark.session import ensure_runtime_confs
+    from pkg2_spark.streaming.harness import replay
 
     ensure_runtime_confs(spark)
     src = fixture_path("stream_multisrc", sf_dir)
@@ -328,13 +329,10 @@ def q_stream_acid_sink(spark, sf_dir):
             t.append_batch(batch_df, batch_id)
 
         ckpt = os.path.join(IO_DIR, "checkpoints", f"acid_{_uuid.uuid4().hex[:8]}")
-        q = (
-            stream.writeStream.foreachBatch(sink_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        replay(
+            stream,
+            lambda w: w.foreachBatch(sink_batch).option("checkpointLocation", ckpt),
         )
-        q.awaitTermination()
         _shutil.rmtree(ckpt, ignore_errors=True)
         # Re-deliver batch 0 (what a restart's at-least-once replay does):
         # the ledger must refuse it, or the aggregate below double-counts
@@ -1039,7 +1037,7 @@ def q_stream_acid_pyds_sink(spark, sf_dir):
     import shutil as _shutil
 
     from pkg2_spark.acid_datasource import register_acid_source
-    from pkg2_spark.streaming.harness import events_stream
+    from pkg2_spark.streaming.harness import events_stream, replay
 
     path = fixture_path("acid_pyds_stream_sink", sf_dir)
     ckpt = path + "_ckpt"
@@ -1051,24 +1049,12 @@ def q_stream_acid_pyds_sink(spark, sf_dir):
     t = Table(spark, path, stats_cols=["event_id"])
     t.create(ev.filter(F.col("user_id") < 10).select(*cols))
     register_acid_source(spark)
-    old = spark.conf.get("spark.sql.shuffle.partitions", None)
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            events_stream(spark, sf_dir)
-            .filter(F.col("user_id") >= 10)
-            .select(*cols)
-            .writeStream.format("pkg2acid")
-            .option("path", path)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+    replay(
+        events_stream(spark, sf_dir).filter(F.col("user_id") >= 10).select(*cols),
+        lambda w: w.format("pkg2acid")
+        .option("path", path)
+        .option("checkpointLocation", ckpt),
+    )
     return t.read().groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("user_id").cast("long").alias("n_users"),

@@ -368,9 +368,10 @@ def q_stream_state_read(spark, sf_dir):
     tests/test_streaming.py.
 
     Scale shape: the replay is the normal dedup topology (one shuffle on
-    the key into 8 state partitions); the state read is a partitioned
-    batch scan of the store files (one task per state partition at
-    cluster scale — never a driver-side walk) feeding a 1-row agg.
+    the key into min(8, cores) state partitions); the state read is a
+    partitioned batch scan of the store files (one task per state
+    partition at cluster scale — never a driver-side walk) feeding a
+    1-row agg.
     Production caveat in the dedup itself: unwatermarked dedup state
     grows with distinct keys by design; the production form bounds it
     with dropDuplicatesWithinWatermark (q_stream_late shows the
@@ -442,7 +443,7 @@ def q_stream_foreachbatch(spark, sf_dir):
     import shutil as _shutil
 
     from pkg2_spark.queries.relational import fixture_path, fixture_ready
-    from pkg2_spark.streaming.harness import IO_DIR, events_stream  # noqa: F401
+    from pkg2_spark.streaming.harness import IO_DIR, events_stream, replay
     import os as _os
     import uuid as _uuid
 
@@ -462,13 +463,10 @@ def q_stream_foreachbatch(spark, sf_dir):
             batch_df.write.mode("overwrite").parquet(target)
 
         ckpt = _os.path.join(IO_DIR, "checkpoints", f"feb_{_uuid.uuid4().hex[:8]}")
-        q = (
-            stream.writeStream.foreachBatch(sink_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        replay(
+            stream,
+            lambda w: w.foreachBatch(sink_batch).option("checkpointLocation", ckpt),
         )
-        q.awaitTermination()
         _shutil.rmtree(ckpt, ignore_errors=True)
         with open(_os.path.join(path, "_ALL_BATCHES"), "w") as fh:
             fh.write("complete\n")
@@ -1069,6 +1067,7 @@ def q_stream_rt_update(spark, sf_dir):
 
     from pkg2_spark.queries.relational import IO_DIR, fixture_path, fixture_ready
     from pkg2_spark.session import ensure_runtime_confs
+    from pkg2_spark.streaming.harness import replay
 
     ensure_runtime_confs(spark)
     src = fixture_path("stream_multisrc", sf_dir)
@@ -1108,14 +1107,11 @@ def q_stream_rt_update(spark, sf_dir):
             batch_df.write.mode("overwrite").parquet(target)
 
         ckpt = _os.path.join(IO_DIR, "checkpoints", f"upd_{_uuid.uuid4().hex[:8]}")
-        q = (
-            agg.writeStream.foreachBatch(sink_batch)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        replay(
+            agg,
+            lambda w: w.foreachBatch(sink_batch).option("checkpointLocation", ckpt),
+            mode="update",
         )
-        q.awaitTermination()
         _shutil.rmtree(ckpt, ignore_errors=True)
         with open(_os.path.join(path, "_ALL_BATCHES"), "w") as fh:
             fh.write("complete\n")

@@ -14,10 +14,13 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import uuid
+from typing import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import TimestampType
 
 from pkg2_spark.queries.relational import IO_DIR
@@ -25,25 +28,29 @@ from pkg2_spark.session import ensure_runtime_confs
 
 
 # Schema memo for events_stream, keyed by the source file's identity
-# (path, size, mtime): every streaming query calls events_stream at least
-# once per INVOCATION (the stream-stream joins twice), and each call paid a
-# batch parquet footer read (~0.1 s of driver latency) to recover a schema
-# that cannot change unless the file itself does. Metadata only — no rows,
-# no results — and the mtime/size key re-reads after any testdata
-# regeneration.
-_SCHEMA_MEMO: dict[tuple[str, int, float], object] = {}
+# (path, size, mtime in ns): every streaming query calls events_stream at
+# least once per INVOCATION (the stream-stream joins twice), and each call
+# paid a batch parquet footer read (~0.1 s of driver latency) to recover a
+# schema that cannot change unless the file itself does. Metadata only — no
+# rows, no results — and the mtime/size key re-reads after any testdata
+# regeneration. Bounded: a handful of scales per run, oldest entry evicted.
+_SCHEMA_MEMO: dict[tuple[str, int, int], object] = {}
+_SCHEMA_MEMO_SIZE = 8
+_SCHEMA_MEMO_LOCK = threading.Lock()
 
 
 def _events_schema(spark: SparkSession, src: str):
     try:
-        key = (src, os.path.getsize(src), os.path.getmtime(src))
+        st = os.stat(src)
     except OSError:
         return spark.read.parquet(src).schema
-    if key not in _SCHEMA_MEMO:
-        if len(_SCHEMA_MEMO) >= 8:  # bounded: a handful of scales per run
-            _SCHEMA_MEMO.clear()
-        _SCHEMA_MEMO[key] = spark.read.parquet(src).schema
-    return _SCHEMA_MEMO[key]
+    key = (src, st.st_size, st.st_mtime_ns)
+    with _SCHEMA_MEMO_LOCK:
+        if key not in _SCHEMA_MEMO:
+            if len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_SIZE:
+                del _SCHEMA_MEMO[next(iter(_SCHEMA_MEMO))]
+            _SCHEMA_MEMO[key] = spark.read.parquet(src).schema
+        return _SCHEMA_MEMO[key]
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,38 +95,109 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def run_to_memory(stream_df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
-    """Execute a streaming aggregation to completion into a memory sink and
-    return the materialized table. availableNow processes all existing files
-    then stops — deterministic replay.
+# Every stream the engine starts goes through ``replay``, which switches two
+# settings on the shared session for the span of ``start()`` alone. The lock
+# keeps a concurrent start from cloning the session while they are switched.
+_START_LOCK = threading.Lock()
 
-    The number of state-store tasks per micro-batch is fixed by
-    ``spark.sql.shuffle.partitions`` at query start (it is baked into the
-    checkpoint). These replays are bounded single-file runs, so the conf is
-    temporarily lowered: 32 state partitions × several stateful operators
-    is pure task-launch overhead at this volume, while a real deployment
-    sizes it to cluster cores before the FIRST start of each query."""
+# State partitions per stateful operator: one task wave on small hosts, and
+# never above the 8 that stay fixed on larger ones.
+_MAX_STATE_PARTITIONS = 8
+
+
+def final_batch_emits(stream_df: DataFrame, mode: str) -> bool:
+    """Whether the watermark-only batch that ends a replay can add output.
+
+    When the watermark advanced in the last data batch, Spark runs one more
+    batch with no input to evict state. It emits only what eviction
+    finalizes: closed windows of an append-mode aggregate, the null rows
+    of an outer join, and the timeout output of a ``…WithState`` operator.
+    Anything else (inner joins, dedup, complete and update mode) only drops
+    state that a finished replay throws away anyway."""
+    stack = [stream_df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if (
+            "WithState" in name
+            or (name == "Aggregate" and mode == "append")
+            or (name == "Join" and node.joinType().sql() != "INNER")
+        ):
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
+def replay(
+    stream_df: DataFrame,
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
+    mode: str = "append",
+) -> StreamingQuery:
+    """Run ``stream_df`` to completion as an availableNow replay in output
+    ``mode`` and return the finished query; ``sink`` adds the format, name
+    and options to the writer.
+
+    ``start()`` clones the session, and the query reads two settings from
+    that clone, so they are set only across the call:
+    - ``spark.sql.shuffle.partitions`` is the number of state partitions,
+      baked into the checkpoint: ``min(8, defaultParallelism)``, never more
+      partitions than cores;
+    - ``spark.sql.streaming.noDataMicroBatches.enabled`` is off unless
+      ``final_batch_emits``, so a replay whose last batch would only evict
+      state runs its data batches alone."""
+    spark = stream_df.sparkSession
+    width = min(_MAX_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
+    confs = {
+        "spark.sql.shuffle.partitions": str(width),
+        "spark.sql.streaming.noDataMicroBatches.enabled": str(
+            final_batch_emits(stream_df, mode)
+        ).lower(),
+    }
+    writer = sink(stream_df.writeStream.outputMode(mode).trigger(availableNow=True))
+    conf = spark.conf
+    with _START_LOCK:
+        # A setting that already holds the value is left alone, so batch
+        # queries on other threads see no flip of it.
+        saved = {k: conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                if saved[k] != v:
+                    conf.set(k, v)
+            q = writer.start()
+        finally:
+            for k, old in saved.items():
+                if old is None:
+                    conf.unset(k)
+                elif old != confs[k]:
+                    conf.set(k, old)
+    q.awaitTermination()
+    return q
+
+
+def run_to_memory(stream_df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
+    """Replay ``stream_df`` to completion into a memory sink and return its
+    rows; availableNow processes all existing files then stops, so the
+    replay is deterministic. ``replay`` sets the state width and whether
+    the final watermark-only batch runs.
+
+    The returned frame holds the sink's rows through its resolved plan, so
+    the sink's session-global temp view is dropped before returning: the
+    rows live as long as the frame does, not as long as the session."""
     spark = stream_df.sparkSession
     # Unique sink/checkpoint per run: memory sinks are session-global.
     qname = f"{name}_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(IO_DIR, "checkpoints", qname)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        replay(
+            stream_df,
+            lambda w: w.format("memory").queryName(qname).option("checkpointLocation", ckpt),
+            mode,
         )
-        q.awaitTermination()
+        out = spark.table(qname)
     finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    out = spark.table(qname)
-    shutil.rmtree(ckpt, ignore_errors=True)
+        spark.catalog.dropTempView(qname)
+        shutil.rmtree(ckpt, ignore_errors=True)
     return out
 
 
@@ -130,21 +208,10 @@ def replay_to_checkpoint(stream_df: DataFrame, name: str) -> str:
     wiped first so every invocation re-derives state from the CURRENT
     source files (a stale checkpoint from a prior testdata generation
     would silently diverge); the name is fixed per caller+scale, so the
-    scratch dir holds one live checkpoint per fixture, not one per run."""
-    spark = stream_df.sparkSession
+    scratch dir holds one live checkpoint per fixture, not one per run.
+    ``replay`` sets the state width, so the store has
+    ``min(8, defaultParallelism)`` partitions."""
     ckpt = os.path.join(IO_DIR, "checkpoints", name)
     shutil.rmtree(ckpt, ignore_errors=True)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream_df.writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    replay(stream_df, lambda w: w.format("noop").option("checkpointLocation", ckpt))
     return ckpt

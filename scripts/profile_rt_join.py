@@ -2,8 +2,8 @@
 4.2 s → 5.9 s between rounds — is it micro-batch scheduling, state-store
 commit time, or growing state?).
 
-Replays the exact bench fixture (sf0.1 interval join, availableNow,
-shuffle.partitions=8) with the query's StreamingQueryProgress captured:
+Replays the exact bench fixture (sf0.1 interval join) through the
+harness's ``replay`` with the query's StreamingQueryProgress captured:
 per-batch durationMs breakdown (addBatch / commitOffsets / walCommit /
 latestOffset), state-operator metrics (rows total/updated, memory, commit
 time), and batch count. Run in a quiet window; compare runs.
@@ -30,7 +30,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     from pkg2_spark.queries.relational import IO_DIR
     from pkg2_spark.session import get_session
-    from pkg2_spark.streaming.harness import events_stream
+    from pkg2_spark.streaming.harness import events_stream, replay
 
     spark = get_session()
     spark.sparkContext.setLogLevel("ERROR")
@@ -62,26 +62,15 @@ def main() -> int:
     for run in range(3):
         qname = f"rtjoin_prof_{uuid.uuid4().hex[:8]}"
         ckpt = os.path.join(IO_DIR, "checkpoints", qname)
-        old = spark.conf.get("spark.sql.shuffle.partitions", None)
         t0 = time.monotonic()
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = (
-                build()
-                .writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            wall = time.monotonic() - t0
-            progresses = [json.loads(p.json) for p in q.recentProgress]
-        finally:
-            if old is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", old)
+        q = replay(
+            build(),
+            lambda w: w.format("memory").queryName(qname).option("checkpointLocation", ckpt),
+        )
+        wall = time.monotonic() - t0
+        progresses = [json.loads(p.json) for p in q.recentProgress]
         n = spark.table(qname).count()
+        spark.catalog.dropTempView(qname)
         shutil.rmtree(ckpt, ignore_errors=True)
         print(f"\n=== run {run}: wall {wall:.2f}s, {len(progresses)} batches, "
               f"{n} pairs, loadavg {os.getloadavg()[0]:.2f}")

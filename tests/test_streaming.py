@@ -206,7 +206,8 @@ def test_statestore_reader_keys_and_metadata(spark, sf_dir):
     md = spark.read.format("state-metadata").load(ckpt).collect()
     assert len(md) == 1
     assert md[0]["operatorName"] == "dedupe"
-    assert md[0]["numPartitions"] == 8  # the harness's pinned state layout
+    # the harness's state width: never more partitions than cores, at most 8
+    assert md[0]["numPartitions"] == min(8, spark.sparkContext.defaultParallelism)
     assert md[0]["minBatchId"] == 0
 
     state = spark.read.format("statestore").load(ckpt)
@@ -399,3 +400,141 @@ def test_socket_source_drives_the_same_streaming_graph(spark):
         hold.set()
         srv.shutdown()
         srv.server_close()
+
+
+def test_final_batch_emits_only_where_eviction_finalizes_output(spark, sf_dir):
+    # The watermark-only batch that ends a replay adds output only for an
+    # append-mode aggregate, an outer join and a ...WithState operator;
+    # every other plan runs its data batches alone.
+    from pkg2_spark.streaming.harness import events_stream, final_batch_emits
+    from pkg2_spark.streaming.stateful import user_running_counters
+
+    ev = events_stream(spark, sf_dir)
+    clicks = ev.select(
+        F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts")
+    ).withWatermark("c_ts", "1 hour")
+    buys = ev.select(
+        F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
+    ).withWatermark("p_ts", "1 hour")
+    cond = (
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("c_ts"))
+        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES"))
+    )
+    by_type = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    windows = (
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    assert not final_batch_emits(clicks.join(buys, cond), "append")
+    assert not final_batch_emits(ev.dropDuplicates(["event_id"]), "append")
+    assert not final_batch_emits(by_type, "complete")
+    assert not final_batch_emits(windows, "update")
+    assert final_batch_emits(clicks.join(buys, cond, "left_outer"), "append")
+    assert final_batch_emits(windows, "append")
+    assert final_batch_emits(user_running_counters(ev), "update")
+
+
+def test_replays_skip_only_the_final_batch_that_cannot_emit(spark, sf_dir):
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from pkg2_spark.registry import all_queries
+
+    # input rows per micro-batch, keyed by (query id, harness name without
+    # its unique suffix); ids of the queries whose termination arrived
+    rows, done = {}, set()
+
+    class Batches(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            rows.setdefault((str(p.id), p.name.rsplit("_", 1)[0]), []).append(
+                p.numInputRows
+            )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            done.add(str(event.id))
+
+    queries = all_queries()
+    names = ("q_stream_rt_join", "q_stream_rt_join_left", "q_stream_late_drop")
+    listener = Batches()
+    spark.streams.addListener(listener)
+    try:
+        for name in names:
+            queries[name](spark, sf_dir).collect()
+        # listener events arrive asynchronously; a query's progress events
+        # all precede its termination event
+        deadline = time.time() + 60
+        while sum(i in done for i, _ in list(rows)) < len(names) and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    got = {name: n for (i, name), n in rows.items() if i in done}
+    # the inner join emits every pair in its one data batch
+    assert len(got["rt_join"]) == 1 and got["rt_join"][0] > 0
+    # the left join's null rows flush in the watermark-only batch
+    assert len(got["rt_join_left"]) == 2 and got["rt_join_left"][-1] == 0
+    # one batch per staged file; the late file's batch closes the windows
+    assert len(got["late_drop"]) == 3 and min(got["late_drop"]) > 0
+
+
+def test_concurrent_replays_match_sequential_ones(spark, sf_dir):
+    # Two threads start replays on the shared session while the other's
+    # query runs: each must see its own state width and no-data flag.
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pkg2_spark.registry import all_queries
+
+    queries = all_queries()
+    names = ["q_stream_rt_join", "q_stream_rt_join_left"]
+
+    def run(name):
+        spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
+        return sorted(map(tuple, queries[name](spark, sf_dir).collect()))
+
+    want = {name: run(name) for name in names}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        with ThreadPoolExecutor(2) as pool:
+            runs = [(name, pool.submit(run, name)) for name in names * 3]
+            got = [(name, fut.result(timeout=300)) for name, fut in runs]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(rows == want[name] for name, rows in got)
+
+
+def test_replay_leaves_session_settings_and_views_as_it_found_them(spark, sf_dir):
+    # The harness switches the state width and the no-data flag only across
+    # start(), and drops each memory sink's temp view once its frame is
+    # built, so the session's settings and temp-view count stay flat.
+    from pkg2_spark.registry import all_queries
+
+    queries = all_queries()
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
+    old_parts = spark.conf.get(keys[0])
+
+    def temp_views():
+        return sum(1 for t in spark.catalog.listTables() if t.isTemporary)
+
+    queries["q_stream_rt_tumble"](spark, sf_dir).collect()
+    views = temp_views()
+    spark.conf.set(keys[0], "5")  # differs from the harness's state width
+    try:
+        before = {k: spark.conf.get(k, None) for k in keys}
+        for _ in range(5):
+            for name in ("q_stream_rt_tumble", "q_stream_rt_join"):
+                assert queries[name](spark, sf_dir).count() > 0
+        assert {k: spark.conf.get(k, None) for k in keys} == before
+    finally:
+        spark.conf.set(keys[0], old_parts)
+    assert temp_views() == views
