@@ -91,6 +91,18 @@ TIER2 = [
 TPCH = [f"q_sql_tpch_q{n}" for n in range(1, 23)]
 
 
+def latest_bench_record(root: Path) -> Path | None:
+    """The highest-numbered round record ``BENCH_r<N>.json`` under
+    ``root`` (variants such as ``BENCH_r15_c8.json`` are not round
+    records), or None when there is none."""
+    rounds = {
+        int(p.stem[len("BENCH_r"):]): p
+        for p in root.glob("BENCH_r*.json")
+        if p.stem[len("BENCH_r"):].isdigit()
+    }
+    return rounds[max(rounds)] if rounds else None
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
@@ -179,12 +191,13 @@ def main() -> int:
     # global min, so extra attempts can only sharpen a floor estimate,
     # never manufacture one.
     prev_mins: dict[str, float] = {}
-    prev_path = Path(__file__).resolve().parent / "BENCH_r14.json"
-    try:
-        prev = json.loads(prev_path.read_text()).get("parsed") or {}
-        prev_mins = prev.get("queries_min") or {}
-    except (OSError, ValueError):
-        prev_mins = {}
+    prev_path = latest_bench_record(Path(__file__).resolve().parent)
+    if prev_path is not None:
+        try:
+            prev = json.loads(prev_path.read_text()).get("parsed") or {}
+            prev_mins = prev.get("queries_min") or {}
+        except (OSError, ValueError):
+            prev_mins = {}
 
     def rerun_for(name: str):
         if name in HEADLINE:

@@ -56,6 +56,7 @@ from pkg2_spark.tableformat import (
     _check_schema,
     _commit,
     _commit_retrying,
+    _dv_rows_by_file,
     _fold,
     latest_version,
     log_schema,
@@ -194,21 +195,6 @@ class AcidDataSourceReader(DataSourceReader):
         return _read_file_as_arrow(partition, self.read_schema)
 
 
-def _dv_rows_by_file(path: str, dv_entries: list[dict]) -> dict[str, list[int]]:
-    """A snapshot's DELETION-VECTOR rows, grouped per data file —
-    driver-side planning metadata (the sidecars are small by the
-    merge-on-read contract), attached to each file's InputPartition so
-    the executor read skips deleted row indexes."""
-    import pyarrow.parquet as pq
-
-    out: dict[str, list[int]] = {}
-    for e in dv_entries:
-        t = pq.read_table(os.path.join(path, e["path"]), columns=["file", "ri"])
-        for f, ri in zip(t.column("file").to_pylist(), t.column("ri").to_pylist()):
-            out.setdefault(f, []).append(ri)
-    return out
-
-
 def _read_file_as_arrow(partition: AcidFilePartition, read_schema) -> Iterator:
     """Executor-side file read shared by the batch and stream readers:
     Arrow RecordBatches harmonized to the logged schema — files that
@@ -284,10 +270,10 @@ def _cdf_diff_batches(partition: AcidCdfDiffPartition, read_schema):
     read the commit's added and removed files (each harmonized to the
     logged base schema, one row-group batch at a time), cancel identical
     rows by MULTISET difference, and emit the survivors tagged
-    insert/delete — exactly Table.changes' exceptAll semantics, so the
-    batch change-set replay is the oracle. Rows re-added unchanged by a
-    rewrite (merge's untouched rows in touched files, compaction's whole
-    point) cancel to nothing.
+    insert/delete — the same signed multiset net as Table.changes
+    (tableformat._signed_net), so the batch change-set replay is the
+    oracle. Rows re-added unchanged by a rewrite (merge's untouched rows
+    in touched files, compaction's whole point) cancel to nothing.
 
     Memory posture: one task holds the commit's REWRITE REGION as row
     counters — the bounded merge/delete footprint (stats-pruned touched
@@ -416,21 +402,17 @@ def _cdf_dv_batches(partition: AcidCdfDvPartition, read_schema):
     positions, then stream each referenced file batch-at-a-time taking
     exactly the dead rows. Cost ∝ referenced files' size for the read,
     sidecar size for the state — never the table."""
-    from collections import defaultdict
-
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
     base = _cdf_base_schema(read_schema)
     target = to_arrow_schema(read_schema)
-    wanted: dict[str, set] = defaultdict(set)
-    for dvp in partition.dv_paths:
-        t = pq.read_table(dvp, columns=["file", "ri"])
-        for f, ri in zip(t.column("file").to_pylist(), t.column("ri").to_pylist()):
-            wanted[f].add(ri)
+    wanted = _dv_rows_by_file(
+        partition.table_root, [{"path": p} for p in partition.dv_paths]
+    )
     for rel, idxs in sorted(wanted.items()):
+        idxs = set(idxs)
         path = os.path.join(partition.table_root, rel)
         offset = 0
         for batch in _read_file_as_arrow(AcidFilePartition(path, None), base):
@@ -574,12 +556,8 @@ class AcidStreamReader(DataSourceStreamReader):
                 if self.change_feed:
                     if rec.get("add") or rec.get("remove"):
                         def _abs_dead(dv):
-                            return {
-                                os.path.join(self.path, rel): idxs
-                                for rel, idxs in _dv_rows_by_file(
-                                    self.path, dv
-                                ).items()
-                            }
+                            rows = _dv_rows_by_file(self.path, dv)
+                            return {os.path.join(self.path, r): i for r, i in rows.items()}
 
                         parts.append(
                             AcidCdfDiffPartition(

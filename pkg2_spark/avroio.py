@@ -304,62 +304,58 @@ def _compile_decoder(typ):
     raise ValueError(f"unsupported avro type {typ!r}")
 
 
+def _varint_code(k: int, ind: str) -> list[str]:
+    """Source lines reading one zigzag varint from (raw, pos) into _u{k}."""
+    return [
+        f"{ind}_b{k} = raw[pos]; pos += 1",
+        f"{ind}_u{k} = _b{k} & 0x7F; _s{k} = 7",
+        f"{ind}while _b{k} & 0x80:",
+        f"{ind}    _b{k} = raw[pos]; pos += 1",
+        f"{ind}    _u{k} |= (_b{k} & 0x7F) << _s{k}; _s{k} += 7",
+    ]
+
+
 def _emit_value_code(typ, v: str, lines: list[str], ind: str, uid: list[int]) -> bool:
     """Append source lines decoding ONE value of ``typ`` from (raw, pos)
-    into local ``v`` (advancing pos). Returns False for types the code
-    generator does not cover (caller falls back to the closure walk).
-    Byte semantics mirror _decode_value exactly."""
+    into local ``v`` (advancing pos). Returns False, leaving ``lines``
+    untouched, for types the code generator does not cover (caller falls
+    back to the closure walk). Byte semantics mirror _decode_value
+    exactly."""
     k = uid[0]
     uid[0] += 1
+    out: list[str] = []
     if isinstance(typ, list):
         if len(typ) != 2 or "null" not in typ:
             return False
         null_idx = typ.index("null")
         other = typ[1 - null_idx]
         # union branch index: zigzag varint, same as every avro long
-        lines.append(f"{ind}_b{k} = raw[pos]; pos += 1")
-        lines.append(f"{ind}_u{k} = _b{k} & 0x7F; _s{k} = 7")
-        lines.append(f"{ind}while _b{k} & 0x80:")
-        lines.append(f"{ind}    _b{k} = raw[pos]; pos += 1")
-        lines.append(f"{ind}    _u{k} |= (_b{k} & 0x7F) << _s{k}; _s{k} += 7")
-        lines.append(f"{ind}if ((_u{k} >> 1) ^ -(_u{k} & 1)) == {null_idx}:")
-        lines.append(f"{ind}    {v} = None")
-        lines.append(f"{ind}else:")
-        return _emit_value_code(other, v, lines, ind + "    ", uid)
-    if typ in ("int", "long"):
-        lines.append(f"{ind}_b{k} = raw[pos]; pos += 1")
-        lines.append(f"{ind}_u{k} = _b{k} & 0x7F; _s{k} = 7")
-        lines.append(f"{ind}while _b{k} & 0x80:")
-        lines.append(f"{ind}    _b{k} = raw[pos]; pos += 1")
-        lines.append(f"{ind}    _u{k} |= (_b{k} & 0x7F) << _s{k}; _s{k} += 7")
-        lines.append(f"{ind}{v} = (_u{k} >> 1) ^ -(_u{k} & 1)")
-        return True
-    if typ == "boolean":
-        lines.append(f"{ind}{v} = raw[pos] == 1; pos += 1")
-        return True
-    if typ == "float":
-        lines.append(f"{ind}{v} = _unpack_f(raw, pos)[0]; pos += 4")
-        return True
-    if typ == "double":
-        lines.append(f"{ind}{v} = _unpack_d(raw, pos)[0]; pos += 8")
-        return True
-    if typ in ("string", "bytes"):
-        lines.append(f"{ind}_b{k} = raw[pos]; pos += 1")
-        lines.append(f"{ind}_u{k} = _b{k} & 0x7F; _s{k} = 7")
-        lines.append(f"{ind}while _b{k} & 0x80:")
-        lines.append(f"{ind}    _b{k} = raw[pos]; pos += 1")
-        lines.append(f"{ind}    _u{k} |= (_b{k} & 0x7F) << _s{k}; _s{k} += 7")
-        lines.append(f"{ind}_n{k} = (_u{k} >> 1) ^ -(_u{k} & 1)")
+        out += _varint_code(k, ind)
+        out.append(f"{ind}if ((_u{k} >> 1) ^ -(_u{k} & 1)) == {null_idx}:")
+        out.append(f"{ind}    {v} = None")
+        out.append(f"{ind}else:")
+        if not _emit_value_code(other, v, out, ind + "    ", uid):
+            return False
+    elif typ in ("int", "long"):
+        out += _varint_code(k, ind)
+        out.append(f"{ind}{v} = (_u{k} >> 1) ^ -(_u{k} & 1)")
+    elif typ == "boolean":
+        out.append(f"{ind}{v} = raw[pos] == 1; pos += 1")
+    elif typ == "float":
+        out.append(f"{ind}{v} = _unpack_f(raw, pos)[0]; pos += 4")
+    elif typ == "double":
+        out.append(f"{ind}{v} = _unpack_d(raw, pos)[0]; pos += 8")
+    elif typ in ("string", "bytes"):
+        out += _varint_code(k, ind)
+        out.append(f"{ind}_n{k} = (_u{k} >> 1) ^ -(_u{k} & 1)")
         if typ == "string":
-            lines.append(
-                f"{ind}{v} = raw[pos:pos + _n{k}].decode('utf-8'); pos += _n{k}"
-            )
+            out.append(f"{ind}{v} = raw[pos:pos + _n{k}].decode('utf-8'); pos += _n{k}")
         else:
-            lines.append(
-                f"{ind}{v} = bytes(raw[pos:pos + _n{k}]); pos += _n{k}"
-            )
-        return True
-    return False
+            out.append(f"{ind}{v} = bytes(raw[pos:pos + _n{k}]); pos += _n{k}")
+    else:
+        return False
+    lines.extend(out)
+    return True
 
 
 def _compile_record_decoder(ftypes):

@@ -45,6 +45,21 @@ STATE_SCHEMAS = {
 }
 
 
+def _write_state(df: DataFrame, out_dir: str, name: str) -> None:
+    """Write one state frame after checking its columns and types against
+    the pinned format (parquet reads by name, so order is free): a drifted
+    frame (e.g. an int vec_id) fails here, at the writer, not in a later
+    pinned-schema read."""
+    got = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    if got != dict(c.split() for c in STATE_SCHEMAS[name].split(", ")):
+        shown = ", ".join(f"{k} {t}" for k, t in got.items())
+        raise ValueError(
+            f"dedup state {name!r} frame has schema ({shown}); the state "
+            f"format pins ({STATE_SCHEMAS[name]})"
+        )
+    df.write.parquet(os.path.join(out_dir, name))
+
+
 def build_state(
     corpus: DataFrame,
     out_dir: str,
@@ -55,19 +70,19 @@ def build_state(
     """Materialize the dedup index for ``corpus`` (vec_id, embedding)."""
     spark = corpus.sparkSession
     bands = sign_lsh_bands(corpus, dim=dim, rows_per_band=rows_per_band)
-    bands.write.parquet(os.path.join(out_dir, BANDS))
-    banded_pairs(
-        bands, "vec_id", "id_a", "id_b", cap=cap, keep_provenance=True
-    ).write.parquet(os.path.join(out_dir, PROV))
+    _write_state(bands, out_dir, BANDS)
+    _write_state(
+        banded_pairs(bands, "vec_id", "id_a", "id_b", cap=cap, keep_provenance=True),
+        out_dir,
+        PROV,
+    )
     cand = (
         spark.read.schema(STATE_SCHEMAS[PROV])
         .parquet(os.path.join(out_dir, PROV))
         .select("id_a", "id_b")
         .distinct()
     )
-    cosine_on_pairs(cand, corpus, "id_a", "id_b", dim=dim).write.parquet(
-        os.path.join(out_dir, VERIFIED)
-    )
+    _write_state(cosine_on_pairs(cand, corpus, "id_a", "id_b", dim=dim), out_dir, VERIFIED)
 
 
 def read_state(spark: SparkSession, state_dir: str) -> dict[str, DataFrame]:
@@ -193,12 +208,12 @@ def apply_delta(
     cand = cand.transform(truncate_lineage)
     fresh = cand.join(ver_c, ["id_a", "id_b"], "left_anti")
     ver_fresh = cosine_on_pairs(fresh, vectors, "id_a", "id_b", dim=dim)
-    bands_c.unionByName(bands_d).write.parquet(os.path.join(commit_dir, BANDS))
-    prov_keep.unionByName(prov_new).write.parquet(os.path.join(commit_dir, PROV))
+    _write_state(bands_c.unionByName(bands_d), commit_dir, BANDS)
+    _write_state(prov_keep.unionByName(prov_new), commit_dir, PROV)
     # keep EVERY computed cosine (not just current candidates): buckets
     # only gain members, so a pair once discovered can be rediscovered
     # by a later shard and its verification is then free.
-    ver_c.unionByName(ver_fresh).write.parquet(os.path.join(commit_dir, VERIFIED))
+    _write_state(ver_c.unionByName(ver_fresh), commit_dir, VERIFIED)
     return (
         spark.read.schema(STATE_SCHEMAS[VERIFIED])
         .parquet(os.path.join(commit_dir, VERIFIED))

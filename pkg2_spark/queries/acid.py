@@ -205,8 +205,8 @@ def q_acid_cdc(spark, sf_dir):
     (change_type, status). Because data files are immutable, files
     present in both snapshots cancel EXACTLY and the diff reads only the
     file-set difference (the merge's rewritten region), never the full
-    table; within it, two hash-aggregate exceptAll passes produce the
-    row-level changes. The oracle derives the same change set from the
+    table; within it, one signed aggregate nets the row-level changes
+    as a multiset. The oracle derives the same change set from the
     fixture recipe over raw orders.
 
     Scale: CDC cost tracks the commit's write footprint — an append-only

@@ -18,6 +18,7 @@ from pkg2_spark.queries.relational import _APKINDEX_PATH, _REPO_DIR
 from pkg2_spark.registry import query
 
 import os
+import shutil
 
 _PACKAGES_PATH = os.path.join(_REPO_DIR, "pkg2_spark", "data", "packages_sample.txt")
 
@@ -607,6 +608,9 @@ def q_pkg_fetch(spark, sf_dir):
     remote = _ensure_gz_cache(sf_dir)
     urls = [f"file://{os.path.join(remote, f)}" for f in _GZ_CACHE_FILES]
     fetched_dir = fixture_path("pkg_fetched_cache", sf_dir)
+    # FRESH, as promised: a manifest an earlier fetch from other URLs left
+    # would make these archives land again under hashed names.
+    shutil.rmtree(fetched_dir, ignore_errors=True)
     eng = _Engine(spark)
     eng.fetch_to_cache(urls, fetched_dir)
     pkgs = eng.ingest_index_cache(fetched_dir)

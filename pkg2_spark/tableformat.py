@@ -231,6 +231,26 @@ def dv_state(path: str, cut: int | None = None) -> list[dict]:
     return snapshot(path, cut).dv
 
 
+# Every DV sidecar holds exactly these columns (delete_where_dv writes them).
+DV_SCHEMA = "file string, ri long"
+
+
+def _dv_rows_by_file(path: str, dv_entries: list[dict]) -> dict[str, list[int]]:
+    """THE deletion-vector position reader: the row indexes the sidecars
+    of ``dv_entries`` record, grouped per data file (log-relative path),
+    read on the driver with pyarrow — the sidecars are small by the
+    merge-on-read contract. The pkg2acid planners attach them to each
+    file's partition; Table.changes diffs them."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, list[int]] = {}
+    for e in dv_entries:
+        t = pq.read_table(os.path.join(path, e["path"]), columns=["file", "ri"])
+        for f, ri in zip(t.column("file").to_pylist(), t.column("ri").to_pylist()):
+            out.setdefault(f, []).append(ri)
+    return out
+
+
 def log_schema(path: str, version: int | None = None):
     """The logged table schema as of ``version`` (module-level so
     session-free consumers — e.g. the Python Data Source's driver-side
@@ -481,6 +501,33 @@ def _with_zvalue(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.withColumn("__z", z.cast("long"))
 
 
+def _signed_net(plus: DataFrame | None, minus: DataFrame | None) -> DataFrame:
+    """Rows of ``plus`` that ``minus`` lacks tagged ``insert`` and the
+    reverse tagged ``delete``, each repeated by its net count — both
+    exceptAll directions as ONE signed aggregate: union the sides tagged
+    +1/-1, sum the sign per distinct row, keep nonzero sums. Grouping
+    treats nulls as equal, so this is exceptAll's null-safe multiset
+    semantics, and the same net the change feed's executor-side Counter
+    diff (_cdf_diff_batches) takes. A missing side needs no aggregate."""
+    import pyspark.sql.functions as F
+
+    if minus is None:
+        return plus.withColumn("change_type", F.lit("insert"))
+    if plus is None:
+        return minus.withColumn("change_type", F.lit("delete"))
+    n = F.col("__n")
+    return (
+        plus.withColumn("__n", F.lit(1))
+        .unionByName(minus.withColumn("__n", F.lit(-1)))
+        .groupBy(*plus.columns)
+        .agg(F.sum("__n").alias("__n"))
+        .filter(n != 0)
+        .withColumn("change_type", F.when(n > 0, "insert").otherwise("delete"))
+        .withColumn("__n", F.explode(F.array_repeat(F.lit(0), F.abs(n).cast("int"))))
+        .drop("__n")
+    )
+
+
 @dataclass
 class Table:
     """Handle on a logged table — all mutators go through the commit
@@ -550,101 +597,72 @@ class Table:
         (an update under merge = delete + insert of the new image).
 
         File-pruned: data files are immutable, so files present in BOTH
-        snapshots cancel exactly — only the file-set difference is read
-        and exceptAll'd. An append-only history diffs by reading just the
-        appended files; a merge reads just the rewritten region. The
-        exceptAll pair is two hash-aggregates over the differing files,
-        never a full-table pass."""
+        snapshots cancel exactly — only the file-set difference is read,
+        and its rows are netted as a multiset by ONE signed aggregate
+        (_signed_net), never a full-table pass. An append-only history
+        diffs by reading just the appended files; a merge reads just the
+        rewritten region. Merge-on-read deletes inside the window come
+        from the DV sidecars in one snapshot's list and not the other's,
+        read on the driver. Building the frame runs no Spark job while
+        each scan names at most 32 files (beyond Spark's
+        parallelPartitionDiscovery threshold it lists them in a job)."""
+        from collections import Counter
+
+        import pyspark.sql.functions as F
+
         a, b = _snapshots_at(self.path, (v_from, v_to))
         sa, sb = set(a.paths()), set(b.paths())
         only_a, only_b = sorted(sa - sb), sorted(sb - sa)
-        import pyspark.sql.functions as F
 
-        dva, dvb = a.dv, b.dv
-        dv_moved = [e["path"] for e in dva] != [e["path"] for e in dvb]
-        if not only_a and not only_b and not dv_moved:
+        # MERGE-ON-READ deletes inside the window: DV positions at v_to
+        # but not v_from are delete images; the reverse (a restore
+        # un-deleting) are insert images. Shared sidecars cancel exactly
+        # in the multiset difference, so only the differing ones are read.
+        # Restricted to files live in BOTH snapshots: a rewritten file's
+        # row changes are in the file diff, and its stale DV rows must
+        # not double-count.
+        def positions(mine, other):
+            only = Counter(e["path"] for e in mine) - Counter(e["path"] for e in other)
+            rows = _dv_rows_by_file(self.path, [{"path": p} for p in only.elements()])
+            return Counter((f, ri) for f, ris in rows.items() for ri in ris)
+
+        common = {os.path.relpath(f, self.path) for f in sa & sb}
+        pos_a, pos_b = positions(a.dv, b.dv), positions(b.dv, a.dv)
+        moved = {
+            tag: [p for p in (x - y).elements() if p[0] in common]
+            for tag, x, y in (("delete", pos_b, pos_a), ("insert", pos_a, pos_b))
+        }
+        if not only_a and not only_b and not any(moved.values()):
             return self._read(b, True).limit(0).withColumn("change_type", F.lit(""))
         # Both sides read under v_to's LOG schema so an evolved column
-        # aligns (nulls on the old side) instead of failing the exceptAll.
+        # aligns (nulls on the old side) instead of failing the union.
         reader = self._pinned_reader(b)
-        schema_probe = sorted(sb or sa)[0]
-        empty = reader.parquet(schema_probe).limit(0).withColumn(
-            "change_type", F.lit("")
-        )
-        parts = [empty]
+        parts = [
+            reader.parquet(sorted(sb or sa)[0]).limit(0).withColumn(
+                "change_type", F.lit("")
+            )
+        ]
         if only_a or only_b:
             # Each side applies ITS OWN version's DV set, so a row
             # merge-on-read-deleted BEFORE the window never surfaces as a
             # change when its file is later rewritten (the rewrite's
             # output lacks it on both sides).
-            da = (
-                self._apply_dv(reader.parquet(*only_a), dva)
-                if only_a
-                else empty.drop("change_type")
-            )
-            db = (
-                self._apply_dv(reader.parquet(*only_b), dvb)
-                if only_b
-                else empty.drop("change_type")
-            )
+            parts.append(_signed_net(
+                self._apply_dv(reader.parquet(*only_b), b.dv) if only_b else None,
+                self._apply_dv(reader.parquet(*only_a), a.dv) if only_a else None,
+            ))
+        for tag, pos in moved.items():
+            if not pos:
+                continue
+            scan = self._tag_positions(reader.parquet(*[
+                os.path.join(self.path, rel) for rel in sorted({f for f, _ in pos})
+            ]))
+            keys = self.spark.createDataFrame(pos, "__file string, __ri long")
             parts.append(
-                db.exceptAll(da).withColumn("change_type", F.lit("insert"))
+                scan.join(F.broadcast(keys), ["__file", "__ri"], "inner")
+                .drop("__file", "__ri")
+                .withColumn("change_type", F.lit(tag))
             )
-            parts.append(
-                da.exceptAll(db).withColumn("change_type", F.lit("delete"))
-            )
-        if dv_moved:
-            # MERGE-ON-READ deletes inside the window: DV rows present at
-            # v_to but not v_from are delete images; rows present at
-            # v_from but not v_to (a restore un-deleting) are insert
-            # images. Restricted to files live in BOTH snapshots — a
-            # rewritten file's row changes are already in the file diff
-            # above, and its stale DV rows must not double-count.
-            common_rel = {os.path.relpath(f, self.path) for f in sa & sb}
-            fa = (
-                self._dv_frame(dva).select("file", "ri")
-                if dva
-                else self.spark.createDataFrame([], "file string, ri long")
-            )
-            fb = (
-                self._dv_frame(dvb).select("file", "ri")
-                if dvb
-                else self.spark.createDataFrame([], "file string, ri long")
-            )
-            for pos, tag in (
-                (fb.exceptAll(fa), "delete"),
-                (fa.exceptAll(fb), "insert"),
-            ):
-                # O(files) driver-side intersect, not an isin literal list
-                # (plan bloat at scale); non-common files drop here and
-                # their stale pos rows can never match the scan's join key.
-                hit_files = [
-                    r["file"]
-                    for r in pos.select("file").distinct().collect()
-                    if r["file"] in common_rel
-                ]
-                if not hit_files:
-                    continue
-                scan = self._tag_positions(
-                    reader.parquet(
-                        *[os.path.join(self.path, rel) for rel in hit_files]
-                    )
-                )
-                img = (
-                    scan.join(
-                        F.broadcast(
-                            pos.select(
-                                F.col("file").alias("__file"),
-                                F.col("ri").alias("__ri"),
-                            )
-                        ),
-                        ["__file", "__ri"],
-                        "inner",
-                    )
-                    .drop("__file", "__ri")
-                    .withColumn("change_type", F.lit(tag))
-                )
-                parts.append(img)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -665,8 +683,8 @@ class Table:
         return "file:" + os.path.abspath(self.path) + "/"
 
     def _dv_frame(self, dv_entries: list[dict]) -> DataFrame:
-        """The folded deletion-vector rows (file, ri) as a DataFrame."""
-        return self.spark.read.parquet(
+        """The folded deletion-vector rows (file, ri), schema-pinned: no inference job."""
+        return self.spark.read.schema(DV_SCHEMA).parquet(
             *[os.path.join(self.path, e["path"]) for e in dv_entries]
         )
 
@@ -770,11 +788,14 @@ class Table:
         wholesale (its data dir is left unreferenced for vacuum)."""
         import pyspark.sql.functions as F
 
+        from pkg2_spark.session import truncate_lineage_lazy
+
         # Materialize the distinct update-key set ONCE: it is read by
         # three separate jobs (bounds, findTouchedFiles, the rewrite's
         # anti-join) and a derived `updates` frame would otherwise
-        # re-scan its source per job.
-        keys = updates.select(key).distinct().localCheckpoint(eager=True)
+        # re-scan its source per job. The bounds aggregate reads every
+        # partition, so it fills the lazy checkpoint: one action, not two.
+        keys = truncate_lineage_lazy(updates.select(key).distinct())
         bounds = keys.agg(
             F.min(key).alias("lo"), F.max(key).alias("hi")
         ).collect()[0]
@@ -791,7 +812,7 @@ class Table:
                 for rel, e in snap.files.items()
                 if stats_may_match(e.get("stats") or {}, in_bounds)
             ]
-            touched = self._find_touched_files(candidates, keys, key)
+            touched = self._find_touched_files(candidates, keys, key, snap)
             if touched:
                 # No broadcast hint: the update delta is unbounded in
                 # general (a day's CDC feed) — AQE sizes the anti-join.
@@ -1233,20 +1254,20 @@ class Table:
 
     # -- internals -------------------------------------------------------
     def _find_touched_files(
-        self, candidates: list[str], keys: DataFrame, key: str
+        self, candidates: list[str], keys: DataFrame, key: str, snap: Snapshot
     ) -> list[str]:
         """Exact touched-file set (the Delta findTouchedFiles join): scan
         ONLY the key column of the candidate files tagged with their
         file path, semi-join against the (pre-materialized, distinct)
         update keys, collect the distinct paths. Scan cost = one
-        pruned-to-one-column pass over the stats candidates; the collect
-        is O(touched files)."""
+        pruned-to-one-column pass over the stats candidates, read under
+        ``snap``'s logged schema; the collect is O(touched files)."""
         import pyspark.sql.functions as F
 
         if not candidates:
             return []
         tagged = (
-            self.spark.read.parquet(*candidates)
+            self._pinned_reader(snap).parquet(*candidates)
             .select(F.col(key), F.input_file_name().alias("__file"))
             .join(keys, key, "left_semi")
             .select("__file")

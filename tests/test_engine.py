@@ -889,3 +889,25 @@ def test_match_advisories_classification(spark):
     # 'patched' — it is a distinct 'unfixed' verdict.
     assert rows[("musl", "x86_64", "1.2.4-r0", "CVE-2024-0009")] == "unfixed"
     assert len(rows) == 11
+
+
+def test_q_pkg_fetch_fetches_into_a_fresh_cache(spark, sf_dir, tmp_path):
+    # A cache dir pre-filled from the same archives under another root
+    # claims their basenames in its manifest; q_pkg_fetch must clear it,
+    # not add a hashed-name copy of every archive (twice the rows).
+    import shutil
+
+    from pkg2_spark.queries.packages import _GZ_CACHE_FILES, _ensure_gz_cache
+    from pkg2_spark.queries.relational import fixture_path
+    from pkg2_spark.registry import all_queries
+
+    q = all_queries()["q_pkg_fetch"]
+    fresh = q(spark, sf_dir).count()
+    mirror = tmp_path / "mirror"
+    shutil.copytree(_ensure_gz_cache(sf_dir), mirror)
+    Engine(spark).fetch_to_cache(
+        [f"file://{mirror}/{f}" for f in _GZ_CACHE_FILES],
+        fixture_path("pkg_fetched_cache", sf_dir),
+    )
+    assert fresh > 0
+    assert q(spark, sf_dir).count() == fresh

@@ -1242,6 +1242,19 @@ def test_avro_codegen_decoder_matches_closure_walk(tmp_path):
     assert A._compile_record_decoder([("a", ["null", "string", "long"])]) is None
 
 
+def test_avro_codegen_declines_without_partial_emission():
+    # A nullable union over an uncovered type fails only after its branch
+    # test is generated; the caller's buffer must not keep those lines.
+    from pkg2_spark import avroio as A
+
+    lines = ["keep"]
+    uncovered = ["null", {"type": "map", "values": "long"}]
+    assert not A._emit_value_code(uncovered, "_v0", lines, "", [0])
+    assert lines == ["keep"]
+    assert A._emit_value_code(["null", "long"], "_v0", lines, "", [0])
+    assert lines[0] == "keep" and lines[-1] == "    _v0 = (_u1 >> 1) ^ -(_u1 & 1)"
+
+
 def test_weighted_sample_oversamples_heavy_docs(spark, sf_dir):
     from pkg2_spark.registry import all_queries
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 
 import pyspark.sql.functions as F
 import pytest
@@ -866,3 +867,91 @@ def test_each_operation_folds_the_log_once(spark, table, monkeypatch):
         op()
         assert opens, f"{name} never read the log"
         assert max(opens.values()) == 1, (name, dict(opens))
+
+
+def _multiset_changes(table, v_from, v_to) -> Counter:
+    """Reference change set in plain pandas: count each distinct row of
+    ``v_to`` +1 and of ``v_from`` -1 and keep the nonzero nets, as a
+    Counter of (row tuple, change_type)."""
+    import pandas as pd
+
+    a, b = (table.read(version=v).toPandas() for v in (v_from, v_to))
+    net = (
+        pd.concat([b.assign(__n=1), a.assign(__n=-1)])
+        .groupby(list(b.columns), dropna=False)["__n"]
+        .sum()
+    )
+    return Counter({
+        (tuple(None if pd.isna(x) else x for x in row), "insert" if n > 0 else "delete"): abs(n)
+        for row, n in net.items()
+        if n != 0
+    })
+
+
+def _engine_changes(table, v_from, v_to) -> Counter:
+    ch = table.changes(v_from, v_to)
+    cols = [c for c in ch.columns if c != "change_type"]
+    return Counter(
+        (tuple(r[c] for c in cols), r["change_type"]) for r in ch.collect()
+    )
+
+
+def test_changes_match_a_multiset_diff_of_the_snapshots(spark, table):
+    # Every window equals the multiset difference of its two snapshots:
+    # append-only, merge, DV-only, merge plus DV, reversed windows, a
+    # restore that un-deletes DV rows (insert images from positions),
+    # compact's dv_base reset, and an empty window.
+    v1 = table.append(_mk(spark, 1000, 1200, tag="b"))
+    v2 = table.merge(_mk(spark, 150, 250, tag="m"), key="id")
+    v3 = table.delete_where_dv("id % 10 = 3")
+    v4 = table.restore(v2)
+    v5 = table.delete_where_dv("id BETWEEN 500 AND 540")
+    v6 = table.compact(max_files=3)
+    for lo, hi in [
+        (0, v1), (v1, v2), (v2, v3), (v1, v3), (0, v6),
+        (v3, v1), (v3, 0), (v3, v4), (v4, v6), (v5, v6), (v6, v4),
+        (v3, v3),
+    ]:
+        assert _engine_changes(table, lo, hi) == _multiset_changes(table, lo, hi), (lo, hi)
+    # the windows are not vacuous: the restore un-deletes 120 rows by
+    # position, and compact is a logical no-op
+    assert sum(_multiset_changes(table, v3, v4).values()) == 120
+    assert not _engine_changes(table, v5, v6)
+
+
+def test_changes_net_duplicate_rows_by_count(spark, tmp_path):
+    # The same row 3x on one side and 1x on the other nets to 2 images;
+    # a null column groups as equal, like exceptAll.
+    t = Table(spark, str(tmp_path / "dup"))
+    schema = "id long, note string"
+    t.create(spark.createDataFrame([(1, None)] * 3 + [(2, "b")], schema))
+    v = t.merge(spark.createDataFrame([(1, None)], schema), key="id")
+    assert _engine_changes(t, 0, v) == {((1, None), "delete"): 2}
+    assert _engine_changes(t, v, 0) == {((1, None), "insert"): 2}
+    assert _engine_changes(t, 0, v) == _multiset_changes(t, 0, v)
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted with a job group and the status
+    tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_building_reads_and_change_sets_runs_no_spark_job(spark, table):
+    # Table operations plan from the log: a scan whose schema the log or
+    # the DV sidecar format fixes infers nothing, and a change set's DV
+    # positions are read on the driver. Building either frame fires no job.
+    table.merge(_mk(spark, 100, 120, tag="upd"), key="id")
+    v = table.delete_where_dv("id % 10 = 3")
+    assert _jobs_of(spark, lambda: table.read()) == 0
+    assert _jobs_of(spark, lambda: table.changes(0, v)) == 0
+    assert _jobs_of(spark, lambda: table.changes(v - 1, v)) == 0

@@ -512,6 +512,34 @@ def test_ivf_k_derivation_and_cell_flatness(spark, sf_dir):
         assert stats["max"] <= 2 * _IVF_TARGET_CELL
 
 
+def test_dedup_state_writers_refuse_a_drifted_schema(spark, sf_dir, tmp_path):
+    # build_state and apply_delta check each outgoing frame against
+    # STATE_SCHEMAS: a drifted vec_id fails at the write with a clear
+    # message instead of in a later pinned bigint read. (apply_delta
+    # unions the delta with the stored bigint state, so an int delta
+    # widens back; a double one does not.)
+    import os
+
+    import pyspark.sql.functions as F
+    import pytest
+
+    from pkg2_spark.catalog import load_tables
+    from pkg2_spark.operators.dedup_index import apply_delta, build_state
+
+    e = load_tables(spark, sf_dir)["embeddings"]
+    with pytest.raises(ValueError, match="'bands' frame has schema .*vec_id int"):
+        build_state(e.withColumn("vec_id", F.col("vec_id").cast("int")), str(tmp_path / "bad"))
+    assert not os.path.exists(tmp_path / "bad")
+    v0 = str(tmp_path / "state_v0")
+    build_state(e.filter(F.col("vec_id") % 10 < 8), v0)
+    shard = e.filter(F.col("vec_id") % 10 == 8)
+    with pytest.raises(ValueError, match="'bands' frame has schema .*vec_id double"):
+        apply_delta(
+            v0, shard.withColumn("vec_id", F.col("vec_id").cast("double")), e,
+            commit_dir=str(tmp_path / "state_v1"),
+        )
+
+
 def test_dedup_index_chained_increments_equal_batch(spark, sf_dir, tmp_path):
     # The state COMMIT contract: build on a base corpus, apply shard 1
     # with commit, apply shard 2 against the COMMITTED state — the final
