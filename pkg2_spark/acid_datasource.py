@@ -827,6 +827,13 @@ class AcidDataSource(DataSource):
 def register_acid_source(spark) -> None:
     """Idempotent registration of the pkg2acid format on a session.
     Python-source filter pushdown is opt-in in Spark 4.1 (readers that
-    implement pushFilters fail fast without it) — enable it alongside."""
+    implement pushFilters fail fast without it) — enable it alongside.
+
+    The JVM resolves a Python data source through the thread's ACTIVE
+    session, which a new Python thread (its own JVM thread) does not have:
+    there a pkg2acid read or write failed with DATA_SOURCE_NOT_FOUND even
+    after registering. Registering therefore also makes ``spark`` the
+    calling thread's active session."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(AcidDataSource)
+    spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)

@@ -36,7 +36,8 @@ RELABELING MAP is composed with itself (pointer doubling on m, not on
 comp) — one-hop contraction alone is linear rounds on path-shaped
 residuals (a 41-node chain failed to converge in 20 rounds; with the
 doubling, reach is 2^round on any topology); (2) once the contracted
-residual fits _LOCAL_FINISH_EDGES, a driver-local union-find finishes in
+residual fits graph_ops.LOCAL_FINISH_EDGES (the bound reachability's
+driver-local finish reads too), a driver-local union-find finishes in
 one step and broadcasts the final relabeling back (the standard
 distributed-while-big / local-when-small hybrid every production CC
 uses; identical fixpoints, and locally it collapses 4-5 fixed-overhead
@@ -45,28 +46,27 @@ rather than returning part-merged labels.
 
 Scale posture: every operation is an equi-join or hash-agg on node ids —
 no pair explosion beyond the given edge set, and the rewritten edge set
-only ever shrinks. `session.truncate_lineage` truncates lineage per
-round (the iterative-DataFrame discipline; it switches to reliable
-checkpoint() automatically when a checkpoint dir is set — the cluster
-posture, see SCALING.md `Iterative closure`). Convergence = the contracted edge
-set is empty — an exact test, checked on the already-materialized
-checkpoint, no old-vs-new join.
+only ever shrinks. Each contraction round spends one Spark action:
+`session.truncate_lineage_counted` checkpoints the rewritten edge set and
+counts it in the same job (the iterative-DataFrame discipline; it switches
+to reliable checkpoint() automatically when a checkpoint dir is set — the
+cluster posture, see SCALING.md `Iterative closure`). Convergence = the
+contracted edge set is empty — an exact test read off that count, no
+old-vs-new join.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructField, StructType
 
-from pkg2_spark.session import truncate_lineage, truncate_lineage_counted
-
-
-# Hybrid-finish threshold: when the CONTRACTED edge set fits under this,
-# finish with a driver-local union-find instead of more distributed
-# rounds. A few hundred thousand (int, int) pairs is a few MB on the
-# driver — size it to driver memory at deployment, never to corpus size
-# (the distributed rounds are what guarantee the set shrinks to it).
-_LOCAL_FINISH_EDGES = 200_000
+from pkg2_spark.operators import graph_ops
+from pkg2_spark.session import (
+    local_rows_df,
+    truncate_lineage,
+    truncate_lineage_counted,
+)
 
 
 def _local_components(pairs: list[tuple[int, int]]) -> dict[int, int]:
@@ -92,44 +92,24 @@ def _local_components(pairs: list[tuple[int, int]]) -> dict[int, int]:
     return {x: find(x) for x in set(parent) | {n for p in pairs for n in p}}
 
 
-def _mapping_df(spark, mapping: dict, node_type, cols: tuple[str, str]):
-    """Bounded driver mapping → DataFrame via ONE Arrow batch.
-
-    The row-list form of createDataFrame pickles every tuple and spreads a
-    few thousand rows over defaultParallelism slices (32 single-row tasks
-    locally); the pandas form crosses as one Arrow batch in one partition —
-    measured 0.43 s → 0.13 s for the fast-path finish at sf0.1. Size is
-    bounded by _LOCAL_FINISH_EDGES by construction, so one partition is the
-    right layout at any corpus scale."""
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType(
-        [StructField(cols[0], node_type, True), StructField(cols[1], node_type, True)]
-    )
-    pdf = pd.DataFrame(
-        {cols[0]: list(mapping.keys()), cols[1]: list(mapping.values())}
-    )
-    return spark.createDataFrame(pdf, schema)
-
-
 def resolve_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 20
 ) -> DataFrame:
     """(node, component) for every node in `edges`; component = min node id
     reachable through the undirected pair graph."""
     spark = edges.sparkSession
+    bound = graph_ops.LOCAL_FINISH_EDGES
     # Materialize the edge pipeline ONCE and learn its size in the same job
     # (truncate_lineage_counted: lazy checkpoint mark + count — one action).
     # `edges` is typically the FULL banded+cosine-verified pair pipeline, so
     # this is the only place it is ever computed.
     pairs_df = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     mat, n_raw = truncate_lineage_counted(pairs_df)
-    if n_raw <= _LOCAL_FINISH_EDGES:
+    if n_raw <= bound:
         # Fast path (r14 optimization): when the RAW edge list already fits
         # the driver-local budget, the distributed contraction machinery —
-        # three eager materializations (sym / round-0 comp / contracted ec)
-        # plus a count, each a fixed-latency Spark action — buys nothing:
+        # three materializations (sym / round-0 comp / counted contracted
+        # ec), each a fixed-latency Spark action — buys nothing:
         # union-find the collected edges directly. Exact same min-label
         # fixpoint (tests/test_operators.py pins local ≡ distributed), and
         # the threshold bounds driver memory by construction; graphs above
@@ -153,7 +133,10 @@ def resolve_components(
             .schema["a"]
             .dataType
         )
-        return _mapping_df(spark, mapping, node_t, ("node", "component"))
+        schema = StructType(
+            [StructField("node", node_t), StructField("component", node_t)]
+        )
+        return local_rows_df(spark, mapping.items(), schema)
     # localCheckpoint: `sym` is read three times below (round-0 labels +
     # both sides of the edge contraction) — materializing the symmetric
     # edge list pays the union+distinct once instead of per reference.
@@ -175,21 +158,20 @@ def resolve_components(
     # the original edge list is never touched again.
     ca = comp.select(F.col("node").alias("a"), F.col("component").alias("la"))
     cb = comp.select(F.col("node").alias("b"), F.col("component").alias("lb"))
-    ec = (
+    ec, n_edges = truncate_lineage_counted(
         sym.join(ca, "a")
         .join(cb, "b")
         .select(F.col("la").alias("a"), F.col("lb").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .transform(truncate_lineage)
     )
     for _ in range(max_iter):
-        # Exact convergence test on the materialized checkpoint: contraction
-        # is complete when no cross-component edges remain.
-        n_edges = ec.count()
+        # Exact convergence test, counted by the round's own checkpoint
+        # action: contraction is complete when no cross-component edges
+        # remain.
         if n_edges == 0:
             break
-        if n_edges <= _LOCAL_FINISH_EDGES:
+        if n_edges <= bound:
             # Hybrid finish (what every production CC does): once the
             # CONTRACTED graph fits comfortably on the driver, stop paying
             # a full distributed round per remaining hop — union-find the
@@ -204,14 +186,11 @@ def resolve_components(
             mapping = _local_components(
                 list(zip(rpdf["a"].tolist(), rpdf["b"].tolist()))
             )
-            mdf = F.broadcast(
-                _mapping_df(
-                    spark,
-                    mapping,
-                    comp.schema["component"].dataType,
-                    ("node", "mnew"),
-                )
+            node_t = comp.schema["component"].dataType
+            schema = StructType(
+                [StructField("node", node_t), StructField("mnew", node_t)]
             )
+            mdf = F.broadcast(local_rows_df(spark, mapping.items(), schema))
             comp = comp.join(
                 mdf, comp["component"] == mdf["node"], "left"
             ).select(
@@ -248,7 +227,7 @@ def resolve_components(
         )
         ma = m.select(F.col("node").alias("a"), F.col("mnew").alias("la"))
         mb = m.select(F.col("node").alias("b"), F.col("mnew").alias("lb"))
-        ec = (
+        ec, n_edges = truncate_lineage_counted(
             ec.join(ma, "a", "left")
             .join(mb, "b", "left")
             .select(
@@ -257,13 +236,12 @@ def resolve_components(
             )
             .filter(F.col("a") != F.col("b"))
             .distinct()
-            .transform(truncate_lineage)
         )
     else:
         # Exhausting max_iter with edges left would silently return
         # part-merged labels — fail loudly instead (2^max_iter reach via
         # pointer doubling makes this unreachable for any real diameter).
-        if not ec.isEmpty():
+        if n_edges:
             raise RuntimeError(
                 f"resolve_components did not converge in {max_iter} rounds"
             )

@@ -11,9 +11,10 @@ whose DuckDB oracle unrolls the same CTEs).
 Scale shape per iteration: one shuffle join of edges against the rank table
 on src (degree joined alongside), one dst-keyed hash-agg, one left join back
 onto the node set — the standard distributed PageRank dataflow. State per
-round is one row per node. A fixed small iteration count keeps the plan
-shallow; a convergence-driven run should truncate lineage per round
-(session.truncate_lineage) exactly like reachability's BFS rounds.
+round is one row per node, and its lineage is cut once per round
+(session.truncate_lineage), as in every fixpoint loop of the engine:
+reachability's BFS rounds, q_graph_kcore's peel and resolve_components'
+contraction each spend one checkpoint action per round.
 """
 
 from __future__ import annotations
@@ -151,21 +152,15 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst", iters: int = 3) -
     )
 
 
-#: Driver-local finish threshold for reachability: when the MATERIALIZED,
-#: DEDUPLICATED edge set fits comfortably on the driver (200k edges ≈ a
-#: few MB — sized to driver memory, never to the corpus, exactly like
-#: operators/dedup.py's _LOCAL_FINISH_EDGES), finish the closure with a
-#: driver-local BFS instead of paying ~0.25 s of fixed job latency per
-#: depth. A package dependency graph is control-plane-sized (one row per
-#: (pkg, dep) atom — even a full distro index is single-digit millions),
-#: so interactively this path almost always wins: the closure collapses
-#: from one job per depth to one bounded collect — same-process A/B at
-#: sf0.1, warm mins: hybrid 0.78–1.05 s vs distributed 1.23 s (that floor
-#: was the per-call parse + provider join + edge materialization, shared
-#: by both paths; all three are now paid once per ingest). Past the
-#: threshold the distributed one-job-per-depth rounds run (pinned equal by
-#: test_resolve_hybrid_local_matches_distributed).
-_LOCAL_CLOSURE_EDGES = 200_000
+#: The driver-local finish bound of every fixpoint loop (reachability,
+#: operators/dedup.py::resolve_components): an edge set of at most this
+#: many rows is collected and finished on the driver, where each further
+#: distributed round would cost a fixed-latency Spark action. 200k edges
+#: is a few MB, sized to driver memory, never to the corpus; the
+#: distributed rounds are what shrink a larger set down to it. Measured at
+#: sf0.1: a resolve took 0.78-1.05 s local vs 1.23 s distributed, and a
+#: dedup resolve folds its last 4-5 contraction rounds into one join.
+LOCAL_FINISH_EDGES = 200_000
 
 
 def _names(cols: str | Sequence[str]) -> list[str]:
@@ -204,7 +199,7 @@ def reachability(
     frontier against the edges and anti-joins the accumulated closure, so
     the first depth a (group, node) is seen at is its minimal one.
 
-    Ungrouped closures over at most _LOCAL_CLOSURE_EDGES edges finish on
+    Ungrouped closures over at most LOCAL_FINISH_EDGES edges finish on
     the driver: one Arrow collect of the edges (the dict seeds come from
     the same rows) and an in-memory BFS. Pass ``n_edges`` when the count is
     already known (the engine's per-ingest edge sets carry it); otherwise
@@ -215,7 +210,7 @@ def reachability(
     if not group:
         if n_edges is None:
             edges, n_edges = truncate_lineage_counted(edges)
-        if n_edges <= _LOCAL_CLOSURE_EDGES:
+        if n_edges <= LOCAL_FINISH_EDGES:
             return _local_reachability(
                 edges, src, dst, start, node, start_depth, max_depth
             )

@@ -9,6 +9,13 @@ kernel of DataFrame self-joins (SURVEY.md §4.3;
 operators/graph_ops.py::reachability, grouped by root): semi-naïve rounds,
 one node-keyed shuffle join each, with a per-round checkpoint so round N
 doesn't replay rounds 1..N-1.
+
+Every fixpoint in this module keeps that round discipline, one checkpoint
+action per round, through one of two kernels or one loop: q_graph_closure
+and q_graph_sssp call reachability, q_graph_cc calls
+operators/dedup.py::resolve_components, and q_graph_kcore checkpoints its
+single (node, peel round) state once per round. The driver-local finish
+of both kernels reads one bound, graph_ops.LOCAL_FINISH_EDGES.
 """
 
 from __future__ import annotations
@@ -509,67 +516,55 @@ def q_graph_kcore(spark, sf_dir):
     (the full-core variant is this loop with a convergence check, same
     per-round cost).
 
-    Scale shape: each round is one node-keyed degree hash-agg
-    (map-combinable union of the two edge endpoints) + one left-join
-    filter + two leftsemi joins restricting the edge list — every
-    shuffle keyed on node id; per-round localCheckpoint truncates
-    lineage so round N never replays rounds 1..N-1 (the §4.3 iterative
-    discipline); R is a constant, so the whole operator is R node-keyed
-    shuffles regardless of graph size."""
+    The loop carries one state frame, (node, r): r is the round the node
+    was peeled in, 0 while it is alive. Each round restricts the shared
+    edge list to live endpoints (two leftsemi joins against r = 0), counts
+    their degrees with one node-keyed hash-agg (map-combinable union of
+    the two endpoints), peels the live nodes below k and cuts the state's
+    lineage with one checkpoint action (session.truncate_lineage), so
+    round N never replays rounds 1..N-1 (the §4.3 iterative discipline);
+    R is a constant, so the whole operator is R node-keyed shuffles
+    regardless of graph size. The final select reads peel_round, in_core
+    and the residual degree off the same state."""
     from pkg2_spark.catalog import load_tables
 
     und = _cosupply_und_shared(load_tables(spark, sf_dir))
-    nodes = (
-        und.select(F.col("a").alias("node"))
-        .union(und.select(F.col("b").alias("node")))
-        .distinct()
-        .transform(truncate_lineage)
-    )
-    edges = und
-    peeled = None
-    for i in range(1, _KCORE_ROUNDS + 1):
+
+    def live_degree(state):
+        alive = state.filter(F.col("r") == 0).select("node")
+        live = und.join(alive.withColumnRenamed("node", "a"), "a", "leftsemi").join(
+            alive.withColumnRenamed("node", "b"), "b", "leftsemi"
+        )
         deg = (
-            edges.select(F.col("a").alias("node"))
-            .unionAll(edges.select(F.col("b").alias("node")))
+            live.select(F.col("a").alias("node"))
+            .unionAll(live.select(F.col("b").alias("node")))
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        with_deg = nodes.join(deg, "node", "left").select(
-            "node", F.coalesce(F.col("d"), F.lit(0)).alias("d")
+        return state.join(deg, "node", "left").withColumn(
+            "d", F.coalesce(F.col("d"), F.lit(0))
         )
-        survivors = with_deg.filter(F.col("d") >= _KCORE_K).select("node").transform(truncate_lineage)
-        round_peeled = (
-            with_deg.filter(F.col("d") < _KCORE_K)
-            .select("node", F.lit(i).cast("int").alias("r"))
+
+    state = (
+        und.select(F.col("a").alias("node"))
+        .union(und.select(F.col("b").alias("node")))
+        .distinct()
+        .select("node", F.lit(0).alias("r"))
+    )
+    for i in range(1, _KCORE_ROUNDS + 1):
+        peel = (F.col("r") == 0) & (F.col("d") < _KCORE_K)
+        state = (
+            live_degree(state)
+            .select("node", F.when(peel, F.lit(i)).otherwise(F.col("r")).alias("r"))
             .transform(truncate_lineage)
         )
-        peeled = round_peeled if peeled is None else peeled.unionAll(round_peeled)
-        edges = (
-            edges.join(survivors.withColumnRenamed("node", "a"), "a", "leftsemi")
-            .join(survivors.withColumnRenamed("node", "b"), "b", "leftsemi")
-            .select("a", "b")
-            .transform(truncate_lineage)
-        )
-        nodes = survivors
-    deg_f = (
-        edges.select(F.col("a").alias("node"))
-        .unionAll(edges.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    core = nodes.join(deg_f, "node", "left").select(
+    in_core = F.col("r") == 0
+    return live_degree(state).select(
         F.col("node").alias("s_suppkey"),
-        F.lit(0).cast("int").alias("peel_round"),
-        F.coalesce(F.col("d"), F.lit(0)).cast("int").alias("resid_degree"),
-        F.lit(True).alias("in_core"),
+        F.col("r").cast("int").alias("peel_round"),
+        F.when(in_core, F.col("d")).otherwise(F.lit(0)).cast("int").alias("resid_degree"),
+        in_core.alias("in_core"),
     )
-    out_peeled = peeled.select(
-        F.col("node").alias("s_suppkey"),
-        F.col("r").alias("peel_round"),
-        F.lit(0).cast("int").alias("resid_degree"),
-        F.lit(False).alias("in_core"),
-    )
-    return out_peeled.unionAll(core)
 
 
 # ------------------------------------------------------------------- HITS
@@ -679,41 +674,32 @@ d{i} AS (
 
 @query("q_graph_sssp", oracle=_sssp_oracle())
 def q_graph_sssp(spark, sf_dir):
-    """Single-source shortest HOPS (unweighted SSSP / BFS frontier
-    relaxation, 3 unrolled rounds) from the minimum supplier key over
-    the shared capped co-supply kNN graph — the reachability-with-
-    distance query a dependency resolver asks ("how far is this package
-    from the root?"); q_graph_closure proves reachability, this labels
-    it with distance. Each round relaxes: dist' = min(dist, neighbor
-    dist + 1) via one edges⋈frontier shuffle join and a node-keyed
-    min-agg — integer distances, no floats, bit-identical cross-engine.
+    """Single-source shortest HOPS (unweighted SSSP, 3 hops) from the
+    minimum supplier key over the shared capped co-supply kNN graph — the
+    reachability-with-distance query a dependency resolver asks ("how far
+    is this package from the root?"); q_graph_closure proves
+    reachability, this labels it with distance. The oracle relaxes
+    dist' = min(dist, neighbor dist + 1) three times; the minimal BFS
+    depth from a depth-0 seed is the same fixpoint, so the query is one
+    call of the engine's reachability kernel (operators/graph_ops.py)
+    over the symmetric edge list with start_depth=0, max_depth=3 —
+    integer depths, bit-identical cross-engine.
 
-    Scale: per round one equi-join on the node key + one hash-agg;
-    state is one row per REACHED node (never the full graph); a
-    convergence-driven variant would truncate lineage per round exactly
-    like the closure loop (and both engines relax identically because
-    min() is order-free)."""
+    Scale: the kernel's driver-local finish runs while the edge list fits
+    graph_ops.LOCAL_FINISH_EDGES (the kNN cap keeps it 3·|suppliers|
+    rows); past it, one node-keyed join and one counted checkpoint per
+    hop, state one row per REACHED node."""
     from pkg2_spark.catalog import load_tables
 
-    t = load_tables(spark, sf_dir)
-    und = _cosupply_und_shared(t)
+    und = _cosupply_und_shared(load_tables(spark, sf_dir))
     e = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
         und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    dist = und.agg(F.min("a").alias("node")).select(
-        "node", F.lit(0).cast("long").alias("dist")
+    seed = und.agg(F.min("a").alias("node"))
+    dist = reachability(e, "src", "dst", seed, node="node", start_depth=0, max_depth=3)
+    return dist.select(
+        F.col("node").alias("s_suppkey"), F.col("depth").cast("long").alias("hops")
     )
-    for _ in range(3):
-        relaxed = (
-            e.join(dist, e["src"] == dist["node"])
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        )
-        dist = (
-            dist.unionAll(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").cast("long").alias("dist"))
-        )
-    return dist.select(F.col("node").alias("s_suppkey"), F.col("dist").alias("hops"))
 
 
 @query(

@@ -985,7 +985,7 @@ def q_stream_late_drop(spark, sf_dir):
 
     Batch order is pinned by file modification times (the file source
     processes oldest-first); the fixture stages one parquet file per
-    batch with strictly increasing mtimes.
+    batch, and every call stamps them with strictly increasing mtimes.
 
     Scale: state is bounded by the watermark horizon (windows above
     wm−1h), never by history — the property this query certifies; the
@@ -1019,9 +1019,13 @@ def q_stream_late_drop(spark, sf_dir):
             dst = _os.path.join(src, f"b{i}.parquet")
             _os.replace(_os.path.join(tmp, part), dst)
             _shutil.rmtree(tmp)
-            _os.utime(dst, (1000 * (i + 1), 1000 * (i + 1)))
         with open(_os.path.join(src, "_STAGED"), "w") as fh:
             fh.write("ok\n")
+    # Stamped on every call, not only when staging: a fixture copied
+    # without its mtimes keeps the marker but would replay out of order.
+    for i in range(3):
+        stamp = 1000 * (i + 1)
+        _os.utime(_os.path.join(src, f"b{i}.parquet"), (stamp, stamp))
     schema = spark.read.parquet(_os.path.join(src, "b0.parquet")).schema
     stream = (
         spark.readStream.schema(schema)

@@ -176,19 +176,25 @@ def truncate_lineage(df):
     fast if no dir is set. Applied via ``.transform(truncate_lineage)``
     at every call site, so the loop code itself is posture-free.
     """
+    return _checkpoint(df, eager=True)
+
+
+def _checkpoint(df, eager):
+    """The checkpoint posture behind truncate_lineage and
+    truncate_lineage_lazy: reliable checkpoint() when a dir is set and the
+    mode allows it, localCheckpoint() otherwise."""
     spark = df.sparkSession
     mode = spark.conf.get("spark.pkg2_spark.lineageTruncate", "auto")
-    if mode == "local":
-        return df.localCheckpoint()
     has_dir = spark.sparkContext.getCheckpointDir() is not None
     if mode == "reliable" and not has_dir:
         raise ValueError(
             "spark.pkg2_spark.lineageTruncate=reliable requires "
             "sc.setCheckpointDir(<reliable storage path>)"
         )
-    if mode != "reliable" and has_dir:
+    reliable = has_dir and mode != "local"
+    if reliable and mode != "reliable":
         _warn_if_checkpoints_unreaped(spark)
-    return df.checkpoint(eager=True) if has_dir else df.localCheckpoint()
+    return df.checkpoint(eager=eager) if reliable else df.localCheckpoint(eager=eager)
 
 
 _UNREAPED_CHECKPOINTS_WARNED = False
@@ -221,7 +227,7 @@ def _warn_if_checkpoints_unreaped(spark: SparkSession) -> None:
             "until you delete them. Set that conf at session build, clean "
             f"{spark.sparkContext.getCheckpointDir()!r} yourself, or pin "
             "spark.pkg2_spark.lineageTruncate=local.",
-            stacklevel=3,
+            stacklevel=4,
         )
 
 
@@ -237,18 +243,7 @@ def truncate_lineage_lazy(df):
     is why truncate_lineage_counted pairs the lazy mark with count().
     Posture seam (local vs reliable checkpoint) identical to
     truncate_lineage."""
-    spark = df.sparkSession
-    mode = spark.conf.get("spark.pkg2_spark.lineageTruncate", "auto")
-    has_dir = spark.sparkContext.getCheckpointDir() is not None
-    if mode == "reliable" and not has_dir:
-        raise ValueError(
-            "spark.pkg2_spark.lineageTruncate=reliable requires "
-            "sc.setCheckpointDir(<reliable storage path>)"
-        )
-    use_reliable = has_dir and mode != "local"
-    if use_reliable and mode != "reliable":
-        _warn_if_checkpoints_unreaped(spark)
-    return df.checkpoint(eager=False) if use_reliable else df.localCheckpoint(eager=False)
+    return _checkpoint(df, eager=False)
 
 
 def truncate_lineage_counted(df):

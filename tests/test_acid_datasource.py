@@ -547,3 +547,32 @@ def test_batch_reader_applies_deletion_vectors(spark, tmp_path):
     # parity with the JVM reader on the same snapshot
     assert got.exceptAll(t.read()).count() == 0
     assert t.read().exceptAll(got).count() == 0
+
+
+def test_register_from_a_fresh_thread_writes_and_reads(spark, tmp_path):
+    # A new Python thread runs on its own JVM thread, which has no active
+    # session: a pkg2acid write there raised DATA_SOURCE_NOT_FOUND even
+    # after the thread registered the source. Registering in the thread
+    # must be enough for both a write and a read.
+    import threading
+
+    path = str(tmp_path / "threaded")
+    t = Table(spark, path, stats_cols=["id"])
+    t.create(spark.range(0, 10).select("id", (F.col("id") * 2).alias("v")))
+    out: dict = {}
+
+    def work():
+        try:
+            register_acid_source(spark)
+            spark.range(10, 15).select(
+                "id", (F.col("id") * 2).alias("v")
+            ).write.format("pkg2acid").mode("append").save(path)
+            out["rows"] = spark.read.format("pkg2acid").load(path).count()
+        except Exception as exc:  # surfaced in the main thread below
+            out["error"] = exc
+
+    worker = threading.Thread(target=work)
+    worker.start()
+    worker.join()
+    assert "error" not in out, out.get("error")
+    assert out["rows"] == 15 == t.read().count()

@@ -132,7 +132,7 @@ def test_resolve_closure_with_cycle(deb):
 
 
 def test_resolve_hybrid_local_matches_distributed(deb, monkeypatch):
-    # The r10 hybrid finish: under _LOCAL_CLOSURE_EDGES the closure comes
+    # The r10 hybrid finish: under LOCAL_FINISH_EDGES the closure comes
     # from a driver-local BFS over the collected (bounded) edge set; force
     # the distributed one-job-per-depth loop and pin exact equality on a
     # CYCLIC fixture (libc6 <-> libgcc-s1) for both resolvers.
@@ -140,7 +140,7 @@ def test_resolve_hybrid_local_matches_distributed(deb, monkeypatch):
 
     local = {(r["node"], r["depth"]) for r in deb.resolve("python3.11").collect()}
     localc = {tuple(r) for r in deb.resolve_constrained("python3.11").collect()}
-    monkeypatch.setattr(graph_ops, "_LOCAL_CLOSURE_EDGES", 0)
+    monkeypatch.setattr(graph_ops, "LOCAL_FINISH_EDGES", 0)
     dist = {(r["node"], r["depth"]) for r in deb.resolve("python3.11").collect()}
     distc = {tuple(r) for r in deb.resolve_constrained("python3.11").collect()}
     assert local == dist and local

@@ -39,16 +39,26 @@ def test_pagerank_deterministic_across_partitionings(spark, sf_dir):
     assert results[0] == results[1]
 
 
-def test_kcore_partition_and_conservation(spark, sf_dir):
+def test_kcore_partition_and_conservation(spark, sf_dir, action_log):
     # Every graph node appears exactly once; peel rounds partition nodes
     # into 1..R plus the 0-round core; survivors' residual degree is >= k
     # only when the peel has converged — but it is ALWAYS >= 0 and bounded
     # by the core size; peeled nodes carry no residual degree.
+    from pkg2_spark.queries import graph as G
     from pkg2_spark.queries.graph import _KCORE_ROUNDS, _cosupply_und
     from pkg2_spark.catalog import load_tables
     from pkg2_spark.registry import all_queries
 
-    rows = all_queries()["q_graph_kcore"](spark, sf_dir).collect()
+    # Round discipline (conftest.ActionLog): with the shared edge list
+    # already built, building the query runs exactly one checkpoint action
+    # per peel round and no other job.
+    G._cosupply_und_shared(load_tables(spark, sf_dir))
+    action_log.wrap(G, "truncate_lineage")
+    kcore = action_log.run(lambda: all_queries()["q_graph_kcore"](spark, sf_dir))
+    assert action_log.stray_jobs == []
+    assert action_log.names == ["truncate_lineage"] * _KCORE_ROUNDS
+    assert action_log.each_ran_a_job
+    rows = kcore.collect()
     und = _cosupply_und(load_tables(spark, sf_dir))
     n_nodes = (
         und.selectExpr("a AS node").union(und.selectExpr("b AS node")).distinct().count()
@@ -141,8 +151,12 @@ def test_hits_deterministic_across_partitionings(spark, sf_dir):
     assert a == b
 
 
-def test_sssp_root_is_zero_and_hops_bounded(spark, sf_dir):
-    rows = _q(spark, sf_dir, "q_graph_sssp").collect()
+def test_sssp_root_is_zero_and_hops_bounded(spark, sf_dir, action_log):
+    # The hops come from the reachability kernel's driver-local finish, so
+    # collecting them is one job, not a job per relaxation round.
+    sssp = _q(spark, sf_dir, "q_graph_sssp")
+    rows = action_log.run(sssp.collect)
+    assert len(action_log.stray_jobs) <= 1
     by_node = {r["s_suppkey"]: r["hops"] for r in rows}
     root = min(by_node)  # BFS starts from the min supplier in the edge set
     assert by_node[root] == 0

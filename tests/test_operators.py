@@ -418,14 +418,18 @@ class TestEmaHalving:
         assert a == b
 
 
-def test_resolve_components_distributed_and_local_finish_agree(spark):
-    # The hybrid finish (driver-local union-find under _LOCAL_FINISH_EDGES)
-    # must land on the IDENTICAL fixpoint the pure distributed contraction
-    # reaches. Locally every residual fits the threshold, so the
-    # distributed rounds would otherwise go untested: force them by
-    # dropping the threshold to 0, and compare on a chain + ring + isolated
-    # -pair topology (worst case for round counts: long chains).
+def test_resolve_components_distributed_and_local_finish_agree(
+    spark, monkeypatch
+):
+    # The hybrid finish (driver-local union-find under
+    # graph_ops.LOCAL_FINISH_EDGES) must land on the IDENTICAL fixpoint the
+    # pure distributed contraction reaches. Locally every residual fits the
+    # threshold, so the distributed rounds would otherwise go untested:
+    # force them by dropping the threshold to 0, and compare on a chain +
+    # ring + isolated-pair topology (worst case for round counts: long
+    # chains).
     from pkg2_spark.operators import dedup as D
+    from pkg2_spark.operators import graph_ops as G
 
     chain = [(i, i + 1) for i in range(0, 40)]          # one 41-node chain
     ring = [(100 + i, 100 + (i + 1) % 7) for i in range(7)]
@@ -436,15 +440,11 @@ def test_resolve_components_distributed_and_local_finish_agree(spark):
         r["node"]: r["component"]
         for r in D.resolve_components(edges).collect()
     }
-    old = D._LOCAL_FINISH_EDGES
-    D._LOCAL_FINISH_EDGES = 0
-    try:
-        distributed = {
-            r["node"]: r["component"]
-            for r in D.resolve_components(edges).collect()
-        }
-    finally:
-        D._LOCAL_FINISH_EDGES = old
+    monkeypatch.setattr(G, "LOCAL_FINISH_EDGES", 0)
+    distributed = {
+        r["node"]: r["component"]
+        for r in D.resolve_components(edges).collect()
+    }
     assert hybrid == distributed
     assert hybrid[40] == 0 and hybrid[106] == 100 and hybrid[501] == 500
 
@@ -463,7 +463,7 @@ def _bfs_reference(edges, seeds, start_depth, max_depth):
 
 
 def test_reachability_kernel_matches_bfs_and_runs_one_action_per_round(
-    spark, monkeypatch
+    spark, monkeypatch, action_log
 ):
     # One kernel behind every dependency closure (resolve,
     # resolve_constrained, q_graph_closure, q_pkg_blast_radius). A cycle
@@ -471,8 +471,6 @@ def test_reachability_kernel_matches_bfs_and_runs_one_action_per_round(
     # e->f->g; both finishes (driver-local and distributed) must give the
     # reference's minimal depths, grouped and ungrouped, from depth 0 or 1,
     # under a depth cap.
-    import uuid
-
     from pkg2_spark.operators import graph_ops as G
 
     pairs = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "d"), ("d", "d"),
@@ -487,8 +485,8 @@ def test_reachability_kernel_matches_bfs_and_runs_one_action_per_round(
     def run(**kw):
         return {tuple(r) for r in G.reachability(edges, "src", "dst", **kw).collect()}
 
-    for threshold in (G._LOCAL_CLOSURE_EDGES, 0):
-        monkeypatch.setattr(G, "_LOCAL_CLOSURE_EDGES", threshold)
+    for threshold in (G.LOCAL_FINISH_EDGES, 0):
+        monkeypatch.setattr(G, "LOCAL_FINISH_EDGES", threshold)
         for start_depth, max_depth in ((1, 2), (0, 10)):
             want = _bfs_reference(pairs, grouped_seeds, start_depth, max_depth)
             got = run(start=seeds_df, group="grp", node="node",
@@ -506,48 +504,51 @@ def test_reachability_kernel_matches_bfs_and_runs_one_action_per_round(
             assert got == {(n, d) for (_, n), d in want.items()}
 
     # Distributed round discipline, counted with job groups and the status
-    # tracker: every job the kernel runs belongs to one checkpoint action,
-    # the seed's or a depth round's single counted checkpoint; no emptiness
-    # probe or closure re-checkpoint runs between rounds. (Adaptive
-    # execution runs each shuffle stage of an action as its own job, so an
-    # action is several jobs.)
-    sc = spark.sparkContext
-    outer = f"kernel-{uuid.uuid4().hex}"
-    inner: list = []
-
-    def in_own_group(fn):
-        def wrapped(df):
-            group = f"{outer}-{len(inner)}"
-            inner.append((fn.__name__, group))
-            sc.setJobGroup(group, "kernel action")
-            try:
-                return fn(df)
-            finally:
-                sc.setJobGroup(outer, "kernel")
-
-        return wrapped
-
-    monkeypatch.setattr(G, "truncate_lineage", in_own_group(G.truncate_lineage))
-    monkeypatch.setattr(
-        G, "truncate_lineage_counted", in_own_group(G.truncate_lineage_counted)
-    )
+    # tracker (conftest.ActionLog): every job the kernel runs belongs to one
+    # checkpoint action, the seed's or a depth round's single counted
+    # checkpoint; no emptiness probe or closure re-checkpoint runs between
+    # rounds.
+    action_log.wrap(G, "truncate_lineage", "truncate_lineage_counted")
     chain = spark.createDataFrame([(i, i + 1) for i in range(4)], "src int, dst int")
+    seeds = spark.createDataFrame([("g", 0)], "grp string, node int")
     for max_depth, rounds in ((3, 3), (20, 5)):  # 5: 4 hops + the empty round
-        inner.clear()
-        sc.setJobGroup(outer, "kernel")
-        try:
-            G.reachability(
-                chain, "src", "dst", spark.createDataFrame([("g", 0)], "grp string, node int"),
-                group="grp", node="node", start_depth=0, max_depth=max_depth,
-            )
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        tracker = sc.statusTracker()
-        assert tracker.getJobIdsForGroup(outer) == []
-        assert [name for name, _ in inner] == ["truncate_lineage"] + [
+        action_log.run(lambda: G.reachability(
+            chain, "src", "dst", seeds, group="grp", node="node",
+            start_depth=0, max_depth=max_depth,
+        ))
+        assert action_log.stray_jobs == []
+        assert action_log.names == ["truncate_lineage"] + [
             "truncate_lineage_counted"
         ] * rounds
-        assert all(tracker.getJobIdsForGroup(g) for _, g in inner)
+        assert action_log.each_ran_a_job
+
+
+def test_resolve_components_runs_one_counted_checkpoint_per_round(
+    spark, monkeypatch, action_log
+):
+    # With the finish bound at 0 the contraction runs to the empty edge set.
+    # After the raw edges' counted checkpoint and the two prologue
+    # checkpoints (symmetric edges, round-0 labels), every round is exactly
+    # one counted checkpoint of the contracted edges, whose count is the
+    # convergence test: no separate count or isEmpty runs.
+    from pkg2_spark.operators import dedup as D
+    from pkg2_spark.operators import graph_ops as G
+
+    monkeypatch.setattr(G, "LOCAL_FINISH_EDGES", 0)
+    action_log.wrap(D, "truncate_lineage", "truncate_lineage_counted")
+    chain = [(i, i + 1) for i in range(0, 40)] + [(500, 501)]
+    edges = spark.createDataFrame(chain, "src long, dst long")
+    comp = action_log.run(lambda: D.resolve_components(edges))
+    names = action_log.names
+    assert action_log.stray_jobs == []
+    assert names[:3] == [
+        "truncate_lineage_counted", "truncate_lineage", "truncate_lineage"
+    ]
+    rounds = names[3:]
+    assert len(rounds) >= 2 and set(rounds) == {"truncate_lineage_counted"}
+    assert action_log.each_ran_a_job
+    got = {r["node"]: r["component"] for r in comp.collect()}
+    assert got == {**dict.fromkeys(range(41), 0), 500: 500, 501: 500}
 
 
 def test_lineage_truncation_checkpoint_seam(spark, tmp_path):
@@ -560,13 +561,14 @@ def test_lineage_truncation_checkpoint_seam(spark, tmp_path):
     import pytest as _pytest
 
     from pkg2_spark.operators import dedup as D
+    from pkg2_spark.operators import graph_ops as G
     from pkg2_spark.session import truncate_lineage_counted
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 30)] + [(500, 501)], ["src", "dst"]
     )
-    old = D._LOCAL_FINISH_EDGES
-    D._LOCAL_FINISH_EDGES = 0  # force the distributed contraction rounds
+    old = G.LOCAL_FINISH_EDGES
+    G.LOCAL_FINISH_EDGES = 0  # force the distributed contraction rounds
     try:
         spark.conf.unset("spark.pkg2_spark.lineageTruncate")
         # reliable mode without a dir fails fast instead of silently
@@ -624,7 +626,7 @@ def test_lineage_truncation_checkpoint_seam(spark, tmp_path):
         after = len([p for p in pathlib.Path(ckpt).rglob("*") if p.is_file()])
         assert after == before, "local override still wrote reliable files"
     finally:
-        D._LOCAL_FINISH_EDGES = old
+        G.LOCAL_FINISH_EDGES = old
         # Fully restore the session-scoped fixture (ADVICE r10: this test
         # used to leave the checkpoint dir set forever and pin
         # lineageTruncate=local, so later tests exercising 'auto' silently

@@ -280,6 +280,25 @@ def test_stateful_counters_carry_state_across_batches(spark, sf_dir):
     assert got == want
 
 
+def test_late_drop_replays_in_batch_order_whatever_the_fixture_mtimes(
+    spark, duck, sf_dir
+):
+    # q_stream_late_drop's replay order comes from its batch files' mtimes.
+    # A fixture copied without them (cp without -p) keeps its marker, so
+    # the query must re-stamp the files on every call: with the stamps
+    # reversed (late batch oldest) it must still match its oracle.
+    from pkg2_spark.compare import compare_query
+    from pkg2_spark.queries.relational import fixture_path
+
+    assert compare_query(spark, duck, "q_stream_late_drop", sf_dir).match
+    src = fixture_path("stream_late_src", sf_dir)
+    for i in range(3):
+        stamp = 1000 * (3 - i)
+        os.utime(os.path.join(src, f"b{i}.parquet"), (stamp, stamp))
+    result = compare_query(spark, duck, "q_stream_late_drop", sf_dir)
+    assert result.match, str(result)
+
+
 def test_late_drop_query_is_not_vacuous(spark, sf_dir):
     # q_stream_late_drop must actually exercise the drop path: the staged
     # late batch is non-empty, and the emitted windows account for fewer
