@@ -19,7 +19,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from pkg2_spark.session import ensure_runtime_confs
+from pkg2_spark.session import ensure_runtime_confs, session_memo
 
 TABLES = [
     "region",
@@ -63,18 +63,6 @@ STATS_COLUMNS = {
     "documents": "doc_id, lang, source, n_chars",
     "embeddings": "vec_id, label",
 }
-
-# Memoize registration per (session id, sf_dir) so the driver's per-query
-# callable pattern doesn't re-register ten views on every call (SURVEY.md §6:
-# fixed costs must stay fixed).
-_REGISTERED: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
-# Temp views are GLOBAL per session (last registration wins), so when one
-# session alternates scale factors (scale_probe, perturbation sweeps) the
-# memo hit must still re-point the views at this sf_dir's DataFrames —
-# otherwise the SQL surface silently reads the previously loaded sf.
-_VIEWS_FOR: dict[int, str] = {}
-
 
 def _ensure_stats_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Register each parquet file as an EXTERNAL catalog table and ANALYZE it.
@@ -147,18 +135,26 @@ def read_table(
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register all driver tables as temp views; return them by name.
 
-    Idempotent and memoized per (session, sf_dir): repeated calls from the
-    driver's per-query loop cost a dict lookup, not ten parquet-footer reads.
+    Idempotent and built once per (session, sf_dir): repeated calls from
+    the driver's per-query loop cost a dict lookup, not ten parquet-footer
+    reads. Temp views are global per session (last registration wins), so
+    a call for another sf_dir than the views show re-points them;
+    otherwise the SQL surface would silently read the previously loaded sf
+    when one session alternates scale factors (scale_probe, perturbation
+    sweeps).
     """
-    sid = id(spark._jsparkSession) if hasattr(spark, "_jsparkSession") else id(spark)
-    key = (sid, sf_dir)
-    cached = _REGISTERED.get(key)
-    if cached is not None:
-        if _VIEWS_FOR.get(sid) != sf_dir:
-            for name, df in cached.items():
-                df.createOrReplaceTempView(name)
-            _VIEWS_FOR[sid] = sf_dir
-        return cached
+    tables = session_memo(
+        spark, ("tables", sf_dir), lambda: _read_tables(spark, sf_dir)
+    )
+    views = session_memo(spark, ("views",), dict)
+    if views.get("sf_dir") != sf_dir:
+        for name, df in tables.items():
+            df.createOrReplaceTempView(name)
+        views["sf_dir"] = sf_dir
+    return tables
+
+
+def _read_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     ensure_runtime_confs(spark)
     try:
         catalog_names = _ensure_stats_tables(spark, sf_dir)
@@ -166,11 +162,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         # A foreign session whose catalog rejects table creation still gets
         # the full query surface — just without CBO statistics.
         catalog_names = {}
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = read_table(spark, sf_dir, name, catalog_names.get(name))
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    _REGISTERED[key] = out
-    _VIEWS_FOR[sid] = sf_dir
-    return out
+    return {
+        name: read_table(spark, sf_dir, name, catalog_names.get(name))
+        for name in TABLES
+    }

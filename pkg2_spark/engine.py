@@ -30,7 +30,6 @@ of them at once (_IndexState).
 from __future__ import annotations
 
 import os
-import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -38,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pkg2_spark.catalog import load_tables
 from pkg2_spark.operators.graph_ops import reachability
 from pkg2_spark.session import (
+    BuildOnce,
     ensure_runtime_confs,
     get_session,
     truncate_lineage_counted,
@@ -164,20 +164,14 @@ class _IndexState:
 
     An ingest replaces the whole object. Once nothing references the old
     one, Spark's ContextCleaner releases its blocks. Concurrent first
-    requests build each frame once: the engine's lock guards the build,
-    and warm requests read the memo without taking it."""
+    requests build each frame once (session.BuildOnce)."""
 
-    def __init__(self, packages: DataFrame, lock: threading.RLock):
+    def __init__(self, packages: DataFrame):
         self.packages = packages
-        self._lock = lock
-        self._frames: dict = {}
+        self._frames = BuildOnce()
 
     def _once(self, key: str, build):
-        if key not in self._frames:
-            with self._lock:
-                if key not in self._frames:
-                    self._frames[key] = build()
-        return self._frames[key]
+        return self._frames.get(key, build)
 
     def capabilities(self) -> DataFrame:
         return self._once(
@@ -238,8 +232,6 @@ class Engine:
     def __init__(self, spark: SparkSession | None = None, sf_dir: str | None = None):
         self.spark = ensure_runtime_confs(spark) if spark else get_session()
         self._index: _IndexState | None = None
-        # Guards the build of every ingest's derived frames (_IndexState).
-        self._lock = threading.RLock()
         # The ANN recall/latency knob: how many final IVF slot-cells
         # ann_search scans per query (own cell + n_probe-1 beam cells).
         # 3 is the served default (q_llm_ann_mprobe's registered shape);
@@ -289,7 +281,7 @@ class Engine:
         parsed = truncate_lineage_lazy(parsed)
         packages = parsed.drop("distro")
         self.register("packages", packages)
-        self._index = _IndexState(packages, self._lock)
+        self._index = _IndexState(packages)
         return parsed
 
     def _stanzas(self, path: str) -> DataFrame:

@@ -20,15 +20,13 @@ of both kernels reads one bound, graph_ops.LOCAL_FINISH_EDGES.
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pkg2_spark.operators.graph_ops import reachability
 from pkg2_spark.queries.relational import _APKINDEX_PATH
 from pkg2_spark.registry import query
-from pkg2_spark.session import truncate_lineage
+from pkg2_spark.session import plan_memo, truncate_lineage
 
 _MAX_DEPTH = 5
 
@@ -240,35 +238,16 @@ def _cosupply_und(t) -> DataFrame:
     ).distinct()
 
 
-_UND_MEMO: "OrderedDict[str, DataFrame]" = OrderedDict()
-_UND_MEMO_MAX = 4
-
-
 def _cosupply_und_shared(t) -> DataFrame:
     """Session-memoized, lineage-truncated co-supply kNN edge list — the
     q_llm IVF-tree idiom applied to the graph family (r14): SIX graph
     queries consume the identical ~2.2 s projection+cap+pair+kNN kernel
-    and each used to rebuild it per invocation. One corpus, one
-    materialization per session (keyed by the canonicalized file-backed
-    plan, the _ivf_memo discipline — in-memory frames skip the memo since
-    a LocalRelation plan string does not embed its rows). The edge list is
+    and each used to rebuild it per invocation. One materialization per
+    (session, corpus plan) (session.plan_memo). The edge list is
     3·|suppliers| rows, so the checkpoint is KBs at bench scale and
     node-linear at any scale."""
     und = _cosupply_und(t)
-    try:
-        key = und._jdf.queryExecution().analyzed().canonicalized().toString()
-    except Exception:
-        key = None
-    if key is None or "LocalRelation" in key or "LogicalRDD" in key or "ExistingRDD" in key:
-        return und.transform(truncate_lineage)
-    ent = _UND_MEMO.get(key)
-    if ent is None:
-        ent = und.transform(truncate_lineage)
-        _UND_MEMO[key] = ent
-    _UND_MEMO.move_to_end(key)
-    while len(_UND_MEMO) > _UND_MEMO_MAX:
-        _UND_MEMO.popitem(last=False)
-    return ent
+    return plan_memo(und, "cosupply_und", lambda: und.transform(truncate_lineage))
 
 
 @query(

@@ -37,7 +37,12 @@ from pkg2_spark.operators.text import (
     tokens_col,
 )
 from pkg2_spark.registry import QUERIES, query
-from pkg2_spark.session import fan_out_scan, truncate_lineage
+from pkg2_spark.session import (
+    drop_session_memo,
+    fan_out_scan,
+    plan_memo,
+    truncate_lineage,
+)
 
 _K = 8  # MinHash signature length
 _BANDS_R = 4  # rows per LSH band (b=2, r=4: the synthetic corpus has a tiny
@@ -164,32 +169,11 @@ def q_llm_neardup_pairs(spark, sf_dir):
     # multiset union). Every term is an O(m log m) sort per bucket instead
     # of O(m²) emitted pairs: the sweep corpus's two ~2.4k-member hot
     # buckets were emitting ~5.6M pairs on ONE AQE-coalesced task. The
-    # uncapped self-join remains the general path for b ≠ 2.
+    # module constants fix b = 2 (_K // _BANDS_R), which this
+    # inclusion-exclusion relies on.
     d = load_tables(spark, sf_dir)["documents"]
     sig = minhash_signatures(tokenize_distinct(d), _K)
     bands = lsh_bands(sig, _K, _BANDS_R)
-    if _K // _BANDS_R != 2:  # pragma: no cover — b=2 pinned by module consts
-        a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-        b = bands.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("band_id").alias("bid2"),
-            F.col("band_key").alias("bkey2"),
-        )
-        pairs = (
-            a.join(
-                b,
-                (F.col("band_id") == F.col("bid2"))
-                & (F.col("band_key") == F.col("bkey2"))
-                & (F.col("doc_a") < F.col("doc_b")),
-            )
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-        return pairs.groupBy("doc_a").agg(
-            F.count(F.lit(1)).alias("n_candidates"),
-            F.min("doc_b").alias("min_cand"),
-            F.max("doc_b").alias("max_cand"),
-        )
     w = Window.partitionBy("band_id", "band_key").orderBy("doc_id")
     w_after = w.rowsBetween(1, Window.unboundedFollowing)
     bucket = Window.partitionBy("band_id", "band_key")
@@ -766,67 +750,27 @@ def _icbrt(m: int) -> int:
     return c - 1
 
 
-# Session-scoped IVF memo, ONE entry per distinct corpus frame: k values
-# AND the constructed quantizer frames (checkpointed assignments). Keyed on
-# the underlying plan object identity — load_tables memoizes the DataFrame
-# per (session, sf_dir), so every IVF-family query over the same corpus in
-# a session shares ONE quantizer construction (the r7 verdict's task:
-# ann_ivf/ann_recall/ann_mprobe/semdedup each re-paid the n·k1 cross).
-# Bounded LRU (the r7 _IVF_K_MEMO pinned every frame ever passed for the
-# life of the session); ivf_invalidate() is the explicit lifecycle hook
-# (the decade probe uses it to keep timing CONSTRUCTION, not memo hits).
-from collections import OrderedDict  # noqa: E402
-
-_IVF_MEMO: OrderedDict[int, dict] = OrderedDict()
-_IVF_MEMO_MAX = 4
-
-
-def _ivf_memo(e) -> dict:
-    # Keyed by the CANONICALIZED analyzed plan, not the Py4J object id
-    # (r14): callers that derive the corpus per invocation (base =
-    # e.filter(...)) get a fresh _jdf every call, so an id() key missed
-    # the memo and re-ran the full n·(k1+k2+2·k3) tree construction each
-    # time — q_vec_ivf_incr warm was 12s instead of ~3s. Same-session
-    # identical FILE-BACKED plans read identical data (deterministic
-    # sources), which is exactly the sharing the memo exists for.
-    # In-memory frames keep the id() key: a LocalRelation/RDD plan string
-    # does NOT embed the rows, so two different createDataFrame corpora
-    # would canonicalize identically and collide.
-    try:
-        key = e._jdf.queryExecution().analyzed().canonicalized().toString()
-        if "LocalRelation" in key or "LogicalRDD" in key or "ExistingRDD" in key:
-            key = id(e._jdf)
-    except Exception:
-        key = id(e._jdf) if hasattr(e, "_jdf") else id(e)
-    ent = _IVF_MEMO.get(key)
-    if ent is None:
-        ent = {"frame": e}
-        _IVF_MEMO[key] = ent
-    _IVF_MEMO.move_to_end(key)
-    while len(_IVF_MEMO) > _IVF_MEMO_MAX:
-        _IVF_MEMO.popitem(last=False)
-    return ent
-
-
 def ivf_invalidate() -> None:
-    """Drop every memoized quantizer artifact. The memo holds at most
-    _IVF_MEMO_MAX corpus frames plus their checkpointed assignment frames;
-    call this to release them (benchmark isolation, corpus replaced)."""
-    _IVF_MEMO.clear()
+    """Drop every memoized quantizer artifact (ks, trees and cell-slot
+    maps, every session) to release their checkpointed frames: benchmark
+    isolation, corpus replaced."""
+    drop_session_memo("ivf_ks", "ivf_tree", "ivf_cellslots")
 
 
 def _ivf_ks(e) -> tuple[int, int]:
-    """(k12, k3) for the corpus — one count job per corpus per session.
+    """(k12, k3) for the corpus — one count job per (session, corpus).
     k12 sizes the level-1 codebook and the level-2 seed target; k3 is the
     LEGACY fixed-allocation per-parent count, retained as the expected
     children-per-level-2-cell figure for probes/tests (actual level-2/3
-    allocation is proportional to cell size — see _sub_centroids)."""
-    ent = _ivf_memo(e)
-    if "ks" not in ent:
+    allocation is proportional to cell size — see _sub_centroids). Its
+    own entry, apart from the tree: q_llm_ivf_refine needs k alone."""
+
+    def count():
         m = e.count() // _IVF_TARGET_CELL
         k12 = max(2, _icbrt(m))
-        ent["ks"] = (k12, max(2, m // (k12 * k12)))
-    return ent["ks"]
+        return k12, max(2, m // (k12 * k12))
+
+    return plan_memo(e, "ivf_ks", count)
 
 
 def _ivf_k(e) -> int:
@@ -1090,7 +1034,31 @@ def _sub_centroids(parent, parent_col: str, out_parent: str, out_id: str,
 
 def _ivf_tree(e):
     """The three-level quantizer pipeline, MEMOIZED per (session, corpus):
-    returns (cents, assign1, cent2, assign2, cent3, assign) where `cent3`
+    (cents, assign1, cent2, assign2, cent3, assign); see _build_ivf_index."""
+    return _ivf_index(e)[0]
+
+
+def _ivf_index(e):
+    """(tree, (level-2, level-3) codebook sizes) for the corpus: one
+    session.plan_memo entry, so a failed build stores nothing."""
+    return plan_memo(e, "ivf_tree", lambda: _build_ivf_index(e))
+
+
+def _ivf_slots():
+    """Occupancy-cap slot count of a quantizer cell holding `_cn` members:
+    1 up to 2× target, else ~_cn/target (at most _IVF_SLOT_BASE - 1)."""
+    c = _IVF_TARGET_CELL
+    return F.when(F.col("_cn") <= 2 * c, F.lit(1)).otherwise(
+        F.least(
+            F.lit(_IVF_SLOT_BASE - 1),
+            F.expr(f"(_cn + {c // 2}) div {c}"),
+        )
+    ).cast("long")
+
+
+def _build_ivf_index(e):
+    """Builds the _ivf_index pair. The tree is
+    (cents, assign1, cent2, assign2, cent3, assign) where `cent3`
     is the Lloyd-REFINED level-3 codebook (c3id = parent level-2 cell,
     sscid = quantizer cell id, ssemb = refined centroid as array<double>)
     and `assign` carries the FINAL (vec_id, embedding, cid) labeling with
@@ -1108,15 +1076,10 @@ def _ivf_tree(e):
     2× target are md5-slot-split so max final cell is bounded at ~1.5×
     target regardless of data geometry. Each corpus-sized frame's lineage is
     truncated (session.truncate_lineage — localCheckpoint locally,
-    reliable checkpoint when a dir is set) and the whole tuple lives
-    in the IVF memo:
+    reliable checkpoint when a dir is set), and through the memo
     ann_ivf / ann_recall / ann_mprobe / ann_tune / semdedup / ivfpq /
-    ivf_incr over
-    the same corpus in a session share ONE construction instead of each
-    re-paying the n·(k1+k2+2·k3) scoring passes."""
-    ent = _ivf_memo(e)
-    if "tree" in ent:
-        return ent["tree"]
+    ivf_incr over the same corpus in a session share ONE construction
+    instead of each re-paying the n·(k1+k2+2·k3) scoring passes."""
     k12, _k3 = _ivf_ks(e)
     c = _IVF_TARGET_CELL
     cents = _ivf_centroids(e)
@@ -1138,7 +1101,6 @@ def _ivf_tree(e):
     cent3s = _sub_centroids(a2, "scid", "c3id", "sscid", "ssemb", c)
     n3 = cent3s.count()
     bc3 = n3 <= _IVF_BCAST_ROWS
-    ent["sizes"] = (n2, n3)
     a3s = a2.join(
         _nearest_wide(
             a2.withColumnRenamed("scid", "c3id"), cent3s, out_id="sscid",
@@ -1191,12 +1153,6 @@ def _ivf_tree(e):
     # Occupancy cap: one qcid-keyed count window (no extra agg+join pass)
     # → slot = hex32(md5(vec_id)) mod slots for cells above 2× target.
     wq = Window.partitionBy("qcid")
-    slots = F.when(F.col("_cn") <= 2 * c, F.lit(1)).otherwise(
-        F.least(
-            F.lit(_IVF_SLOT_BASE - 1),
-            F.expr(f"(_cn + {c // 2}) div {c}"),
-        )
-    ).cast("long")
     slot = F.when(F.col("_slots") == 1, F.lit(0).cast("long")).otherwise(
         F.conv(
             F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
@@ -1205,7 +1161,7 @@ def _ivf_tree(e):
     )
     assign = (
         a0.withColumn("_cn", F.count(F.lit(1)).over(wq))
-        .withColumn("_slots", slots)
+        .withColumn("_slots", _ivf_slots())
         .select(
             "vec_id",
             "embedding",
@@ -1213,51 +1169,34 @@ def _ivf_tree(e):
         )
         .transform(truncate_lineage)
     )
-    ent["tree"] = (cents, a1, cent2, a2, cent3, assign)
-    return ent["tree"]
+    return (cents, a1, cent2, a2, cent3, assign), (n2, n3)
 
 
 def _ivf_sizes(e) -> tuple[int, int]:
     """(level-2, level-3) codebook row counts for the corpus — the
     broadcast-gating inputs (allocation is data-proportional, so sizes
     are measured at construction, not derived from k)."""
-    ent = _ivf_memo(e)
-    if "sizes" not in ent:
-        _ivf_tree(e)
-    return ent["sizes"]
+    return _ivf_index(e)[1]
 
 
 def _ivf_cellslots(e):
     """Quantizer-cell → slot-count map (qcid, slots), derived from the
     final assignment (grouping by cid div _IVF_SLOT_BASE recovers exactly
     the per-quantizer-cell occupancy the cap was computed from).
-    Memoized + checkpointed alongside the tree: multi-probe search joins
-    its beam against this to route each probe to a slot of a foreign
-    cell."""
-    ent = _ivf_memo(e)
-    if "cellslots" not in ent:
-        assign = _ivf_tree(e)[5]
-        c = _IVF_TARGET_CELL
-        ent["cellslots"] = (
-            assign.groupBy(
-                F.expr(f"cid div {_IVF_SLOT_BASE}").alias("qcid")
-            )
-            .agg(F.count(F.lit(1)).alias("_cn"))
-            .select(
-                "qcid",
-                F.when(F.col("_cn") <= 2 * c, F.lit(1))
-                .otherwise(
-                    F.least(
-                        F.lit(_IVF_SLOT_BASE - 1),
-                        F.expr(f"(_cn + {c // 2}) div {c}"),
-                    )
-                )
-                .cast("long")
-                .alias("slots"),
-            )
-            .transform(truncate_lineage)
-        )
-    return ent["cellslots"]
+    Multi-probe search joins its beam against it to route each probe to
+    a slot of a foreign cell. Checkpointed in an entry of its own, not
+    with the tree: only multi-probe reads it, and even a lazy checkpoint
+    runs the aggregate's shuffle stage at build (measured: +1 job on
+    every tree build)."""
+    return plan_memo(
+        e,
+        "ivf_cellslots",
+        lambda: _ivf_tree(e)[5]
+        .groupBy(F.expr(f"cid div {_IVF_SLOT_BASE}").alias("qcid"))
+        .agg(F.count(F.lit(1)).alias("_cn"))
+        .select("qcid", _ivf_slots().alias("slots"))
+        .transform(truncate_lineage),
+    )
 
 
 def _ivf_assign(e):

@@ -27,6 +27,7 @@ import pyspark.sql.types as T
 
 from pkg2_spark.catalog import load_tables
 from pkg2_spark.registry import query
+from pkg2_spark.session import session_memo
 
 _REPO_DIR = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 IO_DIR = os.path.join(_REPO_DIR, "tmp_io")
@@ -40,9 +41,6 @@ def fixture_path(name: str, sf_dir: str) -> str:
     scales and relied on mode('overwrite') rewriting every invocation."""
     tag = os.path.basename(os.path.normpath(sf_dir))
     return os.path.join(IO_DIR, tag, name)
-
-
-_BUCKETED_DONE: set[tuple[int, str]] = set()
 
 
 def fixture_ready(
@@ -640,8 +638,7 @@ def q_sink_bucketed(spark, sf_dir):
     # Written once per (session, sf_dir): bucketing pays its shuffle at
     # ingest precisely so repeated queries don't — re-creating the tables on
     # every invocation would forfeit the pattern being demonstrated.
-    key = (id(spark._jsparkSession) if hasattr(spark, "_jsparkSession") else id(spark), sf_dir)
-    if key not in _BUCKETED_DONE:
+    def write_bucketed() -> bool:
         # Idempotent re-create: the in-memory catalog forgets tables between
         # sessions but the warehouse directory persists, so "overwrite" alone
         # hits LOCATION_ALREADY_EXISTS on a fresh session.
@@ -657,7 +654,9 @@ def q_sink_bucketed(spark, sf_dir):
         (t["customer"].write.format("parquet")
          .bucketBy(8, "c_custkey").sortBy("c_custkey")
          .saveAsTable("pkg2_bucketed_customer"))
-        _BUCKETED_DONE.add(key)
+        return True
+
+    session_memo(spark, ("bucketed", sf_dir), write_bucketed)
     o = spark.table("pkg2_bucketed_orders")
     c = spark.table("pkg2_bucketed_customer")
     return (

@@ -24,33 +24,25 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import TimestampType
 
 from pkg2_spark.queries.relational import IO_DIR
-from pkg2_spark.session import ensure_runtime_confs
-
-
-# Schema memo for events_stream, keyed by the source file's identity
-# (path, size, mtime in ns): every streaming query calls events_stream at
-# least once per INVOCATION (the stream-stream joins twice), and each call
-# paid a batch parquet footer read (~0.1 s of driver latency) to recover a
-# schema that cannot change unless the file itself does. Metadata only — no
-# rows, no results — and the mtime/size key re-reads after any testdata
-# regeneration. Bounded: a handful of scales per run, oldest entry evicted.
-_SCHEMA_MEMO: dict[tuple[str, int, int], object] = {}
-_SCHEMA_MEMO_SIZE = 8
-_SCHEMA_MEMO_LOCK = threading.Lock()
+from pkg2_spark.session import ensure_runtime_confs, session_memo
 
 
 def _events_schema(spark: SparkSession, src: str):
+    """The events file's schema, read once per session and file identity
+    (path, size, mtime in ns): every streaming query calls events_stream
+    at least once per invocation (the stream-stream joins twice), and each
+    call paid a batch parquet footer read (~0.1 s of driver latency) for a
+    schema that cannot change unless the file does; a regenerated file
+    has a new size or mtime."""
     try:
         st = os.stat(src)
     except OSError:
         return spark.read.parquet(src).schema
-    key = (src, st.st_size, st.st_mtime_ns)
-    with _SCHEMA_MEMO_LOCK:
-        if key not in _SCHEMA_MEMO:
-            if len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_SIZE:
-                del _SCHEMA_MEMO[next(iter(_SCHEMA_MEMO))]
-            _SCHEMA_MEMO[key] = spark.read.parquet(src).schema
-        return _SCHEMA_MEMO[key]
+    return session_memo(
+        spark,
+        ("events_schema", src, st.st_size, st.st_mtime_ns),
+        lambda: spark.read.parquet(src).schema,
+    )
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -120,7 +120,7 @@ def test_latest_versions_handles_dotted_inversion(spark):
     # state without registering the shared `packages` view.
     from pkg2_spark.engine import _IndexState
 
-    eng._index = _IndexState(df, eng._lock)  # noqa: SLF001
+    eng._index = _IndexState(df)  # noqa: SLF001
     latest = eng.latest_versions().collect()
     assert latest[0].version == "3.10.0"  # lexicographic would pick 3.9.1
 

@@ -110,7 +110,7 @@ def test_concurrent_first_requests_derive_state_once(spark, monkeypatch):
     # At least four threads, more than there are cores, send their first
     # requests at the same moment with a shortened switch interval: they
     # all get the same answers, and each derived frame is built exactly
-    # once (the engine's lock, not a race, decides who builds it).
+    # once (its build lock, not a race, decides who builds it).
     import collections
     import sys
     import threading
