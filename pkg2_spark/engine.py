@@ -170,11 +170,8 @@ class _IndexState:
         self.packages = packages
         self._frames = BuildOnce()
 
-    def _once(self, key: str, build):
-        return self._frames.get(key, build)
-
     def capabilities(self) -> DataFrame:
-        return self._once(
+        return self._frames.get(
             "capabilities", lambda: truncate_lineage_lazy(capability_map(self.packages))
         )
 
@@ -193,7 +190,7 @@ class _IndexState:
 
     def dependency_edges(self) -> DataFrame:
         """Distinct (src, capability, dst) — whatdepends filters on dst."""
-        return self._once(
+        return self._frames.get(
             "dependency_edges",
             lambda: truncate_lineage_lazy(
                 self._provider_join().select("src", "capability", "dst").distinct()
@@ -203,7 +200,7 @@ class _IndexState:
     def package_edges(self) -> tuple[DataFrame, int]:
         """Distinct (src, dst) edges and their count, which gates resolve's
         driver-local finish (graph_ops.reachability)."""
-        return self._once(
+        return self._frames.get(
             "package_edges",
             lambda: truncate_lineage_counted(
                 self._provider_join().select("src", "dst").distinct()
@@ -211,13 +208,13 @@ class _IndexState:
         )
 
     def constrained_edges(self) -> tuple[DataFrame, int]:
-        return self._once(
+        return self._frames.get(
             "constrained_edges",
             lambda: truncate_lineage_counted(_constrained_edges(self.packages)),
         )
 
     def latest_versions(self) -> DataFrame:
-        return self._once(
+        return self._frames.get(
             "latest_versions",
             lambda: truncate_lineage_lazy(_latest_versions(self.packages)),
         )

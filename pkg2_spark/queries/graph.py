@@ -243,11 +243,16 @@ def _cosupply_und_shared(t) -> DataFrame:
     q_llm IVF-tree idiom applied to the graph family (r14): SIX graph
     queries consume the identical ~2.2 s projection+cap+pair+kNN kernel
     and each used to rebuild it per invocation. One materialization per
-    (session, corpus plan) (session.plan_memo). The edge list is
+    session and plan of its one input, lineitem (session.plan_memo): the
+    edge frame itself is derived anew on every call, so keying on it
+    would never hit for an in-memory input. The edge list is
     3·|suppliers| rows, so the checkpoint is KBs at bench scale and
     node-linear at any scale."""
-    und = _cosupply_und(t)
-    return plan_memo(und, "cosupply_und", lambda: und.transform(truncate_lineage))
+    return plan_memo(
+        t["lineitem"],
+        "cosupply_und",
+        lambda: _cosupply_und(t).transform(truncate_lineage),
+    )
 
 
 @query(

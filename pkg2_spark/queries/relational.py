@@ -19,15 +19,17 @@ Scale notes:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
+import threading
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from pkg2_spark.catalog import load_tables
 from pkg2_spark.registry import query
-from pkg2_spark.session import session_memo
 
 _REPO_DIR = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 IO_DIR = os.path.join(_REPO_DIR, "tmp_io")
@@ -41,6 +43,18 @@ def fixture_path(name: str, sf_dir: str) -> str:
     scales and relied on mode('overwrite') rewriting every invocation."""
     tag = os.path.basename(os.path.normpath(sf_dir))
     return os.path.join(IO_DIR, tag, name)
+
+
+def bucketed_tables(sf_dir: str) -> tuple[str, str]:
+    """Catalog names of q_sink_bucketed's (orders, customer) tables,
+    content-addressed by sf_dir like the catalog's statistics tables."""
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    return f"pkg2_{tag}_bucketed_orders", f"pkg2_{tag}_bucketed_customer"
+
+
+# Serializes q_sink_bucketed's check-then-write: two first calls would
+# otherwise both clear and rewrite the same warehouse directories.
+_BUCKETED_WRITE = threading.Lock()
 
 
 def fixture_ready(
@@ -635,30 +649,25 @@ def q_sink_bucketed(spark, sf_dir):
     # across a 100 TB workload (pay the shuffle once at ingest, never again).
     # tests/test_plans.py pins the no-Exchange property of this join.
     t = load_tables(spark, sf_dir)
-    # Written once per (session, sf_dir): bucketing pays its shuffle at
-    # ingest precisely so repeated queries don't — re-creating the tables on
-    # every invocation would forfeit the pattern being demonstrated.
-    def write_bucketed() -> bool:
-        # Idempotent re-create: the in-memory catalog forgets tables between
-        # sessions but the warehouse directory persists, so "overwrite" alone
-        # hits LOCATION_ALREADY_EXISTS on a fresh session.
-        from urllib.parse import urlparse
-
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for name in ("pkg2_bucketed_orders", "pkg2_bucketed_customer"):
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
-        (t["orders"].write.format("parquet")
-         .bucketBy(8, "o_custkey").sortBy("o_custkey")
-         .saveAsTable("pkg2_bucketed_orders"))
-        (t["customer"].write.format("parquet")
-         .bucketBy(8, "c_custkey").sortBy("c_custkey")
-         .saveAsTable("pkg2_bucketed_customer"))
-        return True
-
-    session_memo(spark, ("bucketed", sf_dir), write_bucketed)
-    o = spark.table("pkg2_bucketed_orders")
-    c = spark.table("pkg2_bucketed_customer")
+    # Written once per (catalog, sf_dir): bucketing pays its shuffle at
+    # ingest precisely so repeated queries don't — re-creating the tables
+    # on every invocation would forfeit the pattern being demonstrated. The
+    # catalog is the record that they were written: sessions of one
+    # context share it, and a new context starts without them.
+    names = bucketed_tables(sf_dir)
+    with _BUCKETED_WRITE:
+        if not all(spark.catalog.tableExists(n) for n in names):
+            # The warehouse directory outlives the catalog of a stopped
+            # context, so "overwrite" alone hits LOCATION_ALREADY_EXISTS.
+            warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+            for (side, key), name in zip(
+                (("orders", "o_custkey"), ("customer", "c_custkey")), names
+            ):
+                spark.sql(f"DROP TABLE IF EXISTS {name}")
+                shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
+                (t[side].write.format("parquet")
+                 .bucketBy(8, key).sortBy(key).saveAsTable(name))
+    o, c = (spark.table(n) for n in names)
     return (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment")

@@ -127,12 +127,15 @@ class BuildOnce:
             with self._guard:
                 if key in self._values:
                     return self._values[key]
-            value = build()
-            with self._guard:
-                self._values[key] = value
-                self._building.pop(key, None)
-                while self._max is not None and len(self._values) > self._max:
-                    self._values.popitem(last=False)
+            try:
+                value = build()
+                with self._guard:
+                    self._values[key] = value
+                    while self._max is not None and len(self._values) > self._max:
+                        self._values.popitem(last=False)
+            finally:
+                with self._guard:
+                    self._building.pop(key, None)
             return value
 
     def drop(self, match) -> None:
@@ -142,13 +145,16 @@ class BuildOnce:
                 del self._values[key]
 
 
-# Session-derived state of the whole process: registered tables, index
-# frames, schemas, written fixtures. Every key starts with the JVM
-# session's sessionUUID, which is shared by every frame of one session
-# and new after newSession() and after stop(): a frame built on one
-# session, or checkpointed into a stopped context's block manager, is
-# never handed to another. An LRU bound keeps a long-lived process
-# (service, bench, a driver that restarts its session) from growing.
+# Session-derived state of the whole process: registered tables and
+# frames derived from them. Every key starts with the JVM session's
+# sessionUUID, which is shared by every frame of one session and new
+# after newSession() and after stop(): a frame built on one session, or
+# checkpointed into a stopped context's block manager, is never handed
+# to another. An LRU bound keeps a long-lived process (service, bench, a
+# driver that restarts its session) from growing. Measured, the whole
+# registry makes 7 entries per scale factor (tables, co-supply edges, two
+# IVF corpora's ks and trees, one cell-slot map) and one view pointer per
+# session: two scale factors in one session fit in 16 without a rebuild.
 SESSION_MEMO_ENTRIES = 16
 _SESSION_MEMO = BuildOnce(SESSION_MEMO_ENTRIES)
 
@@ -165,15 +171,18 @@ def plan_memo(df, tag: str, build):
     callers that derive their input per invocation (``base =
     e.filter(...)``) get a fresh ``_jdf`` every call, and an id() key
     missed every time (q_vec_ivf_incr rebuilt its IVF tree on each call,
-    12 s warm instead of ~3 s). Identical file-backed plans of one
-    session read identical data. An in-memory plan string does not embed
-    its rows (two createDataFrame corpora canonicalize alike), so those
-    frames key on their identity instead; the entry keeps ``df`` alive,
-    so that identity cannot be reused while the entry exists."""
+    12 s warm instead of ~3 s). A canonical file scan prints without its
+    path, so the input files join the key: sf0.001 and sf0.01 in one
+    session must not share a tree. An in-memory plan does not print its
+    rows either (two createDataFrame corpora canonicalize alike), so it
+    keys on the frame's identity; the entry keeps ``df`` alive, so that
+    identity cannot be reused while the entry exists."""
     plan = df._jdf.queryExecution().analyzed().canonicalized().toString()
     if any(s in plan for s in ("LocalRelation", "LogicalRDD", "ExistingRDD")):
-        plan = id(df._jdf)
-    return session_memo(df.sparkSession, (tag, plan), lambda: (df, build()))[1]
+        key = id(df._jdf)
+    else:
+        key = (plan, tuple(sorted(df.inputFiles())))
+    return session_memo(df.sparkSession, (tag, key), lambda: (df, build()))[1]
 
 
 def drop_session_memo(*tags: str) -> None:

@@ -24,24 +24,27 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import TimestampType
 
 from pkg2_spark.queries.relational import IO_DIR
-from pkg2_spark.session import ensure_runtime_confs, session_memo
+from pkg2_spark.session import BuildOnce, ensure_runtime_confs
+
+# Metadata only (a StructType, no rows, no session state), so it is keyed
+# by file identity alone and kept apart from the session memo's frames.
+# A handful of scales per run; the LRU bound keeps it small.
+_EVENTS_SCHEMAS = BuildOnce(8)
 
 
 def _events_schema(spark: SparkSession, src: str):
-    """The events file's schema, read once per session and file identity
-    (path, size, mtime in ns): every streaming query calls events_stream
-    at least once per invocation (the stream-stream joins twice), and each
-    call paid a batch parquet footer read (~0.1 s of driver latency) for a
-    schema that cannot change unless the file does; a regenerated file
-    has a new size or mtime."""
+    """The events file's schema, read once per file identity (path, size,
+    mtime in ns): every streaming query calls events_stream at least once
+    per invocation (the stream-stream joins twice), and each call paid a
+    batch parquet footer read (~0.1 s of driver latency) for a schema
+    that cannot change unless the file does; a regenerated file has a new
+    size or mtime."""
     try:
         st = os.stat(src)
     except OSError:
         return spark.read.parquet(src).schema
-    return session_memo(
-        spark,
-        ("events_schema", src, st.st_size, st.st_mtime_ns),
-        lambda: spark.read.parquet(src).schema,
+    return _EVENTS_SCHEMAS.get(
+        (src, st.st_size, st.st_mtime_ns), lambda: spark.read.parquet(src).schema
     )
 
 

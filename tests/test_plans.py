@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from pkg2_spark.queries.relational import bucketed_tables
 from pkg2_spark.registry import all_queries
 
 
@@ -92,8 +93,9 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        o = spark.table("pkg2_bucketed_orders")
-        c = spark.table("pkg2_bucketed_customer")
+        orders, customer = bucketed_tables(sf_dir)
+        o = spark.table(orders)
+        c = spark.table(customer)
         df = o.join(c, o.o_custkey == c.c_custkey).select("o_orderkey", "c_name")
         plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             df._jdf.queryExecution(), "formatted"

@@ -115,19 +115,20 @@ def test_concurrent_first_requests_derive_state_once(spark, monkeypatch):
     import sys
     import threading
 
-    from pkg2_spark.engine import _IndexState
+    from pkg2_spark import engine as engine_mod
 
     builds = collections.Counter()
-    real_once = _IndexState._once
 
-    def counting_once(self, key, build):
-        def counted():
-            builds[key] += 1
-            return build()
+    class CountingBuildOnce(engine_mod.BuildOnce):
+        def get(self, key, build):
+            def counted():
+                builds[key] += 1
+                return build()
 
-        return real_once(self, key, counted)
+            return super().get(key, counted)
 
-    monkeypatch.setattr(_IndexState, "_once", counting_once)
+    # The ingest below builds its _IndexState's memo from this class.
+    monkeypatch.setattr(engine_mod, "BuildOnce", CountingBuildOnce)
     eng = Engine(spark)
     eng.ingest_debian_packages(os.path.join(_DATA, "packages_sample.txt"))
     svc = QueryService(eng)

@@ -2,7 +2,9 @@
 
 Session-derived state (registered tables, the IVF tree, the co-supply
 edges) is keyed by the JVM session, so a frame built or checkpointed on one
-session is never served to another, nor after its context stopped.
+session is never served to another, nor after its context stopped. Side
+effects that must happen once (q_sink_bucketed's table write) are recorded
+in the catalog, not in the evicting memo.
 """
 
 from __future__ import annotations
@@ -89,12 +91,34 @@ def test_failed_build_stores_nothing_and_the_bound_evicts_oldest():
         memo.get("x", fail)
     except RuntimeError:
         pass
+    assert not memo._building  # a failed key leaves no build lock behind
     assert memo.get("x", lambda: 1) == 1
     memo.get("y", lambda: 2)
     memo.get("x", lambda: -1)  # hit: x is now the newest entry
     memo.get("z", lambda: 3)  # evicts y
     assert memo.get("x", lambda: -1) == 1
     assert memo.get("y", lambda: 4) == 4
+    assert not memo._building
+
+
+def test_plan_memo_tells_file_inputs_apart(spark, tmp_path):
+    # Two parquet corpora of one schema canonicalize to the same plan
+    # string (a file scan prints without its path), so only their input
+    # files keep one from being served the other's build.
+    from pkg2_spark.session import drop_session_memo, plan_memo
+
+    paths = []
+    for n in (3, 5):
+        paths.append(str(tmp_path / f"corpus{n}"))
+        spark.range(n).write.parquet(paths[-1])
+    a, b = (spark.read.parquet(p) for p in paths)
+    try:
+        assert plan_memo(a, "test_count", a.count) == 3
+        assert plan_memo(b, "test_count", b.count) == 5
+        again = spark.read.parquet(paths[0])
+        assert plan_memo(again, "test_count", lambda: -1) == 3  # a hit
+    finally:
+        drop_session_memo("test_count")
 
 
 def test_memoized_queries_follow_a_new_session(spark, sf_dir):
@@ -104,12 +128,55 @@ def test_memoized_queries_follow_a_new_session(spark, sf_dir):
     from pkg2_spark.registry import all_queries
 
     s2 = spark.newSession()
-    for name in ("q_graph_triangles", "q_llm_ann_ivf"):
-        q = all_queries()[name]
-        first = sorted(q(spark, sf_dir).collect())
-        df = q(s2, sf_dir)
-        assert df.sparkSession is s2, name
-        assert sorted(df.collect()) == first, name
+    try:
+        for name in ("q_graph_triangles", "q_llm_ann_ivf"):
+            q = all_queries()[name]
+            first = sorted(q(spark, sf_dir).collect())
+            df = q(s2, sf_dir)
+            assert df.sparkSession is s2, name
+            assert sorted(df.collect()) == first, name
+    finally:
+        _drop_session(s2)
+
+
+def test_bucketed_tables_are_written_once_past_the_memo_bound(spark, sf_dir):
+    # The catalog, not a memo entry, records that q_sink_bucketed wrote
+    # its tables: once the session memo has evicted every entry of this
+    # session, a call must read the tables, not clear and rewrite them.
+    from urllib.parse import urlparse
+
+    from pkg2_spark.queries.relational import bucketed_tables
+    from pkg2_spark.registry import all_queries
+    from pkg2_spark.session import SESSION_MEMO_ENTRIES, session_memo
+
+    q = all_queries()["q_sink_bucketed"]
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+
+    def files():
+        return {
+            n: sorted(os.listdir(os.path.join(warehouse, n)))
+            for n in bucketed_tables(sf_dir)
+        }
+
+    first = sorted(q(spark, sf_dir).collect())
+    written = files()
+    filler = spark.newSession()
+    try:
+        for i in range(SESSION_MEMO_ENTRIES):
+            session_memo(filler, ("filler", i), object)
+        assert sorted(q(spark, sf_dir).collect()) == first
+        assert sorted(q(filler, sf_dir).collect()) == first
+        assert files() == written
+    finally:
+        _drop_session(filler)
+
+
+def _drop_session(s) -> None:
+    """Forget the memo entries of ``s``, a throwaway newSession()."""
+    from pkg2_spark.session import _SESSION_MEMO
+
+    uuid = s._jsparkSession.sessionUUID()
+    _SESSION_MEMO.drop(lambda key: key[0] == uuid)
 
 
 def test_memoized_query_survives_a_session_restart(tmp_path, sf_dir):
