@@ -1135,7 +1135,7 @@ class Engine:
         - ``n_probe`` (default: the session knob self.ann_n_probe) is the
           recall/latency lever: per-query cost ≈ n_probe × ~1.5×
           target-cell rows; recall@k is monotone in n_probe when callers
-          pin descent (see queries.llm.ann_multiprobe and the SCALING.md
+          pin descent (see operators/ivf.py::ann_multiprobe and the SCALING.md
           recall table for the measured curve).
         - ``min_recall``: the safety bar, ON BY DEFAULT (r11 verdict #1
           — the default path must not serve an unaudited index).
@@ -1161,7 +1161,7 @@ class Engine:
         When the audit misses the bar at the requested beam in fallback
         mode, the engine ESCALATES n_probe through
         ``self.ann_escalation_ladder`` (default (8, 16, 32)) before
-        conceding: the IVF tree is memoized (queries.llm._ivf_tree), so
+        conceding: the IVF tree is memoized (operators/ivf.py::tree), so
         each re-audit costs only the extra candidate-cell rows, while the
         brute-force concession is a full O(n) corpus scan per probe. Only
         when the widest beam still misses does it serve exact
@@ -1177,8 +1177,8 @@ class Engine:
 
         from pyspark.sql import Window
 
+        from pkg2_spark.operators.ivf import ann_multiprobe, probe_frame
         from pkg2_spark.operators.similarity import knn_bruteforce
-        from pkg2_spark.queries.llm import ann_multiprobe
 
         if on_low_recall not in ("fallback", "raise"):
             raise ValueError("on_low_recall must be 'fallback' or 'raise'")
@@ -1240,10 +1240,7 @@ class Engine:
                     .collect()[0]
                 )
 
-            audit = embeddings.filter(F.col("vec_id") < audit_probes).select(
-                F.col("vec_id").alias("probe_id"),
-                F.col("embedding").alias("probe_embedding"),
-            )
+            audit = probe_frame(embeddings.filter(F.col("vec_id") < audit_probes))
             explicit = False
             row = _audit_once(audit, explicit=False, npx=np_)
             if not row["n_exact"]:
@@ -1252,14 +1249,7 @@ class Engine:
                 # on the audit_probes smallest ids (bounded sort-limit)
                 # routed through the explicit-probes path — the bar must
                 # never pass vacuously.
-                audit = (
-                    embeddings.orderBy("vec_id")
-                    .limit(audit_probes)
-                    .select(
-                        F.col("vec_id").alias("probe_id"),
-                        F.col("embedding").alias("probe_embedding"),
-                    )
-                )
+                audit = probe_frame(embeddings.orderBy("vec_id").limit(audit_probes))
                 explicit = True
                 row = _audit_once(audit, explicit=True, npx=np_)
             measured = (
@@ -1322,19 +1312,7 @@ class Engine:
                 stacklevel=2,
             )
             self.last_ann_path = "bruteforce"
-            if probes is not None:
-                cols = set(probes.columns)
-                pid = "probe_id" if "probe_id" in cols else "vec_id"
-                pvec = next(
-                    c for c in ("probe_embedding", "pe", "embedding")
-                    if c in cols
-                )
-                served = probes.select(
-                    F.col(pid).alias("probe_id"),
-                    F.col(pvec).alias("probe_embedding"),
-                )
-            else:
-                served = audit
+            served = audit if probes is None else probe_frame(probes)
             return knn_bruteforce(
                 embeddings.select("vec_id", "embedding"), served, k=k,
                 dim=dim, exclude_self=probes is None,

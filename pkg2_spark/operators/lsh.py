@@ -111,13 +111,16 @@ def banded_pairs(
         return out.distinct() if distinct_pairs else out
     # Uncapped path: bucket membership is unbounded, so pair discovery must
     # stay a self-equi-join (collect_list over a hot bucket would be the
-    # exact memory blow-up the cap exists to prevent).
+    # exact memory blow-up the cap exists to prevent). The join strategy
+    # is the planner's: a hot bucket can outgrow a shuffle-hash build
+    # side, and a caller that filters one side (q_llm_minhash_est) lets
+    # it broadcast.
     a = bands.select(F.col(id_col).alias(left_alias), "band_id", "band_key")
     b = bands.select(
         F.col(id_col).alias(right_alias),
         F.col("band_id").alias("_bid2"),
         F.col("band_key").alias("_bkey2"),
-    ).hint("shuffle_hash")
+    )
     cols = [left_alias, right_alias]
     if keep_provenance:
         cols += ["band_id", "band_key"]

@@ -23,9 +23,20 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from pkg2_spark.catalog import load_tables
+from pkg2_spark.operators.ivf import (
+    ASSIGN_CTE,
+    K12_SQL,
+    SLOT_BASE,
+    ann_multiprobe,
+    beam_cte,
+    centroids,
+    nearest,
+    shape,
+    tree,
+)
 from pkg2_spark.operators.lsh import banded_pairs, capped_bands_sql
 from pkg2_spark.operators.sampling import hash_sample, hash_split
-from pkg2_spark.operators.similarity import cosine4, cosine_pairs_wide, knn_bruteforce
+from pkg2_spark.operators.similarity import cosine_pairs_wide, knn_bruteforce
 from pkg2_spark.operators.text import (
     band_key_expr,
     lsh_bands,
@@ -37,12 +48,7 @@ from pkg2_spark.operators.text import (
     tokens_col,
 )
 from pkg2_spark.registry import QUERIES, query
-from pkg2_spark.session import (
-    drop_session_memo,
-    fan_out_scan,
-    plan_memo,
-    truncate_lineage,
-)
+from pkg2_spark.session import fan_out_scan, truncate_lineage
 
 _K = 8  # MinHash signature length
 _BANDS_R = 4  # rows per LSH band (b=2, r=4: the synthetic corpus has a tiny
@@ -680,227 +686,10 @@ def q_llm_embed_neardup(spark, sf_dir):
     )
 
 
-# DATA-DERIVED THREE-LEVEL IVF codebook. Lineage of the formula: one-level
-# k = clamp(16, 4096, n/256) pegged at 4096 past n ≈ 1M (cells then grow
-# linearly — r6 watch item); two-level k1 = k2 = √(n/256) removed the
-# ceiling but its n·(k1+k2) = Θ(n^1.5/16) assignment term measured as
-# 11.7–12.1× per-decade tails in the second decade of the scale probe
-# (r7 watch item). The three-level tree cuts that term to Θ(n^{4/3}):
-#
-#   m  = n // 256            (target final-cell count, integer)
-#   k1 = max(2, icbrt(m))    md5-hash-sampled level-1 centroids
-#
-# Level 1: k1 centroids, ALWAYS broadcast (k1 = m^{1/3} ≈ 1.6k rows even
-# at n = 10^12), one wide-codegen pass over n·k1 scored rows. Levels 2/3
-# use PROPORTIONAL allocation (round 9 — the fixed per-parent k of r8 let
-# final cells inherit parent skew: max 11295 vs mean 1133 at the sf100
-# probe): each parent cell gets ~cell_size/target md5-ranked member seeds
-# (target t2 = 256·k1 at level 2, 256 at level 3), so a parent twice the
-# size gets twice the children and the EXPECTED child size is the target
-# at every n. The level-3 seed assignment is then Lloyd-REFINED once
-# (assign members to seeds → recenter each seed cell as the
-# per-dimension integer-micro mean, the q_llm_ivf_refine dataflow →
-# re-assign against the refined codebook): hash-sampled member seeds do
-# not balance dense regions; the recentered means do measurably better
-# and are the codebook a production deployment would keep iterating.
-# Residual imbalance (a genuinely dense region nearest ONE centroid —
-# no centroid scheme can split what cosine cannot distinguish) is
-# bounded DETERMINISTICALLY by an occupancy cap: a final cell holding
-# > 2·256 members is md5-slot-split into ~cell/256 slots
-# (slot = hex32(md5(vec_id)) mod slots — engine-portable, key-stable,
-# shuffle-free), so max final cell ≤ ~1.5× target REGARDLESS of data
-# geometry — the posting-list cap every production IVF deploys. Final
-# cid = quantizer_cell_id (the refined centroid's seed vec_id, globally
-# unique) × 32768 + slot; quantizer cell = cid div 32768.
-#
-# Levels 2/3 join their codebook to the members on the PARENT cell id:
-# broadcast while the codebook is small (≤ _IVF_BCAST_ROWS — at mid
-# scale the parent-key count is tiny, so a key-partitioned shuffle would
-# cap parallelism at the key count), shuffling equi-join once it
-# outgrows the hint (by then there are ≥ √_IVF_BCAST_ROWS keys — enough
-# partitions for any cluster). Assignment cost stays n·(k1+k2+k3+k3) ≈
-# 4n·(n/256)^{1/3} (one extra level-3 pass for the Lloyd re-assignment);
-# the recenter is one map-combinable (cell, dim)-keyed hash agg. icbrt
-# is EXACT in both engines: a pow(m, 1/3) seed corrected by integer cube
-# comparisons (pow is within 1 ulp ≪ 0.5 absolute at these magnitudes,
-# and the correction is pure integer arithmetic — no reliance on libm
-# rounding).
-_IVF_TARGET_CELL = 256
-_IVF_BCAST_ROWS = 65536
-_IVF_SLOT_BASE = 32768  # final cid = quantizer_cell_id * base + slot
-_IVF_M_SQL = f"(SELECT count(*) // {_IVF_TARGET_CELL} FROM embeddings)"
-_IVF_K12_SQL = (
-    "(SELECT GREATEST(2, CASE WHEN (c+1)*(c+1)*(c+1) <= m THEN c+1 "
-    "WHEN c*c*c <= m THEN c ELSE c-1 END) "
-    "FROM (SELECT m, CAST(round(pow(m, 1.0/3.0)) AS BIGINT) AS c "
-    f"FROM (SELECT {_IVF_M_SQL} AS m)))"
-)
-# level-2 seed target: t2 = 256·k1 members per level-2 cell
-_IVF_T2_SQL = f"({_IVF_TARGET_CELL} * {_IVF_K12_SQL})"
-
-
-def _icbrt(m: int) -> int:
-    """Exact integer cube root (floor) — pow-seeded, cube-corrected; the
-    Python twin of the _IVF_K12_SQL arithmetic."""
-    c = round(m ** (1.0 / 3.0)) if m > 0 else 0
-    if (c + 1) ** 3 <= m:
-        return c + 1
-    if c**3 <= m:
-        return c
-    return c - 1
-
-
-def ivf_invalidate() -> None:
-    """Drop every memoized quantizer artifact (ks, trees and cell-slot
-    maps, every session) to release their checkpointed frames: benchmark
-    isolation, corpus replaced."""
-    drop_session_memo("ivf_ks", "ivf_tree", "ivf_cellslots")
-
-
-def _ivf_ks(e) -> tuple[int, int]:
-    """(k12, k3) for the corpus — one count job per (session, corpus).
-    k12 sizes the level-1 codebook and the level-2 seed target; k3 is the
-    LEGACY fixed-allocation per-parent count, retained as the expected
-    children-per-level-2-cell figure for probes/tests (actual level-2/3
-    allocation is proportional to cell size — see _sub_centroids). Its
-    own entry, apart from the tree: q_llm_ivf_refine needs k alone."""
-
-    def count():
-        m = e.count() // _IVF_TARGET_CELL
-        k12 = max(2, _icbrt(m))
-        return k12, max(2, m // (k12 * k12))
-
-    return plan_memo(e, "ivf_ks", count)
-
-
-def _ivf_k(e) -> int:
-    """Per-level k for levels 1/2 (probe + test surface)."""
-    return _ivf_ks(e)[0]
-
-
-# Three-level quantizer — the coarse-quantization stage shared by IVF
-# search (q_llm_ann_ivf / q_llm_ann_recall / q_llm_ann_mprobe), the IVFADC
-# composite (q_vec_ivfpq), incremental maintenance (q_vec_ivf_incr), and
-# cluster-blocked semantic dedup (q_llm_semdedup). Structure (see the
-# module design block above): md5-sampled level-1 codebook → proportional
-# member-seed levels 2/3 → ONE Lloyd refinement of the level-3 codebook →
-# md5-slot occupancy cap. `assign` exposes the FINAL (vec_id, embedding,
-# cid) labeling with cid = refined-centroid-seed vec_id × 32768 + slot;
-# `cent3` carries the REFINED level-3 codebook (c3id = parent level-2
-# cell, sscid = quantizer cell id, ssemb = refined centroid, DOUBLE[]);
-# `cellslots` maps quantizer cell → slot count (1 unless occupancy-capped)
-# so downstream CTEs can route probes to a slot.
-_IVF_ASSIGN_CTE = f"""cent AS (
-  SELECT vec_id AS cid, embedding AS cemb FROM embeddings
-  QUALIFY row_number() OVER (
-    ORDER BY md5(CAST(vec_id AS VARCHAR)) ASC NULLS LAST, vec_id ASC NULLS LAST
-  ) <= {_IVF_K12_SQL}
-),
-assign1 AS (
-  SELECT vec_id, embedding, cid,
-         round(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-                                      CAST(cemb AS DOUBLE[])), 4) AS ccos
-  FROM embeddings CROSS JOIN cent
-  QUALIFY row_number() OVER (
-    PARTITION BY vec_id ORDER BY ccos DESC NULLS LAST, cid ASC NULLS LAST
-  ) = 1
-),
-cent2 AS (
-  SELECT cid AS c2id, vec_id AS scid, embedding AS semb FROM (
-    SELECT cid, vec_id, embedding,
-           row_number() OVER (
-             PARTITION BY cid
-             ORDER BY md5(CAST(vec_id AS VARCHAR)) ASC NULLS LAST,
-                      vec_id ASC NULLS LAST) AS rn,
-           count(*) OVER (PARTITION BY cid) AS n
-    FROM assign1
-  ) WHERE rn <= GREATEST(1, (n + {_IVF_T2_SQL} // 2) // {_IVF_T2_SQL})
-),
-assign2 AS (
-  SELECT vec_id, embedding, scid FROM (
-    SELECT a.vec_id, a.embedding, c2.scid,
-           round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                        CAST(c2.semb AS DOUBLE[])), 4) AS scos
-    FROM assign1 a JOIN cent2 c2 ON c2.c2id = a.cid
-    QUALIFY row_number() OVER (
-      PARTITION BY a.vec_id ORDER BY scos DESC NULLS LAST, scid ASC NULLS LAST
-    ) = 1
-  )
-),
-cent3s AS (
-  SELECT scid AS c3id, vec_id AS sscid, embedding AS ssemb FROM (
-    SELECT scid, vec_id, embedding,
-           row_number() OVER (
-             PARTITION BY scid
-             ORDER BY md5(CAST(vec_id AS VARCHAR)) ASC NULLS LAST,
-                      vec_id ASC NULLS LAST) AS rn,
-           count(*) OVER (PARTITION BY scid) AS n
-    FROM assign2
-  ) WHERE rn <= GREATEST(1, (n + {_IVF_TARGET_CELL // 2}) // {_IVF_TARGET_CELL})
-),
-assign3s AS (
-  SELECT vec_id, embedding, sscid FROM (
-    SELECT a.vec_id, a.embedding, c3.sscid,
-           round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                        CAST(c3.ssemb AS DOUBLE[])), 4) AS sscos
-    FROM assign2 a JOIN cent3s c3 ON c3.c3id = a.scid
-    QUALIFY row_number() OVER (
-      PARTITION BY a.vec_id ORDER BY sscos DESC NULLS LAST, sscid ASC NULLS LAST
-    ) = 1
-  )
-),
-q3 AS (
-  SELECT sscid,
-         list_transform(CAST(embedding AS DOUBLE[]),
-                        x -> CAST(floor(x * 1000000) AS BIGINT)) AS qe
-  FROM assign3s
-),
-rdims AS (
-  SELECT sscid, i.i AS pos,
-         CAST(floor(CAST(sum(qe[i.i]) AS DOUBLE) / count(*)) AS BIGINT) AS cv
-  FROM q3 CROSS JOIN generate_series(1, 64) AS i(i)
-  GROUP BY sscid, i.i
-),
-refined3 AS (
-  SELECT sscid, list(CAST(cv AS DOUBLE) / 1000000.0 ORDER BY pos ASC) AS remb
-  FROM rdims GROUP BY sscid
-),
-cent3 AS (
-  SELECT s.c3id, s.sscid, r.remb AS ssemb
-  FROM cent3s s JOIN refined3 r ON r.sscid = s.sscid
-),
-assign0 AS (
-  SELECT vec_id, embedding, sscid AS qcid FROM (
-    SELECT a.vec_id, a.embedding, c3.sscid,
-           round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                        c3.ssemb), 4) AS sscos
-    FROM assign2 a JOIN cent3 c3 ON c3.c3id = a.scid
-    QUALIFY row_number() OVER (
-      PARTITION BY a.vec_id ORDER BY sscos DESC NULLS LAST, sscid ASC NULLS LAST
-    ) = 1
-  )
-),
-cellslots AS (
-  SELECT qcid,
-         CASE WHEN count(*) <= {2 * _IVF_TARGET_CELL} THEN 1
-              ELSE LEAST({_IVF_SLOT_BASE - 1},
-                         (count(*) + {_IVF_TARGET_CELL // 2}) // {_IVF_TARGET_CELL})
-         END AS slots
-  FROM assign0 GROUP BY qcid
-),
-assign AS (
-  SELECT a.vec_id, a.embedding,
-         a.qcid * {_IVF_SLOT_BASE} + CASE WHEN s.slots = 1 THEN 0
-           ELSE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 8))::BIGINT % s.slots
-         END AS cid
-  FROM assign0 a JOIN cellslots s USING (qcid)
-)"""
-
-
 @query(
     "q_llm_ann_ivf",
     oracle=f"""
-WITH {_IVF_ASSIGN_CTE},
+WITH {ASSIGN_CTE},
 probes AS (
   SELECT vec_id AS probe_id, embedding AS pe, cid AS pcid FROM assign WHERE vec_id < 5
 )
@@ -918,325 +707,20 @@ def q_llm_ann_ivf(spark, sf_dir):
     is DERIVED from the corpus (k1 = icbrt(n/256) md5-sampled level-1
     centroids; levels 2/3 allocate ~cell/target member seeds per parent;
     the level-3 codebook is Lloyd-refined once and oversized cells are
-    md5-slot-capped — see the module design block), search only the
-    probe's final cell. The scale path for similarity search: assignment
+    md5-slot-capped — see operators/ivf.py), search only the probe's
+    final cell (ann_multiprobe at n_probe = 1). The scale path for similarity search: assignment
     is O(n·(k1+k2+2·k3)) = O(n^{4/3}) total; MEAN final cell ≈ 256 at
     every n by proportional allocation and MAX final cell ≤ ~1.5× target
     by the occupancy cap (r9 probe: max/mean 18.2 → 2.25 at sf10), and
     the ranking join is centroid-keyed, not a cross join."""
     e = load_tables(spark, sf_dir)["embeddings"]
-    return _ivf_search(e)
-
-
-def _ivf_centroids(e):
-    """The derived-k md5-ranked LEVEL-1 centroid sample (cid, cemb) — the
-    broadcastable top of the tree codebook (k1 = max(2, icbrt(n/256)))."""
-    return (
-        e.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb"))
-        .orderBy(
-            F.md5(F.col("cid").cast("string")).asc_nulls_last(),
-            F.col("cid").asc_nulls_last(),
-        )
-        .limit(_ivf_k(e))
-    )
-
-
-def _nearest_wide(vecs, cands, out_id: str, cand_id: str, cand_vec: str,
-                  join_on=None, dim: int = 64, key: str = "vec_id",
-                  broadcast_cands: bool = False):
-    """Per-vector nearest candidate via the wide-codegen argmax idiom.
-
-    WIDE-CODEGEN argmax, not the HOF fold: the round-6 decade probe
-    (SCALE_PROBE_DECADE.md) showed the row-local higher-order-function
-    form going superlinear the moment k grows — lambda HOFs are
-    INTERPRETED expressions, so assignment paid ~µs per (vector,
-    candidate) element instead of codegen arithmetic (42× wall per 10×
-    data). Scores the candidate fan-out with the unpacked
-    left-associative codegen cosine (bit-identical to the HOF fold and
-    DuckDB's list_cosine_similarity), then takes the per-vector argmax
-    as a MAP-COMBINABLE max(struct(cos, -cand_id)) hash aggregate —
-    partial aggregation collapses each vector's candidate rows map-side,
-    the shuffle carries one row per vector, there is no rank window, and
-    ties break exactly like the oracle's cos DESC, id ASC rank (max of
-    -id = min id).
-
-    ``join_on=None`` broadcasts the candidate frame and crosses (level-1:
-    the codebook is always tiny); a join column name makes it a key-keyed
-    join on the PARENT cell id. For keyed joins, ``broadcast_cands``
-    hints a broadcast — the caller gates it on codebook size
-    (_IVF_BCAST_ROWS): at mid scale the parent-key count (k1 or k1·k2)
-    is far below the cluster's task slots, so a shuffling equi-join
-    would cap parallelism at the key count, while the codebook is only
-    KBs; once the codebook outgrows the hint the equi-join takes over
-    with >= sqrt(_IVF_BCAST_ROWS) keys — enough partitions at any n.
-
-    The argmax aggregates on ``key`` ALONE — a narrow unique long — and
-    returns just (key, out_id); callers re-join any wide payload on the
-    key. Grouping must stay HashAggregate-able: carrying the embedding
-    array in the grouping key demotes the plan to SortAggregate (arrays
-    are not hash-agg key types), i.e. TWO full sorts of the n·k scored
-    rows with an array comparator — measured 4x the cost of the scoring
-    itself at the sf10 probe scale (13 s vs ~3 s for level 1)."""
-    from pkg2_spark.operators.similarity import unpack, wide_dot, wide_norm
-
-    ve = vecs.selectExpr(
-        key, *([join_on] if join_on else []), *unpack("embedding", dim, "_v")
-    ).withColumn("_nv", wide_norm("_v", dim))
-    cand_cols = [cand_id] + ([f"{join_on} AS _jk"] if join_on else [])
-    ce = cands.selectExpr(*cand_cols, *unpack(cand_vec, dim, "_c")).withColumn(
-        "_nc", wide_norm("_c", dim)
-    )
-    cos = F.round(wide_dot("_v", "_c", dim) / (F.col("_nv") * F.col("_nc")), 4)
-    if join_on is None:
-        scored = ve.crossJoin(F.broadcast(ce))
-    else:
-        if broadcast_cands:
-            ce = F.broadcast(ce)
-        scored = ve.join(ce, F.col(join_on) == F.col("_jk"))
-    scored = scored.select(
-        key,
-        F.struct(cos.alias("cos"), (-F.col(cand_id)).alias("nid")).alias("sc"),
-    )
-    return scored.groupBy(key).agg(
-        (-F.max("sc")["nid"]).cast("long").alias(out_id)
-    )
-
-
-def _sub_centroids(parent, parent_col: str, out_parent: str, out_id: str,
-                   out_vec: str, target: int):
-    """~cell_size/target md5-ranked member sub-centroid SEEDS per parent
-    cell — PROPORTIONAL allocation (round-half-up, ≥ 1 per parent): a
-    parent twice the size gets twice the children, so expected child-cell
-    size tracks `target` regardless of parent skew. (The r8 fixed
-    per-parent k let final cells inherit the parents' imbalance — max
-    11295 vs mean 1133 at the sf100 probe.) One rank window + one count
-    window over the SAME partition key — a single shuffle, the
-    capped-bands idiom, not a per-candidate window."""
-    w = Window.partitionBy(parent_col).orderBy(
-        F.md5(F.col("vec_id").cast("string")).asc_nulls_last(),
-        F.col("vec_id").asc_nulls_last(),
-    )
-    wc = Window.partitionBy(parent_col)
-    return (
-        parent.withColumn("_rn", F.row_number().over(w))
-        .withColumn("_n", F.count(F.lit(1)).over(wc))
-        .filter(
-            F.col("_rn")
-            <= F.expr(f"greatest(1, (_n + {target // 2}) div {target})")
-        )
-        .select(
-            F.col(parent_col).alias(out_parent),
-            F.col("vec_id").alias(out_id),
-            F.col("embedding").alias(out_vec),
-        )
-    )
-
-
-def _ivf_tree(e):
-    """The three-level quantizer pipeline, MEMOIZED per (session, corpus):
-    (cents, assign1, cent2, assign2, cent3, assign); see _build_ivf_index."""
-    return _ivf_index(e)[0]
-
-
-def _ivf_index(e):
-    """(tree, (level-2, level-3) codebook sizes) for the corpus: one
-    session.plan_memo entry, so a failed build stores nothing."""
-    return plan_memo(e, "ivf_tree", lambda: _build_ivf_index(e))
-
-
-def _ivf_slots():
-    """Occupancy-cap slot count of a quantizer cell holding `_cn` members:
-    1 up to 2× target, else ~_cn/target (at most _IVF_SLOT_BASE - 1)."""
-    c = _IVF_TARGET_CELL
-    return F.when(F.col("_cn") <= 2 * c, F.lit(1)).otherwise(
-        F.least(
-            F.lit(_IVF_SLOT_BASE - 1),
-            F.expr(f"(_cn + {c // 2}) div {c}"),
-        )
-    ).cast("long")
-
-
-def _build_ivf_index(e):
-    """Builds the _ivf_index pair. The tree is
-    (cents, assign1, cent2, assign2, cent3, assign) where `cent3`
-    is the Lloyd-REFINED level-3 codebook (c3id = parent level-2 cell,
-    sscid = quantizer cell id, ssemb = refined centroid as array<double>)
-    and `assign` carries the FINAL (vec_id, embedding, cid) labeling with
-    cid = sscid × _IVF_SLOT_BASE + occupancy slot (see the module design
-    block: proportional seed allocation → one Lloyd step → md5-slot cap).
-
-    Level 1 is the broadcast k1-codebook argmax; levels 2/3 allocate
-    ~cell/target md5-ranked member seeds per parent and re-assign members
-    within their cell via the parent-keyed join (broadcast while the
-    codebook is ≤ _IVF_BCAST_ROWS — see _nearest_wide; gated on the
-    COUNTED codebook size since allocation is data-proportional). The
-    level-3 seed assignment is recentered once (integer-micro means — the
-    q_llm_ivf_refine dataflow, exact under any partition summation order)
-    and members re-assigned against the refined codebook; cells above
-    2× target are md5-slot-split so max final cell is bounded at ~1.5×
-    target regardless of data geometry. Each corpus-sized frame's lineage is
-    truncated (session.truncate_lineage — localCheckpoint locally,
-    reliable checkpoint when a dir is set), and through the memo
-    ann_ivf / ann_recall / ann_mprobe / ann_tune / semdedup / ivfpq /
-    ivf_incr over the same corpus in a session share ONE construction
-    instead of each re-paying the n·(k1+k2+2·k3) scoring passes."""
-    k12, _k3 = _ivf_ks(e)
-    c = _IVF_TARGET_CELL
-    cents = _ivf_centroids(e)
-    ev = e.select("vec_id", "embedding")
-    a1 = ev.join(
-        _nearest_wide(ev, cents, out_id="cid", cand_id="cid", cand_vec="cemb"),
-        "vec_id",
-    ).transform(truncate_lineage)
-    cent2 = _sub_centroids(a1, "cid", "c2id", "scid", "semb", c * k12)
-    n2 = cent2.count()
-    a2 = a1.select("vec_id", "embedding").join(
-        _nearest_wide(
-            a1.withColumnRenamed("cid", "c2id"), cent2, out_id="scid",
-            cand_id="scid", cand_vec="semb", join_on="c2id",
-            broadcast_cands=n2 <= _IVF_BCAST_ROWS,
-        ),
-        "vec_id",
-    ).transform(truncate_lineage)
-    cent3s = _sub_centroids(a2, "scid", "c3id", "sscid", "ssemb", c)
-    n3 = cent3s.count()
-    bc3 = n3 <= _IVF_BCAST_ROWS
-    a3s = a2.join(
-        _nearest_wide(
-            a2.withColumnRenamed("scid", "c3id"), cent3s, out_id="sscid",
-            cand_id="sscid", cand_vec="ssemb", join_on="c3id",
-            broadcast_cands=bc3,
-        ),
-        "vec_id",
-    )
-    # ONE Lloyd step over the seed assignment: per-(cell, dim)
-    # integer-micro mean (map-combinable hash agg; exact in doubles —
-    # |sum| ≤ n_cell·2e6 ≪ 2^53), re-packed per cell, scaled back to raw
-    # units by an exact-IEEE /1e6. Seeds that attracted no member (a
-    # rounding tie handed their self-assignment to a sibling) drop out.
-    q3 = a3s.select(
-        "sscid",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * F.lit(1000000.0)).cast("long"),
-        ).alias("qe"),
-    )
-    rdims = (
-        q3.select("sscid", F.posexplode("qe").alias("pos", "v"))
-        .groupBy("sscid", "pos")
-        .agg(
-            F.floor(F.sum("v").cast("double") / F.count(F.lit(1)))
-            .cast("long")
-            .alias("cv")
-        )
-    )
-    refined3 = rdims.groupBy("sscid").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("pos", "cv"))),
-            lambda s: s["cv"].cast("double") / F.lit(1000000.0),
-        ).alias("remb")
-    )
-    cent3 = (
-        cent3s.select("c3id", "sscid")
-        .join(refined3, "sscid")
-        .select("c3id", "sscid", F.col("remb").alias("ssemb"))
-        .transform(truncate_lineage)
-    )
-    a0 = a2.select("vec_id", "embedding").join(
-        _nearest_wide(
-            a2.withColumnRenamed("scid", "c3id"), cent3, out_id="qcid",
-            cand_id="sscid", cand_vec="ssemb", join_on="c3id",
-            broadcast_cands=bc3,
-        ),
-        "vec_id",
-    )
-    # Occupancy cap: one qcid-keyed count window (no extra agg+join pass)
-    # → slot = hex32(md5(vec_id)) mod slots for cells above 2× target.
-    wq = Window.partitionBy("qcid")
-    slot = F.when(F.col("_slots") == 1, F.lit(0).cast("long")).otherwise(
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % F.col("_slots")
-    )
-    assign = (
-        a0.withColumn("_cn", F.count(F.lit(1)).over(wq))
-        .withColumn("_slots", _ivf_slots())
-        .select(
-            "vec_id",
-            "embedding",
-            (F.col("qcid") * _IVF_SLOT_BASE + slot).cast("long").alias("cid"),
-        )
-        .transform(truncate_lineage)
-    )
-    return (cents, a1, cent2, a2, cent3, assign), (n2, n3)
-
-
-def _ivf_sizes(e) -> tuple[int, int]:
-    """(level-2, level-3) codebook row counts for the corpus — the
-    broadcast-gating inputs (allocation is data-proportional, so sizes
-    are measured at construction, not derived from k)."""
-    return _ivf_index(e)[1]
-
-
-def _ivf_cellslots(e):
-    """Quantizer-cell → slot-count map (qcid, slots), derived from the
-    final assignment (grouping by cid div _IVF_SLOT_BASE recovers exactly
-    the per-quantizer-cell occupancy the cap was computed from).
-    Multi-probe search joins its beam against it to route each probe to
-    a slot of a foreign cell. Checkpointed in an entry of its own, not
-    with the tree: only multi-probe reads it, and even a lazy checkpoint
-    runs the aggregate's shuffle stage at build (measured: +1 job on
-    every tree build)."""
-    return plan_memo(
-        e,
-        "ivf_cellslots",
-        lambda: _ivf_tree(e)[5]
-        .groupBy(F.expr(f"cid div {_IVF_SLOT_BASE}").alias("qcid"))
-        .agg(F.count(F.lit(1)).alias("_cn"))
-        .select("qcid", _ivf_slots().alias("slots"))
-        .transform(truncate_lineage),
-    )
-
-
-def _ivf_assign(e):
-    """Final three-level cell labeling (vec_id, embedding, cid) — see
-    _ivf_tree for the structure and the module header for the design
-    (proportional allocation keeps MEAN final cell ≈ 256 at every n; the
-    Lloyd step balances dense regions; the md5-slot cap bounds MAX at
-    ~1.5× target). Checkpointed + memoized: repeated calls on the same
-    corpus return the same materialized frame."""
-    return _ivf_tree(e)[5]
-
-
-def _ivf_search(e, n_probes: int = 5, k: int = 5):
-    """The q_llm_ann_ivf pipeline as a reusable operator (also consumed by
-    q_llm_ann_recall): derived-k hash-sampled centroid tree → assignment →
-    probe-cell ranking. The assignment is checkpointed + memoized in
-    _ivf_tree: probes and candidates both read it, and every IVF-family
-    query on the corpus reuses the paid scoring crosses."""
-    assign = _ivf_assign(e)
-    probes = assign.filter(F.col("vec_id") < n_probes).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pe"), F.col("cid").alias("pcid")
-    )
-    cands = probes.join(
-        assign, (F.col("cid") == F.col("pcid")) & (F.col("vec_id") != F.col("probe_id"))
-    ).select(
-        "probe_id",
-        F.col("pcid").alias("cell"),
-        "vec_id",
-        cosine4(F.col("pe"), F.col("embedding")).alias("cos"),
-    )
-    w_rank = Window.partitionBy("probe_id").orderBy(
-        F.col("cos").desc_nulls_last(), F.col("vec_id").asc_nulls_last()
-    )
-    return cands.withColumn("rn", F.row_number().over(w_rank)).filter(F.col("rn") <= k).drop("rn")
+    return ann_multiprobe(e, n_probe=1)
 
 
 @query(
     "q_llm_semdedup",
     oracle=f"""
-WITH RECURSIVE {_IVF_ASSIGN_CTE},
+WITH RECURSIVE {ASSIGN_CTE},
 cbands AS (
   SELECT vec_id, cid FROM assign
   QUALIFY row_number() OVER (
@@ -1294,11 +778,11 @@ def q_llm_semdedup(spark, sf_dir):
     from pkg2_spark.operators.similarity import cosine_on_pairs
 
     e = load_tables(spark, sf_dir)["embeddings"]
-    # _ivf_assign is checkpointed + memoized (see _ivf_tree): the band
+    # The assignment is checkpointed + memoized (ivf.tree): the band
     # self-join's two sides and every contraction round all read the same
     # materialized label frame, and the n·(k1+k2+k3) scoring cross is
     # shared with the other IVF-family queries on this corpus.
-    assign = _ivf_assign(e).select("vec_id", "cid")
+    assign = tree(e).assign.select("vec_id", "cid")
     bands = assign.select(
         "vec_id",
         F.lit(0).alias("band_id"),
@@ -1716,22 +1200,8 @@ def q_llm_minhash_est(spark, sf_dir):
     d = load_tables(spark, sf_dir)["documents"]
     sig = minhash_signatures(tokenize_distinct(d), _K).transform(truncate_lineage)
     bands = lsh_bands(sig, _K, _BANDS_R)
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("band_id").alias("bid2"),
-        F.col("band_key").alias("bkey2"),
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("band_id") == F.col("bid2"))
-            & (F.col("band_key") == F.col("bkey2"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
-        .filter((F.col("doc_a") % 5 == 0) & (F.col("doc_b") % 2 == 0))
-        .select("doc_a", "doc_b")
-        .distinct()
+    cand = banded_pairs(bands, "doc_id", "doc_a", "doc_b").filter(
+        (F.col("doc_a") % 5 == 0) & (F.col("doc_b") % 2 == 0)
     )
     # r14 (guide §2.5): AQE coalesces the distinct's exchange by BYTES, but
     # each surviving pair row fans into an array_intersect over the full
@@ -1769,7 +1239,7 @@ def q_llm_minhash_est(spark, sf_dir):
 @query(
     "q_llm_ann_recall",
     oracle=f"""
-WITH {_IVF_ASSIGN_CTE},
+WITH {ASSIGN_CTE},
 iprobes AS (
   SELECT vec_id AS probe_id, embedding AS pe, cid AS pcid FROM assign WHERE vec_id < 5
 ),
@@ -1813,7 +1283,7 @@ def q_llm_ann_recall(spark, sf_dir):
     until recall clears the bar).
 
     Both arms are the engine's own operators (knn_bruteforce and
-    _ivf_search), joined on (probe_id, vec_id); the oracle recomputes both
+    single-probe ann_multiprobe), joined on (probe_id, vec_id); the oracle recomputes both
     arms in SQL. Linear in corpus size per arm; the comparison itself is a
     k-row-per-probe join."""
     e = load_tables(spark, sf_dir)["embeddings"]
@@ -1823,7 +1293,11 @@ def q_llm_ann_recall(spark, sf_dir):
     exact = knn_bruteforce(e.select("vec_id", "embedding"), probes, k=5, dim=64).select(
         "probe_id", "vec_id"
     )
-    ivf = _ivf_search(e).select("probe_id", "vec_id").withColumn("__hit", F.lit(1))
+    ivf = (
+        ann_multiprobe(e, n_probe=1)
+        .select("probe_id", "vec_id")
+        .withColumn("__hit", F.lit(1))
+    )
     return (
         exact.join(ivf, ["probe_id", "vec_id"], "left")
         .groupBy("probe_id")
@@ -1842,7 +1316,7 @@ WITH seeds AS (
   SELECT vec_id AS cid, embedding AS cemb FROM embeddings
   QUALIFY row_number() OVER (
     ORDER BY md5(CAST(vec_id AS VARCHAR)) ASC NULLS LAST, vec_id ASC NULLS LAST
-  ) <= {_IVF_K12_SQL}
+  ) <= {K12_SQL}
 ),
 q AS (
   SELECT vec_id,
@@ -1903,18 +1377,19 @@ def q_llm_ivf_refine(spark, sf_dir):
     refined centroids, and report per-seed-cell membership before/after
     plus the first two refined components. A production deployment
     iterates exactly this dataflow until the balance converges, then
-    feeds the refined codebook to _ivf_tree.
+    feeds the refined codebook to the tree (operators/ivf.py).
 
     Scale shape: seed scoring and re-assignment are the wide-codegen
-    broadcast argmax (`_nearest_wide` — k1 = icbrt(n/256) rows is always
+    broadcast argmax (`ivf.nearest` — k1 = icbrt(n/256) rows is always
     broadcastable); the recenter is posexplode -> ONE map-combinable hash
     agg on (cid, pos) (64·k1 reduce keys, the heavy summing happens
     map-side) -> collect_list re-pack of k1 arrays. Micro-unit cosines
     stay exact in doubles: |dot| <= 64·(2e6)^2 ≈ 2.6e14 < 2^53."""
     e = load_tables(spark, sf_dir)["embeddings"]
-    seeds = _ivf_centroids(e)
+    seeds = centroids(e)
+    dim = shape(e).dim
     ev = e.select("vec_id", "embedding")
-    a1 = _nearest_wide(ev, seeds, out_id="cid", cand_id="cid", cand_vec="cemb")
+    a1 = nearest(ev, seeds, "cid", "cid", "cemb", dim=dim)
     qe = F.transform(
         F.col("embedding").cast("array<double>"),
         lambda x: F.floor(x * F.lit(1000000.0)).cast("long"),
@@ -1947,7 +1422,7 @@ def q_llm_ivf_refine(spark, sf_dir):
     rcands = refined.select(
         "cid", F.transform("rc", lambda x: x.cast("double")).alias("rcemb")
     )
-    a2 = _nearest_wide(qd, rcands, out_id="cid", cand_id="cid", cand_vec="rcemb")
+    a2 = nearest(qd, rcands, "cid", "cid", "rcemb", dim=dim)
     c1 = a1.groupBy("cid").agg(F.count(F.lit(1)).alias("n1"))
     c2 = a2.groupBy("cid").agg(F.count(F.lit(1)).alias("n2"))
     rsel = refined.select(
@@ -2673,56 +2148,16 @@ def q_llm_dedup_compact(spark, sf_dir):
 @query(
     "q_llm_ann_mprobe",
     oracle=f"""
-WITH {_IVF_ASSIGN_CTE},
-probes AS (
-  SELECT vec_id AS probe_id, embedding AS pe FROM embeddings WHERE vec_id < 5
-),
-pcells1 AS (
-  SELECT probe_id, pe, cid,
-         round(list_cosine_similarity(CAST(pe AS DOUBLE[]),
-                                      CAST(cemb AS DOUBLE[])), 4) AS pcos
-  FROM probes CROSS JOIN cent
-  QUALIFY row_number() OVER (
-    PARTITION BY probe_id ORDER BY pcos DESC NULLS LAST, cid ASC NULLS LAST
-  ) <= 3
-),
-pcells2 AS (
-  SELECT probe_id, pe, scid,
-         round(list_cosine_similarity(CAST(pe AS DOUBLE[]),
-                                      CAST(semb AS DOUBLE[])), 4) AS scos
-  FROM pcells1 JOIN cent2 ON cent2.c2id = pcells1.cid
-  QUALIFY row_number() OVER (
-    PARTITION BY probe_id ORDER BY scos DESC NULLS LAST, scid ASC NULLS LAST
-  ) <= 3
-),
-pcells AS (
-  SELECT probe_id, pe, sscid AS qcell,
-         round(list_cosine_similarity(CAST(pe AS DOUBLE[]), ssemb), 4) AS sscos
-  FROM pcells2 JOIN cent3 ON cent3.c3id = pcells2.scid
-  QUALIFY row_number() OVER (
-    PARTITION BY probe_id ORDER BY sscos DESC NULLS LAST, sscid ASC NULLS LAST
-  ) <= 3
-),
-slotted AS (
-  SELECT probe_id, pe, qcell, sscos, slots,
-         unnest(generate_series(0, slots - 1)) AS slot,
-         ('0x' || substr(md5(CAST(probe_id AS VARCHAR)), 1, 8))::BIGINT
-           % slots AS pslot
-  FROM (SELECT pc.probe_id, pc.pe, pc.qcell, pc.sscos, cs.slots
-        FROM pcells pc JOIN cellslots cs ON cs.qcid = pc.qcell)
-),
-own AS (
-  SELECT vec_id AS probe_id, embedding AS pe, cid AS cell
-  FROM assign WHERE vec_id < 5
-),
+WITH {ASSIGN_CTE},
+{beam_cte(3)},
 beam2 AS (
-  SELECT s.probe_id, s.pe, s.qcell * {_IVF_SLOT_BASE} + s.slot AS cell,
+  SELECT s.probe_id, s.pe, s.qcell * {SLOT_BASE} + s.slot AS cell,
          s.sscos, s.qcell, s.slot, s.pslot
   FROM slotted s
   WHERE NOT EXISTS (
     SELECT 1 FROM own o
     WHERE o.probe_id = s.probe_id
-      AND o.cell = s.qcell * {_IVF_SLOT_BASE} + s.slot
+      AND o.cell = s.qcell * {SLOT_BASE} + s.slot
   )
   QUALIFY row_number() OVER (
     PARTITION BY s.probe_id
@@ -2763,268 +2198,29 @@ def q_llm_ann_mprobe(spark, sf_dir):
     n_probe stays THE recall lever (recall lost at cell boundaries comes
     back at 3× the candidate cost) — tests/test_operators.py asserts
     multi-probe recall@5 >= single-probe recall@5 in aggregate.
-    Implemented by ann_multiprobe (r10): the beam width is a parameter
-    there (and an Engine.ann_search knob); this registered query pins
-    the served default n_probe = descent = 3, oracle-mirrored.
+    Implemented by operators/ivf.py::ann_multiprobe (r10): the beam width
+    is a parameter there (and an Engine.ann_search knob); this registered
+    query pins the served default n_probe = descent = 3, oracle-mirrored.
 
     Plan shape: level-1 scoring is a 5×k1 broadcast cross; each beam
     descent joins ≤15 probe rows against the parent-keyed sub-codebook;
     candidate ranking is the cell-keyed equi-join against the
-    checkpointed+memoized final assignment (shared with _ivf_search);
+    checkpointed+memoized final assignment (shared with q_llm_ann_ivf);
     the only rank windows partition by probe_id over bounded candidate
     sets."""
     e = load_tables(spark, sf_dir)["embeddings"]
     return ann_multiprobe(e)
 
 
-def ann_multiprobe(e, n_probe: int = 3, descent: int | None = None,
-                   n_queries: int = 5, k: int = 5, probes=None,
-                   return_cell_rank: bool = False):
-    """Parameterized multi-probe IVF search — q_llm_ann_mprobe's engine
-    with the beam width exposed as THE recall/latency knob (r9 verdict
-    task #1: n_probe was hard-coded at 3; a user tuning an index needs
-    the recall-vs-n_probe curve, measured in
-    scripts/scale_probe_decade.py's recall table and summarized in
-    SCALING.md).
-
-    - `n_probe`: how many FINAL slot-cells each query scans — the
-      probe's own assigned cell (always, rank 0) plus the top
-      (n_probe - 1) beam cells. This is the cost driver: per-probe scan
-      ≈ n_probe × ~1.5× target cell. n_probe = 1 degenerates to exactly
-      single-probe search (own cell only — q_llm_ann_ivf's semantics).
-    - `descent`: beam width at each TREE level (top-`descent` level-1
-      cells → top-`descent` level-2 cells → top-`descent` final
-      quantizer cells are RANKED; n_probe then takes a prefix).
-      Defaults to n_probe (the registered q_llm_ann_mprobe shape:
-      descent = n_probe = 3). Descent cost is tiny (≤ n_queries ×
-      descent × per-level codebook-slice joins), so callers comparing
-      several n_probe values should PIN descent at their max n_probe:
-      with a fixed descent the ranked slot-cell list is identical
-      across calls and beam(n) ⊆ beam(n′) for n ≤ n′ holds by
-      construction — recall@k is structurally monotone in n_probe
-      (pinned by tests/test_operators.py).
-    - `probes`: an EXPLICIT query DataFrame — (probe_id,
-      probe_embedding), knn_bruteforce's convention (vec_id/embedding
-      accepted too). This is the external-search entry point (r10
-      advice: the self-probe default cannot answer queries from outside
-      the corpus): external probes have no assigned "own" cell, so their
-      candidate cells are the top-n_probe beam slot-cells from the
-      descent ranking, and no self-id exclusion applies (probe ids live
-      in their own namespace). probes=None keeps the self-probe
-      diagnostic shape (vec_id < n_queries of the corpus itself, own
-      cell always searched) that the registered queries and the recall
-      audits pin.
-    """
-    if n_probe < 1:
-        raise ValueError("n_probe must be >= 1")
-    descent = n_probe if descent is None else descent
-    if descent < n_probe:
-        raise ValueError("descent beam must be >= n_probe")
-    cents, _a1, cent2, _a2, cent3, assign = _ivf_tree(e)
-    if probes is None:
-        pr = e.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pe")
-        )
-    else:
-        cols = set(probes.columns)
-        pid = "probe_id" if "probe_id" in cols else "vec_id"
-        pvec = next(
-            c for c in ("probe_embedding", "pe", "embedding") if c in cols
-        )
-        pr = probes.select(F.col(pid).alias("probe_id"), F.col(pvec).alias("pe"))
-    probes_df = pr
-    w_cell = Window.partitionBy("probe_id").orderBy(
-        F.col("pcos").desc_nulls_last(), F.col("cid").asc_nulls_last()
-    )
-    pcells1 = (
-        probes_df.crossJoin(F.broadcast(cents))
-        .select(
-            "probe_id", "pe", "cid",
-            cosine4(F.col("pe"), F.col("cemb")).alias("pcos"),
-        )
-        .withColumn("prn", F.row_number().over(w_cell))
-        .filter(F.col("prn") <= descent)
-        .drop("prn", "pcos")
-    )
-    w_sub = Window.partitionBy("probe_id").orderBy(
-        F.col("scos").desc_nulls_last(), F.col("scid").asc_nulls_last()
-    )
-    pcells2 = (
-        F.broadcast(pcells1).join(cent2, F.col("c2id") == F.col("cid"))
-        .select(
-            "probe_id", "pe", "scid",
-            cosine4(F.col("pe"), F.col("semb")).alias("scos"),
-        )
-        .withColumn("srn", F.row_number().over(w_sub))
-        .filter(F.col("srn") <= descent)
-        .drop("srn", "scos")
-    )
-    w_sub3 = Window.partitionBy("probe_id").orderBy(
-        F.col("sscos").desc_nulls_last(), F.col("qcell").asc_nulls_last()
-    )
-    pcells = (
-        F.broadcast(pcells2).join(cent3, F.col("c3id") == F.col("scid"))
-        .select(
-            "probe_id", "pe",
-            F.col("sscid").alias("qcell"),
-            cosine4(F.col("pe"), F.col("ssemb")).alias("sscos"),
-        )
-        .withColumn("ssrn", F.row_number().over(w_sub3))
-        .filter(F.col("ssrn") <= descent)
-        .drop("ssrn")
-    )
-    # The occupancy cap makes SLOTS the true final cells, so the beam is
-    # over slot-cells — and the probe's OWN assigned cell is ALWAYS
-    # searched (rank 0), with the top-2 remaining slot-cells beside it.
-    # Both halves matter, measured at the sf10 replica corpus: routing
-    # each beamed cell to one md5 slot let the probe's own slot lose the
-    # draw (multi 0.64 < single 0.84), and ranking ties at round-4 cosine
-    # across near-identical refined centroids broke toward min cell id,
-    # pushing the ASSIGNED cell out of the beam entirely. Own-cell-first
-    # is the production IVF posture (the nearest list is always scanned;
-    # n_probe extends it) and makes multi-probe's candidate set a strict
-    # superset of single-probe's — recall >= single structurally.
-    # Slot-cell ranking: centroid cos DESC, cell ASC, probe's own md5
-    # slot first, slot ASC — deterministic, oracle-mirrored.
-    cs = _ivf_cellslots(e)
-    own = assign.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("pe"),
-        F.col("cid").alias("cell"),
-    ) if probes is None else None
-    slotted = (
-        F.broadcast(pcells).join(cs, F.col("qcid") == F.col("qcell"))
-        .select(
-            "probe_id", "pe", "qcell", "sscos", "slots",
-            F.explode(
-                F.sequence(F.lit(0).cast("long"), F.col("slots") - 1)
-            ).alias("slot"),
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.col("probe_id").cast("string")), 1, 8
-                    ),
-                    16, 10,
-                ).cast("long")
-                % F.col("slots")
-            ).alias("pslot"),
-        )
-        .withColumn(
-            "cell",
-            (F.col("qcell") * _IVF_SLOT_BASE + F.col("slot")).cast("long"),
-        )
-    )
-    w_slot = Window.partitionBy("probe_id").orderBy(
-        F.col("sscos").desc_nulls_last(),
-        F.col("qcell").asc_nulls_last(),
-        F.when(F.col("slot") == F.col("pslot"), F.lit(0)).otherwise(F.lit(1)).asc(),
-        F.col("slot").asc_nulls_last(),
-    )
-    # Tuning entry (r14): when asked, carry each candidate's slot-cell
-    # beam rank (own cell = 0, beam cells = 1..n_probe-1 in w_slot order;
-    # external probes = 1..n_probe). With descent pinned, a narrower
-    # width n's candidate set is exactly _crank < n (self-probe) — a
-    # recall sweep can score every width from ONE descent + ONE
-    # cell-keyed candidate join instead of re-running the pipeline per
-    # width. The column is added only on request: the serving path keeps
-    # its leaner plan (adding it unconditionally measured +0.7 s on
-    # q_llm_ann_mprobe).
-    rank_cols = [F.col("srn").alias("_crank")] if return_cell_rank else []
-    if probes is None:
-        beam2 = (
-            slotted.join(
-                own.select(F.col("probe_id").alias("o_pid"), F.col("cell").alias("o_cell")),
-                (F.col("probe_id") == F.col("o_pid")) & (F.col("cell") == F.col("o_cell")),
-                "left_anti",
-            )
-            .withColumn("srn", F.row_number().over(w_slot))
-            .filter(F.col("srn") <= n_probe - 1)
-            .select("probe_id", "pe", "cell", *rank_cols)
-        )
-        own_side = (
-            own.withColumn("_crank", F.lit(0)) if return_cell_rank else own
-        )
-        pcands = own_side.unionByName(beam2)
-        cand_cond = (F.col("cid") == F.col("cell")) & (
-            F.col("vec_id") != F.col("probe_id")
-        )
-    else:
-        # External probes: no own cell to anchor on — the full n_probe
-        # budget goes to the beam's top-ranked slot-cells, and corpus
-        # members are never self-excluded (the probe id namespace is the
-        # caller's, not the corpus's).
-        pcands = (
-            slotted.withColumn("srn", F.row_number().over(w_slot))
-            .filter(F.col("srn") <= n_probe)
-            .select("probe_id", "pe", "cell", *rank_cols)
-        )
-        cand_cond = F.col("cid") == F.col("cell")
-    cands = pcands.join(assign, cand_cond).select(
-        "probe_id", "cell", "vec_id",
-        cosine4(F.col("pe"), F.col("embedding")).alias("cos"),
-        *(["_crank"] if return_cell_rank else []),
-    )
-    if return_cell_rank:
-        return cands
-    w_rank = Window.partitionBy("probe_id").orderBy(
-        F.col("cos").desc_nulls_last(), F.col("vec_id").asc_nulls_last()
-    )
-    return (
-        cands.withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
 @query(
     "q_llm_ann_tune",
     oracle=f"""
-WITH {_IVF_ASSIGN_CTE},
-probes AS (
-  SELECT vec_id AS probe_id, embedding AS pe FROM embeddings WHERE vec_id < 5
-),
-pcells1 AS (
-  SELECT probe_id, pe, cid,
-         round(list_cosine_similarity(CAST(pe AS DOUBLE[]),
-                                      CAST(cemb AS DOUBLE[])), 4) AS pcos
-  FROM probes CROSS JOIN cent
-  QUALIFY row_number() OVER (
-    PARTITION BY probe_id ORDER BY pcos DESC NULLS LAST, cid ASC NULLS LAST
-  ) <= 8
-),
-pcells2 AS (
-  SELECT probe_id, pe, scid,
-         round(list_cosine_similarity(CAST(pe AS DOUBLE[]),
-                                      CAST(semb AS DOUBLE[])), 4) AS scos
-  FROM pcells1 JOIN cent2 ON cent2.c2id = pcells1.cid
-  QUALIFY row_number() OVER (
-    PARTITION BY probe_id ORDER BY scos DESC NULLS LAST, scid ASC NULLS LAST
-  ) <= 8
-),
-pcells AS (
-  SELECT probe_id, pe, sscid AS qcell,
-         round(list_cosine_similarity(CAST(pe AS DOUBLE[]), ssemb), 4) AS sscos
-  FROM pcells2 JOIN cent3 ON cent3.c3id = pcells2.scid
-  QUALIFY row_number() OVER (
-    PARTITION BY probe_id ORDER BY sscos DESC NULLS LAST, sscid ASC NULLS LAST
-  ) <= 8
-),
-slotted AS (
-  SELECT probe_id, pe, qcell, sscos, slots,
-         unnest(generate_series(0, slots - 1)) AS slot,
-         ('0x' || substr(md5(CAST(probe_id AS VARCHAR)), 1, 8))::BIGINT
-           % slots AS pslot
-  FROM (SELECT pc.probe_id, pc.pe, pc.qcell, pc.sscos, cs.slots
-        FROM pcells pc JOIN cellslots cs ON cs.qcid = pc.qcell)
-),
-own AS (
-  SELECT vec_id AS probe_id, embedding AS pe, cid AS cell
-  FROM assign WHERE vec_id < 5
-),
+WITH {ASSIGN_CTE},
+{beam_cte(8)},
 beamranked AS (
   SELECT probe_id, pe, cell, srn FROM (
     SELECT s.probe_id, s.pe,
-           s.qcell * {_IVF_SLOT_BASE} + s.slot AS cell,
+           s.qcell * {SLOT_BASE} + s.slot AS cell,
            row_number() OVER (
              PARTITION BY s.probe_id
              ORDER BY s.sscos DESC NULLS LAST, s.qcell ASC NULLS LAST,
@@ -3035,7 +2231,7 @@ beamranked AS (
     WHERE NOT EXISTS (
       SELECT 1 FROM own o
       WHERE o.probe_id = s.probe_id
-        AND o.cell = s.qcell * {_IVF_SLOT_BASE} + s.slot
+        AND o.cell = s.qcell * {SLOT_BASE} + s.slot
     )
   ) WHERE srn <= 7
 ),

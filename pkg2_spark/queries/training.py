@@ -28,6 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from pkg2_spark.catalog import load_tables
+from pkg2_spark.operators.ivf import ASSIGN_CTE, SLOT_BASE, descend, descend_cte, tree
 from pkg2_spark.operators.text import tokens_col
 from pkg2_spark.registry import query
 from pkg2_spark.session import truncate_lineage_lazy
@@ -576,17 +577,14 @@ _RES_D2_SQL = """list_aggregate(list_transform(generate_series(1, 8),
 
 
 def _ivfpq_oracle() -> str:
-    from pkg2_spark.queries.llm import _IVF_ASSIGN_CTE, _IVF_SLOT_BASE
-
-    _IVF_SLOT_BASE_SQL = _IVF_SLOT_BASE
     return f"""
-WITH {_IVF_ASSIGN_CTE},
+WITH {ASSIGN_CTE},
 withres AS (
   SELECT a.vec_id, a.cid,
          list_transform(generate_series(1, 64),
            i -> CAST(a.embedding[CAST(i AS INTEGER)] AS DOUBLE)
               - c3.ssemb[CAST(i AS INTEGER)]) AS res
-  FROM assign a JOIN cent3 c3 ON c3.sscid = a.cid // {_IVF_SLOT_BASE_SQL}
+  FROM assign a JOIN cent3 c3 ON c3.sscid = a.cid // {SLOT_BASE}
 ),
 cb AS (
   SELECT row_number() OVER (
@@ -680,16 +678,14 @@ def q_vec_ivfpq(spark, sf_dir):
     as DuckDB's list_aggregate sum, codebook positions are the md5-rank
     shared with q_vec_pq/q_vec_adc, and argmin tie-breaks use strict-<
     over ascending pos — bit-identical codes, LUTs, and ADC sums."""
-    from pkg2_spark.queries.llm import _IVF_SLOT_BASE, _ivf_tree
-
     e = load_tables(spark, sf_dir)["embeddings"]
-    _cents, _a1, _cent2, _a2, cent3, assign = _ivf_tree(e)
+    t = tree(e)
     # Residuals vs the REFINED quantizer centroid (cent3.ssemb, already
     # double) — slots of one quantizer cell share its centroid, so the
     # lookup keys on cid div slot-base.
-    ce = cent3.select(F.col("sscid").alias("qcid"), F.col("ssemb").alias("cemb"))
+    ce = t.cent3.select(F.col("sscid").alias("qcid"), F.col("ssemb").alias("cemb"))
     withres = (
-        assign.withColumn("qcid", F.expr(f"cid div {_IVF_SLOT_BASE}"))
+        t.assign.withColumn("qcid", F.expr(f"cid div {SLOT_BASE}"))
         .join(ce, "qcid")
         .select(
             "vec_id",
@@ -811,7 +807,7 @@ def q_kmeans_step(spark, sf_dir):
     # (centroids = vec_id < 8): the builder of the constant-k centroid
     # tables q_llm_ann_ivf searches against. Scale shape: the k=8 codebook
     # is collected into ONE broadcast array row and the argmin folds over
-    # it ROW-LOCALLY (the q_vec_pq/_ivf_assign idiom — strict < keeps the
+    # it ROW-LOCALLY (the q_vec_pq/IVF-assign idiom — strict < keeps the
     # lowest cid on ties, identical to the oracle's dist ASC, cid ASC
     # rank), so assignment runs at scan speed with no n·k row explosion
     # and no per-vector rank-window shuffle; recenter is one hash-agg —
@@ -2811,48 +2807,13 @@ def q_llm_nb_langid(spark, sf_dir):
 
 
 def _ivf_incr_oracle() -> str:
-    from pkg2_spark.queries.llm import _IVF_ASSIGN_CTE, _IVF_SLOT_BASE
-
-    _IVF_SLOT_BASE_SQL = _IVF_SLOT_BASE
-    base_cte = _IVF_ASSIGN_CTE.replace("embeddings", "base")
+    base_cte = ASSIGN_CTE.replace("embeddings", "base")
     return f"""
 WITH base AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 0),
 delta AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 = 0),
 {base_cte},
-d1 AS (
-  SELECT vec_id, embedding, cid FROM (
-    SELECT d.vec_id, d.embedding, c.cid,
-           round(list_cosine_similarity(CAST(d.embedding AS DOUBLE[]),
-                                        CAST(c.cemb AS DOUBLE[])), 4) AS ccos
-    FROM delta d CROSS JOIN cent c
-    QUALIFY row_number() OVER (
-      PARTITION BY d.vec_id ORDER BY ccos DESC NULLS LAST, c.cid ASC NULLS LAST
-    ) = 1
-  )
-),
-d2 AS (
-  SELECT vec_id, embedding, scid FROM (
-    SELECT a.vec_id, a.embedding, c2.scid,
-           round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                        CAST(c2.semb AS DOUBLE[])), 4) AS scos
-    FROM d1 a JOIN cent2 c2 ON c2.c2id = a.cid
-    QUALIFY row_number() OVER (
-      PARTITION BY a.vec_id ORDER BY scos DESC NULLS LAST, scid ASC NULLS LAST
-    ) = 1
-  )
-),
-d3 AS (
-  SELECT vec_id, sscid AS cid FROM (
-    SELECT a.vec_id, c3.sscid,
-           round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                        CAST(c3.ssemb AS DOUBLE[])), 4) AS sscos
-    FROM d2 a JOIN cent3 c3 ON c3.c3id = a.scid
-    QUALIFY row_number() OVER (
-      PARTITION BY a.vec_id ORDER BY sscos DESC NULLS LAST, sscid ASC NULLS LAST
-    ) = 1
-  )
-),
-bc AS (SELECT cid // {_IVF_SLOT_BASE_SQL} AS cid, CAST(count(*) AS BIGINT) AS n_base
+{descend_cte('delta')},
+bc AS (SELECT cid // {SLOT_BASE} AS cid, CAST(count(*) AS BIGINT) AS n_base
        FROM assign GROUP BY 1),
 dc AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_delta FROM d3 GROUP BY cid),
 cells AS (
@@ -2897,40 +2858,15 @@ def q_vec_ivf_incr(spark, sf_dir):
     base size; occupancy is two hash-aggs on cid; the report is
     TakeOrderedAndProject top-20 + a broadcast 2-scalar summary.
     Integer counts — partitioning-independent."""
-    from pkg2_spark.queries.llm import (
-        _IVF_BCAST_ROWS,
-        _IVF_SLOT_BASE,
-        _ivf_sizes,
-        _ivf_tree,
-        _nearest_wide,
-    )
-
     e = load_tables(spark, sf_dir)["embeddings"]
     base = e.filter(F.col("vec_id") % 10 != 0)
     delta = e.filter(F.col("vec_id") % 10 == 0).select("vec_id", "embedding")
-    cents, _a1, cent2, _a2, cent3, assign = _ivf_tree(base)
-    n2, n3 = _ivf_sizes(base)
-    d1 = delta.join(
-        _nearest_wide(delta, cents, out_id="cid", cand_id="cid", cand_vec="cemb"),
-        "vec_id",
-    )
-    d2 = delta.join(
-        _nearest_wide(
-            d1.withColumnRenamed("cid", "c2id"), cent2, out_id="scid",
-            cand_id="scid", cand_vec="semb", join_on="c2id",
-            broadcast_cands=n2 <= _IVF_BCAST_ROWS,
-        ),
-        "vec_id",
-    )
-    d3 = _nearest_wide(
-        d2.withColumnRenamed("scid", "c3id"), cent3, out_id="cid",
-        cand_id="sscid", cand_vec="ssemb", join_on="c3id",
-        broadcast_cands=n3 <= _IVF_BCAST_ROWS,
-    )
+    t = tree(base)
+    d3 = descend(t, delta).withColumnRenamed("qcid", "cid")
     # Occupancy at QUANTIZER-cell granularity (slots of one cell share a
     # centroid; a maintainer watches the cell, not its cap slots).
     bc = (
-        assign.groupBy(F.expr(f"cid div {_IVF_SLOT_BASE}").alias("cid"))
+        t.assign.groupBy(F.expr(f"cid div {SLOT_BASE}").alias("cid"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_base"))
     )
     dc = d3.groupBy("cid").agg(F.count(F.lit(1)).cast("long").alias("n_delta"))
@@ -2971,49 +2907,15 @@ def q_vec_ivf_incr(spark, sf_dir):
 
 
 def _ivf_retract_oracle() -> str:
-    from pkg2_spark.queries.llm import _IVF_ASSIGN_CTE, _IVF_SLOT_BASE
-
-    base_cte = _IVF_ASSIGN_CTE.replace("embeddings", "base")
+    base_cte = ASSIGN_CTE.replace("embeddings", "base")
     return f"""
 WITH base AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 0),
 delta AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 = 0),
 {base_cte},
-d1 AS (
-  SELECT vec_id, embedding, cid FROM (
-    SELECT d.vec_id, d.embedding, c.cid,
-           round(list_cosine_similarity(CAST(d.embedding AS DOUBLE[]),
-                                        CAST(c.cemb AS DOUBLE[])), 4) AS ccos
-    FROM delta d CROSS JOIN cent c
-    QUALIFY row_number() OVER (
-      PARTITION BY d.vec_id ORDER BY ccos DESC NULLS LAST, c.cid ASC NULLS LAST
-    ) = 1
-  )
-),
-d2 AS (
-  SELECT vec_id, embedding, scid FROM (
-    SELECT a.vec_id, a.embedding, c2.scid,
-           round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                        CAST(c2.semb AS DOUBLE[])), 4) AS scos
-    FROM d1 a JOIN cent2 c2 ON c2.c2id = a.cid
-    QUALIFY row_number() OVER (
-      PARTITION BY a.vec_id ORDER BY scos DESC NULLS LAST, scid ASC NULLS LAST
-    ) = 1
-  )
-),
-d3 AS (
-  SELECT vec_id, sscid AS cid FROM (
-    SELECT a.vec_id, c3.sscid,
-           round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                        CAST(c3.ssemb AS DOUBLE[])), 4) AS sscos
-    FROM d2 a JOIN cent3 c3 ON c3.c3id = a.scid
-    QUALIFY row_number() OVER (
-      PARTITION BY a.vec_id ORDER BY sscos DESC NULLS LAST, sscid ASC NULLS LAST
-    ) = 1
-  )
-),
-bc AS (SELECT cid // {_IVF_SLOT_BASE} AS cid, CAST(count(*) AS BIGINT) AS n_live
+{descend_cte('delta')},
+bc AS (SELECT cid // {SLOT_BASE} AS cid, CAST(count(*) AS BIGINT) AS n_live
        FROM assign WHERE vec_id % 10 <> 5 GROUP BY 1),
-rc AS (SELECT cid // {_IVF_SLOT_BASE} AS cid, CAST(count(*) AS BIGINT) AS n_removed
+rc AS (SELECT cid // {SLOT_BASE} AS cid, CAST(count(*) AS BIGINT) AS n_removed
        FROM assign WHERE vec_id % 10 = 5 GROUP BY 1),
 dc AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_delta FROM d3 GROUP BY cid),
 churn AS (
@@ -3077,38 +2979,14 @@ def q_vec_ivf_retract(spark, sf_dir):
     count time. Scale: the anti-join touches only cells holding deleted
     members (posting-list locality); delta cost as q_vec_ivf_incr;
     occupancy is three hash-aggs on cid."""
-    from pkg2_spark.queries.llm import (
-        _IVF_BCAST_ROWS,
-        _IVF_SLOT_BASE,
-        _ivf_sizes,
-        _ivf_tree,
-        _nearest_wide,
-    )
-
     e = load_tables(spark, sf_dir)["embeddings"]
     base = e.filter(F.col("vec_id") % 10 != 0)
     delta = e.filter(F.col("vec_id") % 10 == 0).select("vec_id", "embedding")
     dead = base.filter(F.col("vec_id") % 10 == 5).select("vec_id")
-    cents, _a1, cent2, _a2, cent3, assign = _ivf_tree(base)
-    n2, n3 = _ivf_sizes(base)
-    d1 = delta.join(
-        _nearest_wide(delta, cents, out_id="cid", cand_id="cid", cand_vec="cemb"),
-        "vec_id",
-    )
-    d2 = delta.join(
-        _nearest_wide(
-            d1.withColumnRenamed("cid", "c2id"), cent2, out_id="scid",
-            cand_id="scid", cand_vec="semb", join_on="c2id",
-            broadcast_cands=n2 <= _IVF_BCAST_ROWS,
-        ),
-        "vec_id",
-    )
-    d3 = _nearest_wide(
-        d2.withColumnRenamed("scid", "c3id"), cent3, out_id="cid",
-        cand_id="sscid", cand_vec="ssemb", join_on="c3id",
-        broadcast_cands=n3 <= _IVF_BCAST_ROWS,
-    )
-    cell = F.expr(f"cid div {_IVF_SLOT_BASE}").alias("cid")
+    t = tree(base)
+    assign = t.assign
+    d3 = descend(t, delta).withColumnRenamed("qcid", "cid")
+    cell = F.expr(f"cid div {SLOT_BASE}").alias("cid")
     live = (
         assign.join(dead, "vec_id", "left_anti")
         .groupBy(cell)

@@ -324,13 +324,17 @@ def _warn_if_checkpoints_unreaped(spark: SparkSession) -> None:
 
 
 def truncate_lineage_lazy(df):
-    """truncate_lineage with LAZY materialization (no action of its own) —
-    for loop states whose NEXT Spark action provably computes EVERY
-    partition, e.g. an ordered-limit argmax or a full aggregate over the
-    state (the BPE train loop: the round's TakeOrderedAndProject scans all
-    partitions, populating the checkpoint blocks in the same job). Saves
-    one eager action per round vs truncate_lineage. Do NOT use when the
-    next action may compute only a partition subset (isEmpty, unordered
+    """truncate_lineage with LAZY materialization — for loop states whose
+    NEXT Spark action provably computes EVERY partition, e.g. an
+    ordered-limit argmax or a full aggregate over the state (the BPE train
+    loop: the round's TakeOrderedAndProject scans all partitions,
+    populating the checkpoint blocks in the same job). Saves one eager
+    action per round vs truncate_lineage. Lazy is not free: under adaptive
+    execution the mark plans ``df`` at once, which runs every shuffle
+    stage below its final stage (a plan with an exchange fires at least
+    one job when called; a plan without one fires none), and only the
+    final stage waits for the next action. Do NOT use when the next
+    action may compute only a partition subset (isEmpty, unordered
     limit): the missing-partition repair job makes lazy SLOWER — that trap
     is why truncate_lineage_counted pairs the lazy mark with count().
     Posture seam (local vs reliable checkpoint) identical to
@@ -344,12 +348,14 @@ def truncate_lineage_counted(df):
     operators/graph_ops.py::reachability). The r9 shape paid two driver actions per BFS
     round (eager checkpoint, then isEmpty), and on local[32] each action
     costs ~0.25 s of fixed job latency regardless of data. A LAZY
-    checkpoint mark followed by count() folds them: count computes every
-    partition, so the local-checkpoint persist blocks are all populated
-    by the same job (no missing-partition repair job — the trap that
-    makes lazy persist + isEmpty SLOWER, since isEmpty computes only
-    partition 0) and the count answers the round's emptiness question
-    for free. Returns (checkpointed df, row count).
+    checkpoint mark followed by count() folds them into one action: the
+    mark runs the state's shuffle stages (see truncate_lineage_lazy) —
+    the same jobs an eager checkpoint would run — and count computes
+    every partition of the final stage, so the local-checkpoint persist
+    blocks are all populated by the count's job (no missing-partition
+    repair job — the trap that makes lazy persist + isEmpty SLOWER, since
+    isEmpty computes only partition 0) and the count answers the round's
+    emptiness question for free. Returns (checkpointed df, row count).
 
     Reliable posture (checkpoint dir set): checkpoint(eager=False) +
     count — Spark recomputes the plan once more when writing the

@@ -551,6 +551,27 @@ def test_resolve_components_runs_one_counted_checkpoint_per_round(
     assert got == {**dict.fromkeys(range(41), 0), 500: 500, 501: 500}
 
 
+def test_lazy_checkpoint_runs_the_shuffle_stages_it_sits_on(
+    spark, sf_dir, action_log
+):
+    # Under adaptive execution, marking a plan with an exchange for a lazy
+    # checkpoint runs that exchange's shuffle stage at once; a plan with
+    # no exchange runs nothing until its first action.
+    from pkg2_spark import session as S
+
+    scan = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    grouped = scan.groupBy("label").count()
+    action_log.wrap(S, "truncate_lineage_lazy")
+    action_log.run(
+        lambda: (S.truncate_lineage_lazy(scan), S.truncate_lineage_lazy(grouped))
+    )
+    tracker = spark.sparkContext.statusTracker()
+    (_, scan_group), (_, grouped_group) = action_log.calls
+    assert tracker.getJobIdsForGroup(scan_group) == []
+    assert len(tracker.getJobIdsForGroup(grouped_group)) >= 1
+    assert action_log.stray_jobs == []
+
+
 def test_lineage_truncation_checkpoint_seam(spark, tmp_path):
     # r9 verdict #3: localCheckpoint is executor-local — on a real cluster
     # an executor loss mid-iteration kills the job. The seam: setting a
@@ -652,7 +673,7 @@ def test_ann_search_probes_and_min_recall_fallback(spark):
 
     from pkg2_spark.engine import Engine
     from pkg2_spark.operators.similarity import knn_bruteforce
-    from pkg2_spark.queries.llm import ivf_invalidate
+    from pkg2_spark.operators.ivf import ivf_invalidate
 
     N, DIM = 3072, 64
     rng = np.random.default_rng(7)
@@ -767,6 +788,43 @@ def test_ann_search_probes_and_min_recall_fallback(spark):
     ivf_invalidate()  # release the two synthetic quantizer trees
 
 
+def test_ivf_reads_the_vector_width_from_the_corpus(spark):
+    # The tree quantizes every coordinate the corpus has: a 32-dim corpus
+    # is served, and a 96-dim one whose first 64 coordinates are constant
+    # still splits at level 1 (quantizing 64 coordinates ties every
+    # vector to one centroid). A ragged corpus is refused.
+    import numpy as np
+    import pytest as _pytest
+
+    from pkg2_spark.engine import Engine
+    from pkg2_spark.operators.ivf import ivf_invalidate, nearest, tree
+
+    rng = np.random.default_rng(11)
+
+    def mkdf(rows):
+        return spark.createDataFrame(
+            [(i, [float(x) for x in r]) for i, r in enumerate(rows)],
+            "vec_id long, embedding array<double>",
+        )
+
+    narrow = mkdf(rng.uniform(-1, 1, size=(600, 32)))
+    wide = mkdf(
+        np.hstack([np.ones((600, 64)), rng.uniform(-1, 1, size=(600, 32))])
+    )
+    ragged = mkdf([[1.0, 2.0], [1.0, 2.0, 3.0]])
+    try:
+        served = Engine(spark).ann_search(narrow, min_recall=None, k=5, dim=32)
+        assert served.count() == 25
+        t = tree(wide)
+        assert t.dim == 96
+        level1 = nearest(wide, t.cents, "cid", "cid", "cemb", dim=t.dim)
+        assert level1.select("cid").distinct().count() > 1
+        with _pytest.raises(ValueError, match="one vector width"):
+            tree(ragged)
+    finally:
+        ivf_invalidate()
+
+
 def test_mprobe_recall_dominates_single_probe(spark, sf_dir):
     # The reason multi-probe exists: per probe, recall@5 of the 3-cell
     # search must be >= the single-cell search's (the candidate set is a
@@ -811,7 +869,7 @@ def test_ann_multiprobe_recall_monotone_in_n_probe(spark, sf_dir):
     from pkg2_spark.catalog import load_tables
     from pkg2_spark.engine import Engine
     from pkg2_spark.operators.similarity import knn_bruteforce
-    from pkg2_spark.queries.llm import ann_multiprobe
+    from pkg2_spark.operators.ivf import ann_multiprobe
     from pkg2_spark.registry import all_queries
 
     e = load_tables(spark, sf_dir)["embeddings"]

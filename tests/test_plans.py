@@ -145,12 +145,12 @@ def test_ann_ivf_assignment_broadcasts_fixed_centroids(spark, sf_dir):
     # truncates to Scan ExistingRDD), so assert the assignment stages on
     # their own pre-checkpoint plans.
     from pkg2_spark.catalog import load_tables
-    from pkg2_spark.queries.llm import _ivf_centroids, _nearest_wide
+    from pkg2_spark.operators.ivf import centroids, nearest
 
     e = load_tables(spark, sf_dir)["embeddings"]
-    a1 = _nearest_wide(
-        e.select("vec_id", "embedding"), _ivf_centroids(e),
-        out_id="cid", cand_id="cid", cand_vec="cemb",
+    a1 = nearest(
+        e.select("vec_id", "embedding"), centroids(e),
+        out_id="cid", cand_id="cid", cand_vec="cemb", dim=64,
     )
     l1_plan = a1._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         a1._jdf.queryExecution(), "formatted"

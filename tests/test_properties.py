@@ -247,7 +247,7 @@ def test_icbrt_is_exact_integer_cube_root(m):
     # The IVF k-derivation depends on icbrt being EXACT in both engines:
     # the pow(m, 1/3) seed may round either way, and the integer cube
     # comparisons must correct it. Property: k^3 <= m < (k+1)^3.
-    from pkg2_spark.queries.llm import _icbrt
+    from pkg2_spark.operators.ivf import _icbrt
 
     k = _icbrt(m)
     assert k >= 0

@@ -429,12 +429,12 @@ def test_ivf_occupancy_cap_splits_collapsed_cell(spark):
     # oracle CTE and multi-probe both rely on.
     import pyspark.sql.functions as F
 
-    from pkg2_spark.queries.llm import (
-        _IVF_SLOT_BASE,
-        _IVF_TARGET_CELL,
-        _ivf_assign,
-        _ivf_cellslots,
+    from pkg2_spark.operators.ivf import (
+        SLOT_BASE,
+        TARGET_CELL,
+        _cellslots,
         ivf_invalidate,
+        tree,
     )
 
     dense = spark.range(600).selectExpr(
@@ -450,15 +450,15 @@ def test_ivf_occupancy_cap_splits_collapsed_cell(spark):
     e = dense.unionAll(diverse)
     ivf_invalidate()
     try:
-        assign = _ivf_assign(e)
+        assign = tree(e).assign
         cells = assign.groupBy("cid").count().collect()
-        assert max(r["count"] for r in cells) <= 2 * _IVF_TARGET_CELL
-        slots = {r["qcid"]: r["slots"] for r in _ivf_cellslots(e).collect()}
+        assert max(r["count"] for r in cells) <= 2 * TARGET_CELL
+        slots = {r["qcid"]: r["slots"] for r in _cellslots(e).collect()}
         assert max(slots.values()) > 1  # the dense mass actually split
         got = assign.select(
             "vec_id",
-            F.expr(f"cid div {_IVF_SLOT_BASE}").alias("qcid"),
-            F.expr(f"cid % {_IVF_SLOT_BASE}").alias("slot"),
+            F.expr(f"cid div {SLOT_BASE}").alias("qcid"),
+            F.expr(f"cid % {SLOT_BASE}").alias("slot"),
             F.conv(
                 F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
             ).cast("long").alias("hex32"),
@@ -484,32 +484,42 @@ def test_ivf_k_derivation_and_cell_flatness(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from pkg2_spark.catalog import load_tables
-    from pkg2_spark.queries.llm import (
-        _IVF_TARGET_CELL,
-        _icbrt,
-        _ivf_assign,
-        _ivf_ks,
-    )
+    from pkg2_spark.operators.ivf import TARGET_CELL, _icbrt, shape, tree
 
     for sf in ("sf0.001", "sf0.01"):
         d = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), sf)
         e = load_tables(spark, d)["embeddings"]
         n = e.count()
-        m = n // _IVF_TARGET_CELL
-        k12, k3 = _ivf_ks(e)
+        m = n // TARGET_CELL
+        k12, k3, dim = shape(e)
         assert k12 == max(2, _icbrt(m))
         assert k3 == max(2, m // (k12 * k12))
         # memoized: a second call must not launch another count job
-        assert _ivf_ks(e) == (k12, k3)
-        cells = _ivf_assign(e).groupBy("cid").count()
+        assert shape(e) == (k12, k3, dim)
+        cells = tree(e).assign.groupBy("cid").count()
         stats = cells.agg(
             F.avg("count").alias("mean"), F.max("count").alias("max")
         ).collect()[0]
         # proportional allocation: mean ≈ target (floor slack at tiny n)
-        assert stats["mean"] <= _IVF_TARGET_CELL + 1
+        assert stats["mean"] <= TARGET_CELL + 1
         # occupancy cap: uncapped cells are ≤ 2× target by the cap rule;
         # capped cells slot to ~target with binomial slack (≤ ~1.5×)
-        assert stats["max"] <= 2 * _IVF_TARGET_CELL
+        assert stats["max"] <= 2 * TARGET_CELL
+
+
+def test_descend_reproduces_the_built_assignment(spark, sf_dir):
+    # The delta descent q_vec_ivf_incr / q_vec_ivf_retract route new
+    # vectors with must agree with the build: descending the corpus
+    # itself lands every vector in its assigned quantizer cell.
+    from pkg2_spark.catalog import load_tables
+    from pkg2_spark.operators.ivf import SLOT_BASE, descend, tree
+
+    e = load_tables(spark, sf_dir)["embeddings"]
+    t = tree(e)
+    built = t.assign.select("vec_id", F.expr(f"cid div {SLOT_BASE}").alias("cell"))
+    got = descend(t, e).join(built, "vec_id")
+    assert got.count() == e.count()
+    assert got.filter(F.col("qcid") != F.col("cell")).count() == 0
 
 
 def test_dedup_state_writers_refuse_a_drifted_schema(spark, sf_dir, tmp_path):
@@ -629,15 +639,15 @@ def test_ivfpq_cells_ranks_and_adc_ordering(spark, sf_dir):
     # 1..3 per probe, and adc_e4 is non-decreasing with rank (the LUT scan
     # actually ordered the cell). exact_e4 is a true squared distance so it
     # must be non-negative and 0 only for identical vectors.
-    from pkg2_spark.queries.llm import _ivf_assign
     from pkg2_spark.catalog import load_tables
+    from pkg2_spark.operators.ivf import tree
 
     res = _q(spark, sf_dir, "q_vec_ivfpq").collect()
     assert len(res) > 0
     e = load_tables(spark, sf_dir)["embeddings"]
     cells = {
         r["vec_id"]: r["cid"]
-        for r in _ivf_assign(e).filter(F.col("vec_id") < 5).collect()
+        for r in tree(e).assign.filter(F.col("vec_id") < 5).collect()
     }
     by_probe: dict = {}
     for r in res:
@@ -662,7 +672,7 @@ def test_ivfpq_deterministic_across_partitionings(spark, sf_dir):
     # corpora residuals live at cell-radius magnitude and the residual
     # formulation is the one FAISS deploys. The ARCHITECTURE is what this
     # operator pins, not a data-dependent error win.)
-    from pkg2_spark.queries.llm import ivf_invalidate
+    from pkg2_spark.operators.ivf import ivf_invalidate
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     results = []
@@ -974,7 +984,7 @@ def test_ivf_incr_occupancy_and_summary(spark, sf_dir):
     # dense-ranked by delta arrivals; when fewer than 20 cells are touched
     # the cell deltas must sum to the full delta batch; growth_milli is
     # the declared integer formula.
-    from pkg2_spark.queries.llm import ivf_invalidate
+    from pkg2_spark.operators.ivf import ivf_invalidate
 
     ivf_invalidate()
     rows = _q(spark, sf_dir, "q_vec_ivf_incr").collect()
