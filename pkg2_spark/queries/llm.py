@@ -31,6 +31,7 @@ from pkg2_spark.operators.ivf import (
     beam_cte,
     centroids,
     nearest,
+    probe_frame,
     shape,
     tree,
 )
@@ -1287,9 +1288,7 @@ def q_llm_ann_recall(spark, sf_dir):
     arms in SQL. Linear in corpus size per arm; the comparison itself is a
     k-row-per-probe join."""
     e = load_tables(spark, sf_dir)["embeddings"]
-    probes = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_embedding")
-    )
+    probes = probe_frame(e.filter(F.col("vec_id") < 5))
     exact = knn_bruteforce(e.select("vec_id", "embedding"), probes, k=5, dim=64).select(
         "probe_id", "vec_id"
     )
@@ -2300,10 +2299,7 @@ def q_llm_ann_tune(spark, sf_dir):
     recall/latency curve per corpus shape is SCALE_PROBE_RECALL.md;
     guidance in SCALING.md (IVF section)."""
     e = load_tables(spark, sf_dir)["embeddings"]
-    probes = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("probe_embedding"),
-    )
+    probes = probe_frame(e.filter(F.col("vec_id") < 5))
     exact = knn_bruteforce(
         e.select("vec_id", "embedding"), probes, k=5, dim=64
     ).select("probe_id", "vec_id")
