@@ -1231,19 +1231,21 @@ class Engine:
                     approx.select("probe_id", "vec_id")
                     .withColumn("__hit", F.lit(1))
                 )
-                return (
+                n_exact, n_hits = (
                     exact_df.join(approx_df, ["probe_id", "vec_id"], "left")
                     .agg(
-                        F.count(F.lit(1)).alias("n_exact"),
-                        F.sum(F.coalesce(F.col("__hit"), F.lit(0))).alias("n_hits"),
+                        F.count(F.lit(1)),
+                        F.sum(F.coalesce(F.col("__hit"), F.lit(0))),
                     )
                     .collect()[0]
                 )
+                # (recall, exact rows); an empty audit reads recall 1.0
+                return (int(n_hits or 0) / n_exact if n_exact else 1.0), n_exact
 
             audit = probe_frame(embeddings.filter(F.col("vec_id") < audit_probes))
             explicit = False
-            row = _audit_once(audit, explicit=False, npx=np_)
-            if not row["n_exact"]:
+            measured, n_exact = _audit_once(audit, explicit=False, npx=np_)
+            if not n_exact:
                 # Sparse/offset id space: no vec_id < audit_probes rows, so
                 # the self-probe convention found nothing to audit. Re-audit
                 # on the audit_probes smallest ids (bounded sort-limit)
@@ -1251,12 +1253,7 @@ class Engine:
                 # never pass vacuously.
                 audit = probe_frame(embeddings.orderBy("vec_id").limit(audit_probes))
                 explicit = True
-                row = _audit_once(audit, explicit=True, npx=np_)
-            measured = (
-                int(row["n_hits"] or 0) / int(row["n_exact"])
-                if row["n_exact"]
-                else 1.0
-            )
+                measured, _ = _audit_once(audit, explicit=True, npx=np_)
             self.last_ann_recall = measured
             self.last_ann_escalation = [(np_, measured)]
             np_serve = np_
@@ -1275,12 +1272,7 @@ class Engine:
                 # tree makes each step only extra candidate rows (verdict
                 # r12 #2). Serve at the first n_probe that clears the bar.
                 for npx in (b for b in self.ann_escalation_ladder if b > np_):
-                    row = _audit_once(audit, explicit, npx)
-                    measured = (
-                        int(row["n_hits"] or 0) / int(row["n_exact"])
-                        if row["n_exact"]
-                        else 1.0
-                    )
+                    measured, _ = _audit_once(audit, explicit, npx)
                     self.last_ann_escalation.append((npx, measured))
                     self.last_ann_recall = measured
                     if measured >= min_recall:

@@ -667,7 +667,7 @@ q3 AS (
 rdims AS (
   SELECT sscid, i.i AS pos,
          CAST(floor(CAST(sum(qe[i.i]) AS DOUBLE) / count(*)) AS BIGINT) AS cv
-  FROM q3 CROSS JOIN generate_series(1, 64) AS i(i)
+  FROM q3 CROSS JOIN unnest(generate_series(1, len(q3.qe))) AS i(i)
   GROUP BY sscid, i.i
 ),
 refined3 AS (

@@ -1337,7 +1337,7 @@ a1 AS (
 dims AS (
   SELECT a1.cid, i.i AS pos,
          CAST(floor(CAST(sum(q.qe[i.i]) AS DOUBLE) / count(*)) AS BIGINT) AS cv
-  FROM a1 JOIN q USING (vec_id) CROSS JOIN generate_series(1, 64) AS i(i)
+  FROM a1 JOIN q USING (vec_id) CROSS JOIN unnest(generate_series(1, len(q.qe))) AS i(i)
   GROUP BY a1.cid, i.i
 ),
 refined AS (

@@ -5,9 +5,10 @@ These extend the LLM-pipeline family (SURVEY.md §2.9/§2.12b) with the
 dataset-shaping stages a pretraining pipeline runs between dedup and shard
 export: split documents into token-budget chunks, pack chunks into
 fixed-capacity training sequences, flag boilerplate n-grams shared across
-documents, compress embeddings to int8 codes, and run the per-iteration
-assign+recenter step of k-means (the builder of IVF centroid tables —
-q_llm_ann_ivf consumes exactly such a table).
+documents, compress embeddings to int8 codes or product-quantization (PQ)
+codes, and run the per-iteration assign+recenter step of k-means (the
+step that makes IVF centroid tables — q_llm_ann_ivf consumes exactly
+such a table).
 
 Scale posture, per operator:
 - chunk: per-row generator expression (sequence → slice), no shuffle.
@@ -17,6 +18,10 @@ Scale posture, per operator:
 - boiler: explode distinct shingles → one hash-agg for doc-frequency →
   shuffle-on-shingle join back; identical topology to the TF-IDF path.
 - quant: pure per-row projection (array_min/max + transform), no shuffle.
+- pq / adc / ivfpq: one PQ codec, operators/pq.py (codebook sample,
+  encode, lookup table, ADC sum, exact distance, and their DuckDB
+  mirror); each query keeps only its own output shape — code checksums,
+  the salted two-stage top-3, the IVF residuals and in-cell probe join.
 - kmeans step: O(n·k) distance evaluation against a CONSTANT-k broadcast
   centroid table, one shuffle on vec_id for the argmin, one hash-agg for
   the recenter — the canonical Lloyd-iteration dataflow.
@@ -28,6 +33,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from pkg2_spark.catalog import load_tables
+from pkg2_spark.operators import pq
+from pkg2_spark.operators.hashing import v32_spark, v32_sql
 from pkg2_spark.operators.ivf import ASSIGN_CTE, SLOT_BASE, descend, descend_cte, tree
 from pkg2_spark.operators.text import tokens_col
 from pkg2_spark.registry import query
@@ -279,154 +286,72 @@ def q_vec_quant(spark, sf_dir):
 
 @query(
     "q_vec_pq",
-    oracle="""
-WITH cent AS (
-  SELECT vec_id AS cid, embedding AS cemb FROM embeddings
-  QUALIFY row_number() OVER (
-    ORDER BY md5(CAST(vec_id AS VARCHAR)) ASC NULLS LAST, vec_id ASC NULLS LAST
-  ) <= 16
-),
-sub AS (SELECT unnest(generate_series(0, 7)) AS s),
-d AS (
-  SELECT e.vec_id, sub.s, c.cid,
-         list_aggregate(list_transform(generate_series(1, 8),
-           i -> (CAST(e.embedding[CAST(sub.s * 8 + i AS INTEGER)] AS DOUBLE)
-                 - CAST(c.cemb[CAST(sub.s * 8 + i AS INTEGER)] AS DOUBLE))
-              * (CAST(e.embedding[CAST(sub.s * 8 + i AS INTEGER)] AS DOUBLE)
-                 - CAST(c.cemb[CAST(sub.s * 8 + i AS INTEGER)] AS DOUBLE))),
-           'sum') AS d2
-  FROM embeddings e CROSS JOIN cent c CROSS JOIN sub
-),
-code AS (
-  SELECT vec_id, s, cid, d2 FROM d
-  QUALIFY row_number() OVER (
-    PARTITION BY vec_id, s ORDER BY d2 ASC NULLS LAST, cid ASC NULLS LAST
-  ) = 1
-)
+    oracle=f"""
+WITH {pq.sample_cte("cb", "embeddings", "vec_id", "embedding")},
+{pq.code_cte("embeddings", "embedding", tie="cbid")}
 SELECT vec_id,
-       CAST(sum(cid) AS BIGINT) AS code_sum,
-       CAST(sum((s + 1) * cid) AS BIGINT) AS code_wsum,
+       CAST(sum(cbid) AS BIGINT) AS code_sum,
+       CAST(sum((s + 1) * cbid) AS BIGINT) AS code_wsum,
        CAST(sum(CAST(floor(d2 * 10000) AS BIGINT)) AS BIGINT) AS err_e4
 FROM code GROUP BY vec_id
 """,
 )
 def q_vec_pq(spark, sf_dir):
-    """Product quantization (PQ): split each 64-dim embedding into m=8
-    subspaces of 8 dims, assign every subvector to its nearest sub-centroid
-    from a constant-16 hash-sampled codebook (a FORMAT constant — the PQ
-    code width — not a blocking constant: unlike the IVF cell count, which
-    is data-derived so cells stay constant-sized, the sub-codebook size
-    fixes the compressed representation and deliberately does not grow
-    with n; stand-in for the per-subspace
-    k-means codebook, exactly as q_llm_ann_ivf's coarse codebook), emit the
-    8-byte code as positional checksums plus the total quantization error.
+    """Product quantization (PQ) encode: code every embedding with the
+    operators/pq.py codec (M subspaces, each assigned to its nearest entry
+    of the constant-16 md5-sampled codebook) and emit the code as
+    positional checksums of the chosen codebook ids plus the total
+    quantization error (floor-e4).
 
-    PQ is the memory arm of large-scale ANN (IVF prunes candidates, PQ
-    compresses residuals 32×: 64 floats → 8 code bytes with asymmetric
-    distance computed from a k×m lookup table). Topology: the 16-entry
-    codebook is collected into ONE broadcast array row and every vector
-    computes all 8 sub-assignments ROW-LOCALLY with nested higher-order
-    functions (argmin = aggregate over the cid-sorted codebook with
-    strict-< so ties keep the lowest cid) — zero shuffle anywhere: the
-    plan is scan → broadcast-append → project, which at 100 TB means the
-    PQ encode runs at scan speed with no exchange at all (the earlier
-    formulation shuffled n·m·k scored rows through a per-(vector,
-    subspace) rank window). Error sums are floor-scaled e4 integers; both
-    engines fold the 8-term squared distance in the same sequential
-    order, so codes are bit-identical."""
+    PQ is the memory arm of large-scale ANN: IVF prunes candidates, PQ
+    compresses vectors to M code bytes searched through a lookup table
+    (q_vec_adc). The codebook array is sorted by cid, so an exact d2 tie
+    keeps the lowest cid, as the oracle's `cbid ASC` does. Plan: scan →
+    broadcast-append of the one-row codebook → project; no exchange on
+    the corpus side, so the encode runs at scan speed."""
     e = load_tables(spark, sf_dir)["embeddings"]
-    cents = (
-        e.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb"))
-        .orderBy(
-            F.md5(F.col("cid").cast("string")).asc_nulls_last(),
-            F.col("cid").asc_nulls_last(),
-        )
-        .limit(16)
-        .agg(F.sort_array(F.collect_list(F.struct("cid", "cemb"))).alias("cents"))
+    cb = pq.sample(e, "vec_id").agg(
+        F.sort_array(
+            F.collect_list(F.struct("vec_id", F.col("embedding").alias("v")))
+        ).alias("cb")
     )
-    d2 = (
-        "aggregate(zip_with(slice(embedding, s * 8 + 1, 8),"
-        " slice({emb}, s * 8 + 1, 8),"
-        " (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-        " * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
-        " CAST(0.0 AS DOUBLE), (acc2, v) -> acc2 + v)"
+    codes = F.transform(
+        pq.encode(F.col("embedding"), F.col("cb")),
+        lambda c: F.struct(
+            F.element_at("cb", c["pos"])["vec_id"].alias("cid"), c["d2"].alias("d2")
+        ),
     )
-    codes = F.expr(
-        "transform(sequence(0, 7), s -> aggregate(cents,"
-        " named_struct('d2', CAST('Infinity' AS DOUBLE), 'cid', CAST(-1 AS BIGINT)),"
-        f" (acc, c) -> IF({d2.format(emb='c.cemb')} < acc.d2,"
-        f" named_struct('d2', {d2.format(emb='c.cemb')},"
-        " 'cid', CAST(c.cid AS BIGINT)), acc)))"
-    )
+    zero = F.lit(0).cast("long")
     return (
-        e.crossJoin(F.broadcast(cents))
+        e.crossJoin(F.broadcast(cb))
         .select("vec_id", codes.alias("codes"))
         .select(
             "vec_id",
-            F.expr(
-                "aggregate(codes, CAST(0 AS BIGINT), (a, c) -> a + c.cid)"
-            ).alias("code_sum"),
-            F.expr(
-                "aggregate(zip_with(codes, sequence(1, 8), (c, i) ->"
-                " CAST(i AS BIGINT) * c.cid), CAST(0 AS BIGINT), (a, v) -> a + v)"
+            F.aggregate("codes", zero, lambda a, c: a + c["cid"]).alias("code_sum"),
+            F.aggregate(
+                F.transform("codes", lambda c, s: (s + 1).cast("long") * c["cid"]),
+                zero,
+                lambda a, t: a + t,
             ).alias("code_wsum"),
-            F.expr(
-                "aggregate(codes, CAST(0 AS BIGINT),"
-                " (a, c) -> a + CAST(floor(c.d2 * 10000) AS BIGINT))"
+            F.aggregate(
+                "codes", zero, lambda a, c: a + F.floor(c["d2"] * 10000)
             ).alias("err_e4"),
         )
     )
 
 
-_PQ_D2_SQL = """list_aggregate(list_transform(generate_series(1, 8),
-           i -> (CAST({a}[CAST({s} * 8 + i AS INTEGER)] AS DOUBLE)
-                 - CAST({b}[CAST({s} * 8 + i AS INTEGER)] AS DOUBLE))
-              * (CAST({a}[CAST({s} * 8 + i AS INTEGER)] AS DOUBLE)
-                 - CAST({b}[CAST({s} * 8 + i AS INTEGER)] AS DOUBLE))),
-           'sum')"""
-
-
 @query(
     "q_vec_adc",
     oracle=f"""
-WITH cent AS (
-  SELECT row_number() OVER (
-    ORDER BY md5(CAST(vec_id AS VARCHAR)) ASC NULLS LAST, vec_id ASC NULLS LAST
-  ) AS pos, vec_id AS cid, embedding AS cemb
-  FROM embeddings
-  QUALIFY row_number() OVER (
-    ORDER BY md5(CAST(vec_id AS VARCHAR)) ASC NULLS LAST, vec_id ASC NULLS LAST
-  ) <= 16
-),
-sub AS (SELECT unnest(generate_series(0, 7)) AS s),
-d AS (
-  SELECT e.vec_id, sub.s, c.pos,
-         {_PQ_D2_SQL.format(a="e.embedding", b="c.cemb", s="sub.s")} AS d2
-  FROM embeddings e CROSS JOIN cent c CROSS JOIN sub
-),
-code AS (
-  SELECT vec_id, s, pos FROM d
-  QUALIFY row_number() OVER (
-    PARTITION BY vec_id, s ORDER BY d2 ASC NULLS LAST, pos ASC NULLS LAST
-  ) = 1
-),
-q AS (
-  SELECT vec_id AS qid, embedding AS qemb FROM embeddings
-  QUALIFY row_number() OVER (
-    ORDER BY md5(CAST(vec_id AS VARCHAR)) ASC NULLS LAST, vec_id ASC NULLS LAST
-  ) <= 5
-),
-lut AS (
-  SELECT q.qid, sub.s, c.pos,
-         {_PQ_D2_SQL.format(a="q.qemb", b="c.cemb", s="sub.s")} AS d2
-  FROM q CROSS JOIN cent c CROSS JOIN sub
-),
+WITH {pq.sample_cte("cb", "embeddings", "vec_id", "embedding")},
+{pq.code_cte("embeddings", "embedding", tie="pos")},
+{pq.sample_cte("q", "embeddings", "vec_id", "embedding", n=5)},
+{pq.lut_cte("q", "id", "v")},
 adc AS (
-  SELECT l.qid, c.vec_id,
-         CAST(sum(CAST(floor(l.d2 * 10000) AS BIGINT)) AS BIGINT) AS adc_e4
-  FROM code c JOIN lut l ON c.s = l.s AND c.pos = l.pos
-  WHERE c.vec_id <> l.qid
-  GROUP BY l.qid, c.vec_id
+  SELECT lut.qid, code.vec_id, {pq.ADC_E4_SQL} AS adc_e4
+  FROM code JOIN lut ON code.s = lut.s AND code.pos = lut.pos
+  WHERE code.vec_id <> lut.qid
+  GROUP BY lut.qid, code.vec_id
 ),
 top3 AS (
   SELECT qid, vec_id, adc_e4,
@@ -434,17 +359,10 @@ top3 AS (
            PARTITION BY qid ORDER BY adc_e4 ASC NULLS LAST, vec_id ASC NULLS LAST
          ) AS rnk
   FROM adc
-  QUALIFY row_number() OVER (
-    PARTITION BY qid ORDER BY adc_e4 ASC NULLS LAST, vec_id ASC NULLS LAST
-  ) <= 3
+  QUALIFY rnk <= 3
 )
 SELECT t.qid, CAST(t.rnk AS INTEGER) AS rank, t.vec_id, t.adc_e4,
-       CAST(floor(list_aggregate(list_transform(generate_series(1, 64),
-         i -> (CAST(a.embedding[CAST(i AS INTEGER)] AS DOUBLE)
-               - CAST(b.embedding[CAST(i AS INTEGER)] AS DOUBLE))
-            * (CAST(a.embedding[CAST(i AS INTEGER)] AS DOUBLE)
-               - CAST(b.embedding[CAST(i AS INTEGER)] AS DOUBLE))),
-         'sum') * 10000) AS BIGINT) AS exact_e4
+       {pq.exact_e4_sql("a.embedding", "b.embedding")} AS exact_e4
 FROM top3 t
 JOIN embeddings a ON a.vec_id = t.qid
 JOIN embeddings b ON b.vec_id = t.vec_id
@@ -452,87 +370,41 @@ JOIN embeddings b ON b.vec_id = t.vec_id
 )
 def q_vec_adc(spark, sf_dir):
     """Asymmetric distance computation (ADC) — the QUERY arm of the PQ
-    index, completing the ANN triad (IVF coarse-prunes: q_llm_ann_ivf; PQ
-    compresses: q_vec_pq; ADC searches the compressed corpus): each query
-    vector builds an 8x16 lookup table of subspace distances to the
-    codebook once, and every corpus vector's approximate distance is then
-    8 table lookups over its PQ code — never a full 64-dim computation
-    against the corpus. Emits each query's top-3 ADC neighbors with the
-    TRUE distance alongside (both floor-e4), the quantization-quality row
-    an ANN deployment monitors.
+    index (IVF coarse-prunes: q_llm_ann_ivf; PQ compresses: q_vec_pq; ADC
+    searches the compressed corpus): each of 5 md5-sampled query vectors
+    builds its operators/pq.py lookup table once, and every corpus
+    vector's approximate distance is then M table lookups over its code.
+    Emits each query's top-3 ADC neighbors with the exact distance
+    alongside (both floor-e4), the quantization-quality row an ANN
+    deployment monitors.
 
-    Scale shape: corpus codes and per-query LUTs are row-local
-    higher-order expressions against the one-row broadcast codebook (the
-    q_vec_pq plan); scoring is a broadcast of 5 LUT rows across the code
-    scan; top-3 uses the salted two-stage partial-merge (the q_sketch_kmv
-    shape) instead of a per-query rank window — no per-query funneling,
-    bounded per-task state, and the only shuffle in the whole plan is the
-    <= 32-salt merge agg."""
+    The codebook array is in md5-sample order (mkey leads the struct),
+    so an exact d2 tie picks the same entry as the oracle's `pos ASC`.
+    Codes and LUTs are row-local against the broadcast codebook; scoring
+    broadcasts the 5 LUT rows across the code scan; top-3 is the salted
+    two-stage partial merge (the q_sketch_kmv shape) instead of a
+    per-query rank window, so the only shuffle is the ≤ 32-salt merge."""
     e = load_tables(spark, sf_dir)["embeddings"]
-    # Codebook array ordered by the oracle's md5-rank pos, NOT cid order:
-    # the leading mkey field makes sort_array reproduce the oracle's
-    # row_number() ORDER BY md5, cid exactly, so on an exact d2 tie in a
-    # subspace (duplicate sampled centroids) both engines' `pos ASC`
-    # tie-break selects the SAME centroid and the PQ codes stay aligned.
-    cents = (
-        e.select(
-            F.md5(F.col("vec_id").cast("string")).alias("mkey"),
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cemb"),
-        )
-        .orderBy(F.col("mkey").asc_nulls_last(), F.col("cid").asc_nulls_last())
-        .limit(16)
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("mkey", "cid", "cemb"))
-            ).alias("cents")
+    cb = pq.sample(e, "vec_id").agg(
+        F.sort_array(
+            F.collect_list(F.struct("mkey", "vec_id", F.col("embedding").alias("v")))
+        ).alias("cb")
+    )
+    corpus = e.crossJoin(F.broadcast(cb)).select(
+        "vec_id", pq.encode(F.col("embedding"), F.col("cb")).alias("codes")
+    )
+    qlut = (
+        pq.sample(e, "vec_id", n=5)
+        .crossJoin(F.broadcast(cb))
+        .select(
+            F.col("vec_id").alias("qid"),
+            pq.lut(F.col("embedding"), F.col("cb")).alias("lut"),
         )
     )
-    d2s = (
-        "aggregate(zip_with(slice({q}, s * 8 + 1, 8), slice({c}, s * 8 + 1, 8),"
-        " (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-        " * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
-        " CAST(0.0 AS DOUBLE), (acc2, v) -> acc2 + v)"
-    )
-    # Corpus PQ codes as 1-based POSITIONS into the cid-sorted codebook
-    # (strict < keeps the lowest position on ties, matching the oracle's
-    # d2 ASC, pos ASC rank).
-    codes = F.expr(
-        "transform(sequence(0, 7), s -> aggregate("
-        " zip_with(cents, sequence(1, 16),"
-        "  (c, i) -> named_struct('cemb', c.cemb, 'pos', i)),"
-        " named_struct('d2', CAST('Infinity' AS DOUBLE), 'pos', -1),"
-        f" (acc, p) -> IF({d2s.format(q='embedding', c='p.cemb')} < acc.d2,"
-        f" named_struct('d2', {d2s.format(q='embedding', c='p.cemb')},"
-        " 'pos', p.pos), acc)).pos)"
-    )
-    corpus = e.crossJoin(F.broadcast(cents)).select("vec_id", codes.alias("codes"))
-    qs = (
-        e.orderBy(
-            F.md5(F.col("vec_id").cast("string")).asc_nulls_last(),
-            F.col("vec_id").asc_nulls_last(),
-        )
-        .limit(5)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb"))
-    )
-    lut = F.expr(
-        "transform(sequence(0, 7), s -> transform(cents, c -> "
-        + d2s.format(q="qemb", c="c.cemb")
-        + "))"
-    )
-    qlut = qs.crossJoin(F.broadcast(cents)).select("qid", lut.alias("lut"))
     scored = (
         corpus.crossJoin(F.broadcast(qlut))
         .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.expr(
-                "aggregate(zip_with(codes, sequence(1, 8), (p, s) ->"
-                " CAST(floor(element_at(element_at(lut, s), p) * 10000)"
-                " AS BIGINT)), CAST(0 AS BIGINT), (a, v) -> a + v)"
-            ).alias("adc_e4"),
-        )
+        .select("qid", "vec_id", pq.adc_e4(F.col("codes"), F.col("lut")).alias("adc_e4"))
     )
     part = scored.groupBy(
         "qid", F.pmod(F.xxhash64("vec_id"), F.lit(32)).alias("salt")
@@ -556,24 +428,15 @@ def q_vec_adc(spark, sf_dir):
     )
     qv = e.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
     nv = e.select("vec_id", F.col("embedding").alias("nv"))
-    exact = F.expr(
-        "CAST(floor(aggregate(zip_with(qv, nv, (x, y) ->"
-        " (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-        " * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
-        " CAST(0.0 AS DOUBLE), (a, v) -> a + v) * 10000) AS BIGINT)"
-    )
     return (
         F.broadcast(ranked)
         .join(qv, "qid")
         .join(nv, "vec_id")
-        .select("qid", "rank", "vec_id", "adc_e4", exact.alias("exact_e4"))
+        .select(
+            "qid", "rank", "vec_id", "adc_e4",
+            pq.exact_e4(F.col("qv"), F.col("nv")).alias("exact_e4"),
+        )
     )
-
-
-_RES_D2_SQL = """list_aggregate(list_transform(generate_series(1, 8),
-           i -> ({a}[CAST({s} * 8 + i AS INTEGER)] - {b}[CAST({s} * 8 + i AS INTEGER)])
-              * ({a}[CAST({s} * 8 + i AS INTEGER)] - {b}[CAST({s} * 8 + i AS INTEGER)])),
-           'sum')"""
 
 
 def _ivfpq_oracle() -> str:
@@ -581,45 +444,21 @@ def _ivfpq_oracle() -> str:
 WITH {ASSIGN_CTE},
 withres AS (
   SELECT a.vec_id, a.cid,
-         list_transform(generate_series(1, 64),
+         list_transform(generate_series(1, len(a.embedding)),
            i -> CAST(a.embedding[CAST(i AS INTEGER)] AS DOUBLE)
               - c3.ssemb[CAST(i AS INTEGER)]) AS res
   FROM assign a JOIN cent3 c3 ON c3.sscid = a.cid // {SLOT_BASE}
 ),
-cb AS (
-  SELECT row_number() OVER (
-    ORDER BY md5(CAST(vec_id AS VARCHAR)) ASC NULLS LAST, vec_id ASC NULLS LAST
-  ) AS pos, res
-  FROM withres
-  QUALIFY row_number() OVER (
-    ORDER BY md5(CAST(vec_id AS VARCHAR)) ASC NULLS LAST, vec_id ASC NULLS LAST
-  ) <= 16
-),
-sub AS (SELECT unnest(generate_series(0, 7)) AS s),
-d AS (
-  SELECT w.vec_id, w.cid, sub.s, cb.pos,
-         {_RES_D2_SQL.format(a="w.res", b="cb.res", s="sub.s")} AS d2
-  FROM withres w CROSS JOIN cb CROSS JOIN sub
-),
-code AS (
-  SELECT vec_id, cid, s, pos FROM d
-  QUALIFY row_number() OVER (
-    PARTITION BY vec_id, s ORDER BY d2 ASC NULLS LAST, pos ASC NULLS LAST
-  ) = 1
-),
+{pq.sample_cte("cb", "withres", "vec_id", "res")},
+{pq.code_cte("withres", "res", tie="pos", carry=("vec_id", "cid"))},
 probes AS (SELECT vec_id AS probe_id, cid AS pcid, res AS pres FROM withres WHERE vec_id < 5),
-lut AS (
-  SELECT p.probe_id, sub.s, cb.pos,
-         {_RES_D2_SQL.format(a="p.pres", b="cb.res", s="sub.s")} AS d2
-  FROM probes p CROSS JOIN cb CROSS JOIN sub
-),
+{pq.lut_cte("probes", "probe_id", "pres")},
 adc AS (
-  SELECT p.probe_id, c.cid AS cell, c.vec_id,
-         CAST(sum(CAST(floor(l.d2 * 10000) AS BIGINT)) AS BIGINT) AS adc_e4
-  FROM code c
-  JOIN probes p ON p.pcid = c.cid AND p.probe_id <> c.vec_id
-  JOIN lut l ON l.probe_id = p.probe_id AND l.s = c.s AND l.pos = c.pos
-  GROUP BY p.probe_id, c.cid, c.vec_id
+  SELECT p.probe_id, code.cid AS cell, code.vec_id, {pq.ADC_E4_SQL} AS adc_e4
+  FROM code
+  JOIN probes p ON p.pcid = code.cid AND p.probe_id <> code.vec_id
+  JOIN lut ON lut.qid = p.probe_id AND lut.s = code.s AND lut.pos = code.pos
+  GROUP BY p.probe_id, code.cid, code.vec_id
 ),
 top3 AS (
   SELECT probe_id, cell, vec_id, adc_e4,
@@ -627,17 +466,10 @@ top3 AS (
            PARTITION BY probe_id ORDER BY adc_e4 ASC NULLS LAST, vec_id ASC NULLS LAST
          ) AS rnk
   FROM adc
-  QUALIFY row_number() OVER (
-    PARTITION BY probe_id ORDER BY adc_e4 ASC NULLS LAST, vec_id ASC NULLS LAST
-  ) <= 3
+  QUALIFY rnk <= 3
 )
 SELECT t.probe_id, t.cell, CAST(t.rnk AS INTEGER) AS rank, t.vec_id, t.adc_e4,
-       CAST(floor(list_aggregate(list_transform(generate_series(1, 64),
-         i -> (CAST(a.embedding[CAST(i AS INTEGER)] AS DOUBLE)
-               - CAST(b.embedding[CAST(i AS INTEGER)] AS DOUBLE))
-            * (CAST(a.embedding[CAST(i AS INTEGER)] AS DOUBLE)
-               - CAST(b.embedding[CAST(i AS INTEGER)] AS DOUBLE))),
-         'sum') * 10000) AS BIGINT) AS exact_e4
+       {pq.exact_e4_sql("a.embedding", "b.embedding")} AS exact_e4
 FROM top3 t
 JOIN embeddings a ON a.vec_id = t.probe_id
 JOIN embeddings b ON b.vec_id = t.vec_id
@@ -646,38 +478,30 @@ JOIN embeddings b ON b.vec_id = t.vec_id
 
 @query("q_vec_ivfpq", oracle=_ivfpq_oracle())
 def q_vec_ivfpq(spark, sf_dir):
-    """IVFADC — the full FAISS-style composite index, assembling the three
-    standalone arms into the architecture a production vector deployment
-    actually runs: the three-level IVF coarse quantizer (q_llm_ann_ivf)
-    prunes candidates to the probe's final cell, product quantization over
-    RESIDUALS (embedding − assigned centroid, the formulation FAISS
-    deploys: on clustered corpora residuals live at cell-radius magnitude,
-    so the same 16-entry codebook quantizes them far more finely than raw
-    vectors — on THIS near-uniform synthetic corpus cells are loose and
-    residual norms measure ~1.3× the unit raw norms, so the win doesn't
-    show at test scale; the architecture, not a data-dependent error
-    delta, is the contract), and the per-probe ADC lookup-table scan
-    (q_vec_adc) ranks the cell's members from their 8-byte codes alone.
-    Emits each probe's top-3 in-cell ADC neighbors with the true
-    full-precision distance alongside (both floor-e4) — the recall-quality
-    row an IVFADC deployment monitors.
+    """IVFADC — the FAISS-style composite index, assembling the three
+    standalone arms: the three-level IVF coarse quantizer (q_llm_ann_ivf)
+    prunes candidates to the probe's final cell, the operators/pq.py codec
+    encodes RESIDUALS (embedding − assigned centroid, the formulation
+    FAISS deploys: on clustered corpora residuals live at cell-radius
+    magnitude, so the same 16-entry codebook quantizes them far more
+    finely than raw vectors — on THIS near-uniform synthetic corpus cells
+    are loose and residual norms measure ~1.3× the unit raw norms, so the
+    win doesn't show at test scale; the architecture, not a
+    data-dependent error delta, is the contract), and the per-probe ADC
+    lookup-table scan (q_vec_adc) ranks the cell's members from their
+    codes alone. Emits each probe's top-3 in-cell ADC neighbors with the
+    exact distance alongside (both floor-e4) — the recall-quality row an
+    IVFADC deployment monitors.
 
     Scale shape: the cell assignment is the memoized, checkpointed
-    three-level tree (shared with the whole IVF family — no re-paid
-    scoring cross); residuals come from one centroid-keyed equi-join
-    (n/256 join keys — never broadcast); PQ encoding is row-local
-    higher-order arithmetic against the ONE-row broadcast residual
-    codebook (constant 16×8 work per vector — the q_vec_pq plan: encode
-    runs at scan speed); the ADC scan joins the 5-row broadcast LUT frame
-    against the probed cells only, so scored rows ≈ probes × 256 at every
-    n. The only rank window partitions by probe over ≤ cell-sized
-    candidate sets.
-
-    Determinism: residuals are exact double subtractions (float→double is
-    value-preserving), d2 folds run in the same sequential element order
-    as DuckDB's list_aggregate sum, codebook positions are the md5-rank
-    shared with q_vec_pq/q_vec_adc, and argmin tie-breaks use strict-<
-    over ascending pos — bit-identical codes, LUTs, and ADC sums."""
+    three-level tree (shared with the whole IVF family); residuals come
+    from one centroid-keyed equi-join (n/256 join keys — never
+    broadcast); the encode is row-local against the one-row broadcast
+    residual codebook (md5-sample order, the q_vec_adc tie-break); the
+    ADC scan joins the 5-row broadcast LUT frame against the probed cells
+    only, so scored rows ≈ probes × 256 at every n. The only rank window
+    partitions by probe over ≤ cell-sized candidate sets. Residuals are
+    exact double subtractions (float→double is value-preserving)."""
     e = load_tables(spark, sf_dir)["embeddings"]
     t = tree(e)
     # Residuals vs the REFINED quantizer centroid (cent3.ssemb, already
@@ -695,59 +519,31 @@ def q_vec_ivfpq(spark, sf_dir):
             ).alias("res"),
         )
     )
-    cb = (
-        withres.select(
-            F.md5(F.col("vec_id").cast("string")).alias("mkey"),
-            F.col("vec_id").alias("cbid"),
-            "res",
-        )
-        .orderBy(F.col("mkey").asc_nulls_last(), F.col("cbid").asc_nulls_last())
-        .limit(16)
-        .agg(F.sort_array(F.collect_list(F.struct("mkey", "cbid", "res"))).alias("cb"))
+    cb = pq.sample(withres, "vec_id").agg(
+        F.sort_array(
+            F.collect_list(F.struct("mkey", "vec_id", F.col("res").alias("v")))
+        ).alias("cb")
     )
-    d2s = (
-        "aggregate(zip_with(slice({a}, s * 8 + 1, 8), slice({b}, s * 8 + 1, 8),"
-        " (x, y) -> (x - y) * (x - y)),"
-        " CAST(0.0 AS DOUBLE), (acc2, v) -> acc2 + v)"
-    )
-    codes = F.expr(
-        "transform(sequence(0, 7), s -> aggregate("
-        " zip_with(cb, sequence(1, 16), (c, i) -> named_struct('cres', c.res, 'pos', i)),"
-        " named_struct('d2', CAST('Infinity' AS DOUBLE), 'pos', -1),"
-        f" (acc, p) -> IF({d2s.format(a='res', b='p.cres')} < acc.d2,"
-        f" named_struct('d2', {d2s.format(a='res', b='p.cres')}, 'pos', p.pos), acc)).pos)"
-    )
-    corpus = withres.crossJoin(F.broadcast(cb)).select("vec_id", "cid", codes.alias("codes"))
-    lut = F.expr(
-        "transform(sequence(0, 7), s -> transform(cb, c -> "
-        + d2s.format(a="pres", b="c.res")
-        + "))"
+    corpus = withres.crossJoin(F.broadcast(cb)).select(
+        "vec_id", "cid", pq.encode(F.col("res"), F.col("cb")).alias("codes")
     )
     qlut = (
         withres.filter(F.col("vec_id") < 5)
+        .crossJoin(F.broadcast(cb))
         .select(
             F.col("vec_id").alias("probe_id"),
             F.col("cid").alias("pcid"),
-            F.col("res").alias("pres"),
+            pq.lut(F.col("res"), F.col("cb")).alias("lut"),
         )
-        .crossJoin(F.broadcast(cb))
-        .select("probe_id", "pcid", lut.alias("lut"))
     )
-    scored = (
-        corpus.join(
-            F.broadcast(qlut),
-            (F.col("cid") == F.col("pcid")) & (F.col("vec_id") != F.col("probe_id")),
-        )
-        .select(
-            "probe_id",
-            F.col("cid").alias("cell"),
-            "vec_id",
-            F.expr(
-                "aggregate(zip_with(codes, sequence(1, 8), (p, s) ->"
-                " CAST(floor(element_at(element_at(lut, s), p) * 10000) AS BIGINT)),"
-                " CAST(0 AS BIGINT), (a, v) -> a + v)"
-            ).alias("adc_e4"),
-        )
+    scored = corpus.join(
+        F.broadcast(qlut),
+        (F.col("cid") == F.col("pcid")) & (F.col("vec_id") != F.col("probe_id")),
+    ).select(
+        "probe_id",
+        F.col("cid").alias("cell"),
+        "vec_id",
+        pq.adc_e4(F.col("codes"), F.col("lut")).alias("adc_e4"),
     )
     w_rank = Window.partitionBy("probe_id").orderBy(
         F.col("adc_e4").asc_nulls_last(), F.col("vec_id").asc_nulls_last()
@@ -759,17 +555,14 @@ def q_vec_ivfpq(spark, sf_dir):
     )
     qv = e.select(F.col("vec_id").alias("probe_id"), F.col("embedding").alias("qv"))
     nv = e.select("vec_id", F.col("embedding").alias("nv"))
-    exact = F.expr(
-        "CAST(floor(aggregate(zip_with(qv, nv, (x, y) ->"
-        " (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-        " * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
-        " CAST(0.0 AS DOUBLE), (a, v) -> a + v) * 10000) AS BIGINT)"
-    )
     return (
         F.broadcast(ranked)
         .join(qv, "probe_id")
         .join(nv, "vec_id")
-        .select("probe_id", "cell", "rank", "vec_id", "adc_e4", exact.alias("exact_e4"))
+        .select(
+            "probe_id", "cell", "rank", "vec_id", "adc_e4",
+            pq.exact_e4(F.col("qv"), F.col("nv")).alias("exact_e4"),
+        )
     )
 
 
@@ -1607,9 +1400,6 @@ def q_llm_mix_temperature(spark, sf_dir):
     )
 
 
-from pkg2_spark.queries.sketches import _v32_spark as _dsir_v32_spark  # noqa: E402
-from pkg2_spark.queries.sketches import _v32_sql as _dsir_v32_sql  # noqa: E402
-
 _DSIR_B = 256  # hashed feature buckets
 
 _DSIR_TOK = "list_filter(string_split(lower(text), ' '), x -> x <> '')"
@@ -1625,7 +1415,7 @@ WITH tok AS (
 ),
 b AS (
   SELECT doc_id, lang,
-         ({_dsir_v32_sql('md5(token)')}) % {_DSIR_B} AS bucket
+         ({v32_sql('md5(token)')}) % {_DSIR_B} AS bucket
   FROM tok
 ),
 tc AS (SELECT bucket, count(*) AS t_cnt FROM b WHERE lang = 'en' GROUP BY bucket),
@@ -1682,7 +1472,7 @@ def q_llm_dsir(spark, sf_dir):
     b = tok.select(
         "doc_id",
         "lang",
-        (F.expr(_dsir_v32_spark("md5(token)")) % _DSIR_B).alias("bucket"),
+        (F.expr(v32_spark("md5(token)")) % _DSIR_B).alias("bucket"),
     )
     # One explode+md5 pass: compact to per-(doc, lang, bucket) counts first.
     # Both downstream aggregates (the 256-bucket weight table and the

@@ -688,6 +688,121 @@ def test_ivfpq_deterministic_across_partitionings(spark, sf_dir):
     assert results[0] == results[1] and len(results[0]) > 0
 
 
+
+def _float_corpus(spark, x):
+    return spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(x)],
+        "vec_id long, embedding array<float>",
+    )
+
+
+def test_pq_codec_matches_a_numpy_reference(spark):
+    # operators/pq.py on a 32-dim corpus (8 subspaces of 4): codes, the
+    # LUT and every ADC sum equal a NumPy encode of the same md5-sampled
+    # codebook. cumsum folds each distance in element order, as both
+    # engines do, so the floats compare exactly. A 36-dim corpus, which 8
+    # subspaces cannot cut evenly, is refused.
+    import hashlib
+
+    import numpy as np
+    import pytest
+
+    from pkg2_spark.operators import pq
+
+    rng = np.random.default_rng(5)
+    x = rng.uniform(-1, 1, size=(120, 32)).astype(np.float32)
+    e = _float_corpus(spark, x)
+
+    def md5_order(ids):
+        return sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
+
+    book = md5_order(range(len(x)))[: pq.K]
+    queries = md5_order(range(len(x)))[:5]
+    xs = x.astype(np.float64).reshape(len(x), pq.M, -1)
+
+    def d2(a, b):  # (..., M, w) pairs -> (..., M), summed in element order
+        d = a - b
+        return np.cumsum(d * d, axis=-1)[..., -1]
+
+    ref_d2 = d2(xs[:, None], xs[book][None])  # (n, K, M)
+    ref_pos = ref_d2.argmin(axis=1) + 1  # first minimum = lowest position
+    ref_lut = {q: d2(xs[q][None], xs[book]).T for q in queries}  # (M, K)
+
+    def codebook(df):
+        return pq.sample(df, "vec_id").agg(
+            F.sort_array(
+                F.collect_list(F.struct("mkey", "vec_id", F.col("embedding").alias("v")))
+            ).alias("cb")
+        )
+
+    cb = codebook(e)
+    assert [r["vec_id"] for r in cb.first()["cb"]] == book
+    coded = e.crossJoin(cb).select(
+        "vec_id", pq.encode(F.col("embedding"), F.col("cb")).alias("codes")
+    )
+    codes = {r["vec_id"]: r["codes"] for r in coded.collect()}
+    for i, code in codes.items():
+        assert [c["pos"] for c in code] == ref_pos[i].tolist()
+        assert [c["d2"] for c in code] == [
+            ref_d2[i, p - 1, s] for s, p in enumerate(ref_pos[i])
+        ]
+    luts = (
+        pq.sample(e, "vec_id", n=5).crossJoin(cb)
+        .select(F.col("vec_id").alias("qid"), pq.lut(F.col("embedding"), F.col("cb")).alias("lut"))
+    )
+    assert {r["qid"]: r["lut"] for r in luts.collect()} == {
+        q: t.tolist() for q, t in ref_lut.items()
+    }
+    adc = (
+        coded.crossJoin(luts).filter(F.col("vec_id") != F.col("qid"))
+        .select("qid", "vec_id", pq.adc_e4(F.col("codes"), F.col("lut")).alias("adc"))
+    )
+    got = {(r["qid"], r["vec_id"]): r["adc"] for r in adc.collect()}
+    want = {
+        (q, i): int(np.floor(ref_lut[q][np.arange(pq.M), ref_pos[i] - 1] * 10000).sum())
+        for q in queries for i in range(len(x)) if i != q
+    }
+    assert got == want
+
+    def top3(scores, q):
+        return sorted((a, i) for (qq, i), a in scores.items() if qq == q)[:3]
+
+    for q in queries:
+        assert top3(got, q) == top3(want, q)
+
+    wide = _float_corpus(spark, rng.uniform(-1, 1, size=(20, 36)))
+    with pytest.raises(Exception, match="divisible by 8"):
+        wide.crossJoin(codebook(wide)).select(
+            pq.encode(F.col("embedding"), F.col("cb"))
+        ).collect()
+
+
+def test_assign_cte_reads_the_vector_width_from_the_row(spark):
+    # The DuckDB mirror of the IVF tree recenters every coordinate of a
+    # 32-dim corpus: its final assignment equals the Spark tree's.
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+
+    from pkg2_spark.operators.ivf import ASSIGN_CTE, ivf_invalidate, tree
+
+    x = np.random.default_rng(9).uniform(-1, 1, size=(600, 32)).astype(np.float32)
+    e = _float_corpus(spark, x)
+    con = duckdb.connect()
+    con.register(
+        "embeddings",
+        pa.table({
+            "vec_id": pa.array(range(len(x)), pa.int64()),
+            "embedding": pa.array(x.tolist(), pa.list_(pa.float32())),
+        }),
+    )
+    try:
+        got = {(r["vec_id"], r["cid"]) for r in tree(e).assign.collect()}
+    finally:
+        ivf_invalidate()
+    want = set(con.sql(f"WITH {ASSIGN_CTE} SELECT vec_id, cid FROM assign").fetchall())
+    assert got == want and len(want) == len(x)
+
 def test_bpe_step_merge_is_argmax_and_apply_is_greedy(spark, sf_dir):
     # The selected merge must be the exact argmax of the before-pairs
     # (count DESC, pair ASC); every word_after count must equal a direct
