@@ -47,7 +47,8 @@ TIER2 = [
     "q_llm_minhash",
     "q_llm_dedup_resolve",
     "q_pkg_resolve",
-    # q_stream_rt_join replays ONE micro-batch (scripts/profile_rt_join.py):
+    # q_stream_rt_join replays ONE micro-batch (perfbench pipeline_build,
+    # traced: streaming.batches):
     # the inner join emits every pair in its data batch, so the harness
     # skips the watermark-only batch that would only evict state, and runs
     # min(8, cores) state partitions. Before that, the eviction batch cost

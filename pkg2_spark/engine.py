@@ -1054,7 +1054,8 @@ class Engine:
         """MinHash/LSH candidate pairs (doc_a < doc_b) over a text corpus —
         the recall stage of candidate-then-verify near-dup detection, with
         the per-bucket hot-band cap (operators/lsh.py) bounding saturated
-        band keys to O(cap²) pairs."""
+        band keys to O(cap²) pairs. Uncapped (``cap=None``), the band table's
+        key vector lets the kernel emit each pair once, with no distinct."""
         from pkg2_spark.operators.lsh import banded_pairs
         from pkg2_spark.operators.text import (
             lsh_bands,

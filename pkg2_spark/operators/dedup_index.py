@@ -176,15 +176,11 @@ def apply_delta(
         # either way (the cosine is deterministic — that determinism is what
         # makes stored-vs-recomputed indistinguishable, pinned by the
         # incremental ≡ batch oracle).
-        from pkg2_spark.operators.similarity import unpack, wide_dot, wide_norm
+        from pkg2_spark.operators.similarity import wide, wide_cos
 
         stored = ver_c.withColumnRenamed("cos", "_stored")
-        wa = vectors.selectExpr("vec_id AS id_a", *unpack("embedding", dim, "_wa")).withColumn(
-            "_na", wide_norm("_wa", dim)
-        )
-        wb = vectors.selectExpr("vec_id AS id_b", *unpack("embedding", dim, "_wb")).withColumn(
-            "_nb", wide_norm("_wb", dim)
-        )
+        wa = wide(vectors, ["vec_id AS id_a"], "embedding", dim, "_wa")
+        wb = wide(vectors, ["vec_id AS id_b"], "embedding", dim, "_wb")
         return (
             cand.join(stored, ["id_a", "id_b"], "left")
             .join(wa, "id_a")
@@ -193,11 +189,7 @@ def apply_delta(
                 "id_a",
                 "id_b",
                 F.when(F.col("_stored").isNotNull(), F.col("_stored"))
-                .otherwise(
-                    F.round(
-                        wide_dot("_wa", "_wb", dim) / (F.col("_na") * F.col("_nb")), 4
-                    )
-                )
+                .otherwise(wide_cos("_wa", "_wb", dim))
                 .alias("cos"),
             )
         )

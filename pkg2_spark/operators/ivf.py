@@ -62,7 +62,7 @@ from typing import NamedTuple
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from pkg2_spark.operators.similarity import cosine4, unpack, wide_dot, wide_norm
+from pkg2_spark.operators.similarity import cosine4, wide, wide_cos
 from pkg2_spark.session import drop_session_memo, plan_memo, truncate_lineage
 
 TARGET_CELL = 256
@@ -196,14 +196,10 @@ def nearest(vecs, cands, out_id: str, cand_id: str, cand_vec: str, *,
     are not hash-agg key types), i.e. TWO full sorts of the n·k scored
     rows with an array comparator — measured 4x the cost of the scoring
     itself at the sf10 probe scale (13 s vs ~3 s for level 1)."""
-    ve = vecs.selectExpr(
-        key, *([join_on] if join_on else []), *unpack("embedding", dim, "_v")
-    ).withColumn("_nv", wide_norm("_v", dim))
+    ve = wide(vecs, [key, *([join_on] if join_on else [])], "embedding", dim, "_v")
     cand_cols = [cand_id] + ([f"{join_on} AS _jk"] if join_on else [])
-    ce = cands.selectExpr(*cand_cols, *unpack(cand_vec, dim, "_c")).withColumn(
-        "_nc", wide_norm("_c", dim)
-    )
-    cos = F.round(wide_dot("_v", "_c", dim) / (F.col("_nv") * F.col("_nc")), 4)
+    ce = wide(cands, cand_cols, cand_vec, dim, "_c")
+    cos = wide_cos("_v", "_c", dim)
     if join_on is None:
         scored = ve.crossJoin(F.broadcast(ce))
     else:

@@ -72,6 +72,33 @@ def wide_norm(prefix: str, dim: int) -> Column:
     return F.sqrt(F.expr(" + ".join(f"{prefix}{i} * {prefix}{i}" for i in range(dim))))
 
 
+def wide(df: DataFrame, cols: list[str], vec_col: str, dim: int, prefix: str) -> DataFrame:
+    """One side of the wide cosine: the SQL select items ``cols``, then
+    ``vec_col`` unpacked into ``{prefix}0 .. {prefix}{dim-1}`` and its norm
+    ``{prefix}_n`` (per VECTOR, before any pair join — linear work).
+
+    The vector must have ``dim`` coordinates: unpacking reads exactly
+    1..dim, so a wider vector would score on a prefix and a narrower one
+    would fail on an opaque index error. Each vector is checked once, in
+    its row (no job), and a mismatch raises naming both widths."""
+    checked = df.selectExpr(
+        *cols,
+        f"IF(size({vec_col}) <> {dim}, raise_error(concat('vector {vec_col} has ', "
+        f"size({vec_col}), ' coordinates; the wide cosine reads dim = {dim}')), "
+        f"{vec_col}) AS {prefix}",
+    )
+    keep = [c for c in checked.columns if c != prefix]
+    return checked.selectExpr(*keep, *unpack(prefix, dim, prefix)).withColumn(
+        f"{prefix}_n", wide_norm(prefix, dim)
+    )
+
+
+def wide_cos(pa: str, pb: str, dim: int) -> Column:
+    """Pair cosine, rounded to 4dp, of two ``wide`` sides: one codegen dot
+    and a divide per pair (dot/(na*nb) with the same sequential sums)."""
+    return F.round(wide_dot(pa, pb, dim) / (F.col(f"{pa}_n") * F.col(f"{pb}_n")), 4)
+
+
 def _pair_stage_slices(sess) -> int:
     """Task count for the quadratic pair stage.
 
@@ -118,19 +145,15 @@ def cosine_pairs_wide(
     broadcast, pass ``broadcast_right=False``: both sides shuffle on the
     equi-prefix of ``join_cond`` (band key) and AQE handles skew — the
     100 TB shape."""
-    lw = left.selectExpr(
-        *[c for c in left.columns if c != left_vec], *unpack(left_vec, dim, "__a")
-    ).withColumn("__na", wide_norm("__a", dim))
-    rw = right.selectExpr(
-        *[c for c in right.columns if c != right_vec], *unpack(right_vec, dim, "__b")
-    ).withColumn("__nb", wide_norm("__b", dim))
-    keep = [c for c in left.columns if c != left_vec] + [c for c in right.columns if c != right_vec]
+    lkeep = [c for c in left.columns if c != left_vec]
+    rkeep = [c for c in right.columns if c != right_vec]
+    lw = wide(left, lkeep, left_vec, dim, "__a")
+    rw = wide(right, rkeep, right_vec, dim, "__b")
     if broadcast_right:
         lw = lw.repartition(_pair_stage_slices(lw.sparkSession))
         rw = F.broadcast(rw)
     joined = lw.join(rw, join_cond)
-    cos = F.round(wide_dot("__a", "__b", dim) / (F.col("__na") * F.col("__nb")), 4)
-    return joined.select(*keep, cos.alias("cos"))
+    return joined.select(*lkeep, *rkeep, wide_cos("__a", "__b", dim).alias("cos"))
 
 
 def sign_lsh_bands(
@@ -189,22 +212,12 @@ def cosine_on_pairs(
     candidates), bit-identical values (same left-associative sums, same
     4dp round). Both lookup joins are equi-joins on the id — broadcast or
     shuffle as the optimizer sizes them."""
-    wa = vectors.selectExpr(f"{id_col} AS {left}", *unpack(vec_col, dim, "_wa")).withColumn(
-        "_na", wide_norm("_wa", dim)
-    )
-    wb = vectors.selectExpr(f"{id_col} AS {right}", *unpack(vec_col, dim, "_wb")).withColumn(
-        "_nb", wide_norm("_wb", dim)
-    )
+    wa = wide(vectors, [f"{id_col} AS {left}"], vec_col, dim, "_wa")
+    wb = wide(vectors, [f"{id_col} AS {right}"], vec_col, dim, "_wb")
     return (
         cand.join(wa, left)
         .join(wb, right)
-        .select(
-            left,
-            right,
-            F.round(
-                wide_dot("_wa", "_wb", dim) / (F.col("_na") * F.col("_nb")), 4
-            ).alias("cos"),
-        )
+        .select(left, right, wide_cos("_wa", "_wb", dim).alias("cos"))
     )
 
 

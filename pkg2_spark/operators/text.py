@@ -69,14 +69,18 @@ def band_key_expr(band: int, rows_per_band: int) -> Column:
 
 def lsh_bands(sig: DataFrame, num_hashes: int, rows_per_band: int, id_col: str = "doc_id") -> DataFrame:
     """Band the signature: band_key = md5(concat of r consecutive hashes).
-    Docs sharing any band key are near-dup candidates (equi-join, no O(n²))."""
+    Docs sharing any band key are near-dup candidates (equi-join, no O(n²)).
+    Each row also carries the doc's key vector ``band_keys``, from which
+    operators/lsh.py::banded_pairs emits each uncapped pair once without a
+    distinct; a consumer that never reads it has it pruned from its plan."""
     assert num_hashes % rows_per_band == 0
     bands = [
         band_key_expr(b, rows_per_band) for b in range(num_hashes // rows_per_band)
     ]
-    return sig.select(
+    return sig.select(id_col, F.array(*bands).alias("band_keys")).select(
         id_col,
-        F.posexplode(F.array(*bands)).alias("band_id", "band_key"),
+        F.posexplode("band_keys").alias("band_id", "band_key"),
+        "band_keys",
     )
 
 
@@ -130,10 +134,13 @@ def blocked_token_pairs(
     are the set sizes. The shared kernel of q_llm_jaccard /
     q_llm_containment / q_llm_lsh_calib's ground-truth arm.
 
-    Two r14 fixes (measured 11.4 s → 1.4 s for the jaccard consumer and
-    28.8 s → 0.7 s for containment at sf0.1, identical outputs):
+    The pairs come from operators/lsh.py::banded_pairs over a single-block
+    table (the block column is the only key, so no pair de-duplication),
+    carrying the token sets to both sides. Two r14 fixes (measured 11.4 s
+    → 1.4 s for the jaccard consumer and 28.8 s → 0.7 s for containment at
+    sf0.1, identical outputs):
 
-    - fan_out_scan on the probe side (guide §2.5): the block join
+    - fan_out_scan on the block table (guide §2.5): the block join
       broadcasts one side, so every per-pair array intersection runs on
       the PROBE side's partitions — an under-split scan serialized the
       whole quadratic-per-block workload onto one task.
@@ -147,32 +154,23 @@ def blocked_token_pairs(
       filter or projection can re-inline the array work. (Plain column
       aliases don't survive: CollapseProject re-substitutes them.)
     """
+    from pkg2_spark.operators.lsh import banded_pairs
     from pkg2_spark.session import fan_out_scan
 
-    a = fan_out_scan(t).select(
-        F.col(id_col).alias("doc_a"),
-        F.col(block_col).alias("_blk_a"),
-        F.col(toks_col).alias("_ta"),
-    )
-    b = t.select(
-        F.col(id_col).alias("doc_b"),
-        F.col(block_col).alias("_blk_b"),
-        F.col(toks_col).alias("_tb"),
+    blocks = fan_out_scan(t).select(
+        id_col, F.col(block_col).alias("band_key"), F.col(toks_col).alias("toks")
     )
     return (
-        a.join(
-            b,
-            (F.col("_blk_a") == F.col("_blk_b")) & (F.col("doc_a") < F.col("doc_b")),
-        )
+        banded_pairs(blocks, id_col, "doc_a", "doc_b", carry=("toks",))
         .select(
             "doc_a",
             "doc_b",
             F.explode(
                 F.array(
                     F.struct(
-                        F.size(F.array_intersect("_ta", "_tb")).alias("ni"),
-                        F.size("_ta").alias("la"),
-                        F.size("_tb").alias("lb"),
+                        F.size(F.array_intersect("toks_a", "toks_b")).alias("ni"),
+                        F.size("toks_a").alias("la"),
+                        F.size("toks_b").alias("lb"),
                     )
                 )
             ).alias("_m"),

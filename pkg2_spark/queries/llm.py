@@ -35,7 +35,7 @@ from pkg2_spark.operators.ivf import (
     shape,
     tree,
 )
-from pkg2_spark.operators.lsh import banded_pairs, capped_bands_sql
+from pkg2_spark.operators.lsh import banded_pairs, banded_pairs_sql, capped_bands_sql
 from pkg2_spark.operators.sampling import hash_sample, hash_split
 from pkg2_spark.operators.similarity import cosine_pairs_wide, knn_bruteforce
 from pkg2_spark.operators.text import (
@@ -81,11 +81,7 @@ def _sign_cand_sql() -> str:
     sign_lsh_bands + operators/lsh.py::banded_pairs(cap=_BUCKET_CAP)."""
     return f"""{_SIGN_BANDS_SQL},
 {capped_bands_sql("vec_id", _BUCKET_CAP)},
-cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM cbands a JOIN cbands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.vec_id < b.vec_id
-)"""
+{banded_pairs_sql("vec_id", "id_a", "id_b")}"""
 
 
 @query(
@@ -152,13 +148,9 @@ bands AS (
     "q_llm_neardup_pairs",
     oracle=f"""
 WITH {_bands_cte()},
-pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-)
+{banded_pairs_sql("doc_id", "doc_a", "doc_b", source="bands")}
 SELECT doc_a, count(*) AS n_candidates, min(doc_b) AS min_cand, max(doc_b) AS max_cand
-FROM pairs GROUP BY doc_a
+FROM cand GROUP BY doc_a
 """,
 )
 def q_llm_neardup_pairs(spark, sf_dir):
@@ -536,48 +528,31 @@ def q_llm_simhash_dup(spark, sf_dir):
     found every qualifying pair. At scale: k+1 chunks find distance ≤ k,
     and the join stays chunk-keyed — never all-pairs.
 
-    r14: a pair can match in BOTH halves (hamming 0); instead of a
-    .distinct() over the full pair stream (a second corpus-pair-sized
-    shuffle — the widest exchange in the old plan), each pair is emitted
-    exactly once by a row-local rule: keep the half-0 match, and keep a
-    half-1 match only when the halves-0 differ (3.5 → 1.5 s at sf0.1,
-    identical output)."""
+    The halves are a two-band table that carries its key vector, so
+    operators/lsh.py::banded_pairs emits each pair once, at its lowest
+    shared half (r14: a .distinct() over the full pair stream was a second
+    corpus-pair-sized shuffle, the widest exchange in the old plan; 3.5 →
+    1.5 s at sf0.1, identical output). This query keeps only the verify
+    step, bit_count(xor) <= 1."""
     d = load_tables(spark, sf_dir)["documents"]
     sig = simhash16(tokenize_distinct(d))
+    halves = F.array(F.col("simhash") % 256, (F.col("simhash") / 256).cast("long"))
     bands = sig.select(
         "doc_id",
         "simhash",
-        F.posexplode(
-            F.array(F.col("simhash") % 256, (F.col("simhash") / 256).cast("long"))
-        ).alias("half_id", "half_val"),
-    )
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sa"), "half_id", "half_val"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("sb"),
-        F.col("half_id").alias("hid2"),
-        F.col("half_val").alias("hval2"),
+        halves.alias("band_keys"),
+        F.posexplode(halves).alias("band_id", "band_key"),
     )
     return (
-        a.join(
-            b,
-            (F.col("half_id") == F.col("hid2"))
-            & (F.col("half_val") == F.col("hval2"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
+        banded_pairs(bands, "doc_id", "doc_a", "doc_b", carry=("simhash",))
         .select(
             "doc_a",
             "doc_b",
-            "sa",
-            "sb",
-            "half_id",
-            F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))).cast("int").alias("hamming"),
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+            .cast("int")
+            .alias("hamming"),
         )
         .filter(F.col("hamming") <= 1)
-        .filter((F.col("half_id") == 0) | (F.col("sa") % 256 != F.col("sb") % 256))
-        .select("doc_a", "doc_b", "hamming")
     )
 
 
@@ -784,17 +759,11 @@ def q_llm_semdedup(spark, sf_dir):
     # materialized label frame, and the n·(k1+k2+k3) scoring cross is
     # shared with the other IVF-family queries on this corpus.
     assign = tree(e).assign.select("vec_id", "cid")
-    bands = assign.select(
-        "vec_id",
-        F.lit(0).alias("band_id"),
-        F.col("cid").cast("string").alias("band_key"),
-    )
-    # distinct_pairs=False (r15): each vector sits in exactly ONE cell
-    # (single band), so a pair can only be discovered once — the
-    # multi-band distinct would be a no-op costing one pair Exchange.
-    cand = banded_pairs(
-        bands, "vec_id", "id_a", "id_b", cap=_BUCKET_CAP, distinct_pairs=False
-    )
+    bands = assign.select("vec_id", F.col("cid").cast("string").alias("band_key"))
+    # A single-block table (no band_id): each vector sits in exactly ONE
+    # cell, so banded_pairs finds each pair once and adds no distinct (r15:
+    # the multi-band distinct was a no-op costing one pair Exchange).
+    cand = banded_pairs(bands, "vec_id", "id_a", "id_b", cap=_BUCKET_CAP)
     pairs = cosine_on_pairs(cand, e, "id_a", "id_b", dim=64).filter(
         F.col("cos") >= 0.3
     )
@@ -848,11 +817,7 @@ def q_llm_cossim_lsh(spark, sf_dir):
     oracle=f"""
 WITH {_bands_cte().replace("bands AS", "mbands AS").strip()},
 {capped_bands_sql("doc_id", _BUCKET_CAP, source="mbands")},
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM cbands a JOIN cbands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-),
+{banded_pairs_sql("doc_id", "doc_a", "doc_b")},
 t AS (SELECT doc_id, list_distinct({_TOK_SQL}) AS toks FROM documents),
 scored AS (
   SELECT doc_a, doc_b,
@@ -1154,12 +1119,7 @@ def _minhash_est_oracle() -> str:
     agree = " + ".join(f"CAST(a.mh{i} = b.mh{i} AS INTEGER)" for i in range(_K))
     return f"""
 WITH {_bands_cte()},
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-  WHERE a.doc_id % 5 = 0 AND b.doc_id % 2 = 0
-),
+{banded_pairs_sql("doc_id", "doc_a", "doc_b", source="bands")},
 t AS (SELECT doc_id, list_distinct({_TOK_SQL}) AS toks FROM documents),
 scored AS (
   SELECT doc_a, doc_b,
@@ -1171,6 +1131,7 @@ scored AS (
   JOIN sig b ON b.doc_id = cand.doc_b
   JOIN t ta ON ta.doc_id = cand.doc_a
   JOIN t tb ON tb.doc_id = cand.doc_b
+  WHERE doc_a % 5 = 0 AND doc_b % 2 = 0
 )
 SELECT doc_a, doc_b, n_agree,
        round(n_agree / 8.0, 4) AS est_jaccard,
@@ -1204,13 +1165,15 @@ def q_llm_minhash_est(spark, sf_dir):
     cand = banded_pairs(bands, "doc_id", "doc_a", "doc_b").filter(
         (F.col("doc_a") % 5 == 0) & (F.col("doc_b") % 2 == 0)
     )
-    # r14 (guide §2.5): AQE coalesces the distinct's exchange by BYTES, but
-    # each surviving pair row fans into an array_intersect over the full
-    # token sets downstream — ~480k verifications were landing on 2 tasks
-    # (the 16-byte pair rows total ~3 MB). A keyed repartition to the
-    # session's parallelism floor re-spreads the compute-dense verify stage;
-    # at cluster scale the attach joins re-exchange the pairs anyway, so
-    # this costs one extra skinny-pair shuffle and changes nothing else.
+    # The band table carries its key vector, so banded_pairs emits each
+    # pair once without a distinct. r14 (guide §2.5): each pair row fans
+    # into an array_intersect over the full token sets downstream, and AQE
+    # coalesces a pair exchange by BYTES — ~480k verifications were landing
+    # on 2 tasks (the 16-byte pair rows total ~3 MB). A keyed repartition
+    # to the session's parallelism floor re-spreads the compute-dense
+    # verify stage; at cluster scale the attach joins re-exchange the pairs
+    # anyway, so this costs one skinny-pair shuffle and changes nothing
+    # else.
     cand = cand.repartition(
         spark.sparkContext.defaultParallelism, "doc_a", "doc_b"
     )

@@ -183,39 +183,28 @@ def q_mm_phash_dup(spark, sf_dir):
     round-trips through hex so no Python touches the pairing path; the
     oracle rebuilds identical bytes from md5(text) (the payload's
     generator). Blocking key cardinality is 256 per half — on real
-    corpora use 64-bit pHashes with k+1 chunks for Hamming <= k."""
+    corpora use 64-bit pHashes with k+1 chunks for Hamming <= k.
+
+    The halves are a two-band table that carries its key vector, so
+    operators/lsh.py::banded_pairs emits each pair once, at its lowest
+    shared half, with no pair-keyed distinct (1 → 0 shuffle Exchanges,
+    3 → 2 collect jobs at sf0.01). This query keeps only the verify step."""
+    from pkg2_spark.operators.lsh import banded_pairs
+
     d = load_tables(spark, sf_dir)["documents"]
     t = with_binary_payload(d)
     hexp = "lower(hex(payload))"
     p = t.select("doc_id", F.expr(_phash_sql(hexp)).alias("phash"))
-    c = p.select(
+    halves = F.array(F.col("phash") % 256, (F.col("phash") / F.lit(256)).cast("int"))
+    bands = p.select(
         "doc_id",
         "phash",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("chunk_id"), (F.col("phash") % 256).alias("chunk_val")),
-                F.struct(F.lit(1).alias("chunk_id"), (F.col("phash") / F.lit(256)).cast("int").alias("chunk_val")),
-            )
-        ).alias("ch"),
-    ).select("doc_id", "phash", F.col("ch.chunk_id").alias("chunk_id"), F.col("ch.chunk_val").alias("chunk_val"))
-    a = c.select(F.col("doc_id").alias("doc_a"), F.col("phash").alias("pa"), "chunk_id", "chunk_val")
-    b = c.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("phash").alias("pb"),
-        F.col("chunk_id").alias("cid2"),
-        F.col("chunk_val").alias("cval2"),
+        halves.alias("band_keys"),
+        F.posexplode(halves).alias("band_id", "band_key"),
     )
-    cand = (
-        a.join(
-            b,
-            (F.col("chunk_id") == F.col("cid2"))
-            & (F.col("chunk_val") == F.col("cval2"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
-        .select("doc_a", "pa", "doc_b", "pb")
-        .distinct()
+    hamming = F.bit_count(F.expr("phash_a ^ phash_b"))
+    return (
+        banded_pairs(bands, "doc_id", "doc_a", "doc_b", carry=("phash",))
+        .select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
+        .filter(F.col("hamming") <= 1)
     )
-    hamming = F.bit_count(F.expr("pa ^ pb"))
-    return cand.select(
-        "doc_a", "doc_b", hamming.cast("int").alias("hamming")
-    ).filter(F.col("hamming") <= 1)

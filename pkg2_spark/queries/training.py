@@ -506,11 +506,15 @@ def q_vec_ivfpq(spark, sf_dir):
     t = tree(e)
     # Residuals vs the REFINED quantizer centroid (cent3.ssemb, already
     # double) — slots of one quantizer cell share its centroid, so the
-    # lookup keys on cid div slot-base.
+    # lookup keys on cid div slot-base. The shuffle_hash hint fixes the
+    # join's plan: unhinted, adaptive execution turned it into a broadcast
+    # join built from whichever side's shuffle stage finished first, and
+    # when that was the vector side the sample branch could not reuse the
+    # codebook broadcast (13 or 14 collect jobs from call to call).
     ce = t.cent3.select(F.col("sscid").alias("qcid"), F.col("ssemb").alias("cemb"))
     withres = (
         t.assign.withColumn("qcid", F.expr(f"cid div {SLOT_BASE}"))
-        .join(ce, "qcid")
+        .join(ce.hint("shuffle_hash"), "qcid")
         .select(
             "vec_id",
             "cid",
@@ -778,6 +782,7 @@ def q_llm_split_drift(spark, sf_dir):
     )
 
 
+from pkg2_spark.operators.lsh import banded_pairs_sql as _banded_pairs_sql  # noqa: E402
 from pkg2_spark.operators.lsh import capped_bands_sql as _capped_bands_sql  # noqa: E402
 from pkg2_spark.queries.llm import _BUCKET_CAP as _LLM_BUCKET_CAP  # noqa: E402
 from pkg2_spark.queries.llm import _bands_cte as _llm_bands_cte  # noqa: E402
@@ -791,12 +796,8 @@ from pkg2_spark.queries.llm import _bands_cte as _llm_bands_cte  # noqa: E402
     oracle=f"""
 WITH RECURSIVE {_llm_bands_cte().strip()},
 {_capped_bands_sql("doc_id", _LLM_BUCKET_CAP)},
-pairs AS (
-  SELECT DISTINCT a.doc_id AS x, b.doc_id AS y
-  FROM cbands a JOIN cbands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-),
-edges AS (SELECT x, y FROM pairs UNION SELECT y, x FROM pairs),
+{_banded_pairs_sql("doc_id", "x", "y")},
+edges AS (SELECT x, y FROM cand UNION SELECT y, x FROM cand),
 reach(v, u) AS (
   SELECT x AS v, x AS u FROM edges
   UNION
@@ -1282,54 +1283,37 @@ def q_llm_winnow_dup(spark, sf_dir):
     fingerprint equi-join finds partial plagiarism/quotation that
     whole-document hashing (q_llm_fingerprint) and token-set Jaccard both
     miss. The fingerprint is the blocking key — same skew reality as LSH
-    bands (a boilerplate fingerprint is a hot key), so the join applies
-    the same deterministic per-fingerprint member cap before pairing.
+    bands (a boilerplate fingerprint is a hot key), so the pairs come from
+    operators/lsh.py::banded_pairs with the same deterministic
+    per-fingerprint member cap. The fingerprint table is single-block
+    (no band_id), so the kernel emits a pair once per shared fingerprint —
+    exactly what the n_shared count, this query's verify step, counts.
 
     Decade-tail cut (r11 verdict #3): on diverse corpora most selected
-    fingerprints are UNIQUE to one document and can never pair, yet they
-    used to ride the self-join shuffle anyway (9.9x per decade at sf10d).
-    A count() over the SAME fp partition as the cap window (one extra
-    Window node, zero extra exchange — both specs hash-partition on fp)
-    drops single-member fingerprints before pairing; results are
-    identical because a pair needs two members and na/nb are per-doc
-    constants carried on every surviving row.
+    fingerprints are UNIQUE to one document and can never pair. The capped
+    kernel enumerates pairs per fingerprint bucket on the cap window's own
+    partitioning, so a single-member bucket emits nothing and rides no
+    pair shuffle; na/nb are per-doc constants carried on every pair.
 
     r14: the scan fans out (session.fan_out_scan) before the kgram-md5 +
     window-min selection pipeline — a one-row-group input ran that whole
     per-doc compute on a single task (7.1 → 2.2 s at sf0.1; no-op on any
     multi-split input)."""
+    from pkg2_spark.operators.lsh import banded_pairs
     from pkg2_spark.session import fan_out_scan
 
     d = load_tables(spark, sf_dir)["documents"]
     f = _winnow_selected(fan_out_scan(d.select("doc_id", "text")))
-    w = Window.partitionBy("fp").orderBy(
-        F.md5(F.col("doc_id").cast("string")).asc_nulls_last(),
-        F.col("doc_id").asc_nulls_last(),
-    )
-    cf = (
-        f.withColumn("_rn", F.row_number().over(w))
-        .withColumn("_nfp", F.count(F.lit(1)).over(Window.partitionBy("fp")))
-        .filter((F.col("_rn") <= _LLM_BUCKET_CAP) & (F.col("_nfp") >= 2))
-        .drop("_rn", "_nfp")
-    )
-    a = cf.select(F.col("doc_id").alias("doc_a"), F.col("n_selected").alias("na"), "fp")
-    # shuffle_hash, not AQE's broadcast conversion: both self-join sides
-    # are the SAME capped-window subtree already partitioned on fp, so a
-    # shuffle join reuses one fingerprint exchange, while broadcasting
-    # rebuilds the whole md5-kgram pipeline for the build side (measured
-    # 2.32s -> 1.60s at sf0.1).
-    b = cf.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("n_selected").alias("nb"),
-        F.col("fp").alias("fp2"),
-    ).hint("shuffle_hash")
+    blocks = f.select("doc_id", F.col("fp").alias("band_key"), "n_selected")
     pairs = (
-        a.join(b, (F.col("fp") == F.col("fp2")) & (F.col("doc_a") < F.col("doc_b")))
+        banded_pairs(
+            blocks, "doc_id", "doc_a", "doc_b", cap=_LLM_BUCKET_CAP, carry=("n_selected",)
+        )
         .groupBy("doc_a", "doc_b")
         .agg(
             F.count(F.lit(1)).alias("n_shared"),
-            F.min("na").alias("na"),
-            F.min("nb").alias("nb"),
+            F.min("n_selected_a").alias("na"),
+            F.min("n_selected_b").alias("nb"),
         )
         .filter(F.col("n_shared") >= 3)
     )
@@ -2356,14 +2340,10 @@ truth AS (
     FROM t a JOIN t b ON a.source = b.source AND a.doc_id < b.doc_id
   ) WHERE la + lb - ni > 0
 ),
-lshp AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-),
+{_banded_pairs_sql("doc_id", "doc_a", "doc_b", source="bands")},
 flagged AS (
   SELECT tr.j_milli, CASE WHEN l.doc_a IS NULL THEN 0 ELSE 1 END AS caught
-  FROM truth tr LEFT JOIN lshp l ON tr.doc_a = l.doc_a AND tr.doc_b = l.doc_b
+  FROM truth tr LEFT JOIN cand l ON tr.doc_a = l.doc_a AND tr.doc_b = l.doc_b
 )
 SELECT CAST(least(j_milli // 100, 9) AS INTEGER) AS bucket,
        CAST(count(*) AS BIGINT) AS n_pairs,

@@ -1410,3 +1410,127 @@ class TestNeardupDegreeInclusionExclusion:
         )
         want = {r["doc_a"]: (r["n"], r["mn"], r["mx"]) for r in ref.collect()}
         assert got == want
+
+
+class TestBandedPairsKernel:
+    """operators/lsh.py::banded_pairs against a plain-Python reference of
+    the definition: a pair (a < b) for every block both rows share, the
+    cap keeping the ``cap`` members of each bucket first in
+    (md5(str(id)), id) order; a multi-band table yields each pair once,
+    a single-block table once per shared key. The DuckDB mirror
+    (capped_bands_sql + banded_pairs_sql) is held to the same reference."""
+
+    @staticmethod
+    def _reference(rows, cap=None, carry=()):
+        """rows: dicts with id, band_key, optional band_id, payload."""
+        import hashlib
+        from collections import Counter, defaultdict
+
+        multi = "band_id" in rows[0]
+        buckets = defaultdict(list)
+        for r in rows:
+            buckets[(r.get("band_id"), r["band_key"])].append(r)
+        pairs = Counter()
+        for members in buckets.values():
+            if cap is not None:
+                members = sorted(
+                    members, key=lambda r: (hashlib.md5(str(r["id"]).encode()).hexdigest(), r["id"])
+                )[:cap]
+            for x in members:
+                for y in members:
+                    if x["id"] < y["id"]:
+                        pairs[(x["id"], y["id"], *[v[c] for c in carry for v in (x, y)])] += 1
+        return Counter(set(pairs)) if multi else pairs
+
+    @staticmethod
+    def _multi_band(spark, keys_by_id):
+        """A multi-band table that carries its key vector, the shape
+        lsh_bands and the SimHash/pHash halves produce."""
+        df = spark.createDataFrame(
+            [(i, ks) for i, ks in keys_by_id.items()], "id long, band_keys array<string>"
+        )
+        return df.select("id", F.posexplode("band_keys").alias("band_id", "band_key"), "band_keys")
+
+    @staticmethod
+    def _got(df, cols):
+        from collections import Counter
+
+        return Counter(tuple(r[c] for c in cols) for r in df.collect())
+
+    def test_uncapped_multi_band_emits_each_pair_once(self, spark):
+        from pkg2_spark.operators.lsh import banded_pairs
+
+        keys = {1: ["a", "x"], 2: ["a", "x"], 3: ["a", "y"], 4: ["b", "y"], 5: ["c", "z"]}
+        rows = [dict(id=i, band_id=b, band_key=k) for i, ks in keys.items() for b, k in enumerate(ks)]
+        want = self._reference(rows)
+        assert (1, 2) in want  # shares both bands (Hamming 0)
+        assert (3, 4) in want  # shares band 1 only
+        bands = self._multi_band(spark, keys)
+        emit_once = banded_pairs(bands, "id", "a", "b")
+        assert self._got(emit_once, ["a", "b"]) == want
+        # without the key vector the rows cannot judge it: distinct
+        assert self._got(banded_pairs(bands.drop("band_keys"), "id", "a", "b"), ["a", "b"]) == want
+
+    def test_single_block_counts_a_pair_once_per_shared_key(self, spark):
+        from pkg2_spark.operators.lsh import banded_pairs
+
+        fps = {1: ["f", "g", "h"], 2: ["f", "g"], 3: ["g"], 4: ["k"]}
+        rows = [dict(id=i, band_key=fp, n=len(v)) for i, v in fps.items() for fp in v]
+        blocks = spark.createDataFrame(
+            [(r["id"], r["band_key"], r["n"]) for r in rows], "id long, band_key string, n int"
+        )
+        for cap in (None, 64):
+            got = banded_pairs(blocks, "id", "a", "b", cap=cap, carry=("n",))
+            want = self._reference(rows, cap, carry=("n",))
+            assert want[(1, 2, 3, 2)] == 2  # two shared fingerprints, two rows
+            assert self._got(got, ["a", "b", "n_a", "n_b"]) == want, cap
+
+    def test_capped_pair_still_comes_from_its_uncapped_band(self, spark, duck):
+        import hashlib
+
+        from pkg2_spark.operators.lsh import banded_pairs, banded_pairs_sql, capped_bands_sql
+
+        hot = sorted(range(1, 6), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+        kept, dropped = hot[0], hot[2]  # cap 2 keeps hot[:2]
+        keys = {i: ["hot", f"solo{i}"] for i in hot}
+        keys[kept] = keys[dropped] = ["hot", "pair"]
+        rows = [dict(id=i, band_id=b, band_key=k) for i, ks in keys.items() for b, k in enumerate(ks)]
+        want = self._reference(rows, cap=2)
+        lo, hi = sorted((kept, dropped))
+        # the pair shares band 0, but the cap dropped one member there
+        assert (lo, hi) in want and want == {tuple(sorted(hot[:2])): 1, (lo, hi): 1}
+        got = banded_pairs(self._multi_band(spark, keys), "id", "a", "b", cap=2)
+        assert self._got(got, ["a", "b"]) == want
+        duck.execute("CREATE OR REPLACE TEMP TABLE kbands (id BIGINT, band_id INTEGER, band_key VARCHAR)")
+        duck.executemany(
+            "INSERT INTO kbands VALUES (?, ?, ?)",
+            [(r["id"], r["band_id"], r["band_key"]) for r in rows],
+        )
+        sql = f"""WITH {capped_bands_sql("id", 2, source="kbands")},
+{banded_pairs_sql("id", "a", "b")}
+SELECT a, b FROM cand"""
+        from collections import Counter
+
+        assert Counter(duck.execute(sql).fetchall()) == want
+
+
+def test_wide_cosine_refuses_a_vector_of_another_width(spark):
+    # cosine_on_pairs unpacks exactly `dim` coordinates; a 96-dim pair
+    # scored with dim=64 used to return the cosine of the first 64
+    # coordinates, silently.
+    import numpy as np
+    import pytest as _pytest
+
+    from pkg2_spark.operators.similarity import cosine_on_pairs
+
+    rng = np.random.default_rng(5)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.uniform(-1, 1, 96)]) for i in (1, 2)],
+        "vec_id long, embedding array<float>",
+    )
+    pair = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    a, b = (np.array(r.embedding, dtype=np.float64) for r in vecs.orderBy("vec_id").collect())
+    true = round(float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b))), 4)
+    assert cosine_on_pairs(pair, vecs, "id_a", "id_b", dim=96).first().cos == _pytest.approx(true, abs=1e-4)
+    with _pytest.raises(Exception, match="has 96 coordinates; the wide cosine reads dim = 64"):
+        cosine_on_pairs(pair, vecs, "id_a", "id_b", dim=64).collect()

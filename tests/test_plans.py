@@ -669,3 +669,29 @@ def test_sql_variables_macro_inlines_and_pushes_down(spark, sf_dir):
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in plan
     assert "FLOOR" in plan  # the macro body, inlined into codegen
+
+
+def test_ivfpq_plans_the_same_every_call(spark, sf_dir):
+    # q_vec_ivfpq's residual join keys on the quantizer cell. Unhinted,
+    # adaptive execution turned it into a broadcast join built from
+    # whichever side's shuffle stage finished first; when that was the
+    # vector side, the sample branch could not reuse the codebook
+    # broadcast, and the collect ran one more job. The join is hinted
+    # shuffle-hash, so three calls in one session run the same jobs.
+    import re
+    import uuid
+
+    sc = spark.sparkContext
+    jobs = []
+    for i in range(3):
+        df = all_queries()["q_vec_ivfpq"](spark, sf_dir)
+        group = f"ivfpq-{uuid.uuid4().hex}-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"ShuffledHashJoin \[qcid#", plan), "residual join re-planned"
+    assert len(set(jobs)) == 1, jobs
