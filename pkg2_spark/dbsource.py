@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from pkg2_spark.session import local_rows_df
+
 _SQLITE_TYPES = {
     "INTEGER": T.LongType(),
     "INT": T.LongType(),
@@ -117,8 +119,8 @@ def read_sqlite(
     preds = partition_predicates(
         partition_column, lower_bound, upper_bound, num_partitions
     )
-    spine = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(preds)], "pid int, pred string"
+    spine = local_rows_df(
+        spark, [(i, p) for i, p in enumerate(preds)], "pid int, pred string"
     ).repartition(len(preds), "pid")
 
     def pull(batches):

@@ -124,14 +124,15 @@ def simhash16(tok: DataFrame, id_col: str = "doc_id", token_col: str = "token") 
 
 
 def blocked_token_pairs(
-    t: DataFrame,
+    docs: DataFrame,
     id_col: str = "doc_id",
     block_col: str = "source",
-    toks_col: str = "toks",
+    text_col: str = "text",
 ) -> DataFrame:
     """Block-keyed token-set pair overlap: (doc_a, doc_b, ni, la, lb) for
     every same-block pair with doc_a < doc_b, where ni = |A∩B| and la/lb
-    are the set sizes. The shared kernel of q_llm_jaccard /
+    are the sizes of the two documents' distinct-token sets (tokens_col
+    over ``text_col``). The shared kernel of q_llm_jaccard /
     q_llm_containment / q_llm_lsh_calib's ground-truth arm.
 
     The pairs come from operators/lsh.py::banded_pairs over a single-block
@@ -140,10 +141,12 @@ def blocked_token_pairs(
     → 1.4 s for the jaccard consumer and 28.8 s → 0.7 s for containment at
     sf0.1, identical outputs):
 
-    - fan_out_scan on the block table (guide §2.5): the block join
-      broadcasts one side, so every per-pair array intersection runs on
-      the PROBE side's partitions — an under-split scan serialized the
-      whole quadratic-per-block workload onto one task.
+    - fan_out_scan on the raw documents (guide §2.5), BELOW the
+      tokenizing projection: lower/split/array_distinct run on every core,
+      and the block join, which broadcasts one side, runs every per-pair
+      array intersection on the PROBE side's partitions — an under-split
+      scan serialized the whole quadratic-per-block workload onto one
+      task.
     - the intersection is evaluated ONCE per pair. Consumers derive
       several metrics from ni, and filter pushdown duplicates each
       metric expression into FilterExec — up to 8 array_intersect
@@ -157,8 +160,10 @@ def blocked_token_pairs(
     from pkg2_spark.operators.lsh import banded_pairs
     from pkg2_spark.session import fan_out_scan
 
-    blocks = fan_out_scan(t).select(
-        id_col, F.col(block_col).alias("band_key"), F.col(toks_col).alias("toks")
+    blocks = fan_out_scan(docs.select(id_col, block_col, text_col)).select(
+        id_col,
+        F.col(block_col).alias("band_key"),
+        F.array_distinct(tokens_col(text_col)).alias("toks"),
     )
     return (
         banded_pairs(blocks, id_col, "doc_a", "doc_b", carry=("toks",))

@@ -18,6 +18,7 @@ from pyspark.sql import Window
 
 from pkg2_spark.catalog import load_tables
 from pkg2_spark.registry import query
+from pkg2_spark.session import local_rows_df
 
 
 @query(
@@ -499,7 +500,8 @@ def q_fn_ip(spark, sf_dir):
         + part.getItem(3).cast("long")
     )
     parsed = c.select("c_custkey", ip_int.alias("ip_int"))
-    rules = spark.createDataFrame(
+    rules = local_rows_df(
+        spark,
         [(0, 1, "low-half"), (64, 2, "quad-2"), (96, 3, "oct-96"), (128, 1, "high-half")],
         "net_o1 long, prefix long, label string",
     )

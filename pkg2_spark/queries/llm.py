@@ -580,9 +580,7 @@ def q_llm_jaccard(spark, sf_dir):
     # + one array_intersect per pair — 11.4 s → 1.4 s at sf0.1.
     from pkg2_spark.operators.text import blocked_token_pairs
 
-    d = load_tables(spark, sf_dir)["documents"]
-    t = d.select("doc_id", "source", F.array_distinct(tokens_col()).alias("toks"))
-    m = blocked_token_pairs(t)
+    m = blocked_token_pairs(load_tables(spark, sf_dir)["documents"])
     return m.select(
         "doc_a",
         "doc_b",
@@ -2661,10 +2659,8 @@ def q_llm_containment(spark, sf_dir):
     filters — up to 8x) with probe-side fan-out: 28.8 s → 0.7 s at sf0.1."""
     from pkg2_spark.operators.text import blocked_token_pairs
 
-    d = load_tables(spark, sf_dir)["documents"]
-    t = d.select("doc_id", "source", F.array_distinct(tokens_col()).alias("toks"))
     m = (
-        blocked_token_pairs(t)
+        blocked_token_pairs(load_tables(spark, sf_dir)["documents"])
         .select(
             "doc_a",
             "doc_b",

@@ -16,6 +16,7 @@ from pyspark.sql import Window
 
 from pkg2_spark.catalog import load_tables
 from pkg2_spark.registry import query
+from pkg2_spark.session import local_rows_df
 
 
 @query(
@@ -922,8 +923,8 @@ def q_dq_benford(spark, sf_dir):
     cnt = d.groupBy("digit").agg(F.count(F.lit(1)).alias("observed"))
     tot = cnt.agg(F.sum("observed").cast("long").alias("total"))
     benford = [301030, 176091, 124939, 96910, 79181, 66947, 57992, 51153, 45757]
-    exp = spark.createDataFrame(
-        [(str(i + 1), v) for i, v in enumerate(benford)], "digit string, exp_e6 long"
+    exp = local_rows_df(
+        spark, [(str(i + 1), v) for i, v in enumerate(benford)], "digit string, exp_e6 long"
     )
     obs_share = F.expr("CAST(coalesce(observed, 0) * 1000000 DIV total AS BIGINT)")
     return (

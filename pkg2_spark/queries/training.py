@@ -38,7 +38,7 @@ from pkg2_spark.operators.hashing import v32_spark, v32_sql
 from pkg2_spark.operators.ivf import ASSIGN_CTE, SLOT_BASE, descend, descend_cte, tree
 from pkg2_spark.operators.text import tokens_col
 from pkg2_spark.registry import query
-from pkg2_spark.session import truncate_lineage_lazy
+from pkg2_spark.session import local_rows_df, truncate_lineage_lazy
 
 _CHUNK = 30  # tokens per chunk
 _STRIDE = 25  # chunk start stride (5-token overlap)
@@ -1985,8 +1985,8 @@ def q_llm_bpe_train(spark, sf_dir):
     rewrite. Oracle: the same k rounds unrolled as MATERIALIZED CTEs."""
     d = load_tables(spark, sf_dir)["documents"]
     merges, seg = bpe_train_merges(d, _BPE_TRAIN_K)
-    merge_df = spark.createDataFrame(
-        merges, "rnd int, ma string, mb string, cnt long"
+    merge_df = local_rows_df(
+        spark, merges, "rnd int, ma string, mb string, cnt long"
     ).select(
         F.lit("merge").alias("phase"),
         "rnd",
@@ -2384,11 +2384,10 @@ def q_llm_lsh_calib(spark, sf_dir):
     )
 
     d = load_tables(spark, sf_dir)["documents"]
-    t = d.select("doc_id", "source", F.array_distinct(tokens_col()).alias("toks"))
     # Ground truth via blocked_token_pairs (r14): probe-side fan-out + one
     # array_intersect per pair — the q_llm_jaccard kernel fix.
     truth = (
-        blocked_token_pairs(t)
+        blocked_token_pairs(d)
         .select("doc_a", "doc_b", "ni", (F.col("la") + F.col("lb") - F.col("ni")).alias("denom"))
         .filter(F.col("denom") > 0)
         .select("doc_a", "doc_b", F.expr("CAST(1000 * ni AS BIGINT) div denom").alias("j_milli"))

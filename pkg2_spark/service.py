@@ -33,7 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from pkg2_spark.engine import Engine
-from pkg2_spark.session import truncate_lineage
+from pkg2_spark.session import local_rows_df, truncate_lineage
 
 DEFAULT_MAX_ROWS = 200
 
@@ -354,10 +354,11 @@ class QueryService:
         merges = self._ensure_bpe_merges()
         cnt, ntot = self._ensure_lm_state()
         spark = self.engine.spark
-        spark.createDataFrame(
+        local_rows_df(
+            spark,
             [(i + 1, ma, mb) for i, (ma, mb) in enumerate(merges)],
             "rnd int, ma string, mb string",
-        ).coalesce(1).write.mode("overwrite").parquet(
+        ).write.mode("overwrite").parquet(
             _os.path.join(artifact_dir, "bpe_merges")
         )
         cnt.coalesce(1).write.mode("overwrite").parquet(
@@ -425,8 +426,8 @@ class QueryService:
         k = self._int_param(p, "k", 5, 1, 50)
         n_probe = self._int_param(p, "n_probe", self.engine.ann_n_probe, 1, 64)
         emb_table = self._corpus_table("embeddings")
-        probe_df = self.engine.spark.createDataFrame(
-            rows, "probe_id long, probe_embedding array<double>"
+        probe_df = local_rows_df(
+            self.engine.spark, rows, "probe_id long, probe_embedding array<double>"
         )
         res = self.engine.ann_search(
             emb_table.select("vec_id", "embedding"),
@@ -494,7 +495,7 @@ class QueryService:
         rows = self._docs_param(p)
         spark = self.engine.spark
         merges = self._ensure_bpe_merges()
-        req = spark.createDataFrame(rows, "doc_id long, text string")
+        req = local_rows_df(spark, rows, "doc_id long, text string")
         toks = req.select(
             "doc_id",
             F.explode(
@@ -547,7 +548,7 @@ class QueryService:
 
         rows = self._docs_param(p)
         spark = self.engine.spark
-        req = spark.createDataFrame(rows, "doc_id long, text string")
+        req = local_rows_df(spark, rows, "doc_id long, text string")
         cnt, ntot = self._ensure_lm_state()
 
         toks = req.select("doc_id", F.explode(

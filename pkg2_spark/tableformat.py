@@ -59,6 +59,8 @@ from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pkg2_spark.session import local_rows_df
+
 _LOG_FMT = "{:020d}.json"
 # Attempts of the one commit-retry loop (_commit_retrying) before a writer
 # gives up; four threads racing three appends each need at most 11.
@@ -580,7 +582,7 @@ class Table:
         if not files:
             schema = snap.schema
             if schema is not None:
-                return self.spark.createDataFrame([], schema)
+                return local_rows_df(self.spark, [], schema)
             # pre-schema-recording log: take any file it ever referenced
             first = next(_fold(self.path)).commit
             probe = [os.path.join(self.path, f["path"]) for f in first["add"]]
@@ -657,7 +659,7 @@ class Table:
             scan = self._tag_positions(reader.parquet(*[
                 os.path.join(self.path, rel) for rel in sorted({f for f, _ in pos})
             ]))
-            keys = self.spark.createDataFrame(pos, "__file string, __ri long")
+            keys = local_rows_df(self.spark, pos, "__file string, __ri long")
             parts.append(
                 scan.join(F.broadcast(keys), ["__file", "__ri"], "inner")
                 .drop("__file", "__ri")

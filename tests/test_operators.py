@@ -347,6 +347,36 @@ def test_resolve_components_empty_and_selfloop_edges(spark):
     assert rows.get(1, 1) == 1
 
 
+def test_local_rows_df_plans_a_local_relation_even_empty_or_arrow_off(spark):
+    # A list (or an empty or Arrow-off pandas frame) plans as a pickled
+    # LogicalRDD, and each job over it starts a Python worker; an empty
+    # resolve result paid ~0.9 s for it. local_rows_df hands Spark an
+    # Arrow table, which plans as a LocalRelation whatever the Arrow conf.
+    from pyspark.sql.types import StructType
+
+    from pkg2_spark.session import local_rows_df
+
+    ddl = "k long, v string"
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key, None)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            for rows in ([], [(1, "a")]):
+                for schema in (ddl, StructType.fromDDL(ddl)):
+                    df = local_rows_df(spark, rows, schema)
+                    plan = df._jdf.queryExecution().optimizedPlan().toString()
+                    case = (arrow, len(rows), type(schema).__name__)
+                    assert "LocalRelation" in plan, (case, plan)
+                    assert "LogicalRDD" not in plan, (case, plan)
+                    assert [tuple(r) for r in df.collect()] == rows, case
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
 class TestBloomFilter:
     def test_no_false_negatives_and_determinism(self, spark):
         from pkg2_spark.operators.bloom import bloom_build, bloom_probe

@@ -695,3 +695,46 @@ def test_ivfpq_plans_the_same_every_call(spark, sf_dir):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert re.search(r"ShuffledHashJoin \[qcid#", plan), "residual join re-planned"
     assert len(set(jobs)) == 1, jobs
+
+
+def test_blocked_token_pairs_tokenize_after_the_fan_out(spark, sf_dir):
+    # The one-file documents scan is one task; tokenizing above it ran
+    # lower/split/array_distinct for every document on that one task and
+    # spread only the pair intersections. The round-robin exchange must
+    # sit below the tokenizing projection.
+    for name in ("q_llm_jaccard", "q_llm_containment", "q_llm_lsh_calib"):
+        df = all_queries()[name](spark, sf_dir)
+        lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+        below = [
+            lines[i + 1] for i, ln in enumerate(lines)
+            if "Project [" in ln and "array_distinct(filter(split(lower(text" in ln
+        ]
+        assert below, name
+        assert all("Exchange RoundRobinPartitioning" in ln for ln in below), (name, below)
+
+
+def test_driver_rows_reach_spark_only_through_local_rows_df():
+    # createDataFrame over a Python list plans a pickled LogicalRDD whose
+    # every job starts a Python worker; session.local_rows_df hands Spark
+    # an Arrow table instead. It must stay the package's only caller.
+    import ast
+    import pathlib
+
+    def callers(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "createDataFrame"
+            ):
+                yield scope
+            fn = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            yield from callers(child, child.name if fn else scope)
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "pkg2_spark"
+    found = [
+        f"{path.relative_to(root)}::{fn}"
+        for path in sorted(root.rglob("*.py"))
+        for fn in callers(ast.parse(path.read_text()), "<module>")
+    ]
+    assert found == ["session.py::local_rows_df"], found

@@ -106,6 +106,23 @@ def test_warm_requests_run_only_their_filter(spark):
         assert 1 <= n <= limit, (endpoint, n)
 
 
+def test_empty_resolve_stays_on_the_local_path(spark):
+    # musl depends on nothing (its D: line is empty), so its closure is
+    # empty. An empty result used to fall back to a pickled-row frame
+    # whose every job started a Python worker (0.7-0.9 s per request, vs
+    # ~0.2 s for a non-empty closure); as an Arrow LocalRelation it
+    # costs the one edge collect of the local finish.
+    eng = Engine(spark)
+    eng.ingest_apkindex(os.path.join(_DATA, "apkindex_sample.txt"))
+    svc = QueryService(eng, max_rows=5)
+    first = svc.handle("resolve", {"package": "musl"})
+    assert first["rows"] == []
+    assert first["row_count"] == 0
+    assert first["truncated"] is False
+    n = _jobs_of(spark, lambda: svc.handle("resolve", {"package": "musl"}))
+    assert n <= 1, n
+
+
 def test_concurrent_first_requests_derive_state_once(spark, monkeypatch):
     # At least four threads, more than there are cores, send their first
     # requests at the same moment with a shortened switch interval: they
