@@ -23,8 +23,9 @@ checkpointed (filled by the first action over it) and owns, for as long as
 it is the engine's current index, the frames every lookup derives from it:
 the capability map, the dependency edges, the constrained edges and the
 latest versions. Each is built on first use and kept in Spark's block
-manager, so a request runs only its own filter; a re-ingest replaces all
-of them at once (_IndexState).
+manager, so a request runs only its own filter; resolve's driver-side
+adjacency of a bounded edge set is kept the same way, next to its edges.
+A re-ingest replaces all of them at once (_IndexState).
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pkg2_spark.catalog import load_tables
-from pkg2_spark.operators.graph_ops import reachability
+from pkg2_spark.operators.graph_ops import CountedEdges, reachability
 from pkg2_spark.session import (
     BuildOnce,
     ensure_runtime_confs,
@@ -160,11 +161,20 @@ class _IndexState:
     frames derived from it that no request parameter changes, each built
     on first use. Every frame is checkpointed with the truncate_lineage*
     helpers, so its rows sit in Spark's block manager and a request runs
-    only its own filter over them. There is no Python-side row copy.
+    only its own filter over them.
 
-    An ingest replaces the whole object. Once nothing references the old
-    one, Spark's ContextCleaner releases its blocks. Concurrent first
-    requests build each frame once (session.BuildOnce)."""
+    The one Python-side row copy is the adjacency of each counted edge set
+    (package_edges, constrained_edges), kept in its graph_ops.CountedEdges
+    record: a dict of the distinct edges, collected by the first resolve
+    that finishes on the driver and read by every later one. It exists
+    only for an edge set of at most graph_ops.LOCAL_FINISH_EDGES rows (a
+    few MB); a larger set is resolved in distributed rounds and never
+    copied.
+
+    An ingest replaces the whole object, adjacencies included. Once
+    nothing references the old one, Spark's ContextCleaner releases its
+    blocks. Concurrent first requests build each frame and each adjacency
+    once (session.BuildOnce)."""
 
     def __init__(self, packages: DataFrame):
         self.packages = packages
@@ -197,20 +207,23 @@ class _IndexState:
             ),
         )
 
-    def package_edges(self) -> tuple[DataFrame, int]:
-        """Distinct (src, dst) edges and their count, which gates resolve's
-        driver-local finish (graph_ops.reachability)."""
+    def package_edges(self) -> CountedEdges:
+        """Distinct (src, dst) edges with their count, which gates resolve's
+        driver-local finish (graph_ops.reachability), and the adjacency
+        that finish keeps."""
         return self._frames.get(
             "package_edges",
-            lambda: truncate_lineage_counted(
+            lambda: CountedEdges(*truncate_lineage_counted(
                 self._provider_join().select("src", "dst").distinct()
-            ),
+            )),
         )
 
-    def constrained_edges(self) -> tuple[DataFrame, int]:
+    def constrained_edges(self) -> CountedEdges:
         return self._frames.get(
             "constrained_edges",
-            lambda: truncate_lineage_counted(_constrained_edges(self.packages)),
+            lambda: CountedEdges(
+                *truncate_lineage_counted(_constrained_edges(self.packages))
+            ),
         )
 
     def latest_versions(self) -> DataFrame:
@@ -966,13 +979,15 @@ class Engine:
 
         The distinct (src, dst) edges and their count are per-ingest state
         (_IndexState.package_edges): checkpointed with the count folded
-        into the same job, then every call and every BFS round reads the
-        cached copy. Only the closure itself (graph_ops.reachability) is
-        per call."""
-        edges, n_edges = self._state().package_edges()
+        into the same job. Under graph_ops.LOCAL_FINISH_EDGES edges the
+        first resolve of an ingest also collects their adjacency (one job),
+        and every later call runs only its BFS on the driver; its result
+        is a one-partition local frame, so collecting it is the call's one
+        job, and an empty closure runs none. A larger edge set is resolved
+        in distributed rounds over the cached edges (graph_ops.reachability)."""
         return reachability(
-            edges, "src", "dst", {"src": package},
-            node="node", max_depth=max_depth, n_edges=n_edges,
+            self._state().package_edges(), "src", "dst", {"src": package},
+            node="node", max_depth=max_depth,
         )
 
     def package_edges(self) -> DataFrame:
@@ -981,7 +996,7 @@ class Engine:
         The graph resolve walks; q_pkg_revdeps and q_pkg_blast_radius read
         it too. Per-ingest state: built and checkpointed once, with its
         count."""
-        return self._state().package_edges()[0]
+        return self._state().package_edges().frame
 
     def depends_atoms(self) -> DataFrame:
         """Parsed constraint atoms: (src_name, src_version, dep_name, op,
@@ -1009,18 +1024,19 @@ class Engine:
         produce no edge. One equi-join on package name + a row-local key
         comparison: at repo scale this is name-partitioned, shuffle-light.
         Per-ingest state: built and checkpointed once, with its count."""
-        return self._state().constrained_edges()[0]
+        return self._state().constrained_edges().frame
 
     def resolve_constrained(self, package: str, max_depth: int = 10) -> DataFrame:
         """Constraint-aware dependency closure from every version of
         ``package``: BFS over constrained_edges, nodes are (name, version),
         minimal depth per node — the same kernel as :meth:`resolve`
-        (graph_ops.reachability), starting from every version's edges."""
-        edges, n_edges = self._state().constrained_edges()
+        (graph_ops.reachability), starting from every version's edges. The
+        driver-local finish seeds on ``src_name`` alone, through a seed
+        index kept with the adjacency, so a warm call runs one job too."""
         return reachability(
-            edges, ("src_name", "src_version"), ("dst_name", "dst_version"),
-            {"src_name": package}, node=("name", "version"),
-            max_depth=max_depth, n_edges=n_edges,
+            self._state().constrained_edges(),
+            ("src_name", "src_version"), ("dst_name", "dst_version"),
+            {"src_name": package}, node=("name", "version"), max_depth=max_depth,
         )
 
     # ---------------------------------------------- LLM-data-pipeline surface

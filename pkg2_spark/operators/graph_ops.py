@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from pkg2_spark.session import (
+    BuildOnce,
     local_rows_df,
     truncate_lineage,
     truncate_lineage_counted,
@@ -160,6 +161,13 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst", iters: int = 3) -
 #: distributed rounds are what shrink a larger set down to it. Measured at
 #: sf0.1: a resolve took 0.78-1.05 s local vs 1.23 s distributed, and a
 #: dedup resolve folds its last 4-5 contraction rounds into one join.
+#: An owner that passes a CountedEdges record (the engine's per-ingest
+#: edge sets) keeps the finish's adjacency, so a request pays only its
+#: BFS and the collect of its result. Measured on 4 cores over the
+#: benchmark's 29,841-edge index: 40 in-process resolves took 54 ms median
+#: and 0.78 jobs each with the adjacency kept, 134 ms and 1.77 jobs when
+#: every call collected the edges (~49 ms of it); the kept adjacency is
+#: 4.2 MB of driver heap.
 LOCAL_FINISH_EDGES = 200_000
 
 
@@ -167,8 +175,29 @@ def _names(cols: str | Sequence[str]) -> list[str]:
     return [cols] if isinstance(cols, str) else list(cols)
 
 
+class CountedEdges:
+    """A checkpointed edge frame and its row count, as an owner keeps one
+    for many closures (the engine's per-ingest edge sets). Passed to
+    reachability in place of the bare frame, it also keeps what the
+    driver-local finish collects from it: the adjacency, built on the
+    first finish that needs it and reused by every later one. The
+    adjacency lives and dies with this object, so an owner that replaces
+    the record (a re-ingest) replaces its adjacency too."""
+
+    def __init__(self, frame: DataFrame, n: int):
+        self.frame, self.n = frame, n
+        self._local = BuildOnce()
+
+    def adjacency(self, src: list[str], dst: list[str], keys: list[str]):
+        """(adjacency, seed index) over these columns, built once."""
+        return self._local.get(
+            ("adjacency", tuple(src), tuple(dst), tuple(keys)),
+            lambda: _adjacency(self.frame, src, dst, keys),
+        )
+
+
 def reachability(
-    edges: DataFrame,
+    edges: DataFrame | CountedEdges,
     src: str | Sequence[str],
     dst: str | Sequence[str],
     start: dict | DataFrame,
@@ -177,7 +206,6 @@ def reachability(
     max_depth: int,
     group: str | Sequence[str] = (),
     start_depth: int = 1,
-    n_edges: int | None = None,
 ) -> DataFrame:
     """Bounded reachability over a directed edge frame: (*group, *node,
     depth) with the MINIMAL depth at which each node is reached from its
@@ -200,20 +228,23 @@ def reachability(
     the first depth a (group, node) is seen at is its minimal one.
 
     Ungrouped closures over at most LOCAL_FINISH_EDGES edges finish on
-    the driver: one Arrow collect of the edges (the dict seeds come from
-    the same rows) and an in-memory BFS. Pass ``n_edges`` when the count is
-    already known (the engine's per-ingest edge sets carry it); otherwise
-    the kernel counts while checkpointing the edges. Grouped closures stay
+    the driver: an adjacency from one Arrow collect of the edges (the dict
+    seeds are indexed from the same rows) and an in-memory BFS. A
+    CountedEdges record brings its count and keeps that adjacency, so only
+    its first finish collects; a bare frame is counted while it is
+    checkpointed and collected on every call. Grouped closures stay
     distributed: their output is bounded by groups × nodes, not by the
     node count."""
     src, dst, group, node = _names(src), _names(dst), _names(group), _names(node)
     if not group:
-        if n_edges is None:
-            edges, n_edges = truncate_lineage_counted(edges)
-        if n_edges <= LOCAL_FINISH_EDGES:
+        if not isinstance(edges, CountedEdges):
+            edges = CountedEdges(*truncate_lineage_counted(edges))
+        if edges.n <= LOCAL_FINISH_EDGES:
             return _local_reachability(
                 edges, src, dst, start, node, start_depth, max_depth
             )
+    if isinstance(edges, CountedEdges):
+        edges = edges.frame
     if isinstance(start, dict):
         match = reduce(lambda a, b: a & b, [F.col(c) == v for c, v in start.items()])
         seeds = edges.filter(match).select(
@@ -267,31 +298,46 @@ def reachability(
     return closure
 
 
-def _local_reachability(edges, src, dst, start, node, start_depth, max_depth):
-    """reachability's driver-local finish over a threshold-bounded edge
-    set: the same minimal depths, from one collect. A single-column node is
-    its plain value and a composite node a tuple (a 1-tuple per node made a
-    resolve over a 60k-edge index ~0.09 s slower); frontier order never
-    affects the minimal depth."""
-    keys = list(start) if isinstance(start, dict) else []
+def _adjacency(edges, src, dst, keys):
+    """The local finish's driver-side copy of a threshold-bounded edge set,
+    from one Arrow collect: {src node: [dst nodes]}, and the seed index
+    {value of the dict-start ``keys``: [dst nodes]} (the adjacency itself
+    when ``keys`` are the source columns, as in a resolve). A
+    single-column node is its plain value and a composite node a tuple (a
+    1-tuple per node made a resolve over a 60k-edge index ~0.09 s
+    slower)."""
     pdf = edges.select(*dict.fromkeys([*src, *dst, *keys])).toPandas()  # Arrow collect
 
     def values(names):
         cols = [pdf[c].tolist() for c in names]
         return cols[0] if len(cols) == 1 else list(zip(*cols))
 
-    def value(row):
-        return row[0] if len(row) == 1 else tuple(row)
+    def index(names):
+        out: dict = {}
+        for k, d in zip(values(names), dsts):
+            out.setdefault(k, []).append(d)
+        return out
 
-    adj: dict = {}
     dsts = values(dst)
-    for s, d in zip(values(src), dsts):
-        adj.setdefault(s, []).append(d)
+    adj = index(src)
+    return adj, adj if keys == src else index(keys)
+
+
+def _node(values):
+    return values[0] if len(values) == 1 else tuple(values)
+
+
+def _local_reachability(edges: CountedEdges, src, dst, start, node, start_depth, max_depth):
+    """reachability's driver-local finish over a threshold-bounded edge
+    set: the same minimal depths, from the record's adjacency (collected
+    on its first finish) and a BFS; frontier order never affects the
+    minimal depth."""
+    keys = list(start) if isinstance(start, dict) else []
+    adj, seeds = edges.adjacency(src, dst, keys)
     if keys:
-        want = value(list(start.values()))
-        frontier = {d for s, d in zip(values(keys), dsts) if s == want}
+        frontier = set(seeds.get(_node(list(start.values())), ()))
     else:
-        frontier = {value(r) for r in start.select(*node).collect()}
+        frontier = {_node(r) for r in start.select(*node).collect()}
     depth_of: dict = {}
     depth = start_depth
     while frontier and depth <= max_depth:
@@ -299,11 +345,11 @@ def _local_reachability(edges, src, dst, start, node, start_depth, max_depth):
         frontier = {t for nd in frontier for t in adj.get(nd, ()) if t not in depth_of}
         depth += 1
     schema = StructType(
-        [StructField(n, edges.schema[d].dataType) for d, n in zip(dst, node)]
+        [StructField(n, edges.frame.schema[d].dataType) for d, n in zip(dst, node)]
         + [StructField("depth", IntegerType())]
     )
     # One Arrow batch, one partition (session.local_rows_df): the row set
     # is bounded by the edge threshold by construction.
     composite = len(dst) > 1
     rows = [(*(nd if composite else (nd,)), dd) for nd, dd in sorted(depth_of.items())]
-    return local_rows_df(edges.sparkSession, rows, schema)
+    return local_rows_df(edges.frame.sparkSession, rows, schema)

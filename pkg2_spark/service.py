@@ -19,6 +19,10 @@ Design points that matter at scale:
   once, and the frames every lookup derives from it (capability map,
   dependency edges, latest versions) are built once per ingest; a request
   pays only its own filter over in-memory blocks, never a re-parse.
+  ``resolve`` and ``resolve_constrained`` over a bounded edge set also
+  reuse the driver-side adjacency the ingest's first resolve collected:
+  a warm request runs its BFS on the driver and one job to collect the
+  result, none when the closure is empty.
 - Results are encoded to JSON-safe primitives (timestamps -> ISO strings,
   arrays -> lists) so the response can cross any transport.
 """

@@ -713,6 +713,26 @@ def test_blocked_token_pairs_tokenize_after_the_fan_out(spark, sf_dir):
         assert all("Exchange RoundRobinPartitioning" in ln for ln in below), (name, below)
 
 
+def test_batch_resolve_gains_no_action(spark, sf_dir, action_log):
+    # q_pkg_resolve builds a fresh Engine per call, so its resolve is the
+    # ingest's first: the local finish's one edge collect (one job) builds
+    # the adjacency the engine keeps per ingest, and build plus collect run
+    # 7 jobs in all. The query reads only its Debian fixture, so the count
+    # holds at any scale factor. q_pkg_revdeps reads the same counted edge
+    # set but never resolves, so it builds no adjacency.
+    from pkg2_spark.operators import graph_ops as G
+
+    action_log.wrap(G, "_adjacency")
+    action_log.run(lambda: all_queries()["q_pkg_resolve"](spark, sf_dir).collect())
+    assert action_log.names == ["_adjacency"]
+    tracker = spark.sparkContext.statusTracker()
+    (_, group), = action_log.calls
+    assert len(tracker.getJobIdsForGroup(group)) == 1
+    assert len(action_log.stray_jobs) == 6
+    action_log.run(lambda: all_queries()["q_pkg_revdeps"](spark, sf_dir).collect())
+    assert action_log.names == []
+
+
 def test_driver_rows_reach_spark_only_through_local_rows_df():
     # createDataFrame over a Python list plans a pickled LogicalRDD whose
     # every job starts a Python worker; session.local_rows_df hands Spark

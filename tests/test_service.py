@@ -95,7 +95,7 @@ def test_warm_requests_run_only_their_filter(spark):
         "search": ({"pattern": "py%"}, 1),
         "whatprovides": ({"capability": "so:libz.so.1"}, 1),
         "whatdepends": ({"package": "musl"}, 2),
-        "resolve": ({"package": "python3"}, 3),
+        "resolve": ({"package": "python3"}, 1),
         "latest": ({}, 1),
         "table": ({"name": "packages"}, 1),
     }
@@ -110,8 +110,9 @@ def test_empty_resolve_stays_on_the_local_path(spark):
     # musl depends on nothing (its D: line is empty), so its closure is
     # empty. An empty result used to fall back to a pickled-row frame
     # whose every job started a Python worker (0.7-0.9 s per request, vs
-    # ~0.2 s for a non-empty closure); as an Arrow LocalRelation it
-    # costs the one edge collect of the local finish.
+    # ~0.2 s for a non-empty closure). The local finish's adjacency is
+    # collected once per ingest, and an empty Arrow LocalRelation is
+    # answered without a job, so a warm empty closure runs none.
     eng = Engine(spark)
     eng.ingest_apkindex(os.path.join(_DATA, "apkindex_sample.txt"))
     svc = QueryService(eng, max_rows=5)
@@ -120,19 +121,70 @@ def test_empty_resolve_stays_on_the_local_path(spark):
     assert first["row_count"] == 0
     assert first["truncated"] is False
     n = _jobs_of(spark, lambda: svc.handle("resolve", {"package": "musl"}))
-    assert n <= 1, n
+    assert n == 0, n
+
+
+def test_warm_constrained_resolve_runs_one_job(spark):
+    # resolve_constrained's driver-local finish walks (name, version) nodes
+    # and seeds on the package name alone, through a seed index kept with
+    # the adjacency. Warm, it runs only the collect of its result, and
+    # answers as the multi-version fixture's closure says (the rows
+    # q_pkg_resolve_constrained's oracle gives for webapp): from every
+    # version of a package, with constraints selecting among versions.
+    eng = Engine(spark)
+    eng.ingest_debian_packages(os.path.join(_DATA, "packages_multiver_sample.txt"))
+    svc = QueryService(eng)
+    want = {
+        "webapp": {
+            ("libweb", "1.4-2", 1), ("libweb", "1.5-1", 1), ("librt", "2.1-3", 1),
+            ("zlib1", "1.9-1", 2), ("zlib1", "2.1-1", 2), ("libc0", "1.1-1", 2),
+        },
+        # both versions seed the walk; only 2.1-3's '>= 1.0' admits libc0
+        "librt": {("libc0", "1.1-1", 1)},
+    }
+    for package, rows in want.items():
+        params = {"package": package}
+        svc.handle("resolve_constrained", params)
+        resp = {}
+        n = _jobs_of(spark, lambda: resp.update(svc.handle("resolve_constrained", params)))
+        assert n == 1, (package, n)
+        assert {(r["name"], r["version"], r["depth"]) for r in resp["rows"]} == rows
+
+
+def test_reingest_resolves_from_the_new_edges(spark):
+    # The adjacency belongs to one ingest's counted edge set. After warm
+    # resolves over the first APKINDEX sample, ingesting the second on the
+    # same engine must answer from its edges: its libffi provides
+    # python3's so:libffi.so.8, and ca-certificates exists only there.
+    eng = Engine(spark)
+    svc = QueryService(eng)
+
+    def closure(package):
+        rows = svc.handle("resolve", {"package": package})["rows"]
+        return {(r["node"], r["depth"]) for r in rows}
+
+    eng.ingest_apkindex(os.path.join(_DATA, "apkindex_sample.txt"))
+    for _ in range(2):
+        assert closure("python3") == {("musl", 1), ("openssl", 1)}
+        assert closure("ca-certificates") == set()
+    eng.ingest_apkindex(os.path.join(_DATA, "apkindex_v2_sample.txt"))
+    assert closure("python3") == {("musl", 1), ("openssl", 1), ("libffi", 1)}
+    assert closure("ca-certificates") == {("busybox", 1), ("musl", 2)}
 
 
 def test_concurrent_first_requests_derive_state_once(spark, monkeypatch):
     # At least four threads, more than there are cores, send their first
     # requests at the same moment with a shortened switch interval: they
-    # all get the same answers, and each derived frame is built exactly
-    # once (its build lock, not a race, decides who builds it).
+    # all get the same answers, and each derived frame and resolve's
+    # adjacency are built exactly once (the build lock, not a race, decides
+    # who builds each). Warm resolves reuse the adjacency; a re-ingest,
+    # even of the same index, builds it once more.
     import collections
     import sys
     import threading
 
     from pkg2_spark import engine as engine_mod
+    from pkg2_spark.operators import graph_ops
 
     builds = collections.Counter()
 
@@ -144,8 +196,10 @@ def test_concurrent_first_requests_derive_state_once(spark, monkeypatch):
 
             return super().get(key, counted)
 
-    # The ingest below builds its _IndexState's memo from this class.
+    # The ingest below builds its _IndexState's memo, and each counted
+    # edge set its adjacency memo, from this class.
     monkeypatch.setattr(engine_mod, "BuildOnce", CountingBuildOnce)
+    monkeypatch.setattr(graph_ops, "BuildOnce", CountingBuildOnce)
     eng = Engine(spark)
     eng.ingest_debian_packages(os.path.join(_DATA, "packages_sample.txt"))
     svc = QueryService(eng)
@@ -176,6 +230,17 @@ def test_concurrent_first_requests_derive_state_once(spark, monkeypatch):
     assert answers[0][0] and answers[0][1]
     assert builds["package_edges"] == 1 and builds["dependency_edges"] == 1
     assert set(builds.values()) == {1}
+
+    def adjacency_builds():
+        return sum(n for k, n in builds.items() if k[0] == "adjacency")
+
+    assert adjacency_builds() == 1
+    for _ in range(3):
+        assert svc.handle("resolve", {"package": "python3.11"})["rows"] == answers[0][0]
+    assert adjacency_builds() == 1
+    eng.ingest_debian_packages(os.path.join(_DATA, "packages_sample.txt"))
+    assert svc.handle("resolve", {"package": "python3.11"})["rows"] == answers[0][0]
+    assert adjacency_builds() == 2
 
 
 def test_unknown_endpoint_and_missing_param_raise(spark, svc):
